@@ -575,8 +575,8 @@ private[graft] object QueriesML {
 
   /** One trainable GNN layer: 2 backprop steps where the gradient flows
     * THROUGH the A7 scatter-sum (per-child message layer upstream of the
-    * per-order aggregation), each step = one scatter-sum shuffle + two
-    * scalar aggregates. */
+    * per-order aggregation), each step = one Spark action (the backward
+    * sums ride the scatter-sum, one global sum returns the gradients). */
   private[graft] val qFitGnn = Q("bp6_fit_gnn_gd",
     (s, d) => {
       import graft.pipeline.Blueprint
@@ -740,8 +740,8 @@ private[graft] object QueriesML {
     * aggregation (the reference trains AttentionAggregation,
     * nn/aggr/attention.py:10-41) — trainable score e = x·u, per-parent
     * softmax weights, α-weighted scatter-sum, 2 backprop steps; the
-    * attention gradient rides the same join-back as the scatter-sum
-    * adjoint. */
+    * attention gradient's per-parent sums ride the same forward
+    * aggregate as the message-layer sums. */
   private[graft] val qFitAttnGnn = Q("bp8_fit_attn_gd",
     (s, d) => {
       import graft.pipeline.Blueprint
@@ -1156,9 +1156,10 @@ private[graft] object QueriesML {
         cand.select(lit("lineitem").as("nt"), col("nk")), "nt", "nk",
         budget = 1000)
       // materialize the batch ONCE (the loader's materialized-subgraph
-      // contract): fitGnnGD reads children and parents twice per step, so
-      // without this the sampling dataflow (frontier join + distinct +
-      // budget rank) would re-execute four times
+      // contract): fitGnnGD reads children and parents once per step, and
+      // 2 steps read the batch twice, so without this the sampling
+      // dataflow (frontier join + distinct + budget rank) would
+      // re-execute per step
       val li = cand.join(picked.select(col("nk")), "nk")
         .select(col("l_orderkey"),
           array(col("l_quantity"), col("l_linenumber").cast("double")).as("feat"))

@@ -382,27 +382,16 @@ object Blueprint {
     * is `p = σ(Σ_j a_j·w2(j) + b2)` against the parent label, mean
     * logistic loss over parents.
     *
-    * The adjoint of a scatter-sum is a JOIN-BACK: `∂L/∂h(child) =
-    * ∂L/∂a(its parent)`, so the backward pass joins each parent's
-    * residual onto its child rows and the parameter gradients reduce as
-    * FLAT sums over those joined rows — `Σ_edges dm·w2_j·h_j(1−h_j)·x_i`
-    * needs no per-child regrouping even when a source feeds several
-    * parents (the flat edge sum IS the sum over sources of their summed
-    * deltas). Each GD step therefore costs: one scatter-sum shuffle
-    * (forward, checkpointed), one scalar aggregate over parents (readout
-    * grads), one join-back + scalar aggregate over child rows (message
-    * grads). Updated parameters re-enter the next step as literals — no
-    * executor state, 1000-executor-safe; the per-step checkpoint is
-    * released as soon as the step's gradients are collected
-    * ([[graft.util.Checkpoints]]).
+    * The adjoint of a scatter-sum sends each parent's residual to its
+    * children: `∂L/∂h(child) = ∂L/∂a(its parent)`. This is
+    * [[fitHeteroGnnGD]] with ONE edge group and `aggr = "sum"` (same
+    * default init), so a GD step costs what that step costs: one Spark
+    * action, the backward sums riding the forward scatter-sum.
     *
     * General graphs: pass one row per EDGE (pre-join the source features
     * onto the edge list); a multi-out-edge source's rows duplicate its
-    * features, which the flat-sum adjoint counts exactly once per edge —
+    * features, which the per-edge sums count exactly once per edge —
     * the correct gradient.
-    *
-    * Op order pinned as in [[fitMlpGD]] for the SQL restatement; drift
-    * is summation-order and exp ulps, below a round-6 contract.
     *
     * @param children one row per FK edge: fk columns + featCol
     * @param parents  one row per parent: key columns + yCol (0/1)
@@ -412,108 +401,22 @@ object Blueprint {
       parents: DataFrame, keyCols: Seq[String], yCol: String,
       dim: Int, hidden: Int, steps: Int, lr: Double,
       init: MlpParams = null): MlpParams = {
-    require(dim >= 1 && hidden >= 1, "need at least one feature and hidden unit")
-    require(steps >= 1, "need at least one step")
-    require(lr > 0, s"learning rate must be positive, got $lr")
-    require(fkCols.nonEmpty && fkCols.length == keyCols.length,
-      s"FK arity mismatch: $fkCols vs $keyCols")
-    val p0 = if (init != null) init else MlpParams(
-      Array.tabulate(dim, hidden)((i, j) => 0.1 * (i + 1) * (if (j % 2 == 0) 1 else -1)),
-      Array.fill(hidden)(0.0),
-      Array.tabulate(hidden)(j => 0.1 * (j + 1)),
-      0.0)
-    require(p0.w1.length == dim && p0.w1.forall(_.length == hidden) &&
-      p0.b1.length == hidden && p0.w2.length == hidden, "init shape mismatch")
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val y = col(yCol).cast("double")
-    val w1 = p0.w1.map(_.clone()); val b1 = p0.b1.clone()
-    val w2 = p0.w2.clone(); var b2 = p0.b2
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    (1 to steps).foreach { _ =>
-      val h = (0 until hidden).map { j =>
-        sig((0 until dim).map(i => x(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
-      }
-      // forward: ONE scatter-sum shuffle (the A7 groupBy-sum), parents
-      // attached so childless ones aggregate zero; checkpointed because
-      // both gradient passes read it
-      val aggd = children.groupBy(fkCols.map(col): _*)
-        .agg((0 until hidden).map(j => sum(h(j)).as(s"__a$j")).head,
-          (0 until hidden).map(j => sum(h(j)).as(s"__a$j")).tail: _*)
-      val renamed = fkCols.zip(keyCols).foldLeft(aggd) {
-        case (df, (c, k)) => df.withColumnRenamed(c, k)
-      }
-      val dst = parents
-        .select(keyCols.map(col) :+ y.as("__y"): _*)
-        .join(renamed, keyCols, "left")
-        .select(keyCols.map(col) ++ Seq(col("__y")) ++
-          (0 until hidden).map(j => coalesce(col(s"__a$j"), lit(0.0)).as(s"__a$j")): _*)
-        .localCheckpoint(true)
-      val m = (0 until hidden).map(j => col(s"__a$j") * lit(w2(j))).reduce(_ + _) + lit(b2)
-      val dm = sig(m) - col("__y")
-      // readout gradients: one scalar aggregate over parents
-      val dstSums = (0 until hidden).map(j => sum(dm * col(s"__a$j")).as(s"gv_$j")) ++
-        Seq(sum(dm).as("gb"), count(lit(1)).cast("double").as("n"))
-      val dRow = dst.agg(dstSums.head, dstSums.tail: _*).collect()(0)
-      def gd(name: String) = dRow.getDouble(dRow.fieldIndex(name))
-      val n = gd("n")
-      require(n > 0, "cannot fit on an empty parents frame")
-      // adjoint of the scatter-sum: join each parent's residual back onto
-      // its child rows, then flat sums over the joined edge rows
-      val dmPerDst = keyCols.zip(fkCols).foldLeft(
-          dst.select(keyCols.map(col) :+ dm.as("__dm"): _*)) {
-        case (df, (k, c)) => df.withColumnRenamed(k, c)
-      }
-      val back = children.join(dmPerDst, fkCols)
-      val backSums =
-        (for { i <- 0 until dim; j <- 0 until hidden }
-          yield sum(col("__dm") * lit(w2(j)) * (h(j) * (lit(1.0) - h(j))) * x(i))
-            .as(s"gw_${i}_$j")) ++
-        (0 until hidden).map(j =>
-          sum(col("__dm") * lit(w2(j)) * (h(j) * (lit(1.0) - h(j)))).as(s"gc_$j"))
-      val bRow = back.agg(backSums.head, backSums.tail: _*).collect()(0)
-      def gb(name: String) =
-        if (bRow.isNullAt(bRow.fieldIndex(name))) 0.0 // no child matched any parent
-        else bRow.getDouble(bRow.fieldIndex(name))
-      for (i <- 0 until dim; j <- 0 until hidden)
-        w1(i)(j) = w1(i)(j) - lr * (gb(s"gw_${i}_$j") / n)
-      for (j <- 0 until hidden) {
-        b1(j) = b1(j) - lr * (gb(s"gc_$j") / n)
-        w2(j) = w2(j) - lr * (gd(s"gv_$j") / n)
-      }
-      b2 = b2 - lr * (gd("gb") / n)
-      graft.util.Checkpoints.release(dst)
-    }
-    MlpParams(w1, b1, w2, b2)
+    val p = fitHeteroGnnGD(Seq(EdgeGroup(children, fkCols, featCol, dim)), parents,
+      keyCols, yCol, hidden, steps, lr,
+      if (init == null) null
+      else HeteroGnnParams(Seq(init.w1), Seq(init.b1), init.w2, init.b2))
+    MlpParams(p.w1.head, p.b1.head, p.w2, p.b2)
   }
 
-  /** Mean logistic loss of [[fitGnnGD]]'s network over the parents — one
-    * scatter-sum + one aggregate; the finite-difference anchor proving
-    * the analytic gradient really flows through the aggregation. */
+  /** Mean logistic loss of [[fitGnnGD]]'s network over the parents
+    * ([[heteroGnnLogLoss]] on one group); the finite-difference anchor
+    * proving the analytic gradient really flows through the aggregation. */
   def gnnLogLoss(children: DataFrame, fkCols: Seq[String], featCol: String,
       parents: DataFrame, keyCols: Seq[String], yCol: String,
-      p: MlpParams): Double = {
-    val dim = p.w1.length; val hidden = p.b1.length
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    val h = (0 until hidden).map { j =>
-      sig((0 until dim).map(i => x(i) * lit(p.w1(i)(j))).reduce(_ + _) + lit(p.b1(j)))
-    }
-    val aggd = children.groupBy(fkCols.map(col): _*)
-      .agg((0 until hidden).map(j => sum(h(j)).as(s"__a$j")).head,
-        (0 until hidden).map(j => sum(h(j)).as(s"__a$j")).tail: _*)
-    val renamed = fkCols.zip(keyCols).foldLeft(aggd) {
-      case (df, (c, k)) => df.withColumnRenamed(c, k)
-    }
-    val m = (0 until hidden)
-      .map(j => coalesce(col(s"__a$j"), lit(0.0)) * lit(p.w2(j))).reduce(_ + _) +
-      lit(p.b2)
-    val pr = sig(m)
-    parents.select(keyCols.map(col) :+ y.as("__y"): _*)
-      .join(renamed, keyCols, "left")
-      .agg(avg(-(col("__y") * log(pr) + (lit(1.0) - col("__y")) * log(lit(1.0) - pr))))
-      .collect()(0).getDouble(0)
-  }
+      p: MlpParams): Double =
+    heteroGnnLogLoss(Seq(EdgeGroup(children, fkCols, featCol, p.w1.length)),
+      parents, keyCols, yCol,
+      HeteroGnnParams(Seq(p.w1), Seq(p.b1), p.w2, p.b2))
 
   /** One typed EDGE GROUP of a hetero GNN layer: one row per FK edge
     * (fk columns + an array feature column of width `dim`). The reference
@@ -535,55 +438,64 @@ object Blueprint {
   /** Joint training across SEVERAL edge types — the reference's hetero
     * conv semantics (nn/models/hetero_gnn.py:25-36: one SAGEConv per edge
     * type, per-destination aggregates summed across types; trained
-    * end-to-end with the decoder, main.py:307-323). [[fitGnnGD]] trains
-    * through ONE FK's scatter-sum; here each group `t` owns a message
-    * layer `h^t_j = σ(x·w1(t)(·)(j) + b1(t)(j))`, a parent's hidden state
-    * is the CROSS-TYPE sum `a_j = Σ_t Σ_{children_t} h^t_j`, and one
-    * shared readout `p = σ(a·w2 + b2)` scores the parent label.
+    * end-to-end with the decoder, main.py:307-323). Each group `t` owns a
+    * message layer `h^t_j = σ(x·w1(t)(·)(j) + b1(t)(j))`, a parent's
+    * hidden state is the CROSS-TYPE sum `a_j = Σ_t Σ_{children_t} h^t_j`,
+    * and one shared readout `p = σ(a·w2 + b2)` scores the parent label.
     *
     * Because the types enter `a_j` additively, the adjoint decomposes
-    * per type: `∂L/∂h^t(child) = ∂L/∂a(its parent)` independently of
-    * which type carried the message, so the backward pass is
-    * [[fitGnnGD]]'s join-back applied once per group, and the shared
-    * readout's gradient reduces over the SUMMED aggregate. Cost per GD
-    * step: one scatter-sum shuffle per group (all landing on the parent
-    * key, so AQE coalesces them into the same exchange footprint), one
-    * scalar aggregate over parents, one join-back + scalar aggregate per
-    * group. Parameters re-enter each step as literals — no executor
-    * state, 1000-executor-safe; the per-step parent checkpoint releases
-    * as soon as the step's gradients are collected.
+    * per type: `∂L/∂h^t(child) = dm(its parent)` independently of which
+    * type carried the message. And it is LINEAR in per-edge terms:
+    * `Σ_edges dm_p·f(edge) = Σ_parents dm_p·Σ_{edges of p} f(edge)`, so
+    * the per-parent scatter aggregate that feeds the forward pass can
+    * carry the backward pass's sums too — `Σ h`, `Σ h(1−h)·x`,
+    * `Σ h(1−h)` and the child count — and no residual ever travels back
+    * to the child rows.
+    *
+    * Cost per GD step: ONE Spark action. Per group, one projection of the
+    * children (message, outer products, packed into one array) and one
+    * scatter-sum on the parent key; the parents left-join every group's
+    * aggregate; one global vector sum over parents returns every
+    * gradient, which the driver unpacks. Each children plan is evaluated
+    * once, nothing is checkpointed or persisted. The per-edge and
+    * per-parent math runs on array columns with every parameter passed
+    * as ONE array literal per vector or matrix ([[Similarity.litVec]]),
+    * which the generated code references instead of inlining: the plan
+    * has the same size at any dim×hidden, and its generated code is the
+    * same from one step to the next (no per-step recompilation).
     *
     * `aggr` selects the per-type reduce, mirroring the reference's
     * AggrType knob (hetero_gnn.py:19, main.py:61 defaults to "sum"; the
     * experiment tune space is choice(["attn", "sum"]),
-    * blueprint_mlflow.py:267): "sum", "mean", or "attn". Mean's adjoint
-    * scales the join-back residual by 1/n_t(parent) — the per-(parent,
-    * type) child count already produced by the forward aggregate. Attn
-    * gives every group its own trainable scorer `u(t)` and per-(parent,
-    * type) softmax weights ([[fitAttnGnnGD]]'s machinery applied per
-    * group: the softmax Jacobian is the per-edge scalar
-    * dm·α·(m_c − s_t), where s_t projects the group's OWN aggregate —
-    * cross-type terms vanish because another type's aggregate does not
-    * read this type's scores). ("min"/"max" route gradients to one
-    * extremal child and "cat" changes the readout arity — neither is
-    * trained by any reference experiment config; out of scope.)
+    * blueprint_mlflow.py:267): "sum", "mean", or "attn". Mean divides a
+    * type's sums by the per-(parent, type) child count the same
+    * aggregate carries, and its adjoint scales that parent's residual by
+    * the same 1/n. Attn gives every group its own trainable scorer `u(t)`
+    * and per-(parent, type) softmax weights `α` (A9's stable two-window
+    * device on the group's OWN scores, on the parent key the scatter-sum
+    * shuffles on anyway); the forward and backward sums become
+    * α-weighted, and the softmax Jacobian — the per-edge scalar
+    * `dm·α·(m_c − s_t)` with `m_c = h_c·w2` and `s_t` the group's OWN
+    * aggregate projected on w2 (cross-type terms vanish: another type's
+    * aggregate does not read this type's scores) — rides along as
+    * `Σ α·m·x` and `Σ α·x`: `gu_i = Σ_p dm_p·(Σ α·m·x_i − s_t·Σ α·x_i)`.
+    * ("min"/"max" route gradients to one extremal child and "cat"
+    * changes the readout arity — neither is trained by any reference
+    * experiment config; out of scope.)
     *
-    * Op order pinned exactly as [[fitGnnGD]] per group for the SQL
-    * restatement; drift is summation-order and exp ulps. */
+    * Every child's feature array must hold exactly `dim` non-NULL
+    * values; any other (or a NULL array) fails the step with an error
+    * instead of silently dropping out of the sums.
+    *
+    * Forward op order is pinned for the SQL restatement (`(Σ_i x_i·w + b)`
+    * left to right, `1/(1+exp(−z))`); gradients sum per parent first,
+    * so drift against a per-edge restatement is summation order. */
   def fitHeteroGnnGD(groups: Seq[EdgeGroup], parents: DataFrame,
       keyCols: Seq[String], yCol: String, hidden: Int, steps: Int,
       lr: Double, init: HeteroGnnParams = null,
       aggr: String = "sum"): HeteroGnnParams = {
-    require(aggr == "sum" || aggr == "mean" || aggr == "attn",
-      s"aggr must be 'sum', 'mean' or 'attn', got '$aggr'")
-    require(groups.nonEmpty, "need at least one edge group")
-    require(hidden >= 1, "need at least one hidden unit")
     require(steps >= 1, "need at least one step")
     require(lr > 0, s"learning rate must be positive, got $lr")
-    groups.foreach { g =>
-      require(g.dim >= 1 && g.fkCols.nonEmpty && g.fkCols.length == keyCols.length,
-        s"bad edge group: dim=${g.dim}, fkCols=${g.fkCols} vs keyCols=$keyCols")
-    }
     val attn = aggr == "attn"
     val p0 = if (init != null) init else HeteroGnnParams(
       groups.map(g => Array.tabulate(g.dim, hidden)(
@@ -593,218 +505,166 @@ object Blueprint {
       0.0,
       if (attn) groups.map(g => Array.tabulate(g.dim)(i => 0.05 * (i + 1)))
       else null)
-    require(p0.w1.length == groups.length && p0.b1.length == groups.length &&
-      p0.w2.length == hidden &&
-      p0.w1.zip(groups).forall { case (w, g) =>
-        w.length == g.dim && w.forall(_.length == hidden) } &&
-      p0.b1.forall(_.length == hidden), "init shape mismatch")
-    require(!attn || (p0.u != null && p0.u.length == groups.length &&
-      p0.u.zip(groups).forall { case (ut, g) => ut.length == g.dim }),
-      "aggr='attn' needs one scorer u(t) per group, sized to its dim")
-    val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    val w1 = p0.w1.map(_.map(_.clone()).toArray)
-    val b1 = p0.b1.map(_.clone())
-    val w2 = p0.w2.clone(); var b2 = p0.b2
-    val u = if (attn) p0.u.map(_.clone()) else null
-    val nG = groups.length
-    import org.apache.spark.sql.expressions.Window
-    def xOf(g: EdgeGroup)(i: Int) = element_at(col(g.featCol), i + 1).cast("double")
-    def hOf(t: Int): Seq[Column] = {
-      val g = groups(t); val x = xOf(g) _
-      (0 until hidden).map { j =>
-        sig((0 until g.dim).map(i => x(i) * lit(w1(t)(i)(j))).reduce(_ + _) +
-          lit(b1(t)(j)))
-      }
-    }
+    checkHetero(groups, keyCols, hidden, p0, aggr)
+    var p = p0 // each step builds fresh arrays: the caller's init is never written
     (1 to steps).foreach { _ =>
-      // attn: per group, materialize the edge frame with its softmax
-      // weight (A9's stable two-window device on the group's OWN scores)
-      // — the forward aggregate and the join-back both read it
-      val eds: Seq[DataFrame] =
-        if (!attn) Nil
-        else groups.zipWithIndex.map { case (g, t) =>
-          val h = hOf(t); val x = xOf(g) _
-          val e = (0 until g.dim).map(i => x(i) * lit(u(t)(i))).reduce(_ + _)
-          val w = Window.partitionBy(g.fkCols.map(col): _*)
-          val stable = exp(e - max(e).over(w))
-          val alpha = stable / sum(stable).over(w)
-          g.children.select(
-              g.fkCols.map(col) ++
-              (0 until g.dim).map(i => x(i).as(s"__x$i")) ++
-              (0 until hidden).map(j => h(j).as(s"__h$j")) ++
-              Seq(alpha.as("__al")): _*)
-            .localCheckpoint(true)
+      val fwd = heteroForward(groups, parents, keyCols, yCol, p, aggr)
+        .withColumn("__dm", col("__p") - col("__y"))
+      val dm = col("__dm")
+      // per group: message-weight sums (scaled by 1/n_t under mean),
+      // then attn's score sums; zero for a parent with no child of type t
+      val perGroup = groups.zipWithIndex.flatMap { case (g, t) =>
+        val s = col(s"__s$t")
+        val scale = if (aggr == "mean") dm / col(s"__n$t") else dm
+        val gw = coalesce(transform(slice(s, hidden + 1, (g.dim + 1) * hidden),
+          v => scale * v), zeros((g.dim + 1) * hidden))
+        if (!attn) Seq(gw)
+        else {
+          val off = hidden + (g.dim + 1) * hidden + 1
+          val sProj = Similarity.dot(col(s"__a$t"), Similarity.litVec(p.w2))
+          Seq(gw, coalesce(zip_with(slice(s, off + 1, g.dim),
+            slice(s, off + g.dim + 1, g.dim), (am, ax) => dm * (am - sProj * ax)),
+            zeros(g.dim)))
         }
-      // forward: one scatter-sum per group, parents left-join ALL groups
-      // (childless-in-a-type parents aggregate zero for that type)
-      val dst0 = groups.zipWithIndex.foldLeft(
-          parents.select(keyCols.map(col) :+ y.as("__y"): _*)) {
-        case (acc, (g, t)) =>
-          val aggd =
-            if (attn)
-              eds(t).groupBy(g.fkCols.map(col): _*)
-                .agg((0 until hidden).map(j =>
-                    sum(col("__al") * col(s"__h$j")).as(s"__a${t}_$j")).head,
-                  ((0 until hidden).map(j =>
-                    sum(col("__al") * col(s"__h$j")).as(s"__a${t}_$j")).tail :+
-                    count(lit(1)).cast("double").as(s"__n$t")): _*)
-            else {
-              val h = hOf(t)
-              val sums = (0 until hidden).map(j => sum(h(j)).as(s"__a${t}_$j")) :+
-                count(lit(1)).cast("double").as(s"__n$t")
-              g.children.groupBy(g.fkCols.map(col): _*)
-                .agg(sums.head, sums.tail: _*)
-            }
-          val renamed = g.fkCols.zip(keyCols).foldLeft(aggd) {
-            case (df, (c, k)) => df.withColumnRenamed(c, k)
-          }
-          acc.join(renamed, keyCols, "left")
       }
-      // "mean" divides each type's sums by that type's child count (a
-      // childless-in-a-type parent still aggregates zero either way)
-      val aCol = (t: Int, j: Int) =>
-        if (aggr == "mean") coalesce(col(s"__a${t}_$j") / col(s"__n$t"), lit(0.0))
-        else coalesce(col(s"__a${t}_$j"), lit(0.0))
-      val dst = dst0.select(keyCols.map(col) ++ Seq(col("__y")) ++
-          (for { t <- 0 until nG; j <- 0 until hidden }
-            yield aCol(t, j).as(s"__a${t}_$j")) ++
-          (0 until nG).map(t => coalesce(col(s"__n$t"), lit(0.0)).as(s"__n$t")): _*)
-        .localCheckpoint(true)
-      val aTot = (j: Int) =>
-        (0 until nG).map(t => col(s"__a${t}_$j")).reduce(_ + _)
-      val m = (0 until hidden).map(j => aTot(j) * lit(w2(j))).reduce(_ + _) + lit(b2)
-      val dm = sig(m) - col("__y")
-      // shared-readout gradients over the cross-type SUMS
-      val dstSums = (0 until hidden).map(j => sum(dm * aTot(j)).as(s"gv_$j")) ++
-        Seq(sum(dm).as("gb"), count(lit(1)).cast("double").as("n"))
-      val dRow = dst.agg(dstSums.head, dstSums.tail: _*).collect()(0)
-      def gd(name: String) = dRow.getDouble(dRow.fieldIndex(name))
-      val n = gd("n")
+      val grad = concat(transform(col("__aT"), v => dm * v) +:
+        array(dm, lit(1.0)) +: perGroup: _*)
+      val r = fwd.select(VectorAgg.vecSum(grad)).collect()(0).getSeq[Double](0).toArray
+      val n = if (r.isEmpty) 0.0 else r(hidden + 1)
       require(n > 0, "cannot fit on an empty parents frame")
-      // per-group adjoint: the scatter-sum join-back of fitGnnGD, once
-      // per edge type (∂L/∂h^t is dm regardless of the carrying type)
-      val grads = groups.zipWithIndex.map { case (g, t) =>
-        if (attn) {
-          // attn's adjoint carries (dm, s_t) per parent; s_t projects
-          // the group's OWN aggregate (cross-type terms vanish — another
-          // type's aggregate does not read this type's scores)
-          val sProj = (0 until hidden)
-            .map(j => col(s"__a${t}_$j") * lit(w2(j))).reduce(_ + _)
-          val dmPerDst = keyCols.zip(g.fkCols).foldLeft(
-              dst.select(keyCols.map(col) ++
-                Seq(dm.as("__dm"), sProj.as("__s")): _*)) {
-            case (df, (k, c)) => df.withColumnRenamed(k, c)
-          }
-          val back = eds(t).join(dmPerDst, g.fkCols)
-          val hB = (j: Int) => col(s"__h$j")
-          val xB = (i: Int) => col(s"__x$i")
-          val mProj = (0 until hidden).map(j => hB(j) * lit(w2(j))).reduce(_ + _)
-          val backSums =
-            (for { i <- 0 until g.dim; j <- 0 until hidden }
-              yield sum(col("__dm") * lit(w2(j)) * col("__al") *
-                  (hB(j) * (lit(1.0) - hB(j))) * xB(i)).as(s"gw_${i}_$j")) ++
-            (0 until hidden).map(j =>
-              sum(col("__dm") * lit(w2(j)) * col("__al") *
-                (hB(j) * (lit(1.0) - hB(j)))).as(s"gc_$j")) ++
-            (0 until g.dim).map(i =>
-              sum(col("__dm") * col("__al") * (mProj - col("__s")) * xB(i))
-                .as(s"gu_$i"))
-          back.agg(backSums.head, backSums.tail: _*).collect()(0)
-        } else {
-          // mean's scatter adjoint: ∂a_tj/∂h(child) = 1/n_t(parent), so
-          // the joined-back residual is dm/n_t (sum: dm unscaled);
-          // n_t > 0 on every row that joins a child
-          val dmBack =
-            if (aggr == "mean")
-              when(col(s"__n$t") > 0, dm / col(s"__n$t")).otherwise(lit(0.0))
-            else dm
-          val dmPerDst = keyCols.zip(g.fkCols).foldLeft(
-              dst.select(keyCols.map(col) :+ dmBack.as("__dm"): _*)) {
-            case (df, (k, c)) => df.withColumnRenamed(k, c)
-          }
-          val back = g.children.join(dmPerDst, g.fkCols)
-          val h = hOf(t); val x = xOf(g) _
-          val backSums =
-            (for { i <- 0 until g.dim; j <- 0 until hidden }
-              yield sum(col("__dm") * lit(w2(j)) * (h(j) * (lit(1.0) - h(j))) * x(i))
-                .as(s"gw_${i}_$j")) ++
-            (0 until hidden).map(j =>
-              sum(col("__dm") * lit(w2(j)) * (h(j) * (lit(1.0) - h(j)))).as(s"gc_$j"))
-          back.agg(backSums.head, backSums.tail: _*).collect()(0)
+      // unpack in layout order: gv (hidden), gb, n, then per group gw
+      // ((dim+1)×hidden, the last row is b1's) and under attn gu (dim)
+      var off = hidden + 2
+      val next = groups.zipWithIndex.map { case (g, t) =>
+        val gw = (i: Int, j: Int) => p.w2(j) * r(off + i * hidden + j)
+        val w1 = Array.tabulate(g.dim, hidden)((i, j) => p.w1(t)(i)(j) - lr * (gw(i, j) / n))
+        val b1 = Array.tabulate(hidden)(j => p.b1(t)(j) - lr * (gw(g.dim, j) / n))
+        off += (g.dim + 1) * hidden
+        val u = if (!attn) null else {
+          val ut = Array.tabulate(g.dim)(i => p.u(t)(i) - lr * (r(off + i) / n))
+          off += g.dim
+          ut
         }
+        (w1, b1, u)
       }
-      groups.zipWithIndex.foreach { case (g, t) =>
-        val bRow = grads(t)
-        def gb(name: String) =
-          if (bRow.isNullAt(bRow.fieldIndex(name))) 0.0
-          else bRow.getDouble(bRow.fieldIndex(name))
-        for (i <- 0 until g.dim; j <- 0 until hidden)
-          w1(t)(i)(j) = w1(t)(i)(j) - lr * (gb(s"gw_${i}_$j") / n)
-        for (j <- 0 until hidden)
-          b1(t)(j) = b1(t)(j) - lr * (gb(s"gc_$j") / n)
-        if (attn)
-          for (i <- 0 until g.dim)
-            u(t)(i) = u(t)(i) - lr * (gb(s"gu_$i") / n)
-      }
-      for (j <- 0 until hidden) w2(j) = w2(j) - lr * (gd(s"gv_$j") / n)
-      b2 = b2 - lr * (gd("gb") / n)
-      graft.util.Checkpoints.release(dst)
-      eds.foreach(graft.util.Checkpoints.release)
+      p = HeteroGnnParams(next.map(_._1), next.map(_._2),
+        Array.tabulate(hidden)(j => p.w2(j) - lr * (r(j) / n)),
+        p.b2 - lr * (r(hidden) / n),
+        if (attn) next.map(_._3) else null)
     }
-    HeteroGnnParams(w1.toSeq, b1.toSeq, w2, b2,
-      if (attn) u.map(identity) else null)
+    p
   }
 
-  /** Mean logistic loss of [[fitHeteroGnnGD]]'s network — one scatter-sum
-    * per group + one aggregate; the finite-difference anchor proving the
-    * gradient flows through EVERY group's aggregation and the shared
+  /** Mean logistic loss of [[fitHeteroGnnGD]]'s network — the same
+    * forward plan, one aggregate; the finite-difference anchor proving
+    * the gradient flows through EVERY group's aggregation and the shared
     * readout. */
   def heteroGnnLogLoss(groups: Seq[EdgeGroup], parents: DataFrame,
       keyCols: Seq[String], yCol: String, p: HeteroGnnParams,
       aggr: String = "sum"): Double = {
+    checkHetero(groups, keyCols, p.w2.length, p, aggr)
+    val (y, pr) = (col("__y"), col("__p"))
+    heteroForward(groups, parents, keyCols, yCol, p, aggr)
+      .agg(avg(-(y * log(pr) + (lit(1.0) - y) * log(lit(1.0) - pr))))
+      .collect()(0).getDouble(0)
+  }
+
+  private def checkHetero(groups: Seq[EdgeGroup], keyCols: Seq[String],
+      hidden: Int, p: HeteroGnnParams, aggr: String): Unit = {
     require(aggr == "sum" || aggr == "mean" || aggr == "attn",
       s"aggr must be 'sum', 'mean' or 'attn', got '$aggr'")
-    val hidden = p.w2.length
-    val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    val reduceH: Column => Column = if (aggr == "mean") avg else sum
-    import org.apache.spark.sql.expressions.Window
-    val joined = groups.zipWithIndex.foldLeft(
-        parents.select(keyCols.map(col) :+ y.as("__y"): _*)) {
-      case (acc, (g, t)) =>
-        val x = (i: Int) => element_at(col(g.featCol), i + 1).cast("double")
-        val h = (0 until hidden).map { j =>
-          sig((0 until g.dim).map(i => x(i) * lit(p.w1(t)(i)(j))).reduce(_ + _) +
-            lit(p.b1(t)(j)))
-        }
-        val aggd =
-          if (aggr == "attn") {
-            val e = (0 until g.dim).map(i => x(i) * lit(p.u(t)(i))).reduce(_ + _)
-            val w = Window.partitionBy(g.fkCols.map(col): _*)
-            val stable = exp(e - max(e).over(w))
-            val alpha = stable / sum(stable).over(w)
-            g.children.select(g.fkCols.map(col) ++
-                (0 until hidden).map(j => (alpha * h(j)).as(s"__wh$j")): _*)
-              .groupBy(g.fkCols.map(col): _*)
-              .agg((0 until hidden).map(j => sum(col(s"__wh$j")).as(s"__a${t}_$j")).head,
-                (0 until hidden).map(j => sum(col(s"__wh$j")).as(s"__a${t}_$j")).tail: _*)
-          } else g.children.groupBy(g.fkCols.map(col): _*)
-            .agg((0 until hidden).map(j => reduceH(h(j)).as(s"__a${t}_$j")).head,
-              (0 until hidden).map(j => reduceH(h(j)).as(s"__a${t}_$j")).tail: _*)
-        val renamed = g.fkCols.zip(keyCols).foldLeft(aggd) {
-          case (df, (c, k)) => df.withColumnRenamed(c, k)
-        }
-        acc.join(renamed, keyCols, "left")
+    require(groups.nonEmpty, "need at least one edge group")
+    require(hidden >= 1, "need at least one hidden unit")
+    groups.foreach { g =>
+      require(g.dim >= 1 && g.fkCols.nonEmpty && g.fkCols.length == keyCols.length,
+        s"bad edge group: dim=${g.dim}, fkCols=${g.fkCols} vs keyCols=$keyCols")
     }
-    val m = (0 until hidden).map { j =>
-      (0 until groups.length)
-        .map(t => coalesce(col(s"__a${t}_$j"), lit(0.0))).reduce(_ + _) * lit(p.w2(j))
-    }.reduce(_ + _) + lit(p.b2)
-    val pr = sig(m)
-    joined
-      .agg(avg(-(col("__y") * log(pr) + (lit(1.0) - col("__y")) * log(lit(1.0) - pr))))
-      .collect()(0).getDouble(0)
+    require(p.w1.length == groups.length && p.b1.length == groups.length &&
+      p.w2.length == hidden &&
+      p.w1.zip(groups).forall { case (w, g) =>
+        w.length == g.dim && w.forall(_.length == hidden) } &&
+      p.b1.forall(_.length == hidden), "init shape mismatch")
+    require(aggr != "attn" || (p.u != null && p.u.length == groups.length &&
+      p.u.zip(groups).forall { case (ut, g) => ut.length == g.dim }),
+      "aggr='attn' needs one scorer u(t) per group, sized to its dim")
+  }
+
+  private def zeros(n: Int): Column = Similarity.litVec(Array.fill(n)(0.0))
+
+  /** The forward plan of [[fitHeteroGnnGD]] at parameters `p`: one row per
+    * parent with its label `__y`, the readout's prediction `__p`, the
+    * cross-type aggregate `__aT` and, per group t, the child count `__n$t`,
+    * the group's own aggregate `__a$t` (zero when childless in t) and the
+    * raw packed per-parent sums `__s$t` (NULL when childless in t):
+    *
+    *   [Σh (hidden) | Σ h(1−h)⊗x̂ ((dim+1)×hidden, i-major) | count |
+    *    attn only: Σ α·m·x (dim) | Σ α·x (dim)]
+    *
+    * with x̂ = x ++ [1] (its last row is the bias's) and, under attn, the
+    * first two blocks α-weighted. */
+  private def heteroForward(groups: Seq[EdgeGroup], parents: DataFrame,
+      keyCols: Seq[String], yCol: String, p: HeteroGnnParams,
+      aggr: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val hidden = p.w2.length
+    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
+    val sums = groups.zipWithIndex.map { case (g, t) =>
+      // a feature array of the wrong width (or NULL, or with a NULL
+      // element) fails loudly: element access past the end is NULL with
+      // ANSI off, and sums skip NULLs
+      val f = col(g.featCol).cast("array<double>")
+      val x = when(size(f) === g.dim && forall(f, _.isNotNull), f)
+        .otherwise(raise_error(concat(
+          lit(s"edge group $t: column '${g.featCol}' must hold ${g.dim} non-NULL values, got "),
+          coalesce(f.cast("string"), lit("NULL")))).cast("array<double>"))
+      // message weights as ONE literal: hidden rows of (w1(·)(j) ++ b1(j))
+      val w = typedLit(Array.tabulate(hidden, g.dim + 1)((j, i) =>
+        if (i < g.dim) p.w1(t)(i)(j) else p.b1(t)(j)))
+      val msg = g.children.select(g.fkCols.map(col) :+ x.as("__x"): _*)
+        .withColumn("__xh", concat(col("__x"), array(lit(1.0))))
+        .withColumn("__h", transform(w, wj => sig(Similarity.dot(col("__xh"), wj))))
+      val core = concat(col("__h"), flatten(transform(col("__xh"),
+        xi => transform(col("__h"), h => xi * (h * (lit(1.0) - h))))))
+      val packed =
+        if (aggr != "attn") msg.select(g.fkCols.map(col) :+
+          concat(core, array(lit(1.0))).as("__v"): _*)
+        else {
+          val win = Window.partitionBy(g.fkCols.map(col): _*)
+          val e = Similarity.dot(col("__x"), Similarity.litVec(p.u(t)))
+          val stable = exp(e - max(e).over(win))
+          val al = col("__al")
+          val m = Similarity.dot(col("__h"), Similarity.litVec(p.w2))
+          msg.withColumn("__al", stable / sum(stable).over(win))
+            .select(g.fkCols.map(col) :+ concat(transform(core, v => al * v),
+              array(lit(1.0)), transform(col("__x"), xi => al * m * xi),
+              transform(col("__x"), xi => al * xi)).as("__v"): _*)
+        }
+      val aggd = packed.groupBy(g.fkCols.map(col): _*)
+        .agg(VectorAgg.vecSum(col("__v")).as(s"__s$t"))
+      g.fkCols.zip(keyCols).foldLeft(aggd) {
+        case (df, (c, k)) => df.withColumnRenamed(c, k)
+      }
+    }
+    val joined = sums.foldLeft(
+        parents.select(keyCols.map(col) :+ col(yCol).cast("double").as("__y"): _*)) {
+      (acc, s) => acc.join(s, keyCols, "left")
+    }
+    // per-type aggregate: the sums (mean: over the child count), zero
+    // when childless in that type
+    val perType = groups.zipWithIndex.flatMap { case (g, t) =>
+      val s = col(s"__s$t")
+      val n = coalesce(element_at(s, hidden + (g.dim + 1) * hidden + 1), lit(0.0))
+      val a = if (aggr == "mean") transform(slice(s, 1, hidden), v => v / n)
+        else slice(s, 1, hidden)
+      Seq(n.as(s"__n$t"), coalesce(a, zeros(hidden)).as(s"__a$t"))
+    }
+    val withA = joined.select(col("__y") +: groups.indices.map(t => col(s"__s$t")) ++:
+      perType: _*)
+    val aT = groups.indices.map(t => col(s"__a$t"))
+      .reduce((a, b) => zip_with(a, b, (x, y) => x + y))
+    withA.withColumn("__aT", aT)
+      .withColumn("__p", sig(Similarity.dot(concat(col("__aT"), array(lit(1.0))),
+        Similarity.litVec(p.w2 :+ p.b2))))
   }
 
   /** Parameters of the DEPTH-2 GNN: level-1 message layer (`w1`/`b1`,
@@ -1048,152 +908,36 @@ object Blueprint {
     * The softmax Jacobian collapses to a per-edge scalar: with
     * `m_c = Σ_j w2_j·h_cj` (the edge's readout-projected message) and
     * `s = Σ_j w2_j·a_j` (its parent's aggregate projection),
-    * `∂L/∂e_c = dm·α_c·(m_c − s)` — so the attention gradient needs only
-    * the SAME join-back as the scatter-sum adjoint, carrying two extra
-    * scalars, and all parameter gradients reduce as flat edge sums. The
+    * `∂L/∂e_c = dm·α_c·(m_c − s)`, so `u`'s gradient is
+    * `Σ_p dm_p·(Σ α·m·x − s·Σ α·x)` over per-parent sums. The
     * message-weight path holds α fixed per edge (`∂L/∂h_cj = dm·w2_j·α_c`)
-    * because e does not read h. Cost per GD step: one windowed-softmax
-    * pass + scatter-sum (both on the parent key — one exchange + sort),
-    * one scalar aggregate over parents, one join-back + scalar aggregate
-    * over edges. The edge frame with α is checkpointed (both passes read
-    * it) and released with the parent frame once gradients are
-    * collected. */
+    * because e does not read h. This is [[fitHeteroGnnGD]] with ONE edge
+    * group and `aggr = "attn"` (same default init, `u` included), so a
+    * GD step is that step: one Spark action, the windowed softmax and
+    * the scatter-sum on one parent-key exchange, the backward sums
+    * riding the forward aggregate. */
   def fitAttnGnnGD(children: DataFrame, fkCols: Seq[String], featCol: String,
       parents: DataFrame, keyCols: Seq[String], yCol: String,
       dim: Int, hidden: Int, steps: Int, lr: Double,
       init: AttnGnnParams = null): AttnGnnParams = {
-    require(dim >= 1 && hidden >= 1, "need at least one feature and hidden unit")
-    require(steps >= 1, "need at least one step")
-    require(lr > 0, s"learning rate must be positive, got $lr")
-    require(fkCols.nonEmpty && fkCols.length == keyCols.length,
-      s"FK arity mismatch: $fkCols vs $keyCols")
-    val p0 = if (init != null) init else AttnGnnParams(
-      Array.tabulate(dim, hidden)((i, j) => 0.1 * (i + 1) * (if (j % 2 == 0) 1 else -1)),
-      Array.fill(hidden)(0.0),
-      Array.tabulate(dim)(i => 0.05 * (i + 1)),
-      Array.tabulate(hidden)(j => 0.1 * (j + 1)),
-      0.0)
-    require(p0.w1.length == dim && p0.w1.forall(_.length == hidden) &&
-      p0.b1.length == hidden && p0.u.length == dim && p0.w2.length == hidden,
-      "init shape mismatch")
-    val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val w1 = p0.w1.map(_.clone()); val b1 = p0.b1.clone()
-    val u = p0.u.clone(); val w2 = p0.w2.clone(); var b2 = p0.b2
-    import org.apache.spark.sql.expressions.Window
-    (1 to steps).foreach { _ =>
-      val h = (0 until hidden).map { j =>
-        sig((0 until dim).map(i => x(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
-      }
-      val e = (0 until dim).map(i => x(i) * lit(u(i))).reduce(_ + _)
-      // per-parent softmax: A9's stable two-window form (one exchange)
-      val w = Window.partitionBy(fkCols.map(col): _*)
-      val stable = exp(e - max(e).over(w))
-      val alpha = stable / sum(stable).over(w)
-      val ed = children.select(
-          fkCols.map(col) ++
-          (0 until dim).map(i => x(i).as(s"__x$i")) ++
-          (0 until hidden).map(j => h(j).as(s"__h$j")) ++
-          Seq(alpha.as("__al")): _*)
-        .localCheckpoint(true)
-      // forward: α-weighted scatter-sum; childless parents aggregate zero
-      val aggd = ed.groupBy(fkCols.map(col): _*)
-        .agg((0 until hidden).map(j =>
-            sum(col("__al") * col(s"__h$j")).as(s"__a$j")).head,
-          (0 until hidden).map(j =>
-            sum(col("__al") * col(s"__h$j")).as(s"__a$j")).tail: _*)
-      val renamed = fkCols.zip(keyCols).foldLeft(aggd) {
-        case (df, (c, k)) => df.withColumnRenamed(c, k)
-      }
-      val dst = parents
-        .select(keyCols.map(col) :+ y.as("__y"): _*)
-        .join(renamed, keyCols, "left")
-        .select(keyCols.map(col) ++ Seq(col("__y")) ++
-          (0 until hidden).map(j => coalesce(col(s"__a$j"), lit(0.0)).as(s"__a$j")): _*)
-        .localCheckpoint(true)
-      val m = (0 until hidden).map(j => col(s"__a$j") * lit(w2(j))).reduce(_ + _) + lit(b2)
-      val dm = sig(m) - col("__y")
-      val sProj = (0 until hidden).map(j => col(s"__a$j") * lit(w2(j))).reduce(_ + _)
-      // readout gradients: one scalar aggregate over parents
-      val dstSums = (0 until hidden).map(j => sum(dm * col(s"__a$j")).as(s"gv_$j")) ++
-        Seq(sum(dm).as("gb"), count(lit(1)).cast("double").as("n"))
-      val dRow = dst.agg(dstSums.head, dstSums.tail: _*).collect()(0)
-      def gd(name: String) = dRow.getDouble(dRow.fieldIndex(name))
-      val n = gd("n")
-      require(n > 0, "cannot fit on an empty parents frame")
-      // adjoint: join each parent's (dm, s) back onto its edge rows
-      val dmPerDst = keyCols.zip(fkCols).foldLeft(
-          dst.select(keyCols.map(col) ++ Seq(dm.as("__dm"), sProj.as("__s")): _*)) {
-        case (df, (k, c)) => df.withColumnRenamed(k, c)
-      }
-      val back = ed.join(dmPerDst, fkCols)
-      val hB = (j: Int) => col(s"__h$j")
-      val xB = (i: Int) => col(s"__x$i")
-      val mProj = (0 until hidden).map(j => hB(j) * lit(w2(j))).reduce(_ + _)
-      val backSums =
-        (for { i <- 0 until dim; j <- 0 until hidden }
-          yield sum(col("__dm") * lit(w2(j)) * col("__al") *
-              (hB(j) * (lit(1.0) - hB(j))) * xB(i)).as(s"gw_${i}_$j")) ++
-        (0 until hidden).map(j =>
-          sum(col("__dm") * lit(w2(j)) * col("__al") *
-            (hB(j) * (lit(1.0) - hB(j)))).as(s"gc_$j")) ++
-        (0 until dim).map(i =>
-          sum(col("__dm") * col("__al") * (mProj - col("__s")) * xB(i)).as(s"gu_$i"))
-      val bRow = back.agg(backSums.head, backSums.tail: _*).collect()(0)
-      def gb(name: String) =
-        if (bRow.isNullAt(bRow.fieldIndex(name))) 0.0
-        else bRow.getDouble(bRow.fieldIndex(name))
-      for (i <- 0 until dim; j <- 0 until hidden)
-        w1(i)(j) = w1(i)(j) - lr * (gb(s"gw_${i}_$j") / n)
-      for (j <- 0 until hidden) {
-        b1(j) = b1(j) - lr * (gb(s"gc_$j") / n)
-        w2(j) = w2(j) - lr * (gd(s"gv_$j") / n)
-      }
-      for (i <- 0 until dim) u(i) = u(i) - lr * (gb(s"gu_$i") / n)
-      b2 = b2 - lr * (gd("gb") / n)
-      graft.util.Checkpoints.release(dst)
-      graft.util.Checkpoints.release(ed)
-    }
-    AttnGnnParams(w1, b1, u, w2, b2)
+    val p = fitHeteroGnnGD(Seq(EdgeGroup(children, fkCols, featCol, dim)), parents,
+      keyCols, yCol, hidden, steps, lr,
+      if (init == null) null
+      else HeteroGnnParams(Seq(init.w1), Seq(init.b1), init.w2, init.b2, Seq(init.u)),
+      aggr = "attn")
+    AttnGnnParams(p.w1.head, p.b1.head, p.u.head, p.w2, p.b2)
   }
 
-  /** Mean logistic loss of [[fitAttnGnnGD]]'s network — one windowed
-    * softmax + scatter-sum + one aggregate; the finite-difference anchor
-    * proving the gradient flows through the attention WEIGHTS (u) as
-    * well as the message and readout layers. */
+  /** Mean logistic loss of [[fitAttnGnnGD]]'s network
+    * ([[heteroGnnLogLoss]] on one group under `aggr = "attn"`); the
+    * finite-difference anchor proving the gradient flows through the
+    * attention WEIGHTS (u) as well as the message and readout layers. */
   def attnGnnLogLoss(children: DataFrame, fkCols: Seq[String], featCol: String,
       parents: DataFrame, keyCols: Seq[String], yCol: String,
-      p: AttnGnnParams): Double = {
-    val dim = p.w1.length; val hidden = p.b1.length
-    val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val h = (0 until hidden).map { j =>
-      sig((0 until dim).map(i => x(i) * lit(p.w1(i)(j))).reduce(_ + _) + lit(p.b1(j)))
-    }
-    val e = (0 until dim).map(i => x(i) * lit(p.u(i))).reduce(_ + _)
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(fkCols.map(col): _*)
-    val stable = exp(e - max(e).over(w))
-    val alpha = stable / sum(stable).over(w)
-    val ed = children.select(fkCols.map(col) ++
-      (0 until hidden).map(j => (alpha * h(j)).as(s"__wh$j")): _*)
-    val aggd = ed.groupBy(fkCols.map(col): _*)
-      .agg((0 until hidden).map(j => sum(col(s"__wh$j")).as(s"__a$j")).head,
-        (0 until hidden).map(j => sum(col(s"__wh$j")).as(s"__a$j")).tail: _*)
-    val renamed = fkCols.zip(keyCols).foldLeft(aggd) {
-      case (df, (c, k)) => df.withColumnRenamed(c, k)
-    }
-    val m = (0 until hidden)
-      .map(j => coalesce(col(s"__a$j"), lit(0.0)) * lit(p.w2(j))).reduce(_ + _) +
-      lit(p.b2)
-    val pr = sig(m)
-    parents.select(keyCols.map(col) :+ y.as("__y"): _*)
-      .join(renamed, keyCols, "left")
-      .agg(avg(-(col("__y") * log(pr) + (lit(1.0) - col("__y")) * log(lit(1.0) - pr))))
-      .collect()(0).getDouble(0)
-  }
+      p: AttnGnnParams): Double =
+    heteroGnnLogLoss(Seq(EdgeGroup(children, fkCols, featCol, p.w1.length)),
+      parents, keyCols, yCol,
+      HeteroGnnParams(Seq(p.w1), Seq(p.b1), p.w2, p.b2, Seq(p.u)), aggr = "attn")
 
   /** Parameters of the MULTI-HEAD attention aggregation
     * ([[fitMhaGnnGD]]): shared message net `w1`/`b1`, per-head score

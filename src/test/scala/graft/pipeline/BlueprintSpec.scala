@@ -540,6 +540,240 @@ class BlueprintSpec extends SparkSpec {
       "fitAttnGnnGD must release every per-step checkpoint")
   }
 
+  // ---- the one-action hetero GD step, against its per-edge definition ----
+
+  // two edge groups into parents 1-4: parent 4 is childless in BOTH
+  // groups, parent 2 childless in the second; each group has a dangling
+  // child (fk 99 / 77) that reaches nobody; parent 1 has several children
+  // of both types so sum, mean and both softmaxes are non-degenerate
+  private val heteroRows = Seq(
+    (Seq((1L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)), (1L, Array(2.0, 1.0)),
+      (2L, Array(1.0, 1.0)), (3L, Array(0.5, 2.0)), (3L, Array(1.5, 0.5)),
+      (99L, Array(9.0, 9.0))), 2),
+    (Seq((1L, Array(0.7)), (1L, Array(-0.4)), (3L, Array(1.2)), (77L, Array(5.0))), 1))
+  private val heteroParents = Seq((1L, 1.0), (2L, 0.0), (3L, 1.0), (4L, 0.0))
+
+  // repartitioned, so the optimizer cannot pre-compute the per-edge
+  // projection over a local relation: the plan under test is the real one
+  private def heteroGroups(rows: Seq[(Seq[(Long, Array[Double])], Int)]) =
+    rows.map { case (r, dim) =>
+      Blueprint.EdgeGroup(r.toDF("fk", "feat").repartition(2), Seq("fk"), "feat", dim)
+    }
+
+  private def heteroInit(dims: Seq[Int], hidden: Int, seed: Int): Blueprint.HeteroGnnParams = {
+    val rnd = new scala.util.Random(seed)
+    def g(s: Double) = rnd.nextGaussian() * s
+    Blueprint.HeteroGnnParams(dims.map(d => Array.fill(d, hidden)(g(0.3))),
+      dims.map(_ => Array.fill(hidden)(g(0.1))), Array.fill(hidden)(g(0.5)), 0.1,
+      dims.map(d => Array.fill(d)(g(0.3))))
+  }
+
+  private def copyHetero(p: Blueprint.HeteroGnnParams) = Blueprint.HeteroGnnParams(
+    p.w1.map(_.map(_.clone())), p.b1.map(_.clone()), p.w2.clone(), p.b2,
+    Option(p.u).map(_.map(_.clone())).orNull)
+
+  /** One GD step restated on the driver in its per-edge JOIN-BACK form:
+    * forward scatter per (parent, type), the residual per parent, then
+    * every gradient as a flat sum over child rows joined to their parent. */
+  private def joinBackStep(rows: Seq[(Seq[(Long, Array[Double])], Int)],
+      parents: Seq[(Long, Double)], p: Blueprint.HeteroGnnParams, aggr: String,
+      lr: Double): Blueprint.HeteroGnnParams = {
+    val hidden = p.w2.length
+    def sig(z: Double) = 1.0 / (1.0 + math.exp(-z))
+    // per group, per edge: (fk, x, h, α); α = 1 unless attn
+    val edges = rows.zipWithIndex.map { case ((r, dim), t) =>
+      val e = r.map { case (_, x) => (0 until dim).map(i => x(i) * p.u(t)(i)).sum }
+      val alpha = r.indices.groupBy(k => r(k)._1).values.flatMap { ks =>
+        val mx = ks.map(e).max
+        val z = ks.map(k => math.exp(e(k) - mx)).sum
+        ks.map(k => k -> (if (aggr == "attn") math.exp(e(k) - mx) / z else 1.0))
+      }.toMap
+      r.indices.map { k =>
+        val (fk, x) = r(k)
+        (fk, x, Array.tabulate(hidden)(j =>
+          sig((0 until dim).map(i => x(i) * p.w1(t)(i)(j)).sum + p.b1(t)(j))), alpha(k))
+      }
+    }
+    val count = edges.map(_.groupBy(_._1).map { case (k, es) => k -> es.size })
+    val fwd = parents.map { case (pk, y) =>
+      val a = edges.indices.map { t =>
+        val s = Array.tabulate(hidden)(j => edges(t).filter(_._1 == pk).map(e => e._4 * e._3(j)).sum)
+        if (aggr == "mean" && count(t).contains(pk)) s.map(_ / count(t)(pk)) else s
+      }
+      val aT = Array.tabulate(hidden)(j => a.map(_(j)).sum)
+      pk -> (a, aT, sig(aT.indices.map(j => aT(j) * p.w2(j)).sum + p.b2) - y)
+    }.toMap
+    val n = parents.length.toDouble
+    val next = rows.zipWithIndex.map { case ((_, dim), t) =>
+      val back = edges(t).flatMap(e => fwd.get(e._1).map(f => (e, f)))
+      def gsum(f: ((Long, Array[Double], Array[Double], Double), Double, Double) => Double) =
+        back.map { case (e, (a, _, dm)) =>
+          val dmB = if (aggr == "mean") dm / count(t)(e._1) else dm
+          val s = (0 until hidden).map(j => a(t)(j) * p.w2(j)).sum
+          f(e, dmB, s)
+        }.sum
+      val w1 = Array.tabulate(dim, hidden)((i, j) => p.w1(t)(i)(j) - lr * gsum((e, dm, _) =>
+        dm * p.w2(j) * e._4 * e._3(j) * (1 - e._3(j)) * e._2(i)) / n)
+      val b1 = Array.tabulate(hidden)(j => p.b1(t)(j) - lr * gsum((e, dm, _) =>
+        dm * p.w2(j) * e._4 * e._3(j) * (1 - e._3(j))) / n)
+      val u = Array.tabulate(dim)(i => p.u(t)(i) - lr * gsum { (e, dm, s) =>
+        val m = (0 until hidden).map(j => e._3(j) * p.w2(j)).sum
+        dm * e._4 * (m - s) * e._2(i)
+      } / n)
+      (w1, b1, u)
+    }
+    Blueprint.HeteroGnnParams(next.map(_._1), next.map(_._2),
+      Array.tabulate(hidden)(j => p.w2(j) - lr * fwd.values.map(f => f._3 * f._2(j)).sum / n),
+      p.b2 - lr * fwd.values.map(_._3).sum / n,
+      if (aggr == "attn") next.map(_._3) else null)
+  }
+
+  private def flatHetero(p: Blueprint.HeteroGnnParams): Seq[Double] =
+    p.w1.flatMap(_.flatMap(_.toSeq)) ++ p.b1.flatMap(_.toSeq) ++ p.w2.toSeq ++ Seq(p.b2) ++
+      Option(p.u).toSeq.flatMap(_.flatMap(_.toSeq))
+
+  /** The query executions (actions) `body` runs, and the RDDs it leaves
+    * persisted. */
+  private def actionsOf(body: => Unit)
+      : (Seq[org.apache.spark.sql.execution.QueryExecution], Set[Int]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.add(qe)
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    org.apache.spark.sql.GraftListenerProbe.drain(spark)
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.sql.GraftListenerProbe.drain(spark)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    (seen.asScala.toSeq, (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
+  }
+
+  private def expressionCount(qe: org.apache.spark.sql.execution.QueryExecution): Int =
+    qe.optimizedPlan.collectWithSubqueries { case n =>
+      n.expressions.map(_.collect { case e => e }.size).sum
+    }.sum
+
+  Seq("sum", "mean", "attn").foreach { aggr =>
+    test(s"fitHeteroGnnGD aggr=$aggr: one step equals the per-edge join-back definition") {
+      val init = heteroInit(Seq(2, 1), hidden = 2, seed = 3)
+      val stepped = Blueprint.fitHeteroGnnGD(heteroGroups(heteroRows),
+        heteroParents.toDF("pid", "y"), Seq("pid"), "y", hidden = 2, steps = 1,
+        lr = 0.5, init = copyHetero(init), aggr = aggr)
+      val want = joinBackStep(heteroRows, heteroParents, init, aggr, lr = 0.5)
+      val moved = flatHetero(want).zip(flatHetero(init)).count { case (a, b) => a != b }
+      assert(moved > 10, s"the step must move the parameters ($moved moved)")
+      assert(flatHetero(stepped).length == flatHetero(want).length)
+      flatHetero(stepped).zip(flatHetero(want)).zipWithIndex.foreach { case ((a, b), k) =>
+        assert(a == b || math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b)),
+          s"parameter $k: $a vs join-back $b")
+      }
+    }
+
+    test(s"fitHeteroGnnGD aggr=$aggr: one action per step, nothing persisted, step-stable code, plan size independent of dim x hidden") {
+      def run(rows: Seq[(Seq[(Long, Array[Double])], Int)], hidden: Int, steps: Int,
+          seed: Int = 5) = {
+        val groups = heteroGroups(rows)
+        val parents = heteroParents.toDF("pid", "y")
+        actionsOf {
+          Blueprint.fitHeteroGnnGD(groups, parents, Seq("pid"), "y", hidden, steps,
+            lr = 0.1, init = heteroInit(rows.map(_._2), hidden, seed), aggr = aggr)
+        }
+      }
+      val (small, leftSmall) = run(heteroRows, hidden = 2, steps = 3)
+      assert(small.length == 3, s"3 steps ran ${small.length} actions")
+      assert(leftSmall.isEmpty, s"steps left persisted RDDs $leftSmall")
+      // parameters enter as referenced literals, never as inlined
+      // constants: other parameters reuse the generated classes
+      import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val compiled = METRIC_COMPILATION_TIME.getCount
+      run(heteroRows, hidden = 2, steps = 2, seed = 6)
+      assert(METRIC_COMPILATION_TIME.getCount == compiled,
+        "a step at new parameters must not compile new code")
+      // the same graph at dim 64 / hidden 32: one literal per parameter
+      // vector, so the optimized plan has the same number of expressions
+      val rnd = new scala.util.Random(11)
+      val wide = heteroRows.map { case (r, _) =>
+        (r.map { case (fk, _) => (fk, Array.fill(64)(rnd.nextGaussian())) }, 64)
+      }
+      val (big, leftBig) = run(wide, hidden = 32, steps = 1)
+      assert(big.length == 1 && leftBig.isEmpty)
+      assert(expressionCount(big.head) == expressionCount(small.head),
+        "plan size must not grow with dim x hidden")
+    }
+
+    test(s"fitHeteroGnnGD aggr=$aggr: a dim=64/hidden=32 step matches finite differences") {
+      val rnd = new scala.util.Random(17)
+      val rows = heteroRows.map { case (r, _) =>
+        (r.map { case (fk, _) => (fk, Array.fill(64)(rnd.nextGaussian())) }, 64)
+      }
+      val groups = heteroGroups(rows)
+      val parents = heteroParents.toDF("pid", "y")
+      val init = heteroInit(Seq(64, 64), hidden = 32, seed = 19)
+      init.w1.foreach(_.foreach(r => r.indices.foreach(j => r(j) *= 0.2)))
+      val lr = 1e-3
+      val stepped = Blueprint.fitHeteroGnnGD(groups, parents, Seq("pid"), "y",
+        hidden = 32, steps = 1, lr = lr, init = copyHetero(init), aggr = aggr)
+      val eps = 1e-5
+      def lossWith(mut: Blueprint.HeteroGnnParams => Unit): Double = {
+        val p = copyHetero(init); mut(p)
+        Blueprint.heteroGnnLogLoss(groups, parents, Seq("pid"), "y", p, aggr = aggr)
+      }
+      type Check = (String, Double, Blueprint.HeteroGnnParams => Unit,
+        Blueprint.HeteroGnnParams => Unit)
+      val checks: Seq[Check] = Seq[Check](
+        ("w1(0)(63)(31)", (init.w1(0)(63)(31) - stepped.w1(0)(63)(31)) / lr,
+          _.w1(0)(63)(31) += eps, _.w1(0)(63)(31) -= eps),
+        ("w1(1)(5)(7)", (init.w1(1)(5)(7) - stepped.w1(1)(5)(7)) / lr,
+          _.w1(1)(5)(7) += eps, _.w1(1)(5)(7) -= eps),
+        ("b1(1)(20)", (init.b1(1)(20) - stepped.b1(1)(20)) / lr,
+          _.b1(1)(20) += eps, _.b1(1)(20) -= eps),
+        ("w2(31)", (init.w2(31) - stepped.w2(31)) / lr, _.w2(31) += eps, _.w2(31) -= eps)) ++
+        (if (aggr != "attn") Nil else Seq[Check](
+          ("u(0)(40)", (init.u(0)(40) - stepped.u(0)(40)) / lr,
+            _.u(0)(40) += eps, _.u(0)(40) -= eps),
+          ("u(1)(0)", (init.u(1)(0) - stepped.u(1)(0)) / lr,
+            _.u(1)(0) += eps, _.u(1)(0) -= eps)))
+      checks.foreach { case (name, analytic, up, down) =>
+        val fd = (lossWith(up) - lossWith(down)) / (2 * eps)
+        assert(math.abs(fd) > 1e-6, s"$name: fixture gives trivial gradient $fd")
+        assert(math.abs(analytic - fd) < 1e-7 + 1e-5 * math.abs(fd),
+          s"$name grad $analytic vs fd $fd")
+      }
+    }
+  }
+
+  test("fitHeteroGnnGD: a feature array that is not dim long, or NULL, fails the step") {
+    val parents = heteroParents.toDF("pid", "y")
+    def fit(bad: Array[Double], aggr: String) = {
+      val rows = heteroRows.updated(0, (heteroRows(0)._1 :+ ((2L, bad)), 2))
+      Blueprint.fitHeteroGnnGD(heteroGroups(rows), parents, Seq("pid"), "y",
+        hidden = 2, steps = 1, lr = 0.1, init = heteroInit(Seq(2, 1), 2, seed = 3),
+        aggr = aggr)
+    }
+    def failsLoudly(body: => Unit): Unit = {
+      val e = intercept[Exception](body)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("must hold 2 non-NULL values")), e.toString)
+    }
+    failsLoudly(fit(Array(1.0), "sum"))                 // short: was a NULL, skipped
+    failsLoudly(fit(Array(1.0, 2.0, 3.0), "mean"))      // long: the extra was ignored
+    failsLoudly(fit(null, "attn"))                      // NULL array
+    failsLoudly(Blueprint.gnnLogLoss(
+      Seq((1L, Array(1.0, 2.0)), (3L, Array(1.0))).toDF("fk", "feat"), Seq("fk"), "feat",
+      parents, Seq("pid"), "y",
+      Blueprint.MlpParams(Array.fill(2, 2)(0.1), Array(0.0, 0.0), Array(0.1, 0.2), 0.0)))
+    // a well-formed group still fits
+    assert(fit(Array(1.0, 2.0), "sum").w2.forall(v => !v.isNaN))
+  }
+
   test("fitGnn2GD: gradient flows through TWO nested scatter-sums; loss falls") {
     // roots 1-3 (root 3 midless); mid 20 leafless; dangling leaf fk=99
     val leaves = Seq(
