@@ -844,9 +844,10 @@ private[graft] object QueriesML {
     * reference's GNN tune space pairs the attention aggregation with
     * num_heads > 1 (blueprint_mlflow.py:267): TWO independent trainable
     * score vectors over the shared lineitem messages, per-head per-parent
-    * softmaxes, concat readout, 2 backprop steps. Same plan shape as bp8
-    * (one windowed pass, one scatter-sum, one join-back) with h× the
-    * scalar columns. */
+    * softmaxes, concat readout, 2 backprop steps. Runs bp8's trainer
+    * (`fitHeteroGnnGD`'s attention path, heads read off the parameter
+    * shapes): one Spark action per step, the two window pairs sharing
+    * the scatter-sum's parent-key exchange. */
   private[graft] val qFitMhaGnn = Q("bp16_fit_mha_gnn",
     (s, d) => {
       import graft.pipeline.Blueprint

@@ -280,7 +280,7 @@ object Blueprint {
     var b = 0.0
     (1 to steps).foreach { _ =>
       val margin = (0 until dim).map(i => x(i) * lit(w(i))).reduce(_ + _) + lit(b)
-      val p = lit(1.0) / (lit(1.0) + exp(-margin))
+      val p = sigmoid(margin)
       val sums = (0 until dim).map(i => sum((p - y) * x(i)).as(s"g_$i")) ++
         Seq(sum(p - y).as("g_b"), count(lit(1)).cast("double").as("n"))
       val row = df.agg(sums.head, sums.tail: _*).collect()(0)
@@ -316,7 +316,8 @@ object Blueprint {
     * gradient product multiplies left-to-right `dm · w2_j · h_j(1−h_j) ·
     * x_i`; updates are `θ − lr·(g/n)`) so the recurrence is restatable
     * engine-for-engine in SQL — cross-engine drift is summation-order and
-    * exp ulps, orders below a round-6 contract. */
+    * exp ulps, orders below a round-6 contract. A feature array that is
+    * not `dim` long, is NULL or holds a NULL fails the step. */
   def fitMlpGD(df: DataFrame, featCol: String, yCol: String, dim: Int,
       hidden: Int, steps: Int, lr: Double,
       init: MlpParams = null): MlpParams = {
@@ -333,17 +334,17 @@ object Blueprint {
       0.0)
     require(p0.w1.length == dim && p0.w1.forall(_.length == hidden) &&
       p0.b1.length == hidden && p0.w2.length == hidden, "init shape mismatch")
+    val rows = withCheckedFeatures(df, featCol, dim, "feature")
     val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
     val y = col(yCol).cast("double")
     val w1 = p0.w1.map(_.clone()); val b1 = p0.b1.clone()
     val w2 = p0.w2.clone(); var b2 = p0.b2
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
     (1 to steps).foreach { _ =>
       val h = (0 until hidden).map { j =>
-        sig((0 until dim).map(i => x(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
+        sigmoid((0 until dim).map(i => x(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
       }
       val m = (0 until hidden).map(j => h(j) * lit(w2(j))).reduce(_ + _) + lit(b2)
-      val dm = sig(m) - y
+      val dm = sigmoid(m) - y
       val sums =
         (for { i <- 0 until dim; j <- 0 until hidden }
           yield sum(dm * lit(w2(j)) * (h(j) * (lit(1.0) - h(j))) * x(i)).as(s"gw_${i}_$j")) ++
@@ -351,7 +352,7 @@ object Blueprint {
           sum(dm * lit(w2(j)) * (h(j) * (lit(1.0) - h(j)))).as(s"gc_$j")) ++
         (0 until hidden).map(j => sum(dm * h(j)).as(s"gv_$j")) ++
         Seq(sum(dm).as("gb"), count(lit(1)).cast("double").as("n"))
-      val row = df.agg(sums.head, sums.tail: _*).collect()(0)
+      val row = rows.agg(sums.head, sums.tail: _*).collect()(0)
       def g(name: String) = row.getDouble(row.fieldIndex(name))
       val n = g("n")
       require(n > 0, "cannot fit on an empty DataFrame")
@@ -479,6 +480,12 @@ object Blueprint {
     * aggregate projected on w2 (cross-type terms vanish: another type's
     * aggregate does not read this type's scores) — rides along as
     * `Σ α·m·x` and `Σ α·x`: `gu_i = Σ_p dm_p·(Σ α·m·x_i − s_t·Σ α·x_i)`.
+    * Attention heads come from the parameter shapes: `H = w2.length /
+    * hidden`; head g owns `u(t)`'s g-th `dim` values and `w2`'s g-th
+    * `hidden` values (head-major). A type's aggregate concatenates the
+    * heads' `Σ α_g·h` over shared messages, the H window pairs share one
+    * exchange, and the driver mixes the heads' message-weight gradient
+    * blocks over `w2_g`. H > 1 needs "attn"; the default init has H = 1.
     * ("min"/"max" route gradients to one extremal child and "cat"
     * changes the readout arity — neither is trained by any reference
     * experiment config; out of scope.)
@@ -506,50 +513,58 @@ object Blueprint {
       if (attn) groups.map(g => Array.tabulate(g.dim)(i => 0.05 * (i + 1)))
       else null)
     checkHetero(groups, keyCols, hidden, p0, aggr)
+    val width = p0.w2.length // the readout's input: H heads × hidden
+    val heads = width / hidden
     var p = p0 // each step builds fresh arrays: the caller's init is never written
     (1 to steps).foreach { _ =>
       val fwd = heteroForward(groups, parents, keyCols, yCol, p, aggr)
         .withColumn("__dm", col("__p") - col("__y"))
       val dm = col("__dm")
-      // per group: message-weight sums (scaled by 1/n_t under mean),
-      // then attn's score sums; zero for a parent with no child of type t
+      // per group: each head's message-weight sums (scaled by 1/n_t under
+      // mean), then attn's score sums; zero for a parent childless in t
       val perGroup = groups.zipWithIndex.flatMap { case (g, t) =>
         val s = col(s"__s$t")
+        val c = (g.dim + 2) * hidden // one head's [Σα·h | Σα·h(1−h)⊗x̂]
         val scale = if (aggr == "mean") dm / col(s"__n$t") else dm
-        val gw = coalesce(transform(slice(s, hidden + 1, (g.dim + 1) * hidden),
-          v => scale * v), zeros((g.dim + 1) * hidden))
-        if (!attn) Seq(gw)
-        else {
-          val off = hidden + (g.dim + 1) * hidden + 1
-          val sProj = Similarity.dot(col(s"__a$t"), Similarity.litVec(p.w2))
-          Seq(gw, coalesce(zip_with(slice(s, off + 1, g.dim),
+        val gw = (0 until heads).map(k =>
+          coalesce(transform(slice(s, k * c + hidden + 1, (g.dim + 1) * hidden),
+            v => scale * v), zeros((g.dim + 1) * hidden)))
+        if (!attn) gw
+        else gw ++ (0 until heads).map { k =>
+          val off = heads * c + 1 + 2 * k * g.dim
+          // s_tk = a^t_k·w2_k, as a^t against w2 zeroed outside head k
+          val sProj = Similarity.dot(col(s"__a$t"), Similarity.litVec(
+            Array.tabulate(width)(i => if (i / hidden == k) p.w2(i) else 0.0)))
+          coalesce(zip_with(slice(s, off + 1, g.dim),
             slice(s, off + g.dim + 1, g.dim), (am, ax) => dm * (am - sProj * ax)),
-            zeros(g.dim)))
+            zeros(g.dim))
         }
       }
       val grad = concat(transform(col("__aT"), v => dm * v) +:
         array(dm, lit(1.0)) +: perGroup: _*)
       val r = fwd.select(VectorAgg.vecSum(grad)).collect()(0).getSeq[Double](0).toArray
-      val n = if (r.isEmpty) 0.0 else r(hidden + 1)
+      val n = if (r.isEmpty) 0.0 else r(width + 1)
       require(n > 0, "cannot fit on an empty parents frame")
-      // unpack in layout order: gv (hidden), gb, n, then per group gw
-      // ((dim+1)×hidden, the last row is b1's) and under attn gu (dim)
-      var off = hidden + 2
+      // unpack in layout order: gv (width), gb, n, then per group H gw
+      // blocks ((dim+1)×hidden, the last row is b1's) and attn's gu (H×dim)
+      var off = width + 2
       val next = groups.zipWithIndex.map { case (g, t) =>
-        val gw = (i: Int, j: Int) => p.w2(j) * r(off + i * hidden + j)
+        val block = (g.dim + 1) * hidden
+        val gw = (i: Int, j: Int) => (0 until heads)
+          .map(k => p.w2(k * hidden + j) * r(off + k * block + i * hidden + j)).sum
         val w1 = Array.tabulate(g.dim, hidden)((i, j) => p.w1(t)(i)(j) - lr * (gw(i, j) / n))
         val b1 = Array.tabulate(hidden)(j => p.b1(t)(j) - lr * (gw(g.dim, j) / n))
-        off += (g.dim + 1) * hidden
+        off += heads * block
         val u = if (!attn) null else {
-          val ut = Array.tabulate(g.dim)(i => p.u(t)(i) - lr * (r(off + i) / n))
-          off += g.dim
+          val ut = Array.tabulate(heads * g.dim)(i => p.u(t)(i) - lr * (r(off + i) / n))
+          off += heads * g.dim
           ut
         }
         (w1, b1, u)
       }
       p = HeteroGnnParams(next.map(_._1), next.map(_._2),
-        Array.tabulate(hidden)(j => p.w2(j) - lr * (r(j) / n)),
-        p.b2 - lr * (r(hidden) / n),
+        Array.tabulate(width)(j => p.w2(j) - lr * (r(j) / n)),
+        p.b2 - lr * (r(width) / n),
         if (attn) next.map(_._3) else null)
     }
     p
@@ -562,10 +577,9 @@ object Blueprint {
   def heteroGnnLogLoss(groups: Seq[EdgeGroup], parents: DataFrame,
       keyCols: Seq[String], yCol: String, p: HeteroGnnParams,
       aggr: String = "sum"): Double = {
-    checkHetero(groups, keyCols, p.w2.length, p, aggr)
-    val (y, pr) = (col("__y"), col("__p"))
+    checkHetero(groups, keyCols, p.b1.headOption.fold(0)(_.length), p, aggr)
     heteroForward(groups, parents, keyCols, yCol, p, aggr)
-      .agg(avg(-(y * log(pr) + (lit(1.0) - y) * log(lit(1.0) - pr))))
+      .agg(meanLogLoss(col("__y"), col("__p")))
       .collect()(0).getDouble(0)
   }
 
@@ -580,49 +594,74 @@ object Blueprint {
         s"bad edge group: dim=${g.dim}, fkCols=${g.fkCols} vs keyCols=$keyCols")
     }
     require(p.w1.length == groups.length && p.b1.length == groups.length &&
-      p.w2.length == hidden &&
+      p.w2.nonEmpty && p.w2.length % hidden == 0 &&
       p.w1.zip(groups).forall { case (w, g) =>
         w.length == g.dim && w.forall(_.length == hidden) } &&
       p.b1.forall(_.length == hidden), "init shape mismatch")
+    val heads = p.w2.length / hidden
+    require(heads == 1 || aggr == "attn",
+      s"w2 holds $heads heads of $hidden units: needs aggr='attn', got '$aggr'")
     require(aggr != "attn" || (p.u != null && p.u.length == groups.length &&
-      p.u.zip(groups).forall { case (ut, g) => ut.length == g.dim }),
-      "aggr='attn' needs one scorer u(t) per group, sized to its dim")
+      p.u.zip(groups).forall { case (ut, g) => ut.length == heads * g.dim }),
+      "aggr='attn' needs one scorer u(t) per group, holding heads × dim values")
   }
 
   private def zeros(n: Int): Column = Similarity.litVec(Array.fill(n)(0.0))
 
+  /** The logistic function, op order `1/(1+exp(−z))` (what the SQL
+    * restatements spell out). */
+  private def sigmoid(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
+
+  /** Mean logistic loss of predictions `p` against 0/1 labels `y`. */
+  private def meanLogLoss(y: Column, p: Column): Column =
+    avg(-(y * log(p) + (lit(1.0) - y) * log(lit(1.0) - p)))
+
+  /** `c` as `array<double>`, failing the query on a row whose array is
+    * not `dim` long, is NULL or holds a NULL element: element access past
+    * the end is NULL with ANSI off and sums skip NULLs, so such a row
+    * would otherwise drop out of a gradient sum while a count still
+    * counts it. `what` names the column in the error. */
+  private def checkedFeatures(c: Column, dim: Int, what: String): Column = {
+    val f = c.cast("array<double>")
+    when(size(f) === dim && forall(f, _.isNotNull), f)
+      .otherwise(raise_error(concat(lit(s"$what must hold $dim non-NULL values, got "),
+        coalesce(f.cast("string"), lit("NULL")))).cast("array<double>"))
+  }
+
+  /** `df` with `featCol` replaced by its [[checkedFeatures]]; unchanged
+    * (the column may be absent) when `dim` is 0 — a mid with no features. */
+  private def withCheckedFeatures(df: DataFrame, featCol: String, dim: Int,
+      what: String): DataFrame =
+    if (dim == 0) df
+    else df.withColumn(featCol, checkedFeatures(col(featCol), dim, s"$what column '$featCol'"))
+
   /** The forward plan of [[fitHeteroGnnGD]] at parameters `p`: one row per
     * parent with its label `__y`, the readout's prediction `__p`, the
     * cross-type aggregate `__aT` and, per group t, the child count `__n$t`,
-    * the group's own aggregate `__a$t` (zero when childless in t) and the
-    * raw packed per-parent sums `__s$t` (NULL when childless in t):
+    * the group's own aggregate `__a$t` (zero when childless in t; H heads
+    * concatenated, head-major) and the raw packed per-parent sums `__s$t`
+    * (NULL when childless in t):
     *
-    *   [Σh (hidden) | Σ h(1−h)⊗x̂ ((dim+1)×hidden, i-major) | count |
-    *    attn only: Σ α·m·x (dim) | Σ α·x (dim)]
+    *   [per head: Σh (hidden) | Σ h(1−h)⊗x̂ ((dim+1)×hidden, i-major) |
+    *    count | attn only, per head: Σ α·m·x (dim) | Σ α·x (dim)]
     *
-    * with x̂ = x ++ [1] (its last row is the bias's) and, under attn, the
-    * first two blocks α-weighted. */
+    * with x̂ = x ++ [1] (its last row is the bias's) and, under attn, head
+    * g's first two blocks weighted by its α_g and its m_g = h·w2_g. One
+    * head (always, under sum and mean) is one block of each. */
   private def heteroForward(groups: Seq[EdgeGroup], parents: DataFrame,
       keyCols: Seq[String], yCol: String, p: HeteroGnnParams,
       aggr: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hidden = p.w2.length
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
+    val hidden = p.b1.head.length
+    val heads = p.w2.length / hidden
     val sums = groups.zipWithIndex.map { case (g, t) =>
-      // a feature array of the wrong width (or NULL, or with a NULL
-      // element) fails loudly: element access past the end is NULL with
-      // ANSI off, and sums skip NULLs
-      val f = col(g.featCol).cast("array<double>")
-      val x = when(size(f) === g.dim && forall(f, _.isNotNull), f)
-        .otherwise(raise_error(concat(
-          lit(s"edge group $t: column '${g.featCol}' must hold ${g.dim} non-NULL values, got "),
-          coalesce(f.cast("string"), lit("NULL")))).cast("array<double>"))
+      val x = checkedFeatures(col(g.featCol), g.dim, s"edge group $t: column '${g.featCol}'")
       // message weights as ONE literal: hidden rows of (w1(·)(j) ++ b1(j))
       val w = typedLit(Array.tabulate(hidden, g.dim + 1)((j, i) =>
         if (i < g.dim) p.w1(t)(i)(j) else p.b1(t)(j)))
       val msg = g.children.select(g.fkCols.map(col) :+ x.as("__x"): _*)
         .withColumn("__xh", concat(col("__x"), array(lit(1.0))))
-        .withColumn("__h", transform(w, wj => sig(Similarity.dot(col("__xh"), wj))))
+        .withColumn("__h", transform(w, wj => sigmoid(Similarity.dot(col("__xh"), wj))))
       val core = concat(col("__h"), flatten(transform(col("__xh"),
         xi => transform(col("__h"), h => xi * (h * (lit(1.0) - h))))))
       val packed =
@@ -630,14 +669,22 @@ object Blueprint {
           concat(core, array(lit(1.0))).as("__v"): _*)
         else {
           val win = Window.partitionBy(g.fkCols.map(col): _*)
-          val e = Similarity.dot(col("__x"), Similarity.litVec(p.u(t)))
-          val stable = exp(e - max(e).over(win))
-          val al = col("__al")
-          val m = Similarity.dot(col("__h"), Similarity.litVec(p.w2))
-          msg.withColumn("__al", stable / sum(stable).over(win))
-            .select(g.fkCols.map(col) :+ concat(transform(core, v => al * v),
-              array(lit(1.0)), transform(col("__x"), xi => al * m * xi),
-              transform(col("__x"), xi => al * xi)).as("__v"): _*)
+          val alphas = (0 until heads).map { k =>
+            val e = Similarity.dot(col("__x"),
+              Similarity.litVec(p.u(t).slice(k * g.dim, (k + 1) * g.dim)))
+            val stable = exp(e - max(e).over(win))
+            (stable / sum(stable).over(win)).as(s"__al$k")
+          }
+          val al = (k: Int) => col(s"__al$k")
+          val m = (k: Int) => Similarity.dot(col("__h"),
+            Similarity.litVec(p.w2.slice(k * hidden, (k + 1) * hidden)))
+          msg.select(col("*") +: alphas: _*)
+            .select(g.fkCols.map(col) :+ concat(
+              (0 until heads).map(k => transform(core, v => al(k) * v)) ++
+              Seq(array(lit(1.0))) ++
+              (0 until heads).flatMap(k => Seq(
+                transform(col("__x"), xi => al(k) * m(k) * xi),
+                transform(col("__x"), xi => al(k) * xi))): _*).as("__v"): _*)
         }
       val aggd = packed.groupBy(g.fkCols.map(col): _*)
         .agg(VectorAgg.vecSum(col("__v")).as(s"__s$t"))
@@ -649,21 +696,23 @@ object Blueprint {
         parents.select(keyCols.map(col) :+ col(yCol).cast("double").as("__y"): _*)) {
       (acc, s) => acc.join(s, keyCols, "left")
     }
-    // per-type aggregate: the sums (mean: over the child count), zero
+    // per-type aggregate: the heads' Σh (mean: over the child count), zero
     // when childless in that type
     val perType = groups.zipWithIndex.flatMap { case (g, t) =>
       val s = col(s"__s$t")
-      val n = coalesce(element_at(s, hidden + (g.dim + 1) * hidden + 1), lit(0.0))
-      val a = if (aggr == "mean") transform(slice(s, 1, hidden), v => v / n)
-        else slice(s, 1, hidden)
-      Seq(n.as(s"__n$t"), coalesce(a, zeros(hidden)).as(s"__a$t"))
+      val c = (g.dim + 2) * hidden // one head's [Σh | Σ h(1−h)⊗x̂]
+      val n = coalesce(element_at(s, heads * c + 1), lit(0.0))
+      val sh = if (heads == 1) slice(s, 1, hidden)
+        else concat((0 until heads).map(k => slice(s, k * c + 1, hidden)): _*)
+      val a = if (aggr == "mean") transform(sh, v => v / n) else sh
+      Seq(n.as(s"__n$t"), coalesce(a, zeros(p.w2.length)).as(s"__a$t"))
     }
     val withA = joined.select(col("__y") +: groups.indices.map(t => col(s"__s$t")) ++:
       perType: _*)
     val aT = groups.indices.map(t => col(s"__a$t"))
       .reduce((a, b) => zip_with(a, b, (x, y) => x + y))
     withA.withColumn("__aT", aT)
-      .withColumn("__p", sig(Similarity.dot(concat(col("__aT"), array(lit(1.0))),
+      .withColumn("__p", sigmoid(Similarity.dot(concat(col("__aT"), array(lit(1.0))),
         Similarity.litVec(p.w2 :+ p.b2))))
   }
 
@@ -702,6 +751,9 @@ object Blueprint {
     * step's gradients are collected; parameters re-enter as literals, no
     * executor state.
     *
+    * A leaf (or mid) feature array not `leafDim` (`midDim`) non-NULL
+    * values long fails the step.
+    *
     * (The reference interleaves ReLU/batch-norm between layers; this
     * restatement uses the same sigmoid nonlinearity as the rest of the
     * trainable stack so the SQL restatement stays one device.) */
@@ -731,8 +783,9 @@ object Blueprint {
       p0.b1.length == h1 && p0.w2.length == d2 &&
       p0.w2.forall(_.length == h2) && p0.b2.length == h2 &&
       p0.v.length == h2, "init shape mismatch")
+    val leafRows = withCheckedFeatures(leaves, leafFeatCol, leafDim, "leaf")
+    val midRows = withCheckedFeatures(mids, midFeatCol, midDim, "mid")
     val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
     val w1 = p0.w1.map(_.clone()); val b1 = p0.b1.clone()
     val w2 = p0.w2.map(_.clone()); val b2 = p0.b2.clone()
     val v = p0.v.clone(); var vb = p0.vb
@@ -742,15 +795,10 @@ object Blueprint {
       // level-1 forward: leaf messages scatter-sum into mids; keep the
       // mid frame (keys, fk-to-root, z, A) — three later passes read it
       val m1 = (0 until h1).map { j =>
-        sig((0 until leafDim).map(i => xL(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
+        sigmoid((0 until leafDim).map(i => xL(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
       }
-      val aggd1 = leaves.groupBy(leafFkCols.map(col): _*)
-        .agg((0 until h1).map(j => sum(m1(j)).as(s"__A$j")).head,
-          (0 until h1).map(j => sum(m1(j)).as(s"__A$j")).tail: _*)
-      val ren1 = leafFkCols.zip(midKeyCols).foldLeft(aggd1) {
-        case (df, (c, k)) => df.withColumnRenamed(c, k)
-      }
-      val mid = mids
+      val ren1 = scatterSums(leafRows, leafFkCols, midKeyCols, m1, "__A")
+      val mid = midRows
         .select((midKeyCols ++ midFkCols).distinct.map(col) ++
           (0 until midDim).map(i => zM(i).as(s"__z$i")): _*)
         .join(ren1, midKeyCols, "left")
@@ -762,14 +810,9 @@ object Blueprint {
       val in2 = (i: Int) =>
         if (i < h1) col(s"__A$i") else col(s"__z${i - h1}")
       val m2 = (0 until h2).map { k =>
-        sig((0 until d2).map(i => in2(i) * lit(w2(i)(k))).reduce(_ + _) + lit(b2(k)))
+        sigmoid((0 until d2).map(i => in2(i) * lit(w2(i)(k))).reduce(_ + _) + lit(b2(k)))
       }
-      val aggd2 = mid.groupBy(midFkCols.map(col): _*)
-        .agg((0 until h2).map(k => sum(m2(k)).as(s"__B$k")).head,
-          (0 until h2).map(k => sum(m2(k)).as(s"__B$k")).tail: _*)
-      val ren2 = midFkCols.zip(rootKeyCols).foldLeft(aggd2) {
-        case (df, (c, k)) => df.withColumnRenamed(c, k)
-      }
+      val ren2 = scatterSums(mid, midFkCols, rootKeyCols, m2, "__B")
       val root = roots
         .select(rootKeyCols.map(col) :+ y.as("__y"): _*)
         .join(ren2, rootKeyCols, "left")
@@ -777,7 +820,7 @@ object Blueprint {
           (0 until h2).map(k => coalesce(col(s"__B$k"), lit(0.0)).as(s"__B$k")): _*)
         .localCheckpoint(true)
       val margin = (0 until h2).map(k => col(s"__B$k") * lit(v(k))).reduce(_ + _) + lit(vb)
-      val dm = sig(margin) - col("__y")
+      val dm = sigmoid(margin) - col("__y")
       // readout gradients over roots
       val rootSums = (0 until h2).map(k => sum(dm * col(s"__B$k")).as(s"gv_$k")) ++
         Seq(sum(dm).as("gvb"), count(lit(1)).cast("double").as("n"))
@@ -808,7 +851,7 @@ object Blueprint {
             (0 until h1).map(j => gamma(j).as(s"__g$j")): _*)) {
         case (df, (k, c)) => df.withColumnRenamed(k, c)
       }
-      val back1 = leaves.join(gammaPerMid, leafFkCols)
+      val back1 = leafRows.join(gammaPerMid, leafFkCols)
       val sp1 = (j: Int) => m1(j) * (lit(1.0) - m1(j))
       val back1Sums =
         (for { i <- 0 until leafDim; j <- 0 until h1 }
@@ -847,44 +890,44 @@ object Blueprint {
       p: Gnn2Params): Double = {
     val leafDim = p.w1.length; val h1 = p.b1.length; val h2 = p.b2.length
     val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
     val xL = (i: Int) => element_at(col(leafFeatCol), i + 1).cast("double")
     val zM = (i: Int) => element_at(col(midFeatCol), i + 1).cast("double")
     val m1 = (0 until h1).map { j =>
-      sig((0 until leafDim).map(i => xL(i) * lit(p.w1(i)(j))).reduce(_ + _) +
+      sigmoid((0 until leafDim).map(i => xL(i) * lit(p.w1(i)(j))).reduce(_ + _) +
         lit(p.b1(j)))
     }
-    val aggd1 = leaves.groupBy(leafFkCols.map(col): _*)
-      .agg((0 until h1).map(j => sum(m1(j)).as(s"__A$j")).head,
-        (0 until h1).map(j => sum(m1(j)).as(s"__A$j")).tail: _*)
-    val ren1 = leafFkCols.zip(midKeyCols).foldLeft(aggd1) {
-      case (df, (c, k)) => df.withColumnRenamed(c, k)
-    }
+    val ren1 = scatterSums(withCheckedFeatures(leaves, leafFeatCol, leafDim, "leaf"),
+      leafFkCols, midKeyCols, m1, "__A")
     val midDimN = p.w2.length - h1
-    val mid = mids
+    val mid = withCheckedFeatures(mids, midFeatCol, midDimN, "mid")
       .select((midKeyCols ++ midFkCols).distinct.map(col) ++
         (0 until midDimN).map(i => zM(i).as(s"__z$i")): _*)
       .join(ren1, midKeyCols, "left")
     val in2 = (i: Int) =>
       if (i < h1) coalesce(col(s"__A$i"), lit(0.0)) else col(s"__z${i - h1}")
     val m2 = (0 until h2).map { k =>
-      sig((0 until p.w2.length).map(i => in2(i) * lit(p.w2(i)(k))).reduce(_ + _) +
+      sigmoid((0 until p.w2.length).map(i => in2(i) * lit(p.w2(i)(k))).reduce(_ + _) +
         lit(p.b2(k)))
     }
-    val aggd2 = mid.groupBy(midFkCols.map(col): _*)
-      .agg((0 until h2).map(k => sum(m2(k)).as(s"__B$k")).head,
-        (0 until h2).map(k => sum(m2(k)).as(s"__B$k")).tail: _*)
-    val ren2 = midFkCols.zip(rootKeyCols).foldLeft(aggd2) {
-      case (df, (c, k)) => df.withColumnRenamed(c, k)
-    }
+    val ren2 = scatterSums(mid, midFkCols, rootKeyCols, m2, "__B")
     val margin = (0 until h2)
       .map(k => coalesce(col(s"__B$k"), lit(0.0)) * lit(p.v(k))).reduce(_ + _) +
       lit(p.vb)
-    val pr = sig(margin)
     roots.select(rootKeyCols.map(col) :+ y.as("__y"): _*)
       .join(ren2, rootKeyCols, "left")
-      .agg(avg(-(col("__y") * log(pr) + (lit(1.0) - col("__y")) * log(lit(1.0) - pr))))
+      .agg(meanLogLoss(col("__y"), sigmoid(margin)))
       .collect()(0).getDouble(0)
+  }
+
+  /** Per-parent sums of the per-row `msgs` (named `name0`, `name1`, …)
+    * of `rows` grouped on `fkCols`, renamed to the parent's `keyCols`. */
+  private def scatterSums(rows: DataFrame, fkCols: Seq[String], keyCols: Seq[String],
+      msgs: Seq[Column], name: String): DataFrame = {
+    val sums = msgs.indices.map(j => sum(msgs(j)).as(s"$name$j"))
+    fkCols.zip(keyCols).foldLeft(rows.groupBy(fkCols.map(col): _*)
+        .agg(sums.head, sums.tail: _*)) {
+      case (df, (c, k)) => df.withColumnRenamed(c, k)
+    }
   }
 
   /** Parameters of the attention GNN layer: message weights `w1`/`b1`,
@@ -956,25 +999,16 @@ object Blueprint {
     * aggregates `a^g_j = Σ_c α^g_c·h_cj` feed the readout
     * `p = σ(Σ_g Σ_j a^g_j·w2(g)(j) + b2)`.
     *
-    * The backward is bp8's per head: score gradients
-    * `∂L/∂e^g_c = dm·α^g_c·(m^g_c − s^g)` with `m^g_c = Σ_j w2(g)(j)·
-    * h_cj` and `s^g = Σ_j w2(g)(j)·a^g_j`; the shared message weights
-    * accumulate over heads (`∂L/∂h_cj = dm·Σ_g w2(g)(j)·α^g_c`). Cost
-    * per GD step is IDENTICAL in shape to one head — the same windowed
-    * softmax pass (h window pairs over ONE partition spec, computed in
-    * one exchange + sort), the same scatter-sum, the same single
-    * join-back — just h× the scalar columns. heads=1 reproduces
-    * [[fitAttnGnnGD]] exactly. */
+    * This is [[fitHeteroGnnGD]] with ONE edge group under `aggr = "attn"`
+    * and `u`/`w2` flattened head-major (the heads come from those
+    * shapes), so a GD step is that step: ONE Spark action, the backward
+    * sums (bp8's softmax Jacobian per head) riding the forward aggregate.
+    * heads=1 reproduces [[fitAttnGnnGD]] exactly. */
   def fitMhaGnnGD(children: DataFrame, fkCols: Seq[String], featCol: String,
       parents: DataFrame, keyCols: Seq[String], yCol: String,
       dim: Int, hidden: Int, heads: Int, steps: Int, lr: Double,
       init: MhaGnnParams = null): MhaGnnParams = {
-    require(dim >= 1 && hidden >= 1, "need at least one feature and hidden unit")
     require(heads >= 1, s"need at least one head, got $heads")
-    require(steps >= 1, "need at least one step")
-    require(lr > 0, s"learning rate must be positive, got $lr")
-    require(fkCols.nonEmpty && fkCols.length == keyCols.length,
-      s"FK arity mismatch: $fkCols vs $keyCols")
     val p0 = if (init != null) init else MhaGnnParams(
       Array.tabulate(dim, hidden)((i, j) => 0.1 * (i + 1) * (if (j % 2 == 0) 1 else -1)),
       Array.fill(hidden)(0.0),
@@ -983,136 +1017,28 @@ object Blueprint {
       Array.tabulate(heads, hidden)((g, j) =>
         0.1 * (j + 1) * (if ((g + j) % 2 == 0) 1 else -1)),
       0.0)
-    require(p0.w1.length == dim && p0.w1.forall(_.length == hidden) &&
-      p0.b1.length == hidden && p0.u.length == heads &&
-      p0.u.forall(_.length == dim) && p0.w2.length == heads &&
-      p0.w2.forall(_.length == hidden), "init shape mismatch")
-    val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val w1 = p0.w1.map(_.clone()); val b1 = p0.b1.clone()
-    val u = p0.u.map(_.clone()); val w2 = p0.w2.map(_.clone()); var b2 = p0.b2
-    import org.apache.spark.sql.expressions.Window
-    (1 to steps).foreach { _ =>
-      val h = (0 until hidden).map { j =>
-        sig((0 until dim).map(i => x(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
-      }
-      val w = Window.partitionBy(fkCols.map(col): _*)
-      val alpha = (0 until heads).map { g =>
-        val e = (0 until dim).map(i => x(i) * lit(u(g)(i))).reduce(_ + _)
-        val stable = exp(e - max(e).over(w))
-        stable / sum(stable).over(w)
-      }
-      val ed = children.select(
-          fkCols.map(col) ++
-          (0 until dim).map(i => x(i).as(s"__x$i")) ++
-          (0 until hidden).map(j => h(j).as(s"__h$j")) ++
-          (0 until heads).map(g => alpha(g).as(s"__al$g")): _*)
-        .localCheckpoint(true)
-      val aggSums = for (g <- 0 until heads; j <- 0 until hidden)
-        yield sum(col(s"__al$g") * col(s"__h$j")).as(s"__a${g}_$j")
-      val aggd = ed.groupBy(fkCols.map(col): _*).agg(aggSums.head, aggSums.tail: _*)
-      val renamed = fkCols.zip(keyCols).foldLeft(aggd) {
-        case (df, (c, k)) => df.withColumnRenamed(c, k)
-      }
-      val dst = parents
-        .select(keyCols.map(col) :+ y.as("__y"): _*)
-        .join(renamed, keyCols, "left")
-        .select(keyCols.map(col) ++ Seq(col("__y")) ++
-          (for (g <- 0 until heads; j <- 0 until hidden)
-            yield coalesce(col(s"__a${g}_$j"), lit(0.0)).as(s"__a${g}_$j")): _*)
-        .localCheckpoint(true)
-      val m = (for (g <- 0 until heads; j <- 0 until hidden)
-        yield col(s"__a${g}_$j") * lit(w2(g)(j))).reduce(_ + _) + lit(b2)
-      val dm = sig(m) - col("__y")
-      val sProj = (g: Int) => (0 until hidden)
-        .map(j => col(s"__a${g}_$j") * lit(w2(g)(j))).reduce(_ + _)
-      val dstSums = (for (g <- 0 until heads; j <- 0 until hidden)
-          yield sum(dm * col(s"__a${g}_$j")).as(s"gv_${g}_$j")) ++
-        Seq(sum(dm).as("gb"), count(lit(1)).cast("double").as("n"))
-      val dRow = dst.agg(dstSums.head, dstSums.tail: _*).collect()(0)
-      def gd(name: String) = dRow.getDouble(dRow.fieldIndex(name))
-      val n = gd("n")
-      require(n > 0, "cannot fit on an empty parents frame")
-      val dmPerDst = keyCols.zip(fkCols).foldLeft(
-          dst.select(keyCols.map(col) ++ (dm.as("__dm") +:
-            (0 until heads).map(g => sProj(g).as(s"__s$g"))): _*)) {
-        case (df, (k, c)) => df.withColumnRenamed(k, c)
-      }
-      val back = ed.join(dmPerDst, fkCols)
-      val hB = (j: Int) => col(s"__h$j")
-      val xB = (i: Int) => col(s"__x$i")
-      val mProj = (g: Int) => (0 until hidden)
-        .map(j => hB(j) * lit(w2(g)(j))).reduce(_ + _)
-      // shared message weights: the α-weighted readout mix Σ_g w2(g)(j)·α^g
-      val mix = (j: Int) => (0 until heads)
-        .map(g => lit(w2(g)(j)) * col(s"__al$g")).reduce(_ + _)
-      val backSums =
-        (for { i <- 0 until dim; j <- 0 until hidden }
-          yield sum(col("__dm") * mix(j) *
-              (hB(j) * (lit(1.0) - hB(j))) * xB(i)).as(s"gw_${i}_$j")) ++
-        (0 until hidden).map(j =>
-          sum(col("__dm") * mix(j) *
-            (hB(j) * (lit(1.0) - hB(j)))).as(s"gc_$j")) ++
-        (for { g <- 0 until heads; i <- 0 until dim }
-          yield sum(col("__dm") * col(s"__al$g") * (mProj(g) - col(s"__s$g")) *
-            xB(i)).as(s"gu_${g}_$i"))
-      val bRow = back.agg(backSums.head, backSums.tail: _*).collect()(0)
-      def gb(name: String) =
-        if (bRow.isNullAt(bRow.fieldIndex(name))) 0.0
-        else bRow.getDouble(bRow.fieldIndex(name))
-      for (i <- 0 until dim; j <- 0 until hidden)
-        w1(i)(j) = w1(i)(j) - lr * (gb(s"gw_${i}_$j") / n)
-      for (j <- 0 until hidden) b1(j) = b1(j) - lr * (gb(s"gc_$j") / n)
-      for (g <- 0 until heads) {
-        (0 until dim).foreach(i => u(g)(i) = u(g)(i) - lr * (gb(s"gu_${g}_$i") / n))
-        (0 until hidden).foreach(j => w2(g)(j) = w2(g)(j) - lr * (gd(s"gv_${g}_$j") / n))
-      }
-      b2 = b2 - lr * (gd("gb") / n)
-      graft.util.Checkpoints.release(dst)
-      graft.util.Checkpoints.release(ed)
-    }
-    MhaGnnParams(w1, b1, u, w2, b2)
+    require(p0.u.length == heads && p0.w2.length == heads, "init shape mismatch")
+    val p = fitHeteroGnnGD(Seq(EdgeGroup(children, fkCols, featCol, dim)), parents,
+      keyCols, yCol, hidden, steps, lr, mhaAsHetero(p0), aggr = "attn")
+    MhaGnnParams(p.w1.head, p.b1.head, p.u.head.grouped(dim).toArray,
+      p.w2.grouped(hidden).toArray, p.b2)
   }
 
-  /** Mean logistic loss of [[fitMhaGnnGD]]'s network — one windowed
-    * multi-head softmax + scatter-sum + one aggregate; the
-    * finite-difference anchor proving each head's score vector gets its
-    * own gradient. */
+  /** Mean logistic loss of [[fitMhaGnnGD]]'s network ([[heteroGnnLogLoss]]
+    * on one group under `aggr = "attn"`); the finite-difference anchor
+    * proving each head's score vector gets its own gradient. */
   def mhaGnnLogLoss(children: DataFrame, fkCols: Seq[String], featCol: String,
       parents: DataFrame, keyCols: Seq[String], yCol: String,
-      p: MhaGnnParams): Double = {
-    val dim = p.w1.length; val hidden = p.b1.length; val heads = p.u.length
-    val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val h = (0 until hidden).map { j =>
-      sig((0 until dim).map(i => x(i) * lit(p.w1(i)(j))).reduce(_ + _) + lit(p.b1(j)))
-    }
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(fkCols.map(col): _*)
-    val alpha = (0 until heads).map { g =>
-      val e = (0 until dim).map(i => x(i) * lit(p.u(g)(i))).reduce(_ + _)
-      val stable = exp(e - max(e).over(w))
-      stable / sum(stable).over(w)
-    }
-    val ed = children.select(fkCols.map(col) ++
-      (for (g <- 0 until heads; j <- 0 until hidden)
-        yield (alpha(g) * h(j)).as(s"__wh${g}_$j")): _*)
-    val aggSums = for (g <- 0 until heads; j <- 0 until hidden)
-      yield sum(col(s"__wh${g}_$j")).as(s"__a${g}_$j")
-    val aggd = ed.groupBy(fkCols.map(col): _*).agg(aggSums.head, aggSums.tail: _*)
-    val renamed = fkCols.zip(keyCols).foldLeft(aggd) {
-      case (df, (c, k)) => df.withColumnRenamed(c, k)
-    }
-    val m = (for (g <- 0 until heads; j <- 0 until hidden)
-      yield coalesce(col(s"__a${g}_$j"), lit(0.0)) * lit(p.w2(g)(j)))
-      .reduce(_ + _) + lit(p.b2)
-    val pr = sig(m)
-    parents.select(keyCols.map(col) :+ y.as("__y"): _*)
-      .join(renamed, keyCols, "left")
-      .agg(avg(-(col("__y") * log(pr) + (lit(1.0) - col("__y")) * log(lit(1.0) - pr))))
-      .collect()(0).getDouble(0)
+      p: MhaGnnParams): Double =
+    heteroGnnLogLoss(Seq(EdgeGroup(children, fkCols, featCol, p.w1.length)),
+      parents, keyCols, yCol, mhaAsHetero(p), aggr = "attn")
+
+  /** [[MhaGnnParams]] as one group's [[HeteroGnnParams]]: the per-head
+    * scorers and readout slices flattened head-major. */
+  private def mhaAsHetero(p: MhaGnnParams): HeteroGnnParams = {
+    require(p.u.forall(_.length == p.w1.length) && p.w2.forall(_.length == p.b1.length),
+      "init shape mismatch")
+    HeteroGnnParams(Seq(p.w1), Seq(p.b1), p.w2.flatten, p.b2, Seq(p.u.flatten))
   }
 
   /** Mean logistic loss of [[fitMlpGD]]'s network — one aggregation pass;
@@ -1123,13 +1049,11 @@ object Blueprint {
     val dim = p.w1.length; val hidden = p.b1.length
     val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
     val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
     val h = (0 until hidden).map { j =>
-      sig((0 until dim).map(i => x(i) * lit(p.w1(i)(j))).reduce(_ + _) + lit(p.b1(j)))
+      sigmoid((0 until dim).map(i => x(i) * lit(p.w1(i)(j))).reduce(_ + _) + lit(p.b1(j)))
     }
     val m = (0 until hidden).map(j => h(j) * lit(p.w2(j))).reduce(_ + _) + lit(p.b2)
-    val pr = sig(m)
-    df.agg(avg(-(y * log(pr) + (lit(1.0) - y) * log(lit(1.0) - pr))))
+    withCheckedFeatures(df, featCol, dim, "feature").agg(meanLogLoss(y, sigmoid(m)))
       .collect()(0).getDouble(0)
   }
 
@@ -1195,7 +1119,6 @@ object Blueprint {
     import spark.implicits._
     val x = (j: Int) => element_at(col(featCol), j + 1).cast("double")
     val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
     (1 to steps).foreach { _ =>
       val embDf = e.zipWithIndex.map { case (row, c) => (c, row) }.toSeq
         .toDF("__code", "__emb")
@@ -1204,7 +1127,7 @@ object Blueprint {
       val ei = (i: Int) => element_at(col("__emb"), i + 1)
       val margin = (0 until dim).map(i => ei(i) * lit(w(i))) ++
         (0 until nFeat).map(j => x(j) * lit(u(j))) reduceOption (_ + _)
-      val dm = sig(margin.getOrElse(lit(0.0)) + lit(b)) - y
+      val dm = sigmoid(margin.getOrElse(lit(0.0)) + lit(b)) - y
       val sums = Seq(sum(dm).as("__s"), count(lit(1)).cast("double").as("__n")) ++
         (0 until nFeat).map(j => sum(dm * x(j)).as(s"__t$j"))
       val rows = joined.groupBy(col("__code")).agg(sums.head, sums.tail: _*)
@@ -1246,9 +1169,8 @@ object Blueprint {
     val ei = (i: Int) => element_at(col("__emb"), i + 1)
     val margin = ((0 until dim).map(i => ei(i) * lit(p.w(i))) ++
       (0 until nFeat).map(j => x(j) * lit(p.u(j)))).reduce(_ + _) + lit(p.b)
-    val pr = lit(1.0) / (lit(1.0) + exp(-margin))
     df.join(broadcast(embDf), col(codeCol).cast("int") === col("__code"))
-      .agg(avg(-(y * log(pr) + (lit(1.0) - y) * log(lit(1.0) - pr))))
+      .agg(meanLogLoss(y, sigmoid(margin)))
       .collect()(0).getDouble(0)
   }
 
@@ -1346,14 +1268,13 @@ object Blueprint {
     val x = (bi: Int, i: Int) => element_at(col(tokenCols(bi)), i + 1).cast("double")
     val y = col(yCol).cast("double")
     val scale = 1.0 / math.sqrt(dim.toDouble)
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
     (1 to steps).foreach { _ =>
       val e = (0 until k).map(bi =>
         exp((0 until dim).map(i => x(bi, i) * lit(q(i))).reduce(_ + _) * lit(scale)))
       val z = e.reduce(_ + _)
       val a = (0 until dim).map(i =>
         (0 until k).map(bi => e(bi) / z * x(bi, i)).reduce(_ + _))
-      val dm = sig((0 until dim).map(i => a(i) * lit(w(i))).reduce(_ + _) + lit(b)) - y
+      val dm = sigmoid((0 until dim).map(i => a(i) * lit(w(i))).reduce(_ + _) + lit(b)) - y
       val g = (0 until k).map(bi =>
         dm * (0 until dim).map(i => lit(w(i)) * x(bi, i)).reduce(_ + _))
       val sumg = (0 until k).map(bi => e(bi) / z * g(bi)).reduce(_ + _)
@@ -1392,8 +1313,7 @@ object Blueprint {
     val a = (0 until dim).map(i =>
       (0 until k).map(bi => e(bi) / z * x(bi, i)).reduce(_ + _))
     val m = (0 until dim).map(i => a(i) * lit(p.w(i))).reduce(_ + _) + lit(p.b)
-    val pr = lit(1.0) / (lit(1.0) + exp(-m))
-    df.agg(avg(-(y * log(pr) + (lit(1.0) - y) * log(lit(1.0) - pr))))
+    df.agg(meanLogLoss(y, sigmoid(m)))
       .collect()(0).getDouble(0)
   }
 
@@ -1738,13 +1658,12 @@ object Blueprint {
     val w = p0.w.clone(); var b = p0.b
     val scaleH = 1.0 / math.sqrt(dh.toDouble)
     val y = col(yCol).cast("double")
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
     (1 to steps).foreach { _ =>
       val cur = MhaParams(wq.map(_.map(_.clone())), wk.map(_.map(_.clone())),
         wv.map(_.map(_.clone())), wo.map(_.clone()), w.clone(), b)
       // backward stages continue the forward's projection chain
       val back = mhaForwardStaged(df, tokenCols, cur)
-        .withColumn("__dm", sig((0 until dim)
+        .withColumn("__dm", sigmoid((0 until dim)
           .map(i => col(s"__out$i") * lit(cur.w(i))).reduce(_ + _) + lit(cur.b)) - y)
         .withColumns((0 until dim).map(i =>
           s"__dout$i" -> col("__dm") * lit(cur.w(i))).toMap)
@@ -1809,9 +1728,8 @@ object Blueprint {
     val y = col(yCol).cast("double")
     val m = (0 until dim).map(i => col(s"__out$i") * lit(p.w(i)))
       .reduce(_ + _) + lit(p.b)
-    val pr = lit(1.0) / (lit(1.0) + exp(-m))
     mhaForwardStaged(df, tokenCols, p)
-      .agg(avg(-(y * log(pr) + (lit(1.0) - y) * log(lit(1.0) - pr))))
+      .agg(meanLogLoss(y, sigmoid(m)))
       .collect()(0).getDouble(0)
   }
 

@@ -560,12 +560,13 @@ class BlueprintSpec extends SparkSpec {
       Blueprint.EdgeGroup(r.toDF("fk", "feat").repartition(2), Seq("fk"), "feat", dim)
     }
 
-  private def heteroInit(dims: Seq[Int], hidden: Int, seed: Int): Blueprint.HeteroGnnParams = {
+  private def heteroInit(dims: Seq[Int], hidden: Int, seed: Int,
+      heads: Int = 1): Blueprint.HeteroGnnParams = {
     val rnd = new scala.util.Random(seed)
     def g(s: Double) = rnd.nextGaussian() * s
     Blueprint.HeteroGnnParams(dims.map(d => Array.fill(d, hidden)(g(0.3))),
-      dims.map(_ => Array.fill(hidden)(g(0.1))), Array.fill(hidden)(g(0.5)), 0.1,
-      dims.map(d => Array.fill(d)(g(0.3))))
+      dims.map(_ => Array.fill(hidden)(g(0.1))), Array.fill(heads * hidden)(g(0.5)), 0.1,
+      dims.map(d => Array.fill(heads * d)(g(0.3))))
   }
 
   private def copyHetero(p: Blueprint.HeteroGnnParams) = Blueprint.HeteroGnnParams(
@@ -574,56 +575,73 @@ class BlueprintSpec extends SparkSpec {
 
   /** One GD step restated on the driver in its per-edge JOIN-BACK form:
     * forward scatter per (parent, type), the residual per parent, then
-    * every gradient as a flat sum over child rows joined to their parent. */
+    * every gradient as a flat sum over child rows joined to their parent.
+    * Under attn, head k owns u(t)'s k-th dim values and w2's k-th hidden
+    * values; a type's aggregate is the per-head aggregates concatenated. */
   private def joinBackStep(rows: Seq[(Seq[(Long, Array[Double])], Int)],
       parents: Seq[(Long, Double)], p: Blueprint.HeteroGnnParams, aggr: String,
       lr: Double): Blueprint.HeteroGnnParams = {
-    val hidden = p.w2.length
+    val hidden = p.b1.head.length
+    val heads = p.w2.length / hidden
+    val width = heads * hidden
+    val w2 = (k: Int, j: Int) => p.w2(k * hidden + j)
     def sig(z: Double) = 1.0 / (1.0 + math.exp(-z))
-    // per group, per edge: (fk, x, h, α); α = 1 unless attn
+    // per group, per edge: (fk, x, h, α per head); α = 1 unless attn
     val edges = rows.zipWithIndex.map { case ((r, dim), t) =>
-      val e = r.map { case (_, x) => (0 until dim).map(i => x(i) * p.u(t)(i)).sum }
-      val alpha = r.indices.groupBy(k => r(k)._1).values.flatMap { ks =>
-        val mx = ks.map(e).max
-        val z = ks.map(k => math.exp(e(k) - mx)).sum
-        ks.map(k => k -> (if (aggr == "attn") math.exp(e(k) - mx) / z else 1.0))
-      }.toMap
-      r.indices.map { k =>
-        val (fk, x) = r(k)
+      val alpha = (0 until heads).map { k =>
+        val e = r.map { case (_, x) => (0 until dim).map(i => x(i) * p.u(t)(k * dim + i)).sum }
+        r.indices.groupBy(q => r(q)._1).values.flatMap { qs =>
+          val mx = qs.map(e).max
+          val z = qs.map(q => math.exp(e(q) - mx)).sum
+          qs.map(q => q -> (if (aggr == "attn") math.exp(e(q) - mx) / z else 1.0))
+        }.toMap
+      }
+      r.indices.map { q =>
+        val (fk, x) = r(q)
         (fk, x, Array.tabulate(hidden)(j =>
-          sig((0 until dim).map(i => x(i) * p.w1(t)(i)(j)).sum + p.b1(t)(j))), alpha(k))
+          sig((0 until dim).map(i => x(i) * p.w1(t)(i)(j)).sum + p.b1(t)(j))),
+          Array.tabulate(heads)(k => alpha(k)(q)))
       }
     }
     val count = edges.map(_.groupBy(_._1).map { case (k, es) => k -> es.size })
     val fwd = parents.map { case (pk, y) =>
       val a = edges.indices.map { t =>
-        val s = Array.tabulate(hidden)(j => edges(t).filter(_._1 == pk).map(e => e._4 * e._3(j)).sum)
+        val s = Array.tabulate(width)(kj =>
+          edges(t).filter(_._1 == pk).map(e => e._4(kj / hidden) * e._3(kj % hidden)).sum)
         if (aggr == "mean" && count(t).contains(pk)) s.map(_ / count(t)(pk)) else s
       }
-      val aT = Array.tabulate(hidden)(j => a.map(_(j)).sum)
-      pk -> (a, aT, sig(aT.indices.map(j => aT(j) * p.w2(j)).sum + p.b2) - y)
+      val aT = Array.tabulate(width)(kj => a.map(_(kj)).sum)
+      pk -> (a, aT, sig(aT.indices.map(kj => aT(kj) * p.w2(kj)).sum + p.b2) - y)
     }.toMap
     val n = parents.length.toDouble
     val next = rows.zipWithIndex.map { case ((_, dim), t) =>
       val back = edges(t).flatMap(e => fwd.get(e._1).map(f => (e, f)))
-      def gsum(f: ((Long, Array[Double], Array[Double], Double), Double, Double) => Double) =
+      def gsum(f: ((Long, Array[Double], Array[Double], Array[Double]), Double,
+          Seq[Double]) => Double) =
         back.map { case (e, (a, _, dm)) =>
           val dmB = if (aggr == "mean") dm / count(t)(e._1) else dm
-          val s = (0 until hidden).map(j => a(t)(j) * p.w2(j)).sum
+          val s = (0 until heads).map(k =>
+            (0 until hidden).map(j => a(t)(k * hidden + j) * w2(k, j)).sum)
           f(e, dmB, s)
         }.sum
+      // the message path mixes the heads' readout slices, α-weighted
+      val mix = (e: (Long, Array[Double], Array[Double], Array[Double]), j: Int) =>
+        (0 until heads).map(k => w2(k, j) * e._4(k)).sum
       val w1 = Array.tabulate(dim, hidden)((i, j) => p.w1(t)(i)(j) - lr * gsum((e, dm, _) =>
-        dm * p.w2(j) * e._4 * e._3(j) * (1 - e._3(j)) * e._2(i)) / n)
+        dm * mix(e, j) * e._3(j) * (1 - e._3(j)) * e._2(i)) / n)
       val b1 = Array.tabulate(hidden)(j => p.b1(t)(j) - lr * gsum((e, dm, _) =>
-        dm * p.w2(j) * e._4 * e._3(j) * (1 - e._3(j))) / n)
-      val u = Array.tabulate(dim)(i => p.u(t)(i) - lr * gsum { (e, dm, s) =>
-        val m = (0 until hidden).map(j => e._3(j) * p.w2(j)).sum
-        dm * e._4 * (m - s) * e._2(i)
-      } / n)
+        dm * mix(e, j) * e._3(j) * (1 - e._3(j))) / n)
+      val u = Array.tabulate(heads * dim) { ki =>
+        val (k, i) = (ki / dim, ki % dim)
+        p.u(t)(ki) - lr * gsum { (e, dm, s) =>
+          val m = (0 until hidden).map(j => e._3(j) * w2(k, j)).sum
+          dm * e._4(k) * (m - s(k)) * e._2(i)
+        } / n
+      }
       (w1, b1, u)
     }
     Blueprint.HeteroGnnParams(next.map(_._1), next.map(_._2),
-      Array.tabulate(hidden)(j => p.w2(j) - lr * fwd.values.map(f => f._3 * f._2(j)).sum / n),
+      Array.tabulate(width)(kj => p.w2(kj) - lr * fwd.values.map(f => f._3 * f._2(kj)).sum / n),
       p.b2 - lr * fwd.values.map(_._3).sum / n,
       if (aggr == "attn") next.map(_._3) else null)
   }
@@ -660,20 +678,33 @@ class BlueprintSpec extends SparkSpec {
       n.expressions.map(_.collect { case e => e }.size).sum
     }.sum
 
+  /** One fitHeteroGnnGD step on [[heteroRows]] from `init` equals
+    * [[joinBackStep]] to 1e-9 relative, and moves the parameters. */
+  private def assertStepIsJoinBack(init: Blueprint.HeteroGnnParams, aggr: String): Unit = {
+    val stepped = Blueprint.fitHeteroGnnGD(heteroGroups(heteroRows),
+      heteroParents.toDF("pid", "y"), Seq("pid"), "y", hidden = init.b1.head.length,
+      steps = 1, lr = 0.5, init = copyHetero(init), aggr = aggr)
+    val want = joinBackStep(heteroRows, heteroParents, init, aggr, lr = 0.5)
+    val moved = flatHetero(want).zip(flatHetero(init)).count { case (a, b) => a != b }
+    assert(moved > 10, s"the step must move the parameters ($moved moved)")
+    assert(flatHetero(stepped).length == flatHetero(want).length)
+    flatHetero(stepped).zip(flatHetero(want)).zipWithIndex.foreach { case ((a, b), k) =>
+      assert(a == b || math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b)),
+        s"parameter $k: $a vs join-back $b")
+    }
+  }
+
+  /** `body` fails with the feature guard's error for a `dim`-wide column. */
+  private def failsFeatureGuard(dim: Int)(body: => Any): Unit = {
+    val e = intercept[Exception](body)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains(s"must hold $dim non-NULL values")), e.toString)
+  }
+
   Seq("sum", "mean", "attn").foreach { aggr =>
     test(s"fitHeteroGnnGD aggr=$aggr: one step equals the per-edge join-back definition") {
-      val init = heteroInit(Seq(2, 1), hidden = 2, seed = 3)
-      val stepped = Blueprint.fitHeteroGnnGD(heteroGroups(heteroRows),
-        heteroParents.toDF("pid", "y"), Seq("pid"), "y", hidden = 2, steps = 1,
-        lr = 0.5, init = copyHetero(init), aggr = aggr)
-      val want = joinBackStep(heteroRows, heteroParents, init, aggr, lr = 0.5)
-      val moved = flatHetero(want).zip(flatHetero(init)).count { case (a, b) => a != b }
-      assert(moved > 10, s"the step must move the parameters ($moved moved)")
-      assert(flatHetero(stepped).length == flatHetero(want).length)
-      flatHetero(stepped).zip(flatHetero(want)).zipWithIndex.foreach { case ((a, b), k) =>
-        assert(a == b || math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b)),
-          s"parameter $k: $a vs join-back $b")
-      }
+      assertStepIsJoinBack(heteroInit(Seq(2, 1), hidden = 2, seed = 3), aggr)
     }
 
     test(s"fitHeteroGnnGD aggr=$aggr: one action per step, nothing persisted, step-stable code, plan size independent of dim x hidden") {
@@ -757,21 +788,85 @@ class BlueprintSpec extends SparkSpec {
         hidden = 2, steps = 1, lr = 0.1, init = heteroInit(Seq(2, 1), 2, seed = 3),
         aggr = aggr)
     }
-    def failsLoudly(body: => Unit): Unit = {
-      val e = intercept[Exception](body)
-      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(t => String.valueOf(t.getMessage))
-      assert(msgs.exists(_.contains("must hold 2 non-NULL values")), e.toString)
-    }
-    failsLoudly(fit(Array(1.0), "sum"))                 // short: was a NULL, skipped
-    failsLoudly(fit(Array(1.0, 2.0, 3.0), "mean"))      // long: the extra was ignored
-    failsLoudly(fit(null, "attn"))                      // NULL array
-    failsLoudly(Blueprint.gnnLogLoss(
+    failsFeatureGuard(2)(fit(Array(1.0), "sum"))                 // short: was a NULL, skipped
+    failsFeatureGuard(2)(fit(Array(1.0, 2.0, 3.0), "mean"))      // long: the extra was ignored
+    failsFeatureGuard(2)(fit(null, "attn"))                      // NULL array
+    failsFeatureGuard(2)(Blueprint.gnnLogLoss(
       Seq((1L, Array(1.0, 2.0)), (3L, Array(1.0))).toDF("fk", "feat"), Seq("fk"), "feat",
       parents, Seq("pid"), "y",
       Blueprint.MlpParams(Array.fill(2, 2)(0.1), Array(0.0, 0.0), Array(0.1, 0.2), 0.0)))
     // a well-formed group still fits
     assert(fit(Array(1.0, 2.0), "sum").w2.forall(v => !v.isNaN))
+  }
+
+  test("fitHeteroGnnGD aggr=attn: a 2-group x 2-head step equals the per-edge join-back definition") {
+    val init = heteroInit(Seq(2, 1), hidden = 2, seed = 3, heads = 2)
+    assertStepIsJoinBack(init, "attn")
+    // more than one head is attention-only
+    Seq("sum", "mean").foreach { aggr =>
+      intercept[IllegalArgumentException] {
+        Blueprint.fitHeteroGnnGD(heteroGroups(heteroRows), heteroParents.toDF("pid", "y"),
+          Seq("pid"), "y", hidden = 2, steps = 1, lr = 0.1, init = copyHetero(init),
+          aggr = aggr)
+      }
+    }
+    // each scorer holds heads x dim values
+    intercept[IllegalArgumentException] {
+      Blueprint.heteroGnnLogLoss(heteroGroups(heteroRows), heteroParents.toDF("pid", "y"),
+        Seq("pid"), "y", init.copy(u = Seq(init.u(0), init.u(1).take(1))), aggr = "attn")
+    }
+  }
+
+  test("fitMhaGnnGD: one action per step, nothing persisted") {
+    val children = heteroRows.head._1.toDF("fk", "feat").repartition(2)
+    val (actions, left) = actionsOf {
+      Blueprint.fitMhaGnnGD(children, Seq("fk"), "feat", heteroParents.toDF("pid", "y"),
+        Seq("pid"), "y", dim = 2, hidden = 2, heads = 2, steps = 2, lr = 0.1)
+    }
+    val ran = actions.length
+    assert(ran == 2, s"2 steps ran $ran actions")
+    assert(left.isEmpty, s"steps left persisted RDDs $left")
+  }
+
+  test("a feature array that is not dim long, or NULL, fails fitMlpGD, mlpLogLoss, fitGnn2GD, gnn2LogLoss and fitMhaGnnGD") {
+    val flat = (bad: Array[Double]) =>
+      Seq((Array(1.0, 2.0), 1.0), (bad, 0.0)).toDF("feat", "y")
+    val mlp = Blueprint.MlpParams(Array.fill(2, 2)(0.1), Array(0.0, 0.0), Array(0.1, 0.2), 0.0)
+    val leaves = (bad: Array[Double]) =>
+      Seq((10L, Array(1.0, 0.0)), (11L, bad)).toDF("mfk", "feat")
+    val mids = (bad: Array[Double]) =>
+      Seq((10L, 1L, Array(0.3)), (11L, 2L, bad)).toDF("mid", "rfk", "feat")
+    val roots = Seq((1L, 1.0), (2L, 0.0)).toDF("rid", "y")
+    val gnn2 = Blueprint.Gnn2Params(Array.fill(2, 2)(0.1), Array(0.0, 0.0),
+      Array.fill(3, 2)(0.1), Array(0.0, 0.0), Array(0.1, 0.2), 0.0)
+    val fitGnn2 = (l: Array[Double], m: Array[Double]) => Blueprint.fitGnn2GD(
+      leaves(l), Seq("mfk"), "feat", mids(m), Seq("mid"), Seq("rfk"), "feat", midDim = 1,
+      roots, Seq("rid"), "y", leafDim = 2, h1 = 2, h2 = 2, steps = 1, lr = 0.1)
+    val gnn2Loss = (l: Array[Double], m: Array[Double]) => Blueprint.gnn2LogLoss(
+      leaves(l), Seq("mfk"), "feat", mids(m), Seq("mid"), Seq("rfk"), "feat", midDim = 1,
+      roots, Seq("rid"), "y", gnn2)
+    val (okLeaf, okMid) = (Array(1.0, 1.0), Array(0.5))
+    // (entry point, the column's width, a run on a malformed row)
+    val cases: Seq[(String, Int, () => Any)] = Seq(
+      ("fitMlpGD short", 2, () => Blueprint.fitMlpGD(flat(Array(1.0)), "feat", "y",
+        dim = 2, hidden = 2, steps = 1, lr = 0.1)),
+      ("fitMlpGD long", 2, () => Blueprint.fitMlpGD(flat(Array(1.0, 2.0, 3.0)), "feat", "y",
+        dim = 2, hidden = 2, steps = 1, lr = 0.1)),
+      ("mlpLogLoss NULL", 2, () => Blueprint.mlpLogLoss(flat(null), "feat", "y", mlp)),
+      ("fitGnn2GD leaf short", 2, () => fitGnn2(Array(1.0), okMid)),
+      ("fitGnn2GD mid long", 1, () => fitGnn2(okLeaf, Array(0.5, 0.5))),
+      ("gnn2LogLoss leaf NULL", 2, () => gnn2Loss(null, okMid)),
+      ("gnn2LogLoss mid empty", 1, () => gnn2Loss(okLeaf, Array.empty[Double])),
+      ("fitMhaGnnGD short", 2, () => Blueprint.fitMhaGnnGD(
+        Seq((1L, Array(1.0, 0.0)), (1L, Array(1.0))).toDF("fk", "feat"), Seq("fk"), "feat",
+        heteroParents.toDF("pid", "y"), Seq("pid"), "y",
+        dim = 2, hidden = 2, heads = 2, steps = 1, lr = 0.1)))
+    cases.foreach { case (name, dim, run) =>
+      withClue(s"$name: ")(failsFeatureGuard(dim)(run()))
+    }
+    // well-formed rows still run
+    assert(!gnn2Loss(okLeaf, okMid).isNaN)
+    assert(fitGnn2(okLeaf, okMid).v.forall(v => !v.isNaN))
   }
 
   test("fitGnn2GD: gradient flows through TWO nested scatter-sums; loss falls") {
