@@ -18,9 +18,16 @@ import org.apache.spark.sql.functions._
 object VectorAgg {
 
   // Catalyst-native encoder (array<double> buffers serialize columnar, not
-  // as opaque java-serialized blobs).
-  private def enc: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
+  // as opaque java-serialized blobs). Built once from the agnostic encoder
+  // that `ExpressionEncoder[Array[Double]]()` derives, without Scala runtime
+  // reflection: Spark asks an Aggregator for its encoders inside tasks, and
+  // concurrent tasks deriving it by reflection intermittently failed with
+  // "ScalaReflectionException: class scala.Nothing in JavaMirror".
+  private val enc: Encoder[Array[Double]] = {
+    import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoders, ExpressionEncoder}
+    ExpressionEncoder(AgnosticEncoders.ArrayEncoder(
+      AgnosticEncoders.PrimitiveDoubleEncoder, containsNull = false))
+  }
 
   private abstract class ElementwiseAgg(zero0: Double, op: (Double, Double) => Double)
       extends Aggregator[Array[Double], Array[Double], Array[Double]] {
