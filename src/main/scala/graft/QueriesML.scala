@@ -1186,8 +1186,8 @@ private[graft] object QueriesML {
     * forward CTE (broadcast lookup restated as a join against the
     * deterministic-init VALUES table), the single per-code gradient CTE
     * ([[graft.pipeline.Blueprint.fitEmbeddingGD]]'s one groupBy(code)
-    * pass), a readout-fold CTE (`gw_i = Σ_c s_c·e_i`, the driver fold
-    * restated as the card-row join-aggregate it is), then the scatter
+    * pass), a readout-fold CTE (`gw_i = Σ_c s_c·e_i`: the Spark side's
+    * per-row `Σ dm·e_i`, summed per code first), then the scatter
     * update of the table and the readout update, all from the step's
     * INCOMING parameters. Init rows interpolate from the same
     * [[graft.pipeline.Blueprint.embInit]] the Spark side uses —

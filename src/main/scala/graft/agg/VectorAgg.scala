@@ -29,7 +29,7 @@ object VectorAgg {
       AgnosticEncoders.PrimitiveDoubleEncoder, containsNull = false))
   }
 
-  private abstract class ElementwiseAgg(zero0: Double, op: (Double, Double) => Double)
+  private abstract class ElementwiseAgg(op: (Double, Double) => Double)
       extends Aggregator[Array[Double], Array[Double], Array[Double]] {
     def zero: Array[Double] = Array.empty[Double]
     private def merge2(a: Array[Double], b: Array[Double]): Array[Double] =
@@ -50,9 +50,9 @@ object VectorAgg {
     def outputEncoder: Encoder[Array[Double]] = enc
   }
 
-  private object SumAgg extends ElementwiseAgg(0.0, _ + _)
-  private object MinAgg extends ElementwiseAgg(Double.PositiveInfinity, math.min)
-  private object MaxAgg extends ElementwiseAgg(Double.NegativeInfinity, math.max)
+  private object SumAgg extends ElementwiseAgg(_ + _)
+  private object MinAgg extends ElementwiseAgg(math.min)
+  private object MaxAgg extends ElementwiseAgg(math.max)
 
   /** Elementwise mean (A8 scatter-mean, nn/aggr/attention.py:27). Buffer is
     * the running sum with the element count appended at the end, so the

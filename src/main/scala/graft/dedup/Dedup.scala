@@ -665,7 +665,9 @@ object Dedup {
     * `localCheckpoint` per round so lineage stays flat across iterations
     * instead of compounding into an unexecutable plan. Rounds needed =
     * graph diameter; near-dup clusters are shallow (dup cliques), so the
-    * default bound is generous. Stops early once no label changes.
+    * default bound is generous. Stops early once no label changes; a
+    * graph still changing after `maxIter` rounds fails rather than return
+    * truncated labels.
     *
     * ONE distributed shuffle per round: the previous label rides through
     * the union as a null-padded `__old` column (each vertex contributes
@@ -736,8 +738,12 @@ object Dedup {
       iter += 1
     }
     // the returned plan reads only the LAST checkpoint; the symmetrized
-    // edge frame is dead weight the moment the loop exits
+    // edge frame is dead weight the moment the loop exits. Labels cut off
+    // at the round cap are wrong (a chain longer than the cap reaches would
+    // keep split clusters), so that fails instead — after releasing both.
     graft.util.Checkpoints.release(sym)
+    if (!converged) graft.util.Checkpoints.release(ck)
+    require(converged, s"connected components did not converge within $maxIter rounds")
     Console.err.println(
       s"[graft] connectedComponents: converged=$converged rounds=$iter")
     labels.select(col("a").as(idCol), col("comp").as("component"))

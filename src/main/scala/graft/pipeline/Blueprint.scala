@@ -254,44 +254,38 @@ object Blueprint {
   /** Gradient-trained logistic readout — the train-LOOP capability of the
     * reference's Lightning fit stage (main.py:307-323) in distributed
     * form, complementing the closed-form [[fitLinearDecoder]]: full-batch
-    * gradient descent on logistic loss, where EVERY step is exactly one
-    * distributed aggregation pass (the gradient `Σ (σ(w·x+b) − y)·x` and
-    * `Σ (σ(w·x+b) − y)` with map-side partial aggregation — a (dim+2)-value
-    * shuffle per step) followed by a driver-side scalar weight update. The
-    * weights enter the next step's plan as literals, so no broadcast or
-    * state distribution is needed and the per-step scan is pure codegen.
-    * Mini-batching at 100 TB = a deterministic [[graft.sample.Sampling]]
-    * filter composed in front per step; the loop shape is unchanged.
+    * gradient descent on logistic loss. Each step runs on the GD kernel
+    * ([[gdStep]]): one aggregate of the per-row gradient
+    * `(σ(x̂·θ) − y)·x̂` (x̂ = x ++ [1], θ = w ++ [b]) with map-side partial
+    * aggregation, then the driver-side update. θ enters the plan as ONE
+    * array literal, so the plan has the same size at any dim and its
+    * generated code is the same from step to step. Mini-batching at
+    * 100 TB = a deterministic [[graft.sample.Sampling]] filter composed in
+    * front per step; the loop shape is unchanged.
     *
     * Update rule (op order pinned for engine-parity restatement):
     * `w_i ← w_i − lr·(g_i/n + l2·w_i)`, bias unpenalized. Weights start at
     * zero, so step 1's gradient is exact-integer arithmetic for integer
     * features; later steps are dominated by σ = 1/(1+exp(−m)), whose
     * cross-engine error is ulp-level — orders below the round-6 contract.
+    * A feature array that is not `dim` long, is NULL or holds a NULL
+    * fails the step.
     */
   def fitLogisticGD(df: DataFrame, featCol: String, yCol: String, dim: Int,
       steps: Int, lr: Double, l2: Double = 0.0): (Array[Double], Double) = {
     require(dim >= 1, "need at least one feature")
     require(steps >= 1, "need at least one step")
     require(lr > 0, s"learning rate must be positive, got $lr")
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val y = col(yCol).cast("double")
-    val w = Array.fill(dim)(0.0)
-    var b = 0.0
-    (1 to steps).foreach { _ =>
-      val margin = (0 until dim).map(i => x(i) * lit(w(i))).reduce(_ + _) + lit(b)
-      val p = sigmoid(margin)
-      val sums = (0 until dim).map(i => sum((p - y) * x(i)).as(s"g_$i")) ++
-        Seq(sum(p - y).as("g_b"), count(lit(1)).cast("double").as("n"))
-      val row = df.agg(sums.head, sums.tail: _*).collect()(0)
-      val n = row.getDouble(row.fieldIndex("n"))
-      require(n > 0, "cannot fit on an empty DataFrame")
-      (0 until dim).foreach { i =>
-        w(i) = w(i) - lr * (row.getDouble(row.fieldIndex(s"g_$i")) / n + l2 * w(i))
-      }
-      b = b - lr * (row.getDouble(row.fieldIndex("g_b")) / n)
+    val rows = withCheckedFeatures(df, featCol, dim, "feature")
+    val x = col(featCol)
+    val dm = col("__dm")
+    val theta = (1 to steps).foldLeft(new Array[Double](dim + 1)) { (theta, _) =>
+      val fwd = rows.withColumn("__dm",
+        sigmoid(Similarity.dot(withOne(x), Similarity.litVec(theta))) - col(yCol).cast("double"))
+      gdStep(fwd, concat(transform(x, xi => dm * xi), array(dm)), theta, lr,
+        l2 = l2, decayed = dim)
     }
-    (w, b)
+    (theta.take(dim), theta(dim))
   }
 
   /** Parameters of a one-hidden-layer sigmoid network:
@@ -303,14 +297,16 @@ object Blueprint {
     * one-hidden-layer sigmoid network, the message-passing-weights
     * counterpart of [[fitLogisticGD]]'s readout-only training (the
     * reference trains the whole blueprint stack end-to-end,
-    * main.py:307-323, nn/models/blueprint.py:24-214). Every GD step is
-    * ONE distributed aggregation pass: the per-row forward activations
-    * and all backprop products are codegen expressions, and only the
-    * `dim·H + 2H + 2` gradient sums shuffle (map-side partial agg). The
-    * updated parameters re-enter the next step's plan as literals —
-    * nothing is broadcast, no state lives on executors, so the loop runs
-    * unchanged on a 1000-executor cluster; mini-batching composes a
-    * deterministic [[graft.sample.Sampling]] filter in front of each pass.
+    * main.py:307-323, nn/models/blueprint.py:24-214). Each step runs on
+    * the GD kernel ([[gdStep]]): the per-row forward activations and all
+    * backprop products are array expressions over the feature vector, one
+    * aggregate sums them (map-side partial agg), and the driver updates.
+    * The parameters enter the plan as array literals — nothing is
+    * broadcast, no state lives on executors, the plan has the same size
+    * at any dim × hidden, and its generated code is the same from step to
+    * step;
+    * mini-batching composes a deterministic [[graft.sample.Sampling]]
+    * filter in front of each pass.
     *
     * Op order is pinned (margins accumulate in feature order; each
     * gradient product multiplies left-to-right `dm · w2_j · h_j(1−h_j) ·
@@ -332,40 +328,35 @@ object Blueprint {
       Array.fill(hidden)(0.0),
       Array.tabulate(hidden)(j => 0.1 * (j + 1)),
       0.0)
-    require(p0.w1.length == dim && p0.w1.forall(_.length == hidden) &&
-      p0.b1.length == hidden && p0.w2.length == hidden, "init shape mismatch")
-    val rows = withCheckedFeatures(df, featCol, dim, "feature")
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val y = col(yCol).cast("double")
-    val w1 = p0.w1.map(_.clone()); val b1 = p0.b1.clone()
-    val w2 = p0.w2.clone(); var b2 = p0.b2
-    (1 to steps).foreach { _ =>
-      val h = (0 until hidden).map { j =>
-        sigmoid((0 until dim).map(i => x(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
-      }
-      val m = (0 until hidden).map(j => h(j) * lit(w2(j))).reduce(_ + _) + lit(b2)
-      val dm = sigmoid(m) - y
-      val sums =
-        (for { i <- 0 until dim; j <- 0 until hidden }
-          yield sum(dm * lit(w2(j)) * (h(j) * (lit(1.0) - h(j))) * x(i)).as(s"gw_${i}_$j")) ++
-        (0 until hidden).map(j =>
-          sum(dm * lit(w2(j)) * (h(j) * (lit(1.0) - h(j)))).as(s"gc_$j")) ++
-        (0 until hidden).map(j => sum(dm * h(j)).as(s"gv_$j")) ++
-        Seq(sum(dm).as("gb"), count(lit(1)).cast("double").as("n"))
-      val row = rows.agg(sums.head, sums.tail: _*).collect()(0)
-      def g(name: String) = row.getDouble(row.fieldIndex(name))
-      val n = g("n")
-      require(n > 0, "cannot fit on an empty DataFrame")
-      for (i <- 0 until dim; j <- 0 until hidden)
-        w1(i)(j) = w1(i)(j) - lr * (g(s"gw_${i}_$j") / n)
-      for (j <- 0 until hidden) {
-        b1(j) = b1(j) - lr * (g(s"gc_$j") / n)
-        w2(j) = w2(j) - lr * (g(s"gv_$j") / n)
-      }
-      b2 = b2 - lr * (g("gb") / n)
+    require(shaped(p0.w1, dim, hidden) && p0.b1.length == hidden && p0.w2.length == hidden,
+      "init shape mismatch")
+    val unflat = (theta: Array[Double]) => {
+      val u = new Unflat(theta)
+      MlpParams(u.mat(dim, hidden), u.vec(hidden), u.vec(hidden), u.scalar)
     }
-    MlpParams(w1, b1, w2, b2)
+    val (x, h, dm, d) = (col(featCol), col("__h"), col("__dm"), col("__d"))
+    val theta = (1 to steps).foldLeft(p0.w1.flatten ++ p0.b1 ++ p0.w2 :+ p0.b2) { (theta, _) =>
+      val p = unflat(theta)
+      // d_j = dm·w2_j·h_j(1−h_j): the message layer's residual per unit
+      val back = mlpForward(df, featCol, yCol, p)
+        .withColumn("__dm", col("__p") - col("__y"))
+        .withColumn("__d", zip_with(h, Similarity.litVec(p.w2),
+          (hj, vj) => dm * vj * (hj * (lit(1.0) - hj))))
+      gdStep(back, concat(flatten(transform(x, xi => transform(d, dj => dj * xi))), d,
+        transform(h, hj => dm * hj), array(dm)), theta, lr)
+    }
+    unflat(theta)
   }
+
+  /** [[fitMlpGD]]'s forward over the checked feature rows: the hidden
+    * activations `__h`, the prediction `__p` and the label `__y`. */
+  private def mlpForward(df: DataFrame, featCol: String, yCol: String,
+      p: MlpParams): DataFrame =
+    withCheckedFeatures(df, featCol, p.w1.length, "feature")
+      .withColumn("__h", sigmoidLayer(withOne(col(featCol)), p.w1, p.b1))
+      .withColumn("__p", sigmoid(Similarity.dot(withOne(col("__h")),
+        Similarity.litVec(p.w2 :+ p.b2))))
+      .withColumn("__y", col(yCol).cast("double"))
 
   /** End-to-end backprop THROUGH the message-passing aggregation — the
     * one genuinely graph-structured trainable layer the reference fits
@@ -457,7 +448,9 @@ object Blueprint {
     * children (message, outer products, packed into one array) and one
     * scatter-sum on the parent key; the parents left-join every group's
     * aggregate; one global vector sum over parents returns every
-    * gradient, which the driver unpacks. Each children plan is evaluated
+    * gradient, which the driver unpacks into one flat parameter vector's
+    * layout for the GD kernel's update ([[descend]], the `θ − lr·(g/n)`
+    * every trainer but [[fitGnn2GD]] shares). Each children plan is evaluated
     * once, nothing is checkpointed or persisted. The per-edge and
     * per-parent math runs on array columns with every parameter passed
     * as ONE array literal per vector or matrix ([[Similarity.litVec]]),
@@ -515,8 +508,20 @@ object Blueprint {
     checkHetero(groups, keyCols, hidden, p0, aggr)
     val width = p0.w2.length // the readout's input: H heads × hidden
     val heads = width / hidden
-    var p = p0 // each step builds fresh arrays: the caller's init is never written
-    (1 to steps).foreach { _ =>
+    // θ: w2, b2, then per group w1 (i-major), b1 and attn's u; unflat
+    // builds fresh arrays, so the caller's init is never written
+    val unflat = (theta: Array[Double]) => {
+      val u = new Unflat(theta)
+      val (w2, b2) = (u.vec(width), u.scalar)
+      val perGroup = groups.map(g =>
+        (u.mat(g.dim, hidden), u.vec(hidden), if (attn) u.vec(heads * g.dim) else null))
+      HeteroGnnParams(perGroup.map(_._1), perGroup.map(_._2), w2, b2,
+        if (attn) perGroup.map(_._3) else null)
+    }
+    val theta0 = p0.w2 ++ Array(p0.b2) ++ groups.indices.flatMap(t =>
+      p0.w1(t).flatten ++ p0.b1(t) ++ (if (attn) p0.u(t) else Array.empty[Double]))
+    unflat((1 to steps).foldLeft(theta0) { (theta, _) =>
+      val p = unflat(theta)
       val fwd = heteroForward(groups, parents, keyCols, yCol, p, aggr)
         .withColumn("__dm", col("__p") - col("__y"))
       val dm = col("__dm")
@@ -545,29 +550,21 @@ object Blueprint {
       val r = fwd.select(VectorAgg.vecSum(grad)).collect()(0).getSeq[Double](0).toArray
       val n = if (r.isEmpty) 0.0 else r(width + 1)
       require(n > 0, "cannot fit on an empty parents frame")
-      // unpack in layout order: gv (width), gb, n, then per group H gw
-      // blocks ((dim+1)×hidden, the last row is b1's) and attn's gu (H×dim)
+      // the sums in θ's layout: gv (width) and gb, then per group the H
+      // heads' gw blocks ((dim+1)×hidden, the last row b1's) mixed over
+      // w2, then attn's gu (H×dim)
       var off = width + 2
-      val next = groups.zipWithIndex.map { case (g, t) =>
-        val block = (g.dim + 1) * hidden
-        val gw = (i: Int, j: Int) => (0 until heads)
-          .map(k => p.w2(k * hidden + j) * r(off + k * block + i * hidden + j)).sum
-        val w1 = Array.tabulate(g.dim, hidden)((i, j) => p.w1(t)(i)(j) - lr * (gw(i, j) / n))
-        val b1 = Array.tabulate(hidden)(j => p.b1(t)(j) - lr * (gw(g.dim, j) / n))
+      val g = r.take(width + 1) ++ groups.flatMap { gr =>
+        val block = (gr.dim + 1) * hidden
+        val gw = Array.tabulate(block)(ij => (0 until heads)
+          .map(k => p.w2(k * hidden + ij % hidden) * r(off + k * block + ij)).sum)
         off += heads * block
-        val u = if (!attn) null else {
-          val ut = Array.tabulate(heads * g.dim)(i => p.u(t)(i) - lr * (r(off + i) / n))
-          off += heads * g.dim
-          ut
-        }
-        (w1, b1, u)
+        val gu = if (attn) r.slice(off, off + heads * gr.dim) else Array.empty[Double]
+        off += gu.length
+        gw ++ gu
       }
-      p = HeteroGnnParams(next.map(_._1), next.map(_._2),
-        Array.tabulate(width)(j => p.w2(j) - lr * (r(j) / n)),
-        p.b2 - lr * (r(width) / n),
-        if (attn) next.map(_._3) else null)
-    }
-    p
+      descend(theta, g, n, lr)
+    })
   }
 
   /** Mean logistic loss of [[fitHeteroGnnGD]]'s network — the same
@@ -608,6 +605,92 @@ object Blueprint {
 
   private def zeros(n: Int): Column = Similarity.litVec(Array.fill(n)(0.0))
 
+  /** The GD step of every single-aggregate trainer. ONE
+    * [[VectorAgg.vecSum]] over the packed per-row gradient `grad` (the
+    * kernel appends the row's count, 1) returns every gradient sum and n;
+    * the driver then applies [[descend]] to the flat parameter vector
+    * `theta`, laid out like `grad`.
+    *
+    * With `table > 0` the rows come from [[lookup]] and the sum groups by
+    * its `__code` (card rows after map-side partial aggregation): `grad`
+    * starts with the row's `table`-wide block of the looked-up table row,
+    * `theta` with the card × `table` table. Each code's aggregate gives
+    * that code its block; the remaining blocks add up across codes.
+    *
+    * Fails when no row reaches the sum (an empty frame, or no code inside
+    * the table). `l2`/`decayed` are [[descend]]'s. */
+  private def gdStep(rows: DataFrame, grad: Column, theta: Array[Double], lr: Double,
+      table: Int = 0, l2: Double = 0.0, decayed: Int = 0): Array[Double] = {
+    val packed = VectorAgg.vecSum(withOne(grad))
+    val sums: Seq[(Int, Seq[Double])] =
+      if (table == 0) Seq(0 -> rows.select(packed).collect()(0).getSeq[Double](0))
+      else rows.groupBy(col("__code")).agg(packed).collect().toSeq
+        .map(r => r.getInt(0) -> r.getSeq[Double](1))
+    val g = new Array[Double](theta.length)
+    var n = 0.0
+    sums.filter(_._2.nonEmpty).foreach { case (c, v) =>
+      val rest = v.length - 1 - table // the blocks summed across codes
+      val at = theta.length - rest    // where they sit, after the table
+      require(rest >= 0 && (c + 1) * table <= at && (table > 0 || at == 0),
+        s"a gradient of ${v.length - 1} values does not fit ${theta.length} parameters")
+      (0 until table).foreach(i => g(c * table + i) = v(i))
+      (0 until rest).foreach(j => g(at + j) += v(table + j))
+      n += v.last
+    }
+    require(n > 0, if (table > 0) "no row carries a code inside [0, card)"
+      else "cannot fit on an empty DataFrame")
+    descend(theta, g, n, lr, l2, decayed)
+  }
+
+  /** The GD update `θ − lr·(g/n)` of a flat parameter vector; its first
+    * `decayed` entries also take an L2 term, `θ − lr·(g/n + l2·θ)`. */
+  private def descend(theta: Array[Double], g: Array[Double], n: Double, lr: Double,
+      l2: Double = 0.0, decayed: Int = 0): Array[Double] =
+    Array.tabulate(theta.length) { i =>
+      if (i < decayed) theta(i) - lr * (g(i) / n + l2 * theta(i))
+      else theta(i) - lr * (g(i) / n)
+    }
+
+  /** Consecutive blocks read off a flat parameter vector, in call order. */
+  private final class Unflat(theta: Array[Double]) {
+    private var off = 0
+    def vec(n: Int): Array[Double] = { off += n; theta.slice(off - n, off) }
+    def mat(rows: Int, cols: Int): Array[Array[Double]] = Array.fill(rows)(vec(cols))
+    def cube(a: Int, rows: Int, cols: Int): Array[Array[Array[Double]]] =
+      Array.fill(a)(mat(rows, cols))
+    def scalar: Double = vec(1)(0)
+  }
+
+  /** `df` inner-joined to the card × dim table `e` on `codeCol`, adding
+    * the code `__code` and its table row `__emb`. The table ships as a
+    * broadcast frame, so the lookup is a broadcast-hash join, never a
+    * shuffle; a code outside [0, card) or NULL matches nothing and drops
+    * out (the dangling-FK convention of the J-ops). */
+  private def lookup(df: DataFrame, codeCol: String, e: Array[Array[Double]]): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val table = e.zipWithIndex.map { case (row, c) => (c, row) }.toSeq.toDF("__code", "__emb")
+    df.join(broadcast(table), col(codeCol).cast("int") === col("__code"))
+  }
+
+  /** `σ(x̂·w1(·)(j) + b1(j))` for every hidden unit j, over `xh` = x ++ [1]:
+    * the weights enter as ONE literal of hidden rows `w1(·)(j) ++ b1(j)`. */
+  private def sigmoidLayer(xh: Column, w1: Array[Array[Double]], b1: Array[Double]): Column = {
+    val dim = w1.length
+    val w = typedLit(Array.tabulate(b1.length, dim + 1)((j, i) =>
+      if (i < dim) w1(i)(j) else b1(j)))
+    transform(w, wj => sigmoid(Similarity.dot(xh, wj)))
+  }
+
+  /** `c ++ [1]`: a vector with the bias's input appended. */
+  private def withOne(c: Column): Column = concat(c, array(lit(1.0)))
+
+  /** `Σ_b ws(b)·xs(b)` over equal-width vector columns, elementwise and
+    * left to right. */
+  private def weightedSum(ws: Seq[Column], xs: Seq[Column]): Column =
+    ws.zip(xs).map { case (w, x) => transform(x, v => w * v) }
+      .reduce((a, b) => zip_with(a, b, (s, t) => s + t))
+
   /** The logistic function, op order `1/(1+exp(−z))` (what the SQL
     * restatements spell out). */
   private def sigmoid(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
@@ -635,6 +718,31 @@ object Blueprint {
     if (dim == 0) df
     else df.withColumn(featCol, checkedFeatures(col(featCol), dim, s"$what column '$featCol'"))
 
+  /** `df` with each token column checked by [[checkedFeatures]] for
+    * `dim` values. */
+  private def withCheckedTokens(df: DataFrame, tokenCols: Seq[String], dim: Int): DataFrame =
+    tokenCols.foldLeft(df)((d, t) => withCheckedFeatures(d, t, dim, "token"))
+
+  /** `df` with each numeric column as a double, failing the query on a
+    * NULL (or non-numeric) value: such a row's gradient terms would
+    * otherwise be NULLs that the sums skip while the count still counts
+    * the row. */
+  private def withCheckedNumbers(df: DataFrame, numCols: Seq[String]): DataFrame =
+    df.withColumns(numCols.map { c =>
+      val v = col(c).cast("double")
+      c -> when(v.isNotNull, v).otherwise(raise_error(lit(
+        s"numeric column '$c' must hold a non-NULL number")).cast("double"))
+    }.toMap)
+
+  /** `m` is `rows` × `cols`. */
+  private def shaped(m: Array[Array[Double]], rows: Int, cols: Int): Boolean =
+    m.length == rows && m.forall(_.length == cols)
+
+  /** `w` holds `heads` projections of `rows` × `cols`. */
+  private def shapedHeads(w: Array[Array[Array[Double]]], heads: Int, rows: Int,
+      cols: Int): Boolean =
+    w.length == heads && w.forall(shaped(_, rows, cols))
+
   /** The forward plan of [[fitHeteroGnnGD]] at parameters `p`: one row per
     * parent with its label `__y`, the readout's prediction `__p`, the
     * cross-type aggregate `__aT` and, per group t, the child count `__n$t`,
@@ -656,17 +764,14 @@ object Blueprint {
     val heads = p.w2.length / hidden
     val sums = groups.zipWithIndex.map { case (g, t) =>
       val x = checkedFeatures(col(g.featCol), g.dim, s"edge group $t: column '${g.featCol}'")
-      // message weights as ONE literal: hidden rows of (w1(·)(j) ++ b1(j))
-      val w = typedLit(Array.tabulate(hidden, g.dim + 1)((j, i) =>
-        if (i < g.dim) p.w1(t)(i)(j) else p.b1(t)(j)))
       val msg = g.children.select(g.fkCols.map(col) :+ x.as("__x"): _*)
-        .withColumn("__xh", concat(col("__x"), array(lit(1.0))))
-        .withColumn("__h", transform(w, wj => sigmoid(Similarity.dot(col("__xh"), wj))))
+        .withColumn("__xh", withOne(col("__x")))
+        .withColumn("__h", sigmoidLayer(col("__xh"), p.w1(t), p.b1(t)))
       val core = concat(col("__h"), flatten(transform(col("__xh"),
         xi => transform(col("__h"), h => xi * (h * (lit(1.0) - h))))))
       val packed =
         if (aggr != "attn") msg.select(g.fkCols.map(col) :+
-          concat(core, array(lit(1.0))).as("__v"): _*)
+          withOne(core).as("__v"): _*)
         else {
           val win = Window.partitionBy(g.fkCols.map(col): _*)
           val alphas = (0 until heads).map { k =>
@@ -712,7 +817,7 @@ object Blueprint {
     val aT = groups.indices.map(t => col(s"__a$t"))
       .reduce((a, b) => zip_with(a, b, (x, y) => x + y))
     withA.withColumn("__aT", aT)
-      .withColumn("__p", sigmoid(Similarity.dot(concat(col("__aT"), array(lit(1.0))),
+      .withColumn("__p", sigmoid(Similarity.dot(withOne(col("__aT")),
         Similarity.litVec(p.w2 :+ p.b2))))
   }
 
@@ -1041,21 +1146,13 @@ object Blueprint {
     HeteroGnnParams(Seq(p.w1), Seq(p.b1), p.w2.flatten, p.b2, Seq(p.u.flatten))
   }
 
-  /** Mean logistic loss of [[fitMlpGD]]'s network — one aggregation pass;
-    * the training-progress metric and the finite-difference anchor for
-    * gradient correctness in specs. */
+  /** Mean logistic loss of [[fitMlpGD]]'s network over its forward — one
+    * aggregation pass; the training-progress metric and the
+    * finite-difference anchor for gradient correctness in specs. */
   def mlpLogLoss(df: DataFrame, featCol: String, yCol: String,
-      p: MlpParams): Double = {
-    val dim = p.w1.length; val hidden = p.b1.length
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val y = col(yCol).cast("double")
-    val h = (0 until hidden).map { j =>
-      sigmoid((0 until dim).map(i => x(i) * lit(p.w1(i)(j))).reduce(_ + _) + lit(p.b1(j)))
-    }
-    val m = (0 until hidden).map(j => h(j) * lit(p.w2(j))).reduce(_ + _) + lit(p.b2)
-    withCheckedFeatures(df, featCol, dim, "feature").agg(meanLogLoss(y, sigmoid(m)))
+      p: MlpParams): Double =
+    mlpForward(df, featCol, yCol, p).agg(meanLogLoss(col("__y"), col("__p")))
       .collect()(0).getDouble(0)
-  }
 
   /** Parameters of the trainable embedding model: `e` = the card×dim
     * embedding table, `w` = readout over the embedding, `u` = readout
@@ -1081,27 +1178,26 @@ object Blueprint {
     * concatenated with `nFeat` numeric features,
     * `p = σ(Σ_i E[c][i]·w_i + Σ_j x_j·u_j + b)`, mean logistic loss.
     *
-    * Forward: the F20 broadcast-join device — the card×dim table ships
-    * as a broadcast frame keyed by code, so the lookup is a
+    * Forward: the F20 broadcast-join device ([[lookup]]) — the card×dim
+    * table ships as a broadcast frame keyed by code, so the lookup is a
     * broadcast-hash join, never a shuffle. Backward: the lookup's
-    * adjoint is a SCATTER-ADD per code (`∂L/∂E[c] = Σ_{rows: code=c}
-    * dm·w`), and because the model is linear in the looked-up vector,
-    * EVERY gradient in the model is a fold of per-code residual sums:
-    *   s_c = Σ_{code=c} dm,  t_{c,j} = Σ_{code=c} dm·x_j
-    *   ∂E[c][i] = s_c·w_i    ∂w_i = Σ_c s_c·E[c][i]
-    *   ∂u_j = Σ_c t_{c,j}    ∂b = Σ_c s_c
-    * so ONE groupBy(code) aggregate (card rows after map-side partial
-    * agg) per step carries the entire backward pass; the folds run on
-    * the driver over the card-row result. Updated parameters re-enter
-    * the next step as a fresh broadcast literal frame — no executor
-    * state, 1000-executor-safe at any corpus size (card bounds the
-    * driver work, not the data).
+    * adjoint is a SCATTER-ADD per code, `∂L/∂E[c] = Σ_{rows: code=c}
+    * dm·w`; the readout's gradients are plain sums, `∂w = Σ dm·E[c]`,
+    * `∂u = Σ dm·x`, `∂b = Σ dm`. Each step runs on the GD kernel's
+    * grouped form ([[gdStep]]): ONE groupBy(code) aggregate of the
+    * per-row gradient (card rows after map-side partial agg) gives each
+    * code its table block and the readout sums, then the driver updates.
+    * The readout enters the plan as one array literal and the table as a
+    * fresh broadcast frame — no executor state, 1000-executor-safe at any
+    * corpus size (card bounds the driver work, not the data).
     *
     * Codes outside [0, card) drop out of the inner lookup join and
-    * contribute nothing — the dangling-FK convention of the J-ops.
-    * Op order pinned (gradients all computed from the step's incoming
-    * parameters, then `θ − lr·(g/n)` applied) for the SQL restatement;
-    * drift is summation-order and exp ulps, below a round-6 contract. */
+    * contribute nothing — the dangling-FK convention of the J-ops. A
+    * feature array that is not `nFeat` long, is NULL or holds a NULL
+    * fails the step. Op order pinned (gradients all computed from the
+    * step's incoming parameters, then `θ − lr·(g/n)` applied) for the
+    * SQL restatement; drift is summation-order and exp ulps, below a
+    * round-6 contract. */
   def fitEmbeddingGD(df: DataFrame, codeCol: String, featCol: String,
       yCol: String, card: Int, dim: Int, nFeat: Int, steps: Int, lr: Double,
       init: EmbParams = null): EmbParams = {
@@ -1111,68 +1207,47 @@ object Blueprint {
     require(steps >= 1, "need at least one step")
     require(lr > 0, s"learning rate must be positive, got $lr")
     val p0 = if (init != null) init else embInit(card, dim, nFeat)
-    require(p0.e.length == card && p0.e.forall(_.length == dim) &&
-      p0.w.length == dim && p0.u.length == nFeat, "init shape mismatch")
-    val e = p0.e.map(_.clone()); val w = p0.w.clone()
-    val u = p0.u.clone(); var b = p0.b
-    val spark = df.sparkSession
-    import spark.implicits._
-    val x = (j: Int) => element_at(col(featCol), j + 1).cast("double")
-    val y = col(yCol).cast("double")
-    (1 to steps).foreach { _ =>
-      val embDf = e.zipWithIndex.map { case (row, c) => (c, row) }.toSeq
-        .toDF("__code", "__emb")
-      val joined = df.join(broadcast(embDf),
-        col(codeCol).cast("int") === col("__code"))
-      val ei = (i: Int) => element_at(col("__emb"), i + 1)
-      val margin = (0 until dim).map(i => ei(i) * lit(w(i))) ++
-        (0 until nFeat).map(j => x(j) * lit(u(j))) reduceOption (_ + _)
-      val dm = sigmoid(margin.getOrElse(lit(0.0)) + lit(b)) - y
-      val sums = Seq(sum(dm).as("__s"), count(lit(1)).cast("double").as("__n")) ++
-        (0 until nFeat).map(j => sum(dm * x(j)).as(s"__t$j"))
-      val rows = joined.groupBy(col("__code")).agg(sums.head, sums.tail: _*)
-        .collect()
-      val s = Array.fill(card)(0.0); val t = Array.fill(nFeat)(0.0)
-      var n = 0.0
-      rows.foreach { r =>
-        val c = r.getInt(r.fieldIndex("__code"))
-        s(c) = r.getDouble(r.fieldIndex("__s"))
-        n += r.getDouble(r.fieldIndex("__n"))
-        (0 until nFeat).foreach(j => t(j) += r.getDouble(r.fieldIndex(s"__t$j")))
-      }
-      require(n > 0, "no row carries a code inside [0, card)")
-      // fold the readout gradients from the per-code sums (old table),
-      // THEN update everything from the step's incoming parameters
-      val gw = Array.tabulate(dim)(i => (0 until card).map(c => s(c) * e(c)(i)).sum)
-      val gb = s.sum
-      for (c <- 0 until card; i <- 0 until dim)
-        e(c)(i) = e(c)(i) - lr * (s(c) * w(i) / n)
-      (0 until dim).foreach(i => w(i) = w(i) - lr * (gw(i) / n))
-      (0 until nFeat).foreach(j => u(j) = u(j) - lr * (t(j) / n))
-      b = b - lr * (gb / n)
+    require(shaped(p0.e, card, dim) && p0.w.length == dim && p0.u.length == nFeat,
+      "init shape mismatch")
+    val unflat = (theta: Array[Double]) => {
+      val u = new Unflat(theta)
+      EmbParams(u.mat(card, dim), u.vec(dim), u.vec(nFeat), u.scalar)
     }
-    EmbParams(e, w, u, b)
+    val dm = col("__dm")
+    val theta = (1 to steps).foldLeft(p0.e.flatten ++ p0.w ++ p0.u :+ p0.b) { (theta, _) =>
+      val p = unflat(theta)
+      val back = embeddingForward(df, codeCol, featCol, yCol, p)
+        .withColumn("__dm", col("__p") - col("__y"))
+      // [the code's table block: dm·w | dm·(E[c] ++ x ++ [1])]
+      gdStep(back, concat(transform(Similarity.litVec(p.w), wi => dm * wi),
+        transform(col("__in"), v => dm * v)), theta, lr, table = dim)
+    }
+    unflat(theta)
   }
 
-  /** Mean logistic loss of [[fitEmbeddingGD]]'s model — one broadcast
-    * lookup join + one aggregate; the finite-difference anchor proving
-    * the analytic gradient really flows through the table lookup. */
-  def embeddingLogLoss(df: DataFrame, codeCol: String, featCol: String,
-      yCol: String, p: EmbParams): Double = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dim = p.w.length; val nFeat = p.u.length
-    val embDf = p.e.zipWithIndex.map { case (row, c) => (c, row) }.toSeq
-      .toDF("__code", "__emb")
-    val x = (j: Int) => element_at(col(featCol), j + 1).cast("double")
-    val y = col(yCol).cast("double")
-    val ei = (i: Int) => element_at(col("__emb"), i + 1)
-    val margin = ((0 until dim).map(i => ei(i) * lit(p.w(i))) ++
-      (0 until nFeat).map(j => x(j) * lit(p.u(j)))).reduce(_ + _) + lit(p.b)
-    df.join(broadcast(embDf), col(codeCol).cast("int") === col("__code"))
-      .agg(meanLogLoss(y, sigmoid(margin)))
-      .collect()(0).getDouble(0)
+  /** [[fitEmbeddingGD]]'s forward: the [[lookup]] of each row's code, the
+    * readout input `__in` = E[c] ++ x ++ [1], the prediction `__p` and
+    * the label `__y`. */
+  private def embeddingForward(df: DataFrame, codeCol: String, featCol: String,
+      yCol: String, p: EmbParams): DataFrame = {
+    val nFeat = p.u.length
+    val in = if (nFeat == 0) col("__emb") else concat(col("__emb"), col(featCol))
+    lookup(withCheckedFeatures(df, featCol, nFeat, "feature"), codeCol, p.e)
+      .withColumn("__in", withOne(in))
+      .withColumn("__p", sigmoid(Similarity.dot(col("__in"),
+        Similarity.litVec(p.w ++ p.u :+ p.b))))
+      .withColumn("__y", col(yCol).cast("double"))
   }
+
+  /** Mean logistic loss of [[fitEmbeddingGD]]'s model over its forward —
+    * one broadcast lookup join + one aggregate; the finite-difference
+    * anchor proving the analytic gradient really flows through the table
+    * lookup. */
+  def embeddingLogLoss(df: DataFrame, codeCol: String, featCol: String,
+      yCol: String, p: EmbParams): Double =
+    embeddingForward(df, codeCol, featCol, yCol, p)
+      .agg(meanLogLoss(col("__y"), col("__p")))
+      .collect()(0).getDouble(0)
 
   /** Single-head column-token self-attention FORWARD — the reference's
     * per-row transformer over column embeddings
@@ -1246,15 +1321,17 @@ object Blueprint {
     * aggregation in sight): with value-side score gradients
     * `g_b = dm·(Σ_i w_i·x_b[i])`, `∂L/∂s_b = α_b·(g_b − Σ_c α_c·g_c)`,
     * and `∂L/∂q_i = Σ_b ∂L/∂s_b · x_b[i]/√dim`. EVERY gradient is a
-    * per-row codegen expression, so a GD step is ONE distributed
-    * aggregate pass (2·dim + 2 sums, map-side partial agg) — no join, no
-    * scatter, no per-step checkpoint; parameters re-enter the next step
-    * as literals. The cheapest trainable operator in the library, at any
-    * corpus size.
+    * per-row array expression, so each step runs on the GD kernel
+    * ([[gdStep]]): one aggregate (map-side partial agg), no join, no
+    * scatter, no per-step checkpoint; q and [w ; b] enter the plan as
+    * array literals, so the plan has the same size at any dim and its
+    * generated code is the same from step to step. The cheapest trainable
+    * operator in the library, at any corpus size.
     *
     * Plain softmax (no max-subtraction) so the SQL restatement is
     * term-for-term; callers keep token dot products bounded (normalized
-    * features), as in [[columnSelfAttention]]. */
+    * features), as in [[columnSelfAttention]]. A token array that is not
+    * `dim` long, is NULL or holds a NULL fails the step. */
   def fitCrossAttnGD(df: DataFrame, tokenCols: Seq[String], yCol: String,
       dim: Int, steps: Int, lr: Double,
       init: CrossAttnParams = null): CrossAttnParams = {
@@ -1263,59 +1340,53 @@ object Blueprint {
     require(lr > 0, s"learning rate must be positive, got $lr")
     val p0 = if (init != null) init else crossAttnInit(dim)
     require(p0.q.length == dim && p0.w.length == dim, "init shape mismatch")
-    val k = tokenCols.length
-    val q = p0.q.clone(); val w = p0.w.clone(); var b = p0.b
-    val x = (bi: Int, i: Int) => element_at(col(tokenCols(bi)), i + 1).cast("double")
-    val y = col(yCol).cast("double")
-    val scale = 1.0 / math.sqrt(dim.toDouble)
-    (1 to steps).foreach { _ =>
-      val e = (0 until k).map(bi =>
-        exp((0 until dim).map(i => x(bi, i) * lit(q(i))).reduce(_ + _) * lit(scale)))
-      val z = e.reduce(_ + _)
-      val a = (0 until dim).map(i =>
-        (0 until k).map(bi => e(bi) / z * x(bi, i)).reduce(_ + _))
-      val dm = sigmoid((0 until dim).map(i => a(i) * lit(w(i))).reduce(_ + _) + lit(b)) - y
-      val g = (0 until k).map(bi =>
-        dm * (0 until dim).map(i => lit(w(i)) * x(bi, i)).reduce(_ + _))
-      val sumg = (0 until k).map(bi => e(bi) / z * g(bi)).reduce(_ + _)
-      val ds = (0 until k).map(bi => e(bi) / z * (g(bi) - sumg))
-      val sums =
-        (0 until dim).map(i => sum(
-          (0 until k).map(bi => ds(bi) * x(bi, i)).reduce(_ + _) * lit(scale))
-          .as(s"gq_$i")) ++
-        (0 until dim).map(i => sum(dm * a(i)).as(s"gw_$i")) ++
-        Seq(sum(dm).as("gb"), count(lit(1)).cast("double").as("n"))
-      val row = df.agg(sums.head, sums.tail: _*).collect()(0)
-      def gr(name: String) = row.getDouble(row.fieldIndex(name))
-      val n = gr("n")
-      require(n > 0, "cannot fit on an empty DataFrame")
-      (0 until dim).foreach { i =>
-        q(i) = q(i) - lr * (gr(s"gq_$i") / n)
-        w(i) = w(i) - lr * (gr(s"gw_$i") / n)
-      }
-      b = b - lr * (gr("gb") / n)
+    val unflat = (theta: Array[Double]) => {
+      val u = new Unflat(theta)
+      CrossAttnParams(u.vec(dim), u.vec(dim), u.scalar)
     }
-    CrossAttnParams(q, w, b)
+    val ks = tokenCols.indices
+    val (x, al, dm) = (tokenCols.map(col), ks.map(b => col(s"__al$b")), col("__dm"))
+    val scale = 1.0 / math.sqrt(dim.toDouble)
+    val theta = (1 to steps).foldLeft(p0.q ++ p0.w :+ p0.b) { (theta, _) =>
+      val p = unflat(theta)
+      val back = crossAttnForward(df, tokenCols, yCol, p)
+        .withColumn("__dm", col("__p") - col("__y"))
+        .withColumns(ks.map(b => s"__g$b" -> dm * Similarity.dot(x(b),
+          Similarity.litVec(p.w))).toMap)
+        .withColumn("__sg", ks.map(b => al(b) * col(s"__g$b")).reduce(_ + _))
+        .withColumns(ks.map(b => s"__ds$b" ->
+          al(b) * (col(s"__g$b") - col("__sg"))).toMap)
+      val gq = transform(weightedSum(ks.map(b => col(s"__ds$b")), x), v => v * lit(scale))
+      gdStep(back, concat(gq, transform(col("__a"), ai => dm * ai), array(dm)), theta, lr)
+    }
+    unflat(theta)
   }
 
-  /** Mean logistic loss of [[fitCrossAttnGD]]'s model — one aggregate;
-    * the finite-difference anchor proving the analytic gradient really
-    * flows through the row-local softmax. */
-  def crossAttnLogLoss(df: DataFrame, tokenCols: Seq[String], yCol: String,
-      p: CrossAttnParams): Double = {
-    val dim = p.q.length; val k = tokenCols.length
-    val x = (bi: Int, i: Int) => element_at(col(tokenCols(bi)), i + 1).cast("double")
-    val y = col(yCol).cast("double")
+  /** [[fitCrossAttnGD]]'s forward over the checked token rows: the score
+    * exponentials `__e{b}`, their sum `__z`, the softmax `__al{b}`, the
+    * attended vector `__a`, the prediction `__p` and the label `__y`. */
+  private def crossAttnForward(df: DataFrame, tokenCols: Seq[String], yCol: String,
+      p: CrossAttnParams): DataFrame = {
+    val dim = p.q.length; val ks = tokenCols.indices
     val scale = 1.0 / math.sqrt(dim.toDouble)
-    val e = (0 until k).map(bi =>
-      exp((0 until dim).map(i => x(bi, i) * lit(p.q(i))).reduce(_ + _) * lit(scale)))
-    val z = e.reduce(_ + _)
-    val a = (0 until dim).map(i =>
-      (0 until k).map(bi => e(bi) / z * x(bi, i)).reduce(_ + _))
-    val m = (0 until dim).map(i => a(i) * lit(p.w(i))).reduce(_ + _) + lit(p.b)
-    df.agg(meanLogLoss(y, sigmoid(m)))
-      .collect()(0).getDouble(0)
+    withCheckedTokens(df, tokenCols, dim)
+      .withColumns(ks.map(b => s"__e$b" ->
+        exp(Similarity.dot(col(tokenCols(b)), Similarity.litVec(p.q)) * lit(scale))).toMap)
+      .withColumn("__z", ks.map(b => col(s"__e$b")).reduce(_ + _))
+      .withColumns(ks.map(b => s"__al$b" -> col(s"__e$b") / col("__z")).toMap)
+      .withColumn("__a", weightedSum(ks.map(b => col(s"__al$b")), tokenCols.map(col)))
+      .withColumn("__p", sigmoid(Similarity.dot(withOne(col("__a")),
+        Similarity.litVec(p.w :+ p.b))))
+      .withColumn("__y", col(yCol).cast("double"))
   }
+
+  /** Mean logistic loss of [[fitCrossAttnGD]]'s model over its forward —
+    * one aggregate; the finite-difference anchor proving the analytic
+    * gradient really flows through the row-local softmax. */
+  def crossAttnLogLoss(df: DataFrame, tokenCols: Seq[String], yCol: String,
+      p: CrossAttnParams): Double =
+    crossAttnForward(df, tokenCols, yCol, p).agg(meanLogLoss(col("__y"), col("__p")))
+      .collect()(0).getDouble(0)
 
   /** Parameters of the end-to-end trainable DBTransformer: `e` = the
     * card×dim categorical embedding table (token 0), `a`/`c` = the
@@ -1340,7 +1411,7 @@ object Blueprint {
     Array.fill(nClass)(0.0))
 
   /** The row-local forward of [[fitTransformerGD]]'s model as a STAGED
-    * projection chain over the lookup-joined frame: each intermediate
+    * projection chain over [[embedTokens]]' tokens: each intermediate
     * (token components, score exponentials, softmax weights, attended
     * vector, class probabilities) lands as a NAMED column computed once
     * per row, the dataflow form of the oracle's CTE chain. Inlining the
@@ -1356,16 +1427,11 @@ object Blueprint {
     * Emits: `__t{b}_{j}` (token b component j; b=0 the embedding),
     * `__ex{b}`, `__z`, `__al{b}` (softmax), `__o{i}` (attended),
     * `__u{k}`, `__eu{k}`, `__zc`, `__pr{k}` (class softmax). */
-  private def transformerForwardStaged(joined: DataFrame,
-      p: TransformerParams, numCols: Seq[String]): DataFrame = {
-    val dim = p.e.head.length; val nNum = p.a.length
-    val nClass = p.wOut.length; val k = 1 + nNum
+  private def transformerForwardStaged(df: DataFrame, codeCol: String,
+      numCols: Seq[String], p: TransformerParams): DataFrame = {
+    val dim = p.e.head.length; val k = 1 + p.a.length
     val scale = 1.0 / math.sqrt(dim.toDouble)
-    joined
-      .withColumns((
-        (0 until dim).map(j => s"__t0_$j" -> element_at(col("__emb"), j + 1)) ++
-        (for (m <- 0 until nNum; j <- 0 until dim) yield s"__t${m + 1}_$j" ->
-          (col(numCols(m)).cast("double") * lit(p.a(m)(j)) + lit(p.c(m)(j))))).toMap)
+    val attended = embedTokens(df, codeCol, numCols, p.e, p.a, p.c)
       .withColumns((0 until k).map(b => s"__ex$b" ->
         exp((0 until dim).map(j => col(s"__t0_$j") * col(s"__t${b}_$j"))
           .reduce(_ + _) * lit(scale))).toMap)
@@ -1375,14 +1441,7 @@ object Blueprint {
       .withColumns((0 until dim).map(i => s"__o$i" ->
         (0 until k).map(b => col(s"__al$b") * col(s"__t${b}_$i"))
           .reduce(_ + _)).toMap)
-      .withColumns((0 until nClass).map(kk => s"__u$kk" ->
-        ((0 until dim).map(i => col(s"__o$i") * lit(p.wOut(kk)(i)))
-          .reduce(_ + _) + lit(p.bOut(kk)))).toMap)
-      .withColumns((0 until nClass).map(kk =>
-        s"__eu$kk" -> exp(col(s"__u$kk"))).toMap)
-      .withColumn("__zc", (0 until nClass).map(kk => col(s"__eu$kk")).reduce(_ + _))
-      .withColumns((0 until nClass).map(kk =>
-        s"__pr$kk" -> col(s"__eu$kk") / col("__zc")).toMap)
+    classHead(attended, i => col(s"__o$i"), p.wOut, p.bOut)
   }
 
   /** The reference's DBTransformer trained END-TO-END
@@ -1403,16 +1462,16 @@ object Blueprint {
     * AND its own key (`∂s_0/∂t_0[j] = 2·t_0[j]·√dim⁻¹`), the numeric
     * tokens are keys of their own score only. Token gradients then fold
     * into parameters: the table's is the scatter-add per code, the
-    * numeric embedders' and the head's are plain sums — ALL of which
-    * ride ONE groupBy(code) aggregate per step (per-code partial sums,
-    * driver-folded), the bp12 economy for the full model. At 100 TB a
-    * training step shuffles card rows, nothing else.
+    * numeric embedders' and the head's are plain sums. Each step runs on
+    * the GD kernel's grouped form ([[gdStep]]): ONE groupBy(code)
+    * aggregate of the per-row gradient, the bp12 economy for the full
+    * model. At 100 TB a training step shuffles card rows, nothing else.
     *
     * Plain softmaxes (no max-subtraction) for term-for-term SQL
     * restatement; callers keep features normalized. Codes outside
-    * [0, card) drop out of the lookup join (dangling-FK convention).
-    * Op order pinned: all gradients from the step's incoming
-    * parameters, then `θ − lr·(g/n)`. */
+    * [0, card) drop out of the lookup join (dangling-FK convention); a
+    * NULL numeric value fails the step. Op order pinned: all gradients
+    * from the step's incoming parameters, then `θ − lr·(g/n)`. */
   def fitTransformerGD(df: DataFrame, codeCol: String, numCols: Seq[String],
       yCol: String, card: Int, dim: Int, nClass: Int, steps: Int, lr: Double,
       init: TransformerParams = null): TransformerParams = {
@@ -1420,36 +1479,23 @@ object Blueprint {
     require(steps >= 1 && lr > 0, "need steps >= 1 and lr > 0")
     val nNum = numCols.length
     val p0 = if (init != null) init else transformerInit(card, dim, nNum, nClass)
-    require(p0.e.length == card && p0.e.forall(_.length == dim) &&
-      p0.a.length == nNum && p0.a.forall(_.length == dim) &&
-      p0.c.length == nNum && p0.c.forall(_.length == dim) &&
-      p0.wOut.length == nClass && p0.wOut.forall(_.length == dim) &&
-      p0.bOut.length == nClass, "init shape mismatch")
-    val e = p0.e.map(_.clone()); val a = p0.a.map(_.clone())
-    val cc = p0.c.map(_.clone()); val wOut = p0.wOut.map(_.clone())
-    val bOut = p0.bOut.clone()
-    val spark = df.sparkSession
-    import spark.implicits._
+    require(shaped(p0.e, card, dim) && shaped(p0.a, nNum, dim) && shaped(p0.c, nNum, dim) &&
+      shaped(p0.wOut, nClass, dim) && p0.bOut.length == nClass, "init shape mismatch")
+    val unflat = (theta: Array[Double]) => {
+      val u = new Unflat(theta)
+      TransformerParams(u.mat(card, dim), u.mat(nNum, dim), u.mat(nNum, dim),
+        u.mat(nClass, dim), u.vec(nClass))
+    }
     val scale = 1.0 / math.sqrt(dim.toDouble)
     val k = 1 + nNum
-    (1 to steps).foreach { _ =>
-      val cur = TransformerParams(e.map(_.clone()), a.map(_.clone()),
-        cc.map(_.clone()), wOut.map(_.clone()), bOut.clone())
-      val embDf = e.zipWithIndex.map { case (row, cd) => (cd, row) }.toSeq
-        .toDF("__code", "__emb")
-      val joined = df.join(broadcast(embDf),
-        col(codeCol).cast("int") === col("__code"))
-      val y = col(yCol).cast("int")
+    val theta0 = Array(p0.e, p0.a, p0.c, p0.wOut).flatten.flatten ++ p0.bOut
+    val theta = (1 to steps).foldLeft(theta0) { (theta, _) =>
+      val p = unflat(theta)
       // backward stages continue the forward's projection chain — every
       // adjoint lands as a named column computed once per row
-      val back = transformerForwardStaged(joined, cur, numCols)
-        .withColumns((0 until nClass).map(kk => s"__du$kk" ->
-          (col(s"__pr$kk") - when(y === kk, 1.0).otherwise(0.0))).toMap)
-        .withColumns((0 until dim).map(i => s"__dO$i" ->
-          (0 until nClass).map(kk => col(s"__du$kk") * lit(cur.wOut(kk)(i)))
-            .reduce(_ + _)).toMap)
+      val back = classBack(transformerForwardStaged(df, codeCol, numCols, p), yCol, p.wOut)
         .withColumns((0 until k).map(b => s"__dAl$b" ->
-          (0 until dim).map(i => col(s"__dO$i") * col(s"__t${b}_$i"))
+          (0 until dim).map(i => col(s"__dout$i") * col(s"__t${b}_$i"))
             .reduce(_ + _)).toMap)
         .withColumn("__sad",
           (0 until k).map(b => col(s"__al$b") * col(s"__dAl$b")).reduce(_ + _))
@@ -1459,77 +1505,25 @@ object Blueprint {
         // of every score and its own key; token b>=1 keys only s_b)
         .withColumns((
           (0 until dim).map(j => s"__dT0_$j" ->
-            (col("__al0") * col(s"__dO$j") +
+            (col("__al0") * col(s"__dout$j") +
               (col("__dS0") * lit(2.0) * col(s"__t0_$j") +
                 (1 until k).map(b => col(s"__dS$b") * col(s"__t${b}_$j"))
                   .reduce(_ + _)) * lit(scale))) ++
           (for (m <- 0 until nNum; j <- 0 until dim) yield s"__dT${m + 1}_$j" ->
-            (col(s"__al${m + 1}") * col(s"__dO$j") +
+            (col(s"__al${m + 1}") * col(s"__dout$j") +
               col(s"__dS${m + 1}") * col(s"__t0_$j") * lit(scale)))).toMap)
-      // ONE grouped pass: per-code partial sums of every gradient
-      val x = (m: Int) => col(numCols(m)).cast("double")
-      val sums =
-        (0 until dim).map(j => sum(col(s"__dT0_$j")).as(s"ge_$j")) ++
-        (for (m <- 0 until nNum; j <- 0 until dim)
-          yield sum(col(s"__dT${m + 1}_$j") * x(m)).as(s"ga_${m}_$j")) ++
-        (for (m <- 0 until nNum; j <- 0 until dim)
-          yield sum(col(s"__dT${m + 1}_$j")).as(s"gc_${m}_$j")) ++
-        (for (kk <- 0 until nClass; i <- 0 until dim)
-          yield sum(col(s"__du$kk") * col(s"__o$i")).as(s"gw_${kk}_$i")) ++
-        (0 until nClass).map(kk => sum(col(s"__du$kk")).as(s"gb_$kk")) ++
-        Seq(count(lit(1)).cast("double").as("__n"))
-      val rows = back.groupBy(col("__code")).agg(sums.head, sums.tail: _*)
-        .collect()
-      var n = 0.0
-      val gE = Array.fill(card, dim)(0.0)
-      val gA = Array.fill(nNum, dim)(0.0); val gC = Array.fill(nNum, dim)(0.0)
-      val gW = Array.fill(nClass, dim)(0.0); val gB = Array.fill(nClass)(0.0)
-      rows.foreach { r =>
-        def g(name: String) = r.getDouble(r.fieldIndex(name))
-        val cd = r.getInt(r.fieldIndex("__code"))
-        n += g("__n")
-        (0 until dim).foreach(j => gE(cd)(j) = g(s"ge_$j"))
-        for (m <- 0 until nNum; j <- 0 until dim) {
-          gA(m)(j) += g(s"ga_${m}_$j"); gC(m)(j) += g(s"gc_${m}_$j")
-        }
-        for (kk <- 0 until nClass) {
-          gB(kk) += g(s"gb_$kk")
-          (0 until dim).foreach(i => gW(kk)(i) += g(s"gw_${kk}_$i"))
-        }
-      }
-      require(n > 0, "no row carries a code inside [0, card)")
-      for (cd <- 0 until card; j <- 0 until dim)
-        e(cd)(j) = e(cd)(j) - lr * (gE(cd)(j) / n)
-      for (m <- 0 until nNum; j <- 0 until dim) {
-        a(m)(j) = a(m)(j) - lr * (gA(m)(j) / n)
-        cc(m)(j) = cc(m)(j) - lr * (gC(m)(j) / n)
-      }
-      for (kk <- 0 until nClass) {
-        (0 until dim).foreach(i => wOut(kk)(i) = wOut(kk)(i) - lr * (gW(kk)(i) / n))
-        bOut(kk) = bOut(kk) - lr * (gB(kk) / n)
-      }
+      gdStep(back, transformerGrad(numCols, dim, Nil, i => col(s"__o$i"), nClass),
+        theta, lr, table = dim)
     }
-    TransformerParams(e, a, cc, wOut, bOut)
+    unflat(theta)
   }
 
   /** Mean softmax cross-entropy of [[fitTransformerGD]]'s model — one
-    * lookup join + one aggregate; the finite-difference anchor for the
-    * full end-to-end gradient. */
+    * lookup join + one aggregate over the fit's forward; the
+    * finite-difference anchor for the full end-to-end gradient. */
   def transformerLogLoss(df: DataFrame, codeCol: String,
-      numCols: Seq[String], yCol: String, p: TransformerParams): Double = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val nClass = p.wOut.length
-    val embDf = p.e.zipWithIndex.map { case (row, cd) => (cd, row) }.toSeq
-      .toDF("__code", "__emb")
-    val joined = df.join(broadcast(embDf),
-      col(codeCol).cast("int") === col("__code"))
-    val y = col(yCol).cast("int")
-    val py = (0 until nClass).map(kk =>
-      when(y === kk, col(s"__pr$kk")).otherwise(lit(0.0))).reduce(_ + _)
-    transformerForwardStaged(joined, p, numCols)
-      .agg(avg(-log(py))).collect()(0).getDouble(0)
-  }
+      numCols: Seq[String], yCol: String, p: TransformerParams): Double =
+    classLogLoss(transformerForwardStaged(df, codeCol, numCols, p), yCol, p.wOut.length)
 
   /** Parameters of the multi-head attention readout with LEARNED
     * projections (`torch.nn.MultiheadAttention` semantics,
@@ -1574,30 +1568,39 @@ object Blueprint {
     *   ho_r = Σ_b α_b·v_br                o = concat_g(ho)
     *   out_i = Σ_j wo(i)(j)·o_j
     *
-    * Emits `__x{b}_{c}` (token components), `__q{g}_{r}`, `__k{g}_{b}_{r}`,
-    * `__v{g}_{b}_{r}`, `__s{g}_{b}`, `__al{g}_{b}` (softmax), `__o{j}`
-    * (concatenated heads), `__out{i}`. Pure codegen, NO shuffle — at
-    * 100 TB the forward runs inside whole-stage codegen at scan speed.
-    * Shared by [[fitMhaGD]], [[mhaLogLoss]] and the mha1 registry query
-    * so forward and backward can never drift apart. */
+    * Emits `__x{b}_{c}` (token components), then [[mhaStages]]'
+    * columns. Pure codegen, NO shuffle — at 100 TB the forward runs
+    * inside whole-stage codegen at scan speed. Shared by [[fitMhaGD]],
+    * [[mhaLogLoss]] and the mha1 registry query so forward and backward
+    * can never drift apart. */
   private[graft] def mhaForwardStaged(df: DataFrame, tokenCols: Seq[String],
       p: MhaParams): DataFrame = {
-    val heads = p.wq.length; val dh = p.wq.head.length
     val dim = p.wq.head.head.length; val k = tokenCols.length
-    val scaleH = 1.0 / math.sqrt(dh.toDouble)
-    val x = (b: Int, c: Int) => col(s"__x${b}_$c")
-    df.withColumns((for (b <- 0 until k; c <- 0 until dim)
+    mhaStages(df.withColumns((for (b <- 0 until k; c <- 0 until dim)
         yield s"__x${b}_$c" ->
-          element_at(col(tokenCols(b)), c + 1).cast("double")).toMap)
-      .withColumns((
+          element_at(col(tokenCols(b)), c + 1).cast("double")).toMap),
+      k, (b, c) => col(s"__x${b}_$c"), p.wq, p.wk, p.wv, p.wo)
+  }
+
+  /** The attention stages of [[mhaForwardStaged]] and
+    * [[transformerMhaForwardStaged]] over the k tokens' components
+    * `x(b, c)`: `__q{g}_{r}`, `__k{g}_{b}_{r}`, `__v{g}_{b}_{r}`,
+    * `__s{g}_{b}`, `__mx{g}`, `__e{g}_{b}`, `__z{g}`, `__al{g}_{b}`
+    * (softmax), `__o{j}` (concatenated heads), `__out{i}`. */
+  private def mhaStages(df: DataFrame, k: Int, x: (Int, Int) => Column,
+      wq: Array[Array[Array[Double]]], wk: Array[Array[Array[Double]]],
+      wv: Array[Array[Array[Double]]], wo: Array[Array[Double]]): DataFrame = {
+    val heads = wq.length; val dh = wq.head.length; val dim = wq.head.head.length
+    val scaleH = 1.0 / math.sqrt(dh.toDouble)
+    df.withColumns((
         (for (g <- 0 until heads; r <- 0 until dh) yield s"__q${g}_$r" ->
-          (0 until dim).map(c => x(0, c) * lit(p.wq(g)(r)(c))).reduce(_ + _)) ++
+          (0 until dim).map(c => x(0, c) * lit(wq(g)(r)(c))).reduce(_ + _)) ++
         (for (g <- 0 until heads; b <- 0 until k; r <- 0 until dh)
           yield s"__k${g}_${b}_$r" ->
-            (0 until dim).map(c => x(b, c) * lit(p.wk(g)(r)(c))).reduce(_ + _)) ++
+            (0 until dim).map(c => x(b, c) * lit(wk(g)(r)(c))).reduce(_ + _)) ++
         (for (g <- 0 until heads; b <- 0 until k; r <- 0 until dh)
           yield s"__v${g}_${b}_$r" ->
-            (0 until dim).map(c => x(b, c) * lit(p.wv(g)(r)(c))).reduce(_ + _))).toMap)
+            (0 until dim).map(c => x(b, c) * lit(wv(g)(r)(c))).reduce(_ + _))).toMap)
       .withColumns((for (g <- 0 until heads; b <- 0 until k)
         yield s"__s${g}_$b" ->
           (0 until dh).map(r => col(s"__q${g}_$r") * col(s"__k${g}_${b}_$r"))
@@ -1616,7 +1619,7 @@ object Blueprint {
           (0 until k).map(b => col(s"__al${g}_$b") * col(s"__v${g}_${b}_$r"))
             .reduce(_ + _)).toMap)
       .withColumns((0 until dim).map(i => s"__out$i" ->
-        (0 until dim).map(j => col(s"__o$j") * lit(p.wo(i)(j))).reduce(_ + _)).toMap)
+        (0 until dim).map(j => col(s"__o$j") * lit(wo(i)(j))).reduce(_ + _)).toMap)
   }
 
   /** Multi-head attention with learned Q/K/V/output projections, trained
@@ -1632,14 +1635,15 @@ object Blueprint {
     * the projection gradients fold as flat sums — `∂wq(g)(r)(c) =
     * (Σ_b ds_b·k_br)·√dh⁻¹·x₀[c]`, `∂wk(g)(r)(c) = q_r·√dh⁻¹·Σ_b ds_b·
     * x_b[c]`, `∂wv(g)(r)(c) = Σ_b α_b·da_r·x_b[c]`. EVERY gradient is a
-    * per-row codegen expression, so a GD step is ONE distributed
-    * aggregate pass (no join, no scatter, map-side partial agg);
-    * parameters re-enter the next step as literals. The stable softmax
-    * (max-subtract, free in codegen) keeps large learned projections
-    * from overflowing `exp`; the softmax-normalized backward formulas
-    * read α directly, so stabilization costs the gradient nothing.
-    * Op order pinned: all gradients from the step's incoming parameters,
-    * then `θ − lr·(g/n)` — the SQL restatement is step-for-step. */
+    * per-row codegen expression, so each step runs on the GD kernel
+    * ([[gdStep]]): one aggregate, no join, no scatter, map-side partial
+    * agg. The stable softmax (max-subtract, free in codegen) keeps large
+    * learned projections from overflowing `exp`; the softmax-normalized
+    * backward formulas read α directly, so stabilization costs the
+    * gradient nothing. A token array that is not `dim` long, is NULL or
+    * holds a NULL fails the step. Op order pinned: all gradients from the
+    * step's incoming parameters, then `θ − lr·(g/n)` — the SQL
+    * restatement is step-for-step. */
   def fitMhaGD(df: DataFrame, tokenCols: Seq[String], yCol: String,
       dim: Int, heads: Int, steps: Int, lr: Double,
       init: MhaParams = null): MhaParams = {
@@ -1648,90 +1652,87 @@ object Blueprint {
     require(steps >= 1 && lr > 0, "need steps >= 1 and lr > 0")
     val dh = dim / heads; val k = tokenCols.length
     val p0 = if (init != null) init else mhaInit(dim, heads)
-    require(p0.wq.length == heads && p0.wq.forall(h => h.length == dh &&
-        h.forall(_.length == dim)) &&
-      p0.wk.length == heads && p0.wv.length == heads &&
-      p0.wo.length == dim && p0.wo.forall(_.length == dim) &&
+    require(shapedHeads(p0.wq, heads, dh, dim) && shapedHeads(p0.wk, heads, dh, dim) &&
+      shapedHeads(p0.wv, heads, dh, dim) && shaped(p0.wo, dim, dim) &&
       p0.w.length == dim, "init shape mismatch")
-    val wq = p0.wq.map(_.map(_.clone())); val wk = p0.wk.map(_.map(_.clone()))
-    val wv = p0.wv.map(_.map(_.clone())); val wo = p0.wo.map(_.clone())
-    val w = p0.w.clone(); var b = p0.b
-    val scaleH = 1.0 / math.sqrt(dh.toDouble)
-    val y = col(yCol).cast("double")
-    (1 to steps).foreach { _ =>
-      val cur = MhaParams(wq.map(_.map(_.clone())), wk.map(_.map(_.clone())),
-        wv.map(_.map(_.clone())), wo.map(_.clone()), w.clone(), b)
-      // backward stages continue the forward's projection chain
-      val back = mhaForwardStaged(df, tokenCols, cur)
-        .withColumn("__dm", sigmoid((0 until dim)
-          .map(i => col(s"__out$i") * lit(cur.w(i))).reduce(_ + _) + lit(cur.b)) - y)
-        .withColumns((0 until dim).map(i =>
-          s"__dout$i" -> col("__dm") * lit(cur.w(i))).toMap)
-        .withColumns((0 until dim).map(j => s"__do$j" ->
-          (0 until dim).map(i => col(s"__dout$i") * lit(cur.wo(i)(j)))
-            .reduce(_ + _)).toMap)
-        .withColumns((for (g <- 0 until heads; bb <- 0 until k)
-          yield s"__dal${g}_$bb" ->
-            (0 until dh).map(r => col(s"__do${g * dh + r}") *
-              col(s"__v${g}_${bb}_$r")).reduce(_ + _)).toMap)
-        .withColumns((0 until heads).map(g => s"__sad$g" ->
-          (0 until k).map(bb => col(s"__al${g}_$bb") * col(s"__dal${g}_$bb"))
-            .reduce(_ + _)).toMap)
-        .withColumns((for (g <- 0 until heads; bb <- 0 until k)
-          yield s"__ds${g}_$bb" ->
-            col(s"__al${g}_$bb") * (col(s"__dal${g}_$bb") - col(s"__sad$g"))).toMap)
-        .withColumns((for (g <- 0 until heads; r <- 0 until dh)
-          yield s"__dq${g}_$r" ->
-            (0 until k).map(bb => col(s"__ds${g}_$bb") * col(s"__k${g}_${bb}_$r"))
-              .reduce(_ + _) * lit(scaleH)).toMap)
-      val xB = (bb: Int, c: Int) => col(s"__x${bb}_$c")
-      // ONE aggregate pass: every projection gradient as a flat sum
-      val sums =
-        (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
-          yield sum(col(s"__dq${g}_$r") * xB(0, c)).as(s"gq_${g}_${r}_$c")) ++
-        (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
-          yield sum((0 until k).map(bb => col(s"__ds${g}_$bb") * xB(bb, c))
-            .reduce(_ + _) * col(s"__q${g}_$r") * lit(scaleH))
-            .as(s"gk_${g}_${r}_$c")) ++
-        (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
-          yield sum((0 until k).map(bb => col(s"__al${g}_$bb") * xB(bb, c))
-            .reduce(_ + _) * col(s"__do${g * dh + r}"))
-            .as(s"gv_${g}_${r}_$c")) ++
-        (for (i <- 0 until dim; j <- 0 until dim)
-          yield sum(col(s"__dout$i") * col(s"__o$j")).as(s"go_${i}_$j")) ++
-        (0 until dim).map(i => sum(col("__dm") * col(s"__out$i")).as(s"gw_$i")) ++
-        Seq(sum(col("__dm")).as("gb"), count(lit(1)).cast("double").as("n"))
-      val row = back.agg(sums.head, sums.tail: _*).collect()(0)
-      def g(name: String) = row.getDouble(row.fieldIndex(name))
-      val n = g("n")
-      require(n > 0, "cannot fit on an empty DataFrame")
-      for (gg <- 0 until heads; r <- 0 until dh; c <- 0 until dim) {
-        wq(gg)(r)(c) -= lr * (g(s"gq_${gg}_${r}_$c") / n)
-        wk(gg)(r)(c) -= lr * (g(s"gk_${gg}_${r}_$c") / n)
-        wv(gg)(r)(c) -= lr * (g(s"gv_${gg}_${r}_$c") / n)
-      }
-      for (i <- 0 until dim; j <- 0 until dim)
-        wo(i)(j) -= lr * (g(s"go_${i}_$j") / n)
-      (0 until dim).foreach(i => w(i) -= lr * (g(s"gw_$i") / n))
-      b -= lr * (g("gb") / n)
+    val unflat = (theta: Array[Double]) => {
+      val u = new Unflat(theta)
+      MhaParams(u.cube(heads, dh, dim), u.cube(heads, dh, dim), u.cube(heads, dh, dim),
+        u.mat(dim, dim), u.vec(dim), u.scalar)
     }
-    MhaParams(wq, wk, wv, wo, w, b)
+    val rows = withCheckedTokens(df, tokenCols, dim)
+    val dm = col("__dm")
+    val theta0 = Array(p0.wq, p0.wk, p0.wv).flatten.flatten.flatten ++
+      p0.wo.flatten ++ p0.w :+ p0.b
+    val theta = (1 to steps).foldLeft(theta0) { (theta, _) =>
+      val p = unflat(theta)
+      // backward stages continue the forward's projection chain
+      val back = mhaBackStages(mhaForwardStaged(rows, tokenCols, p)
+        .withColumn("__dm", mhaReadout(p) - col(yCol).cast("double"))
+        .withColumns((0 until dim).map(i => s"__dout$i" -> dm * lit(p.w(i))).toMap),
+        k, p.wo, heads)
+      gdStep(back, array(mhaGrads(k, (b, c) => col(s"__x${b}_$c"), heads, dh, dim) ++
+        (0 until dim).map(i => dm * col(s"__out$i")) :+ dm: _*), theta, lr)
+    }
+    unflat(theta)
   }
+
+  /** The backward of [[mhaStages]] from the out-projection's input
+    * gradient `__dout{i}`: `__do{j}`, and per head `__dal{g}_{b}`,
+    * `__sad{g}`, `__ds{g}_{b}` (the softmax Jacobian) and `__dq{g}_{r}`. */
+  private def mhaBackStages(df: DataFrame, k: Int, wo: Array[Array[Double]],
+      heads: Int): DataFrame = {
+    val dim = wo.length; val dh = dim / heads
+    val scaleH = 1.0 / math.sqrt(dh.toDouble)
+    df.withColumns((0 until dim).map(j => s"__do$j" ->
+        (0 until dim).map(i => col(s"__dout$i") * lit(wo(i)(j))).reduce(_ + _)).toMap)
+      .withColumns((for (g <- 0 until heads; b <- 0 until k)
+        yield s"__dal${g}_$b" ->
+          (0 until dh).map(r => col(s"__do${g * dh + r}") *
+            col(s"__v${g}_${b}_$r")).reduce(_ + _)).toMap)
+      .withColumns((0 until heads).map(g => s"__sad$g" ->
+        (0 until k).map(b => col(s"__al${g}_$b") * col(s"__dal${g}_$b"))
+          .reduce(_ + _)).toMap)
+      .withColumns((for (g <- 0 until heads; b <- 0 until k)
+        yield s"__ds${g}_$b" ->
+          col(s"__al${g}_$b") * (col(s"__dal${g}_$b") - col(s"__sad$g"))).toMap)
+      .withColumns((for (g <- 0 until heads; r <- 0 until dh)
+        yield s"__dq${g}_$r" ->
+          (0 until k).map(b => col(s"__ds${g}_$b") * col(s"__k${g}_${b}_$r"))
+            .reduce(_ + _) * lit(scaleH)).toMap)
+  }
+
+  /** The per-row gradients of [[mhaStages]]' projections over the tokens'
+    * components `x(b, c)`, in parameter order: wq, wk, wv (head-, row-,
+    * column-major), then wo (row-major). */
+  private def mhaGrads(k: Int, x: (Int, Int) => Column, heads: Int, dh: Int,
+      dim: Int): Seq[Column] = {
+    val scaleH = 1.0 / math.sqrt(dh.toDouble)
+    (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
+      yield col(s"__dq${g}_$r") * x(0, c)) ++
+    (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
+      yield (0 until k).map(b => col(s"__ds${g}_$b") * x(b, c))
+        .reduce(_ + _) * col(s"__q${g}_$r") * lit(scaleH)) ++
+    (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
+      yield (0 until k).map(b => col(s"__al${g}_$b") * x(b, c))
+        .reduce(_ + _) * col(s"__do${g * dh + r}")) ++
+    (for (i <- 0 until dim; j <- 0 until dim) yield col(s"__dout$i") * col(s"__o$j"))
+  }
+
+  /** [[fitMhaGD]]'s prediction over [[mhaForwardStaged]]:
+    * `σ(Σ_i out_i·w_i + b)`. */
+  private def mhaReadout(p: MhaParams): Column =
+    sigmoid(p.w.indices.map(i => col(s"__out$i") * lit(p.w(i))).reduce(_ + _) + lit(p.b))
 
   /** Mean logistic loss of [[fitMhaGD]]'s model — one aggregate over the
     * shared staged forward; the finite-difference anchor proving the
     * analytic gradient flows through every learned projection (Q, K, V,
     * output) and both softmax paths. */
   def mhaLogLoss(df: DataFrame, tokenCols: Seq[String], yCol: String,
-      p: MhaParams): Double = {
-    val dim = p.wo.length
-    val y = col(yCol).cast("double")
-    val m = (0 until dim).map(i => col(s"__out$i") * lit(p.w(i)))
-      .reduce(_ + _) + lit(p.b)
-    mhaForwardStaged(df, tokenCols, p)
-      .agg(meanLogLoss(y, sigmoid(m)))
+      p: MhaParams): Double =
+    mhaForwardStaged(withCheckedTokens(df, tokenCols, p.wo.length), tokenCols, p)
+      .agg(meanLogLoss(col(yCol).cast("double"), mhaReadout(p)))
       .collect()(0).getDouble(0)
-  }
 
   /** The reference's FULL stacked DBTransformer forward
     * (`nn/models/transformer.py:43-59,96-110`: L `DBTransformerLayer`s,
@@ -1854,61 +1855,18 @@ object Blueprint {
   }
 
   /** The staged forward of [[fitTransformerMhaGD]] — tokens from the
-    * embedding lookup + numeric embedders ([[transformerForwardStaged]]'s
-    * first stage), then MULTI-HEAD attention with learned projections
-    * queried by token 0 ([[mhaForwardStaged]]'s stages over
+    * embedding lookup + numeric embedders ([[embedTokens]], as in
+    * [[transformerForwardStaged]]), then MULTI-HEAD attention with
+    * learned projections queried by token 0 ([[mhaStages]] over
     * parameter-dependent tokens), the out-projection, and the class
-    * softmax. Emits `__t{b}_{j}`, `__q/__k/__v`, `__s/__e/__al`
-    * (stable softmax), `__o{j}`, `__out{i}`, `__u/__eu/__zc/__pr{k}`. */
-  private def transformerMhaForwardStaged(joined: DataFrame,
-      p: TransformerMhaParams, numCols: Seq[String]): DataFrame = {
-    val dim = p.wo.length; val nNum = p.a.length
-    val nClass = p.wOut.length; val k = 1 + nNum
-    val heads = p.wq.length; val dh = p.wq.head.length
-    val scaleH = 1.0 / math.sqrt(dh.toDouble)
-    val t = (b: Int, j: Int) => col(s"__t${b}_$j")
-    joined
-      .withColumns((
-        (0 until dim).map(j => s"__t0_$j" -> element_at(col("__emb"), j + 1)) ++
-        (for (m <- 0 until nNum; j <- 0 until dim) yield s"__t${m + 1}_$j" ->
-          (col(numCols(m)).cast("double") * lit(p.a(m)(j)) + lit(p.c(m)(j))))).toMap)
-      .withColumns((
-        (for (g <- 0 until heads; r <- 0 until dh) yield s"__q${g}_$r" ->
-          (0 until dim).map(cc => t(0, cc) * lit(p.wq(g)(r)(cc))).reduce(_ + _)) ++
-        (for (g <- 0 until heads; b <- 0 until k; r <- 0 until dh)
-          yield s"__k${g}_${b}_$r" ->
-            (0 until dim).map(cc => t(b, cc) * lit(p.wk(g)(r)(cc))).reduce(_ + _)) ++
-        (for (g <- 0 until heads; b <- 0 until k; r <- 0 until dh)
-          yield s"__v${g}_${b}_$r" ->
-            (0 until dim).map(cc => t(b, cc) * lit(p.wv(g)(r)(cc))).reduce(_ + _))).toMap)
-      .withColumns((for (g <- 0 until heads; b <- 0 until k)
-        yield s"__s${g}_$b" ->
-          (0 until dh).map(r => col(s"__q${g}_$r") * col(s"__k${g}_${b}_$r"))
-            .reduce(_ + _) * lit(scaleH)).toMap)
-      .withColumns((0 until heads).map(g => s"__mx$g" -> (
-        if (k == 1) col(s"__s${g}_0")
-        else greatest((0 until k).map(b => col(s"__s${g}_$b")): _*))).toMap)
-      .withColumns((for (g <- 0 until heads; b <- 0 until k)
-        yield s"__e${g}_$b" -> exp(col(s"__s${g}_$b") - col(s"__mx$g"))).toMap)
-      .withColumns((0 until heads).map(g => s"__z$g" ->
-        (0 until k).map(b => col(s"__e${g}_$b")).reduce(_ + _)).toMap)
-      .withColumns((for (g <- 0 until heads; b <- 0 until k)
-        yield s"__al${g}_$b" -> col(s"__e${g}_$b") / col(s"__z$g")).toMap)
-      .withColumns((for (g <- 0 until heads; r <- 0 until dh)
-        yield s"__o${g * dh + r}" ->
-          (0 until k).map(b => col(s"__al${g}_$b") * col(s"__v${g}_${b}_$r"))
-            .reduce(_ + _)).toMap)
-      .withColumns((0 until dim).map(i => s"__out$i" ->
-        (0 until dim).map(j => col(s"__o$j") * lit(p.wo(i)(j))).reduce(_ + _)).toMap)
-      .withColumns((0 until nClass).map(kk => s"__u$kk" ->
-        ((0 until dim).map(i => col(s"__out$i") * lit(p.wOut(kk)(i)))
-          .reduce(_ + _) + lit(p.bOut(kk)))).toMap)
-      .withColumns((0 until nClass).map(kk =>
-        s"__eu$kk" -> exp(col(s"__u$kk"))).toMap)
-      .withColumn("__zc", (0 until nClass).map(kk => col(s"__eu$kk")).reduce(_ + _))
-      .withColumns((0 until nClass).map(kk =>
-        s"__pr$kk" -> col(s"__eu$kk") / col("__zc")).toMap)
-  }
+    * head ([[classHead]]). Emits `__t{b}_{j}`,
+    * `__q/__k/__v`, `__s/__e/__al` (stable softmax), `__o{j}`,
+    * `__out{i}`, `__u/__eu/__zc/__pr{k}`. */
+  private def transformerMhaForwardStaged(df: DataFrame, codeCol: String,
+      numCols: Seq[String], p: TransformerMhaParams): DataFrame =
+    classHead(mhaStages(embedTokens(df, codeCol, numCols, p.e, p.a, p.c), 1 + p.a.length,
+      (b, j) => col(s"__t${b}_$j"), p.wq, p.wk, p.wv, p.wo), i => col(s"__out$i"),
+      p.wOut, p.bOut)
 
   /** The reference's DBTransformer at `num_heads > 1`, trained
     * END-TO-END — the exact tuned model family
@@ -1920,16 +1878,17 @@ object Blueprint {
     * jointly.
     *
     * The backward composes bp14's and bp15's devices: class residuals →
-    * head → out-projection → per-head softmax Jacobian → projection
-    * gradients AND token gradients — token 0 receives query+key+value
-    * paths through the learned projections (`dt0[c] = Σ_g [Σ_r wq(g)(r)(c)
-    * ·dq_r + √dh⁻¹·Σ_r wk(g)(r)(c)·ds_0·q_r + Σ_r wv(g)(r)(c)·α_0·
-    * do_{g·dh+r}]`), numeric tokens key+value only. Token gradients fold
-    * into the table (scatter-add per code) and the embedders (flat
-    * sums), so the whole step is still ONE groupBy(code) aggregate —
-    * at 100 TB a training step shuffles card rows, nothing else.
-    * Op order pinned; codes outside [0, card) drop out of the lookup
-    * join. */
+    * head → out-projection → per-head softmax Jacobian ([[fitMhaGD]]'s
+    * stages) → projection gradients AND token gradients — token 0
+    * receives query+key+value paths through the learned projections
+    * (`dt0[c] = Σ_g [Σ_r wq(g)(r)(c)·dq_r + √dh⁻¹·Σ_r wk(g)(r)(c)·ds_0·q_r
+    * + Σ_r wv(g)(r)(c)·α_0·do_{g·dh+r}]`), numeric tokens key+value
+    * only. Token gradients fold into the table (scatter-add per code) and
+    * the embedders (flat sums), so each step is still ONE groupBy(code)
+    * aggregate on the GD kernel ([[gdStep]]) — at 100 TB a training step
+    * shuffles card rows, nothing else. Op order pinned; codes outside
+    * [0, card) drop out of the lookup join; a NULL numeric value fails
+    * the step. */
   def fitTransformerMhaGD(df: DataFrame, codeCol: String, numCols: Seq[String],
       yCol: String, card: Int, dim: Int, nClass: Int, heads: Int,
       steps: Int, lr: Double,
@@ -1940,168 +1899,113 @@ object Blueprint {
     val nNum = numCols.length; val dh = dim / heads; val k = 1 + nNum
     val p0 = if (init != null) init
       else transformerMhaInit(card, dim, nNum, nClass, heads)
-    require(p0.e.length == card && p0.e.forall(_.length == dim) &&
-      p0.a.length == nNum && p0.c.length == nNum &&
-      p0.wq.length == heads && p0.wq.forall(h => h.length == dh &&
-        h.forall(_.length == dim)) &&
-      p0.wk.length == heads && p0.wv.length == heads &&
-      p0.wo.length == dim && p0.wOut.length == nClass &&
-      p0.bOut.length == nClass, "init shape mismatch")
-    val e = p0.e.map(_.clone()); val a = p0.a.map(_.clone())
-    val cc = p0.c.map(_.clone())
-    val wq = p0.wq.map(_.map(_.clone())); val wk = p0.wk.map(_.map(_.clone()))
-    val wv = p0.wv.map(_.map(_.clone())); val wo = p0.wo.map(_.clone())
-    val wOut = p0.wOut.map(_.clone()); val bOut = p0.bOut.clone()
-    val spark = df.sparkSession
-    import spark.implicits._
-    val scaleH = 1.0 / math.sqrt(dh.toDouble)
-    (1 to steps).foreach { _ =>
-      val cur = TransformerMhaParams(e.map(_.clone()), a.map(_.clone()),
-        cc.map(_.clone()), wq.map(_.map(_.clone())), wk.map(_.map(_.clone())),
-        wv.map(_.map(_.clone())), wo.map(_.clone()), wOut.map(_.clone()),
-        bOut.clone())
-      val embDf = e.zipWithIndex.map { case (row, cd) => (cd, row) }.toSeq
-        .toDF("__code", "__emb")
-      val joined = df.join(broadcast(embDf),
-        col(codeCol).cast("int") === col("__code"))
-      val y = col(yCol).cast("int")
-      val back = transformerMhaForwardStaged(joined, cur, numCols)
-        .withColumns((0 until nClass).map(kk => s"__du$kk" ->
-          (col(s"__pr$kk") - when(y === kk, 1.0).otherwise(0.0))).toMap)
-        .withColumns((0 until dim).map(i => s"__dout$i" ->
-          (0 until nClass).map(kk => col(s"__du$kk") * lit(cur.wOut(kk)(i)))
-            .reduce(_ + _)).toMap)
-        .withColumns((0 until dim).map(j => s"__do$j" ->
-          (0 until dim).map(i => col(s"__dout$i") * lit(cur.wo(i)(j)))
-            .reduce(_ + _)).toMap)
-        .withColumns((for (g <- 0 until heads; b <- 0 until k)
-          yield s"__dal${g}_$b" ->
-            (0 until dh).map(r => col(s"__do${g * dh + r}") *
-              col(s"__v${g}_${b}_$r")).reduce(_ + _)).toMap)
-        .withColumns((0 until heads).map(g => s"__sad$g" ->
-          (0 until k).map(b => col(s"__al${g}_$b") * col(s"__dal${g}_$b"))
-            .reduce(_ + _)).toMap)
-        .withColumns((for (g <- 0 until heads; b <- 0 until k)
-          yield s"__ds${g}_$b" ->
-            col(s"__al${g}_$b") * (col(s"__dal${g}_$b") - col(s"__sad$g"))).toMap)
-        .withColumns((for (g <- 0 until heads; r <- 0 until dh)
-          yield s"__dq${g}_$r" ->
-            (0 until k).map(b => col(s"__ds${g}_$b") * col(s"__k${g}_${b}_$r"))
-              .reduce(_ + _) * lit(scaleH)).toMap)
-        // token gradients through the learned projections: token 0 rides
-        // the query path + its key path + its value path; token b >= 1
-        // keys its own score and carries its value path
-        .withColumns((
-          (0 until dim).map(j => s"__dT0_$j" ->
-            (0 until heads).map { g =>
-              (0 until dh).map(r => lit(cur.wq(g)(r)(j)) * col(s"__dq${g}_$r"))
-                .reduce(_ + _) +
-              (0 until dh).map(r => lit(cur.wk(g)(r)(j)) *
-                (col(s"__ds${g}_0") * col(s"__q${g}_$r"))).reduce(_ + _) * lit(scaleH) +
-              (0 until dh).map(r => lit(cur.wv(g)(r)(j)) *
-                (col(s"__al${g}_0") * col(s"__do${g * dh + r}"))).reduce(_ + _)
-            }.reduce(_ + _)) ++
-          (for (m <- 0 until nNum; j <- 0 until dim) yield s"__dT${m + 1}_$j" ->
-            (0 until heads).map { g =>
-              (0 until dh).map(r => lit(cur.wk(g)(r)(j)) *
-                (col(s"__ds${g}_${m + 1}") * col(s"__q${g}_$r"))).reduce(_ + _) *
-                lit(scaleH) +
-              (0 until dh).map(r => lit(cur.wv(g)(r)(j)) *
-                (col(s"__al${g}_${m + 1}") * col(s"__do${g * dh + r}"))).reduce(_ + _)
-            }.reduce(_ + _))).toMap)
-      val x = (m: Int) => col(numCols(m)).cast("double")
-      val tB = (b: Int, j: Int) => col(s"__t${b}_$j")
-      // ONE grouped pass: every gradient as a per-code partial sum
-      val sums =
-        (0 until dim).map(j => sum(col(s"__dT0_$j")).as(s"ge_$j")) ++
-        (for (m <- 0 until nNum; j <- 0 until dim)
-          yield sum(col(s"__dT${m + 1}_$j") * x(m)).as(s"ga_${m}_$j")) ++
-        (for (m <- 0 until nNum; j <- 0 until dim)
-          yield sum(col(s"__dT${m + 1}_$j")).as(s"gc_${m}_$j")) ++
-        (for (g <- 0 until heads; r <- 0 until dh; c2 <- 0 until dim)
-          yield sum(col(s"__dq${g}_$r") * tB(0, c2)).as(s"gq_${g}_${r}_$c2")) ++
-        (for (g <- 0 until heads; r <- 0 until dh; c2 <- 0 until dim)
-          yield sum((0 until k).map(b => col(s"__ds${g}_$b") * tB(b, c2))
-            .reduce(_ + _) * col(s"__q${g}_$r") * lit(scaleH))
-            .as(s"gk_${g}_${r}_$c2")) ++
-        (for (g <- 0 until heads; r <- 0 until dh; c2 <- 0 until dim)
-          yield sum((0 until k).map(b => col(s"__al${g}_$b") * tB(b, c2))
-            .reduce(_ + _) * col(s"__do${g * dh + r}"))
-            .as(s"gv_${g}_${r}_$c2")) ++
-        (for (i <- 0 until dim; j <- 0 until dim)
-          yield sum(col(s"__dout$i") * col(s"__o$j")).as(s"go_${i}_$j")) ++
-        (for (kk <- 0 until nClass; i <- 0 until dim)
-          yield sum(col(s"__du$kk") * col(s"__out$i")).as(s"gw_${kk}_$i")) ++
-        (0 until nClass).map(kk => sum(col(s"__du$kk")).as(s"gb_$kk")) ++
-        Seq(count(lit(1)).cast("double").as("__n"))
-      val rows = back.groupBy(col("__code")).agg(sums.head, sums.tail: _*)
-        .collect()
-      var n = 0.0
-      val gE = Array.fill(card, dim)(0.0)
-      val gA = Array.fill(nNum, dim)(0.0); val gC = Array.fill(nNum, dim)(0.0)
-      val gQ = Array.fill(heads, dh, dim)(0.0)
-      val gK = Array.fill(heads, dh, dim)(0.0)
-      val gV = Array.fill(heads, dh, dim)(0.0)
-      val gO = Array.fill(dim, dim)(0.0)
-      val gW = Array.fill(nClass, dim)(0.0); val gB = Array.fill(nClass)(0.0)
-      rows.foreach { r =>
-        def g(name: String) = r.getDouble(r.fieldIndex(name))
-        val cd = r.getInt(r.fieldIndex("__code"))
-        n += g("__n")
-        (0 until dim).foreach(j => gE(cd)(j) = g(s"ge_$j"))
-        for (m <- 0 until nNum; j <- 0 until dim) {
-          gA(m)(j) += g(s"ga_${m}_$j"); gC(m)(j) += g(s"gc_${m}_$j")
-        }
-        for (gg <- 0 until heads; r2 <- 0 until dh; c2 <- 0 until dim) {
-          gQ(gg)(r2)(c2) += g(s"gq_${gg}_${r2}_$c2")
-          gK(gg)(r2)(c2) += g(s"gk_${gg}_${r2}_$c2")
-          gV(gg)(r2)(c2) += g(s"gv_${gg}_${r2}_$c2")
-        }
-        for (i <- 0 until dim; j <- 0 until dim) gO(i)(j) += g(s"go_${i}_$j")
-        for (kk <- 0 until nClass) {
-          gB(kk) += g(s"gb_$kk")
-          (0 until dim).foreach(i => gW(kk)(i) += g(s"gw_${kk}_$i"))
-        }
-      }
-      require(n > 0, "no row carries a code inside [0, card)")
-      for (cd <- 0 until card; j <- 0 until dim)
-        e(cd)(j) = e(cd)(j) - lr * (gE(cd)(j) / n)
-      for (m <- 0 until nNum; j <- 0 until dim) {
-        a(m)(j) = a(m)(j) - lr * (gA(m)(j) / n)
-        cc(m)(j) = cc(m)(j) - lr * (gC(m)(j) / n)
-      }
-      for (gg <- 0 until heads; r2 <- 0 until dh; c2 <- 0 until dim) {
-        wq(gg)(r2)(c2) -= lr * (gQ(gg)(r2)(c2) / n)
-        wk(gg)(r2)(c2) -= lr * (gK(gg)(r2)(c2) / n)
-        wv(gg)(r2)(c2) -= lr * (gV(gg)(r2)(c2) / n)
-      }
-      for (i <- 0 until dim; j <- 0 until dim)
-        wo(i)(j) -= lr * (gO(i)(j) / n)
-      for (kk <- 0 until nClass) {
-        (0 until dim).foreach(i => wOut(kk)(i) -= lr * (gW(kk)(i) / n))
-        bOut(kk) -= lr * (gB(kk) / n)
-      }
+    require(shaped(p0.e, card, dim) && shaped(p0.a, nNum, dim) && shaped(p0.c, nNum, dim) &&
+      shapedHeads(p0.wq, heads, dh, dim) && shapedHeads(p0.wk, heads, dh, dim) &&
+      shapedHeads(p0.wv, heads, dh, dim) && shaped(p0.wo, dim, dim) &&
+      shaped(p0.wOut, nClass, dim) && p0.bOut.length == nClass, "init shape mismatch")
+    val unflat = (theta: Array[Double]) => {
+      val u = new Unflat(theta)
+      TransformerMhaParams(u.mat(card, dim), u.mat(nNum, dim), u.mat(nNum, dim),
+        u.cube(heads, dh, dim), u.cube(heads, dh, dim), u.cube(heads, dh, dim),
+        u.mat(dim, dim), u.mat(nClass, dim), u.vec(nClass))
     }
-    TransformerMhaParams(e, a, cc, wq, wk, wv, wo, wOut, bOut)
+    val scaleH = 1.0 / math.sqrt(dh.toDouble)
+    val theta0 = Array(p0.e, p0.a, p0.c).flatten.flatten ++
+      Array(p0.wq, p0.wk, p0.wv).flatten.flatten.flatten ++
+      Array(p0.wo, p0.wOut).flatten.flatten ++ p0.bOut
+    val theta = (1 to steps).foldLeft(theta0) { (theta, _) =>
+      val p = unflat(theta)
+      // token b's gradient through the learned projections: its key path
+      // (ds_b·q) and its value path (α_b·do), plus, for token 0 only, the
+      // query path
+      val dT = (b: Int, j: Int) => (0 until heads).map { g =>
+        val query = (0 until dh).map(r => lit(p.wq(g)(r)(j)) * col(s"__dq${g}_$r"))
+          .reduce(_ + _)
+        val key = (0 until dh).map(r => lit(p.wk(g)(r)(j)) *
+          (col(s"__ds${g}_$b") * col(s"__q${g}_$r"))).reduce(_ + _) * lit(scaleH)
+        val value = (0 until dh).map(r => lit(p.wv(g)(r)(j)) *
+          (col(s"__al${g}_$b") * col(s"__do${g * dh + r}"))).reduce(_ + _)
+        (if (b == 0) query + key else key) + value
+      }.reduce(_ + _)
+      val back = mhaBackStages(classBack(transformerMhaForwardStaged(df, codeCol, numCols, p),
+          yCol, p.wOut), k, p.wo, heads)
+        .withColumns((for (b <- 0 until k; j <- 0 until dim)
+          yield s"__dT${b}_$j" -> dT(b, j)).toMap)
+      gdStep(back, transformerGrad(numCols, dim,
+        mhaGrads(k, (b, j) => col(s"__t${b}_$j"), heads, dh, dim), i => col(s"__out$i"),
+        nClass), theta, lr, table = dim)
+    }
+    unflat(theta)
   }
 
-  /** Mean softmax cross-entropy of [[fitTransformerMhaGD]]'s model — the
-    * finite-difference anchor for the full multi-head end-to-end
-    * gradient (every block: table, embedders, Q/K/V/O, head). */
+  /** Mean softmax cross-entropy of [[fitTransformerMhaGD]]'s model over
+    * the fit's forward — the finite-difference anchor for the full
+    * multi-head end-to-end gradient (every block: table, embedders,
+    * Q/K/V/O, head). */
   def transformerMhaLogLoss(df: DataFrame, codeCol: String,
-      numCols: Seq[String], yCol: String, p: TransformerMhaParams): Double = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val nClass = p.wOut.length
-    val embDf = p.e.zipWithIndex.map { case (row, cd) => (cd, row) }.toSeq
-      .toDF("__code", "__emb")
-    val joined = df.join(broadcast(embDf),
-      col(codeCol).cast("int") === col("__code"))
+      numCols: Seq[String], yCol: String, p: TransformerMhaParams): Double =
+    classLogLoss(transformerMhaForwardStaged(df, codeCol, numCols, p), yCol, p.wOut.length)
+
+  /** The DBTransformers' token stage: the [[lookup]] of each row's code
+    * in the table `e`, after a NULL numeric value is made to fail the
+    * query, then `__t0_{j}` = the code's table row and `__t{m+1}_{j}` =
+    * numeric column m through its Linear(1, dim) embedder,
+    * `a(m)(j)·x_m + c(m)(j)`. */
+  private def embedTokens(df: DataFrame, codeCol: String, numCols: Seq[String],
+      e: Array[Array[Double]], a: Array[Array[Double]], c: Array[Array[Double]]): DataFrame = {
+    val dim = e.head.length
+    lookup(withCheckedNumbers(df, numCols), codeCol, e).withColumns((
+      (0 until dim).map(j => s"__t0_$j" -> element_at(col("__emb"), j + 1)) ++
+      (for (m <- numCols.indices; j <- 0 until dim) yield s"__t${m + 1}_$j" ->
+        (col(numCols(m)).cast("double") * lit(a(m)(j)) + lit(c(m)(j))))).toMap)
+  }
+
+  /** The DBTransformers' class head over its input `in(i)`: logits
+    * `__u{k}`, `__eu{k}`, `__zc` and the class softmax `__pr{k}`. */
+  private def classHead(df: DataFrame, in: Int => Column, wOut: Array[Array[Double]],
+      bOut: Array[Double]): DataFrame = {
+    val classes = wOut.indices
+    df.withColumns(classes.map(kk => s"__u$kk" ->
+        (wOut(kk).indices.map(i => in(i) * lit(wOut(kk)(i))).reduce(_ + _) +
+          lit(bOut(kk)))).toMap)
+      .withColumns(classes.map(kk => s"__eu$kk" -> exp(col(s"__u$kk"))).toMap)
+      .withColumn("__zc", classes.map(kk => col(s"__eu$kk")).reduce(_ + _))
+      .withColumns(classes.map(kk => s"__pr$kk" -> col(s"__eu$kk") / col("__zc")).toMap)
+  }
+
+  /** The class head's backward: residuals `__du{k} = p_k − 1[y=k]` and
+    * the head input's gradient `__dout{i} = Σ_k du_k·wOut(k)(i)`. */
+  private def classBack(fwd: DataFrame, yCol: String,
+      wOut: Array[Array[Double]]): DataFrame = {
+    val y = col(yCol).cast("int")
+    fwd.withColumns(wOut.indices.map(kk => s"__du$kk" ->
+        (col(s"__pr$kk") - when(y === kk, 1.0).otherwise(0.0))).toMap)
+      .withColumns(wOut.head.indices.map(i => s"__dout$i" ->
+        wOut.indices.map(kk => col(s"__du$kk") * lit(wOut(kk)(i))).reduce(_ + _)).toMap)
+  }
+
+  /** A DBTransformer's packed per-row gradient in parameter order: the
+    * code's table block (token 0's gradient `__dT0_{j}`), the numeric
+    * embedders' `a` then `c`, the attention's `attn`, then the class
+    * head's over its input `in(i)`. */
+  private def transformerGrad(numCols: Seq[String], dim: Int, attn: Seq[Column],
+      in: Int => Column, nClass: Int): Column = {
+    val dT = (b: Int, j: Int) => col(s"__dT${b}_$j")
+    array(((0 until dim).map(dT(0, _)) ++
+      (for (m <- numCols.indices; j <- 0 until dim)
+        yield dT(m + 1, j) * col(numCols(m)).cast("double")) ++
+      (for (m <- numCols.indices; j <- 0 until dim) yield dT(m + 1, j)) ++ attn ++
+      (for (kk <- 0 until nClass; i <- 0 until dim) yield col(s"__du$kk") * in(i)) ++
+      (0 until nClass).map(kk => col(s"__du$kk"))): _*)
+  }
+
+  /** Mean softmax cross-entropy of a class head's `__pr{k}` against the
+    * integer labels in `yCol`. */
+  private def classLogLoss(fwd: DataFrame, yCol: String, nClass: Int): Double = {
     val y = col(yCol).cast("int")
     val py = (0 until nClass).map(kk =>
       when(y === kk, col(s"__pr$kk")).otherwise(lit(0.0))).reduce(_ + _)
-    transformerMhaForwardStaged(joined, p, numCols)
-      .agg(avg(-log(py))).collect()(0).getDouble(0)
+    fwd.agg(avg(-log(py))).collect()(0).getDouble(0)
   }
 
   /** One-vs-rest ridge-classifier fit of the [[decodeClasses]] weights:

@@ -346,6 +346,22 @@ class DedupSpec extends SparkSpec {
     assert(comp(8L) == 8L)
   }
 
+  test("connectedComponents fails instead of returning labels cut off at maxIter") {
+    // the path 1-2-…-12 is still relabelling after 2 rounds
+    val verts = (1L to 12L).map(Tuple1(_)).toDF("id")
+    val edges = (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(verts, "id", edges, maxIter = 2).collect()
+    }
+    assert(e.getMessage.contains("did not converge within 2 rounds"), e.getMessage)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "a failed run must release its checkpoints")
+    // with rounds to spare, the same path is one component
+    val comp = Dedup.connectedComponents(verts, "id", edges).collect().map(_.getLong(1))
+    assert(comp.length == 12 && comp.forall(_ == 1L))
+  }
+
   test("connectedComponents matches driver-side union-find on random graphs") {
     val rnd = new scala.util.Random(13)
     for (trial <- 0 until 8) {

@@ -695,11 +695,15 @@ class BlueprintSpec extends SparkSpec {
   }
 
   /** `body` fails with the feature guard's error for a `dim`-wide column. */
-  private def failsFeatureGuard(dim: Int)(body: => Any): Unit = {
+  private def failsFeatureGuard(dim: Int)(body: => Any): Unit =
+    failsWith(s"must hold $dim non-NULL values")(body)
+
+  /** `body` fails with an error (or a cause) whose message holds `msg`. */
+  private def failsWith(msg: String)(body: => Any): Unit = {
     val e = intercept[Exception](body)
     val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(t => String.valueOf(t.getMessage))
-    assert(msgs.exists(_.contains(s"must hold $dim non-NULL values")), e.toString)
+    assert(msgs.exists(_.contains(msg)), e.toString)
   }
 
   Seq("sum", "mean", "attn").foreach { aggr =>
@@ -828,7 +832,7 @@ class BlueprintSpec extends SparkSpec {
     assert(left.isEmpty, s"steps left persisted RDDs $left")
   }
 
-  test("a feature array that is not dim long, or NULL, fails fitMlpGD, mlpLogLoss, fitGnn2GD, gnn2LogLoss and fitMhaGnnGD") {
+  test("a feature array that is not dim long, or NULL, or a NULL numeric column fails every trainer and loss that reads it") {
     val flat = (bad: Array[Double]) =>
       Seq((Array(1.0, 2.0), 1.0), (bad, 0.0)).toDF("feat", "y")
     val mlp = Blueprint.MlpParams(Array.fill(2, 2)(0.1), Array(0.0, 0.0), Array(0.1, 0.2), 0.0)
@@ -846,27 +850,149 @@ class BlueprintSpec extends SparkSpec {
       leaves(l), Seq("mfk"), "feat", mids(m), Seq("mid"), Seq("rfk"), "feat", midDim = 1,
       roots, Seq("rid"), "y", gnn2)
     val (okLeaf, okMid) = (Array(1.0, 1.0), Array(0.5))
-    // (entry point, the column's width, a run on a malformed row)
-    val cases: Seq[(String, Int, () => Any)] = Seq(
-      ("fitMlpGD short", 2, () => Blueprint.fitMlpGD(flat(Array(1.0)), "feat", "y",
+    val coded = (bad: Array[Double]) =>
+      Seq((0, Array(1.0), 1.0), (1, bad, 0.0)).toDF("code", "feat", "y")
+    val tokens = (bad: Array[Double]) =>
+      Seq((Array(1.0, 0.0), Array(0.5, 0.5), 1.0), (Array(0.2, 0.8), bad, 0.0))
+        .toDF("t0", "t1", "y")
+    val mha = Blueprint.mhaInit(dim = 2, heads = 2)
+    // a NULL numeric value (a Double column read through Option)
+    val numeric = Seq((0, Some(0.5), 1), (1, None, 0)).toDF("code", "x1", "y")
+    val holds = (dim: Int) => s"must hold $dim non-NULL values"
+    val number = "numeric column 'x1' must hold a non-NULL number"
+    // (entry point, the guard's error, a run on a malformed row)
+    val cases: Seq[(String, String, () => Any)] = Seq(
+      ("fitMlpGD short", holds(2), () => Blueprint.fitMlpGD(flat(Array(1.0)), "feat", "y",
         dim = 2, hidden = 2, steps = 1, lr = 0.1)),
-      ("fitMlpGD long", 2, () => Blueprint.fitMlpGD(flat(Array(1.0, 2.0, 3.0)), "feat", "y",
-        dim = 2, hidden = 2, steps = 1, lr = 0.1)),
-      ("mlpLogLoss NULL", 2, () => Blueprint.mlpLogLoss(flat(null), "feat", "y", mlp)),
-      ("fitGnn2GD leaf short", 2, () => fitGnn2(Array(1.0), okMid)),
-      ("fitGnn2GD mid long", 1, () => fitGnn2(okLeaf, Array(0.5, 0.5))),
-      ("gnn2LogLoss leaf NULL", 2, () => gnn2Loss(null, okMid)),
-      ("gnn2LogLoss mid empty", 1, () => gnn2Loss(okLeaf, Array.empty[Double])),
-      ("fitMhaGnnGD short", 2, () => Blueprint.fitMhaGnnGD(
+      ("fitMlpGD long", holds(2), () => Blueprint.fitMlpGD(flat(Array(1.0, 2.0, 3.0)),
+        "feat", "y", dim = 2, hidden = 2, steps = 1, lr = 0.1)),
+      ("mlpLogLoss NULL", holds(2), () => Blueprint.mlpLogLoss(flat(null), "feat", "y", mlp)),
+      ("fitGnn2GD leaf short", holds(2), () => fitGnn2(Array(1.0), okMid)),
+      ("fitGnn2GD mid long", holds(1), () => fitGnn2(okLeaf, Array(0.5, 0.5))),
+      ("gnn2LogLoss leaf NULL", holds(2), () => gnn2Loss(null, okMid)),
+      ("gnn2LogLoss mid empty", holds(1), () => gnn2Loss(okLeaf, Array.empty[Double])),
+      ("fitMhaGnnGD short", holds(2), () => Blueprint.fitMhaGnnGD(
         Seq((1L, Array(1.0, 0.0)), (1L, Array(1.0))).toDF("fk", "feat"), Seq("fk"), "feat",
         heteroParents.toDF("pid", "y"), Seq("pid"), "y",
-        dim = 2, hidden = 2, heads = 2, steps = 1, lr = 0.1)))
-    cases.foreach { case (name, dim, run) =>
-      withClue(s"$name: ")(failsFeatureGuard(dim)(run()))
+        dim = 2, hidden = 2, heads = 2, steps = 1, lr = 0.1)),
+      ("fitLogisticGD short", holds(2), () => Blueprint.fitLogisticGD(flat(Array(1.0)),
+        "feat", "y", dim = 2, steps = 1, lr = 0.1)),
+      ("fitEmbeddingGD long", holds(1), () => Blueprint.fitEmbeddingGD(coded(Array(1.0, 2.0)),
+        "code", "feat", "y", card = 2, dim = 2, nFeat = 1, steps = 1, lr = 0.1)),
+      ("embeddingLogLoss NULL", holds(1), () => Blueprint.embeddingLogLoss(coded(null),
+        "code", "feat", "y", Blueprint.embInit(card = 2, dim = 2, nFeat = 1))),
+      ("fitCrossAttnGD short", holds(2), () => Blueprint.fitCrossAttnGD(tokens(Array(1.0)),
+        Seq("t0", "t1"), "y", dim = 2, steps = 1, lr = 0.1)),
+      ("crossAttnLogLoss NULL", holds(2), () => Blueprint.crossAttnLogLoss(tokens(null),
+        Seq("t0", "t1"), "y", Blueprint.crossAttnInit(2))),
+      ("fitMhaGD long", holds(2), () => Blueprint.fitMhaGD(tokens(Array(1.0, 2.0, 3.0)),
+        Seq("t0", "t1"), "y", dim = 2, heads = 2, steps = 1, lr = 0.1)),
+      ("mhaLogLoss NULL", holds(2), () => Blueprint.mhaLogLoss(tokens(null),
+        Seq("t0", "t1"), "y", mha)),
+      ("fitTransformerGD NULL number", number, () => Blueprint.fitTransformerGD(numeric,
+        "code", Seq("x1"), "y", card = 2, dim = 2, nClass = 2, steps = 1, lr = 0.1)),
+      ("transformerLogLoss NULL number", number, () => Blueprint.transformerLogLoss(numeric,
+        "code", Seq("x1"), "y", Blueprint.transformerInit(card = 2, dim = 2, nNum = 1,
+          nClass = 2))),
+      ("fitTransformerMhaGD NULL number", number, () => Blueprint.fitTransformerMhaGD(
+        numeric, "code", Seq("x1"), "y", card = 2, dim = 2, nClass = 2, heads = 2,
+        steps = 1, lr = 0.1)),
+      ("transformerMhaLogLoss NULL number", number, () => Blueprint.transformerMhaLogLoss(
+        numeric, "code", Seq("x1"), "y", Blueprint.transformerMhaInit(card = 2, dim = 2,
+          nNum = 1, nClass = 2, heads = 2))))
+    cases.foreach { case (name, error, run) =>
+      withClue(s"$name: ")(failsWith(error)(run()))
     }
     // well-formed rows still run
     assert(!gnn2Loss(okLeaf, okMid).isNaN)
     assert(fitGnn2(okLeaf, okMid).v.forall(v => !v.isNaN))
+  }
+
+  /** A trainer on the GD kernel, run as `run(width, seed, steps, empty)`:
+    * `steps` steps at feature width `width` from the init drawn with
+    * `seed`, over no rows when `empty`. Vector-form trainers take their
+    * parameters as array literals; `emptyError` is the kernel's error. */
+  private case class KernelTrainer(name: String, vectorForm: Boolean, emptyError: String,
+      run: (Int, Int, Int, Boolean) => Any)
+
+  private def kernelTrainers: Seq[KernelTrainer] = {
+    val empty = "cannot fit on an empty DataFrame"
+    val noCode = "no row carries a code inside [0, card)"
+    def gauss(seed: Int) = { val rnd = new scala.util.Random(seed); () => rnd.nextGaussian() }
+    def vecs(seed: Int, n: Int, w: Int) = { val g = gauss(seed); Seq.fill(n)(Array.fill(w)(g())) }
+    // repartitioned, so the optimizer cannot pre-compute the per-row
+    // projection over a local relation: the plan under test is the real one
+    def rows(df: org.apache.spark.sql.DataFrame, none: Boolean) =
+      (if (none) df.filter(lit(false)) else df).repartition(2)
+    val ys = Seq(0.0, 1.0, 1.0, 0.0, 1.0, 0.0)
+    Seq(
+      KernelTrainer("fitLogisticGD", vectorForm = true, empty, (w, seed, steps, none) =>
+        Blueprint.fitLogisticGD(rows(vecs(1, 6, w).zip(ys).toDF("feat", "y"), none),
+          "feat", "y", dim = w, steps = steps, lr = 0.05 * seed)),
+      KernelTrainer("fitMlpGD", vectorForm = true, empty, { (w, seed, steps, none) =>
+        val (g, h) = (gauss(seed), math.max(1, w / 2))
+        Blueprint.fitMlpGD(rows(vecs(1, 6, w).zip(ys).toDF("feat", "y"), none),
+          "feat", "y", dim = w, hidden = h, steps = steps, lr = 0.1,
+          init = Blueprint.MlpParams(Array.fill(w, h)(0.3 * g()), Array.fill(h)(g()),
+            Array.fill(h)(g()), g()))
+      }),
+      KernelTrainer("fitEmbeddingGD", vectorForm = true, noCode, { (w, seed, steps, none) =>
+        val g = gauss(seed)
+        val df = ys.indices.map(i => (i % 3, Array(0.5 * i, 1.0 - i), ys(i)))
+          .toDF("code", "feat", "y")
+        Blueprint.fitEmbeddingGD(rows(df, none), "code", "feat", "y", card = 3, dim = w,
+          nFeat = 2, steps = steps, lr = 0.1, init = Blueprint.EmbParams(
+            Array.fill(3, w)(g()), Array.fill(w)(g()), Array.fill(2)(g()), g()))
+      }),
+      KernelTrainer("fitCrossAttnGD", vectorForm = true, empty, { (w, seed, steps, none) =>
+        val g = gauss(seed)
+        val df = vecs(1, 6, w).zip(vecs(2, 6, w)).zip(ys)
+          .map { case ((a, b), y) => (a, b, y) }.toDF("t0", "t1", "y")
+        Blueprint.fitCrossAttnGD(rows(df, none), Seq("t0", "t1"), "y", dim = w,
+          steps = steps, lr = 0.1, init = Blueprint.CrossAttnParams(
+            Array.fill(w)(0.3 * g()), Array.fill(w)(g()), g()))
+      }),
+      KernelTrainer("fitTransformerGD", vectorForm = false, noCode, { (_, _, steps, none) =>
+        val df = ys.indices.map(i => (i % 3, 0.1 * i, 1.0 - 0.2 * i, i % 2))
+          .toDF("code", "x1", "x2", "y")
+        Blueprint.fitTransformerGD(rows(df, none), "code", Seq("x1", "x2"), "y", card = 3,
+          dim = 2, nClass = 2, steps = steps, lr = 0.1)
+      }),
+      KernelTrainer("fitMhaGD", vectorForm = false, empty, { (_, _, steps, none) =>
+        val df = vecs(1, 6, 2).zip(vecs(2, 6, 2)).zip(ys)
+          .map { case ((a, b), y) => (a, b, y) }.toDF("t0", "t1", "y")
+        Blueprint.fitMhaGD(rows(df, none), Seq("t0", "t1"), "y", dim = 2, heads = 2,
+          steps = steps, lr = 0.1)
+      }),
+      KernelTrainer("fitTransformerMhaGD", vectorForm = false, noCode, { (_, _, steps, none) =>
+        val df = ys.indices.map(i => (i % 3, 0.1 * i, i % 2)).toDF("code", "x1", "y")
+        Blueprint.fitTransformerMhaGD(rows(df, none), "code", Seq("x1"), "y", card = 3,
+          dim = 2, nClass = 2, heads = 2, steps = steps, lr = 0.1)
+      }))
+  }
+
+  test("every GD-kernel trainer: one action per step, nothing persisted, an empty input fails; vector forms: step-stable code, plan size independent of the shape") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    kernelTrainers.foreach { t =>
+      withClue(s"${t.name}: ") {
+        val (small, left) = actionsOf(t.run(2, 5, 3, false))
+        assert(small.length == 3, s"3 steps ran ${small.length} actions")
+        assert(left.isEmpty, s"steps left persisted RDDs $left")
+        failsWith(t.emptyError)(t.run(2, 5, 1, true))
+        if (t.vectorForm) {
+          // parameters enter as referenced literals, never as inlined
+          // constants: other parameters reuse the generated classes
+          val compiled = METRIC_COMPILATION_TIME.getCount
+          t.run(2, 6, 2, false)
+          assert(METRIC_COMPILATION_TIME.getCount == compiled,
+            "a step at new parameters must not compile new code")
+          // one literal per parameter vector: the same plan size at width 64
+          val (big, _) = actionsOf(t.run(64, 5, 1, false))
+          assert(big.length == 1 && expressionCount(big.head) == expressionCount(small.head),
+            "plan size must not grow with the shape")
+        }
+      }
+    }
   }
 
   test("fitGnn2GD: gradient flows through TWO nested scatter-sums; loss falls") {

@@ -1,13 +1,31 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB against the sf parquet tables, load the engine's Verify parquet dump,
-sort columns by name + rows by all columns, and compare values exactly."""
-import sys, os, json, glob
+sort columns by name + rows by all columns, and compare values exactly.
+
+Usage: compare.py [sf_dir out_dir [--expect a,b,...] [--log verify.err]]
+
+A query that throws in Verify leaves no output directory, so it would not
+show up at all. `--expect` names the queries that must have output, and
+`--log` is Verify's stderr: each expected name without output, and each
+name with a `[verify] <name> failed: ...` line there, is reported BAD with
+that line. Exits non-zero when anything is BAD."""
+import sys, os, json, glob, re
 import duckdb
 import pandas as pd
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+
+
+def flag(name):
+    """The value after `name` on the command line, or None."""
+    i = sys.argv.index(name) if name in sys.argv else -1
+    return sys.argv[i + 1] if 0 < i < len(sys.argv) - 1 else None
+
+
+expect = flag("--expect") or ""
+verify_log = flag("--log")
 
 con = duckdb.connect()
 for f in glob.glob(f"{sf_dir}/*.parquet"):
@@ -87,9 +105,22 @@ for name in sorted(os.listdir(out_dir)):
             bad.append(f"{c}[{i}]: {av[i]!r} vs {bv[i]!r} (dtype {av.dtype}/{bv.dtype}, {int((~eq).sum())} diffs)")
     results[name] = "OK" if not bad else "VALUES-MISMATCH: " + "; ".join(bad[:3])
 
+failed = {}
+if verify_log and os.path.exists(verify_log):
+    with open(verify_log, errors="replace") as f:
+        for line in f:
+            m = re.search(r"\[verify\] (\S+) failed: .*", line)
+            if m:
+                failed[m.group(1)] = m.group(0).strip()
+for name in [q for q in expect.split(",") if q] + sorted(failed):
+    if name not in results:
+        results[name] = "MISSING: " + failed.get(name, "no output (not a registered query?)")
+
 n_ok = sum(1 for v in results.values() if v == "OK")
 n_ro = sum(1 for v in results.values() if v.startswith("rows-only") and "EMPTY" not in v)
 for k, v in results.items():
     flag = "  " if v == "OK" or v.startswith("rows-only") else "XX"
     print(f"{flag} {k}: {v}")
-print(f"\n{n_ok} OK / {n_ro} rows-only / {len(results) - n_ok - n_ro} BAD of {len(results)}")
+n_bad = len(results) - n_ok - n_ro
+print(f"\n{n_ok} OK / {n_ro} rows-only / {n_bad} BAD of {len(results)}")
+sys.exit(1 if n_bad else 0)

@@ -7,17 +7,21 @@
 # fp2 and r12's kmv2/ts2 failures were last-day registrations that never saw
 # a driver-style compare. sf0.01 is the driver's gate SF; prefer it unless
 # the query is too slow there.
+# A named query that throws or is not registered leaves no output; it is
+# reported BAD (with Verify's "[verify] <name> failed:" line), and the
+# script exits non-zero when anything is BAD.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 QUERIES="${1:-}"
 SF_DIR="${2:-/root/testdata/sf0.01}"
 OUT="/tmp/precheck_$$"
+LOG="$OUT.verify.err"
+trap 'rm -rf "$OUT" "$LOG"' EXIT
 sbt -batch compile >/dev/null
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 if [ -n "$QUERIES" ]; then
-  java -cp "$CP" graft.Verify "$SF_DIR" "$OUT" "$QUERIES" 2>/dev/null
+  java -cp "$CP" graft.Verify "$SF_DIR" "$OUT" "$QUERIES" 2>"$LOG"
 else
-  java -cp "$CP" graft.Verify "$SF_DIR" "$OUT" 2>/dev/null
+  java -cp "$CP" graft.Verify "$SF_DIR" "$OUT" 2>"$LOG"
 fi
-python3 tools/compare.py "$SF_DIR" "$OUT"
-rm -rf "$OUT"
+python3 tools/compare.py "$SF_DIR" "$OUT" --expect "$QUERIES" --log "$LOG"
