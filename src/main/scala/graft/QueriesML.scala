@@ -936,8 +936,10 @@ private[graft] object QueriesML {
 
   /** §2.9: DEPTH-2 GNN training — backprop through two NESTED
     * scatter-sums (customer ← orders ← lineitem, the reference's stacked
-    * HeteroGNN layers, nn/models/hetero_gnn.py:60-105), 2 steps; the
-    * chain rule telescopes as two join-backs. */
+    * HeteroGNN layers, nn/models/hetero_gnn.py:60-105), 2 steps. The
+    * engine rides every gradient on the forward aggregates, one Spark
+    * action per step; the oracle's SQL still unrolls the chain rule as
+    * two join-backs, the definition the engine must equal. */
   private[graft] val qFitGnn2 = Q("bp9_fit_gnn2_gd",
     (s, d) => {
       import graft.pipeline.Blueprint

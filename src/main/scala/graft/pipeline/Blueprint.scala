@@ -281,7 +281,7 @@ object Blueprint {
     val dm = col("__dm")
     val theta = (1 to steps).foldLeft(new Array[Double](dim + 1)) { (theta, _) =>
       val fwd = rows.withColumn("__dm",
-        sigmoid(Similarity.dot(withOne(x), Similarity.litVec(theta))) - col(yCol).cast("double"))
+        sigmoid(Similarity.dot(withOne(x), Similarity.litVec(theta))) - checkedLabel(yCol))
       gdStep(fwd, concat(transform(x, xi => dm * xi), array(dm)), theta, lr,
         l2 = l2, decayed = dim)
     }
@@ -356,7 +356,7 @@ object Blueprint {
       .withColumn("__h", sigmoidLayer(withOne(col(featCol)), p.w1, p.b1))
       .withColumn("__p", sigmoid(Similarity.dot(withOne(col("__h")),
         Similarity.litVec(p.w2 :+ p.b2))))
-      .withColumn("__y", col(yCol).cast("double"))
+      .withColumn("__y", checkedLabel(yCol))
 
   /** End-to-end backprop THROUGH the message-passing aggregation — the
     * one genuinely graph-structured trainable layer the reference fits
@@ -450,7 +450,7 @@ object Blueprint {
     * aggregate; one global vector sum over parents returns every
     * gradient, which the driver unpacks into one flat parameter vector's
     * layout for the GD kernel's update ([[descend]], the `θ − lr·(g/n)`
-    * every trainer but [[fitGnn2GD]] shares). Each children plan is evaluated
+    * every trainer shares). Each children plan is evaluated
     * once, nothing is checkpointed or persisted. The per-edge and
     * per-parent math runs on array columns with every parameter passed
     * as ONE array literal per vector or matrix ([[Similarity.litVec]]),
@@ -685,6 +685,11 @@ object Blueprint {
   /** `c ++ [1]`: a vector with the bias's input appended. */
   private def withOne(c: Column): Column = concat(c, array(lit(1.0)))
 
+  /** The outer product `a ⊗ b` of two vector columns, flat and i-major:
+    * `a_i·b_j` at `i·|b| + j`. */
+  private def outer(a: Column, b: Column): Column =
+    flatten(transform(a, ai => transform(b, bj => ai * bj)))
+
   /** `Σ_b ws(b)·xs(b)` over equal-width vector columns, elementwise and
     * left to right. */
   private def weightedSum(ws: Seq[Column], xs: Seq[Column]): Column =
@@ -709,6 +714,20 @@ object Blueprint {
     when(size(f) === dim && forall(f, _.isNotNull), f)
       .otherwise(raise_error(concat(lit(s"$what must hold $dim non-NULL values, got "),
         coalesce(f.cast("string"), lit("NULL")))).cast("array<double>"))
+  }
+
+  /** The label `yCol` as a double, failing the query on a NULL (or
+    * non-numeric) label: its row's gradient terms would otherwise be
+    * NULLs that the sums skip while the count still counts the row. With
+    * `nClass > 0` it is a class index (an int), and a label outside
+    * `[0, nClass)` fails too: it would train against an all-zero target. */
+  private def checkedLabel(yCol: String, nClass: Int = 0): Column = {
+    val t = if (nClass == 0) "double" else "int"
+    val y = col(yCol).cast(t)
+    val (ok, want) = if (nClass == 0) (y.isNotNull, "a non-NULL number")
+      else (y >= 0 && y < nClass, s"a class in [0, $nClass)")
+    when(ok, y).otherwise(raise_error(concat(lit(s"label column '$yCol' must hold $want, got "),
+      coalesce(col(yCol).cast("string"), lit("NULL")))).cast(t))
   }
 
   /** `df` with `featCol` replaced by its [[checkedFeatures]]; unchanged
@@ -798,7 +817,7 @@ object Blueprint {
       }
     }
     val joined = sums.foldLeft(
-        parents.select(keyCols.map(col) :+ col(yCol).cast("double").as("__y"): _*)) {
+        parents.select(keyCols.map(col) :+ checkedLabel(yCol).as("__y"): _*)) {
       (acc, s) => acc.join(s, keyCols, "left")
     }
     // per-type aggregate: the heads' Σh (mean: over the child count), zero
@@ -844,20 +863,26 @@ object Blueprint {
     * and its own features `z`; root aggregates `B_k = Σ m2_k`; readout
     * `p = σ(B·v+vb)` against the root label, mean logistic loss.
     *
-    * The chain rule telescopes through the two sums as two JOIN-BACKS:
-    * `∂L/∂m2(mid) = dm(root)·v` (join roots→mids), and
-    * `∂L/∂A_j(mid) = Σ_k δ2_k·σ'_k·w2(A_j)(k)` is a per-mid scalar that
-    * joins mids→leaves to give `∂L/∂m1(leaf)`. Every parameter gradient
-    * reduces as a flat sum over the joined rows of its own level. Cost
-    * per GD step: two scatter-sum shuffles (one per level, forward), one
-    * scalar aggregate per level + one over roots (gradients), two
-    * join-backs. The mid-level frame (A, z per mid row) is checkpointed —
-    * three passes read it — and released with the root frame after the
-    * step's gradients are collected; parameters re-enter as literals, no
-    * executor state.
+    * The chain rule through the two sums is linear in per-edge terms, so
+    * the backward rides the forward aggregates ([[fitHeteroGnnGD]]'s
+    * device, applied twice). A mid's level-2 gradient is
+    * `dm(root)·[A;z;1]⊗(v⊙σ')`. A leaf's level-1 gradient is
+    * `γ_j·x̂⊗m1_j(1−m1_j)` with the per-mid `γ_j = dm(root)·β_j`,
+    * `β_j = Σ_k w2(A_j)(k)·v_k·σ'_k`, so summed over a root's leaves it is
+    * `dm` times `Σ_mids β⊗S1`, where `S1 = Σ_leaves x̂⊗m1(1−m1)` is the
+    * mid's level-1 aggregate. Each root's aggregate is laid out like the
+    * flat parameters `w1 ++ b1 ++ w2 ++ b2 ++ v ++ [vb]`, so its
+    * gradient is `dm·(sums ++ [1])`.
+    *
+    * Cost per GD step: ONE Spark action on the GD kernel ([[gdStep]]):
+    * a scatter-sum per level and one global vector sum over the roots;
+    * nothing is checkpointed or persisted. Every parameter enters the
+    * plan as an array literal, so the plan has the same size at any
+    * leafDim × h1 and its generated code is the same from step to step.
     *
     * A leaf (or mid) feature array not `leafDim` (`midDim`) non-NULL
-    * values long fails the step.
+    * values long, or a NULL label, fails the step. Forward op order is
+    * pinned (`(Σ_i x_i·w + b)` left to right, `1/(1+exp(−z))`).
     *
     * (The reference interleaves ReLU/batch-norm between layers; this
     * restatement uses the same sigmoid nonlinearity as the rest of the
@@ -868,14 +893,8 @@ object Blueprint {
       roots: DataFrame, rootKeyCols: Seq[String], yCol: String,
       leafDim: Int, h1: Int, h2: Int, steps: Int, lr: Double,
       init: Gnn2Params = null): Gnn2Params = {
-    require(leafDim >= 1 && midDim >= 0 && h1 >= 1 && h2 >= 1,
-      "need at least one leaf feature and one hidden unit per level")
     require(steps >= 1, "need at least one step")
     require(lr > 0, s"learning rate must be positive, got $lr")
-    require(leafFkCols.nonEmpty && leafFkCols.length == midKeyCols.length,
-      s"leaf FK arity mismatch: $leafFkCols vs $midKeyCols")
-    require(midFkCols.nonEmpty && midFkCols.length == rootKeyCols.length,
-      s"mid FK arity mismatch: $midFkCols vs $rootKeyCols")
     val d2 = h1 + midDim // level-2 input: [A ; z]
     val p0 = if (init != null) init else Gnn2Params(
       Array.tabulate(leafDim, h1)((i, j) => 0.1 * (i + 1) * (if (j % 2 == 0) 1 else -1)),
@@ -884,155 +903,95 @@ object Blueprint {
       Array.fill(h2)(0.0),
       Array.tabulate(h2)(k => 0.1 * (k + 1)),
       0.0)
-    require(p0.w1.length == leafDim && p0.w1.forall(_.length == h1) &&
-      p0.b1.length == h1 && p0.w2.length == d2 &&
-      p0.w2.forall(_.length == h2) && p0.b2.length == h2 &&
-      p0.v.length == h2, "init shape mismatch")
-    val leafRows = withCheckedFeatures(leaves, leafFeatCol, leafDim, "leaf")
-    val midRows = withCheckedFeatures(mids, midFeatCol, midDim, "mid")
-    val y = col(yCol).cast("double")
-    val w1 = p0.w1.map(_.clone()); val b1 = p0.b1.clone()
-    val w2 = p0.w2.map(_.clone()); val b2 = p0.b2.clone()
-    val v = p0.v.clone(); var vb = p0.vb
-    val xL = (i: Int) => element_at(col(leafFeatCol), i + 1).cast("double")
-    val zM = (i: Int) => element_at(col(midFeatCol), i + 1).cast("double")
-    (1 to steps).foreach { _ =>
-      // level-1 forward: leaf messages scatter-sum into mids; keep the
-      // mid frame (keys, fk-to-root, z, A) — three later passes read it
-      val m1 = (0 until h1).map { j =>
-        sigmoid((0 until leafDim).map(i => xL(i) * lit(w1(i)(j))).reduce(_ + _) + lit(b1(j)))
-      }
-      val ren1 = scatterSums(leafRows, leafFkCols, midKeyCols, m1, "__A")
-      val mid = midRows
-        .select((midKeyCols ++ midFkCols).distinct.map(col) ++
-          (0 until midDim).map(i => zM(i).as(s"__z$i")): _*)
-        .join(ren1, midKeyCols, "left")
-        .select((midKeyCols ++ midFkCols).distinct.map(col) ++
-          (0 until midDim).map(i => col(s"__z$i")) ++
-          (0 until h1).map(j => coalesce(col(s"__A$j"), lit(0.0)).as(s"__A$j")): _*)
-        .localCheckpoint(true)
-      // level-2 forward: mid messages over [A ; z] scatter-sum into roots
-      val in2 = (i: Int) =>
-        if (i < h1) col(s"__A$i") else col(s"__z${i - h1}")
-      val m2 = (0 until h2).map { k =>
-        sigmoid((0 until d2).map(i => in2(i) * lit(w2(i)(k))).reduce(_ + _) + lit(b2(k)))
-      }
-      val ren2 = scatterSums(mid, midFkCols, rootKeyCols, m2, "__B")
-      val root = roots
-        .select(rootKeyCols.map(col) :+ y.as("__y"): _*)
-        .join(ren2, rootKeyCols, "left")
-        .select(rootKeyCols.map(col) ++ Seq(col("__y")) ++
-          (0 until h2).map(k => coalesce(col(s"__B$k"), lit(0.0)).as(s"__B$k")): _*)
-        .localCheckpoint(true)
-      val margin = (0 until h2).map(k => col(s"__B$k") * lit(v(k))).reduce(_ + _) + lit(vb)
-      val dm = sigmoid(margin) - col("__y")
-      // readout gradients over roots
-      val rootSums = (0 until h2).map(k => sum(dm * col(s"__B$k")).as(s"gv_$k")) ++
-        Seq(sum(dm).as("gvb"), count(lit(1)).cast("double").as("n"))
-      val rRow = root.agg(rootSums.head, rootSums.tail: _*).collect()(0)
-      def gr(name: String) = rRow.getDouble(rRow.fieldIndex(name))
-      val n = gr("n")
-      require(n > 0, "cannot fit on an empty roots frame")
-      // join-back 1: roots → mids; level-2 grads are flat sums over mids,
-      // and γ_j = Σ_k δ2_k·σ'_k·w2(A_j)(k) chains into level 1
-      val dmPerRoot = rootKeyCols.zip(midFkCols).foldLeft(
-          root.select(rootKeyCols.map(col) :+ dm.as("__dm"): _*)) {
-        case (df, (k, c)) => df.withColumnRenamed(k, c)
-      }
-      val back2 = mid.join(dmPerRoot, midFkCols)
-      val sp2 = (k: Int) => m2(k) * (lit(1.0) - m2(k)) // σ' at level 2
-      val gamma = (j: Int) =>
-        (0 until h2).map(k => col("__dm") * lit(v(k)) * sp2(k) * lit(w2(j)(k)))
-          .reduce(_ + _)
-      val back2Sums =
-        (for { i <- 0 until d2; k <- 0 until h2 }
-          yield sum(col("__dm") * lit(v(k)) * sp2(k) * in2(i)).as(s"gw2_${i}_$k")) ++
-        (0 until h2).map(k =>
-          sum(col("__dm") * lit(v(k)) * sp2(k)).as(s"gb2_$k"))
-      val b2Row = back2.agg(back2Sums.head, back2Sums.tail: _*).collect()(0)
-      // join-back 2: mids (with γ) → leaves; level-1 grads are flat sums
-      val gammaPerMid = midKeyCols.zip(leafFkCols).foldLeft(
-          back2.select(midKeyCols.map(col) ++
-            (0 until h1).map(j => gamma(j).as(s"__g$j")): _*)) {
-        case (df, (k, c)) => df.withColumnRenamed(k, c)
-      }
-      val back1 = leafRows.join(gammaPerMid, leafFkCols)
-      val sp1 = (j: Int) => m1(j) * (lit(1.0) - m1(j))
-      val back1Sums =
-        (for { i <- 0 until leafDim; j <- 0 until h1 }
-          yield sum(col(s"__g$j") * sp1(j) * xL(i)).as(s"gw1_${i}_$j")) ++
-        (0 until h1).map(j => sum(col(s"__g$j") * sp1(j)).as(s"gb1_$j"))
-      val b1Row = back1.agg(back1Sums.head, back1Sums.tail: _*).collect()(0)
-      def g2(name: String) =
-        if (b2Row.isNullAt(b2Row.fieldIndex(name))) 0.0
-        else b2Row.getDouble(b2Row.fieldIndex(name))
-      def g1(name: String) =
-        if (b1Row.isNullAt(b1Row.fieldIndex(name))) 0.0
-        else b1Row.getDouble(b1Row.fieldIndex(name))
-      for (i <- 0 until leafDim; j <- 0 until h1)
-        w1(i)(j) = w1(i)(j) - lr * (g1(s"gw1_${i}_$j") / n)
-      for (j <- 0 until h1) b1(j) = b1(j) - lr * (g1(s"gb1_$j") / n)
-      for (i <- 0 until d2; k <- 0 until h2)
-        w2(i)(k) = w2(i)(k) - lr * (g2(s"gw2_${i}_$k") / n)
-      for (k <- 0 until h2) {
-        b2(k) = b2(k) - lr * (g2(s"gb2_$k") / n)
-        v(k) = v(k) - lr * (gr(s"gv_$k") / n)
-      }
-      vb = vb - lr * (gr("gvb") / n)
-      graft.util.Checkpoints.release(root)
-      graft.util.Checkpoints.release(mid)
+    checkGnn2(leafFkCols, midKeyCols, midFkCols, rootKeyCols, leafDim, midDim, h1, h2, p0)
+    val unflat = (theta: Array[Double]) => {
+      val u = new Unflat(theta)
+      Gnn2Params(u.mat(leafDim, h1), u.vec(h1), u.mat(d2, h2), u.vec(h2), u.vec(h2), u.scalar)
     }
-    Gnn2Params(w1, b1, w2, b2, v, vb)
+    val theta0 = p0.w1.flatten ++ p0.b1 ++ p0.w2.flatten ++ p0.b2 ++ p0.v :+ p0.vb
+    unflat((1 to steps).foldLeft(theta0) { (theta, _) =>
+      val p = unflat(theta)
+      val fwd = gnn2Forward(leaves, leafFkCols, leafFeatCol, mids, midKeyCols, midFkCols,
+        midFeatCol, roots, rootKeyCols, yCol, p).withColumn("__dm", col("__p") - col("__y"))
+      // the root's sums are in θ's layout: the gradient is dm·(sums ++ [1])
+      gdStep(fwd, transform(withOne(col("__s")), v => col("__dm") * v), theta, lr)
+    })
   }
 
-  /** Mean logistic loss of [[fitGnn2GD]]'s depth-2 network — two
-    * scatter-sums + one aggregate; the finite-difference anchor proving
+  /** Mean logistic loss of [[fitGnn2GD]]'s depth-2 network — the same
+    * forward plan, one aggregate; the finite-difference anchor proving
     * the gradient flows through BOTH nested aggregations. */
   def gnn2LogLoss(leaves: DataFrame, leafFkCols: Seq[String], leafFeatCol: String,
       mids: DataFrame, midKeyCols: Seq[String], midFkCols: Seq[String],
       midFeatCol: String, midDim: Int,
       roots: DataFrame, rootKeyCols: Seq[String], yCol: String,
       p: Gnn2Params): Double = {
-    val leafDim = p.w1.length; val h1 = p.b1.length; val h2 = p.b2.length
-    val y = col(yCol).cast("double")
-    val xL = (i: Int) => element_at(col(leafFeatCol), i + 1).cast("double")
-    val zM = (i: Int) => element_at(col(midFeatCol), i + 1).cast("double")
-    val m1 = (0 until h1).map { j =>
-      sigmoid((0 until leafDim).map(i => xL(i) * lit(p.w1(i)(j))).reduce(_ + _) +
-        lit(p.b1(j)))
-    }
-    val ren1 = scatterSums(withCheckedFeatures(leaves, leafFeatCol, leafDim, "leaf"),
-      leafFkCols, midKeyCols, m1, "__A")
-    val midDimN = p.w2.length - h1
-    val mid = withCheckedFeatures(mids, midFeatCol, midDimN, "mid")
-      .select((midKeyCols ++ midFkCols).distinct.map(col) ++
-        (0 until midDimN).map(i => zM(i).as(s"__z$i")): _*)
-      .join(ren1, midKeyCols, "left")
-    val in2 = (i: Int) =>
-      if (i < h1) coalesce(col(s"__A$i"), lit(0.0)) else col(s"__z${i - h1}")
-    val m2 = (0 until h2).map { k =>
-      sigmoid((0 until p.w2.length).map(i => in2(i) * lit(p.w2(i)(k))).reduce(_ + _) +
-        lit(p.b2(k)))
-    }
-    val ren2 = scatterSums(mid, midFkCols, rootKeyCols, m2, "__B")
-    val margin = (0 until h2)
-      .map(k => coalesce(col(s"__B$k"), lit(0.0)) * lit(p.v(k))).reduce(_ + _) +
-      lit(p.vb)
-    roots.select(rootKeyCols.map(col) :+ y.as("__y"): _*)
-      .join(ren2, rootKeyCols, "left")
-      .agg(meanLogLoss(col("__y"), sigmoid(margin)))
+    checkGnn2(leafFkCols, midKeyCols, midFkCols, rootKeyCols, p.w1.length, midDim,
+      p.b1.length, p.b2.length, p)
+    gnn2Forward(leaves, leafFkCols, leafFeatCol, mids, midKeyCols, midFkCols, midFeatCol,
+      roots, rootKeyCols, yCol, p)
+      .agg(meanLogLoss(col("__y"), col("__p")))
       .collect()(0).getDouble(0)
   }
 
-  /** Per-parent sums of the per-row `msgs` (named `name0`, `name1`, …)
-    * of `rows` grouped on `fkCols`, renamed to the parent's `keyCols`. */
-  private def scatterSums(rows: DataFrame, fkCols: Seq[String], keyCols: Seq[String],
-      msgs: Seq[Column], name: String): DataFrame = {
-    val sums = msgs.indices.map(j => sum(msgs(j)).as(s"$name$j"))
-    fkCols.zip(keyCols).foldLeft(rows.groupBy(fkCols.map(col): _*)
-        .agg(sums.head, sums.tail: _*)) {
-      case (df, (c, k)) => df.withColumnRenamed(c, k)
-    }
+  private def checkGnn2(leafFkCols: Seq[String], midKeyCols: Seq[String],
+      midFkCols: Seq[String], rootKeyCols: Seq[String], leafDim: Int, midDim: Int,
+      h1: Int, h2: Int, p: Gnn2Params): Unit = {
+    require(leafDim >= 1 && midDim >= 0 && h1 >= 1 && h2 >= 1,
+      "need at least one leaf feature and one hidden unit per level")
+    require(leafFkCols.nonEmpty && leafFkCols.length == midKeyCols.length,
+      s"leaf FK arity mismatch: $leafFkCols vs $midKeyCols")
+    require(midFkCols.nonEmpty && midFkCols.length == rootKeyCols.length,
+      s"mid FK arity mismatch: $midFkCols vs $rootKeyCols")
+    require(shaped(p.w1, leafDim, h1) && p.b1.length == h1 &&
+      shaped(p.w2, h1 + midDim, h2) && p.b2.length == h2 && p.v.length == h2,
+      "init shape mismatch")
+  }
+
+  /** The forward plan of [[fitGnn2GD]] at parameters `p`: one row per
+    * root with its label `__y`, the prediction `__p` and its packed sums
+    * `__s` = `[G1 | G2 | B]` (zero when midless), laid out like `θ`'s
+    * `w1 ++ b1 ++ w2 ++ b2 ++ v`: `G1 = Σ_mids β⊗S1`,
+    * `G2 = Σ_mids [A;z;1]⊗(v⊙σ')`, `B = Σ_mids m2`. Each leaf packs
+    * `[m1 | x̂⊗m1(1−m1)]`, and one sum per mid gives `[A | S1]` (zero when
+    * leafless); each mid packs `[β⊗S1 | [A;z;1]⊗(v⊙σ') | m2]` with
+    * `β_j = Σ_k w2(j)(k)·v_k·σ'_k`. Outer products are i-major. */
+  private def gnn2Forward(leaves: DataFrame, leafFkCols: Seq[String], leafFeatCol: String,
+      mids: DataFrame, midKeyCols: Seq[String], midFkCols: Seq[String], midFeatCol: String,
+      roots: DataFrame, rootKeyCols: Seq[String], yCol: String, p: Gnn2Params): DataFrame = {
+    val (leafDim, h1, h2) = (p.w1.length, p.b1.length, p.b2.length)
+    val s1 = (leafDim + 1) * h1 // S1 = Σ_leaves x̂⊗m1(1−m1)
+    val width = s1 + (p.w2.length + 1) * h2 + h2 // [G1 | G2 | B]
+    val leafSums = withCheckedFeatures(leaves, leafFeatCol, leafDim, "leaf")
+      .select(leafFkCols.map(col) :+ withOne(col(leafFeatCol)).as("__xh"): _*)
+      .withColumn("__m1", sigmoidLayer(col("__xh"), p.w1, p.b1))
+      .groupBy(leafFkCols.map(col): _*)
+      .agg(VectorAgg.vecSum(concat(col("__m1"), outer(col("__xh"),
+        transform(col("__m1"), m => m * (lit(1.0) - m))))).as("__s"))
+      .withColumnsRenamed(leafFkCols.zip(midKeyCols).toMap)
+    val midDim = p.w2.length - h1
+    val z = if (midDim == 0) Nil else Seq(col(midFeatCol))
+    val midSums = withCheckedFeatures(mids, midFeatCol, midDim, "mid")
+      .select((midKeyCols ++ midFkCols).distinct.map(col) ++ z: _*)
+      .join(leafSums, midKeyCols, "left")
+      .withColumn("__s", coalesce(col("__s"), zeros(h1 + s1)))
+      .withColumn("__in2", withOne(concat(slice(col("__s"), 1, h1) +: z: _*)))
+      .withColumn("__m2", sigmoidLayer(col("__in2"), p.w2, p.b2))
+      // v⊙σ': the mid's level-2 residual per unit of its root's dm
+      .withColumn("__d2", zip_with(Similarity.litVec(p.v), col("__m2"),
+        (vk, m) => vk * (m * (lit(1.0) - m))))
+      .withColumn("__beta", transform(typedLit(p.w2.take(h1)),
+        w => Similarity.dot(w, col("__d2"))))
+      .groupBy(midFkCols.map(col): _*)
+      .agg(VectorAgg.vecSum(concat(zip_with(slice(col("__s"), h1 + 1, s1),
+        flatten(array_repeat(col("__beta"), leafDim + 1)), (s, b) => b * s),
+        outer(col("__in2"), col("__d2")), col("__m2"))).as("__s"))
+      .withColumnsRenamed(midFkCols.zip(rootKeyCols).toMap)
+    roots.select(rootKeyCols.map(col) :+ checkedLabel(yCol).as("__y"): _*)
+      .join(midSums, rootKeyCols, "left")
+      .select(col("__y"), coalesce(col("__s"), zeros(width)).as("__s"))
+      .withColumn("__p", sigmoid(Similarity.dot(withOne(slice(col("__s"), width - h2 + 1, h2)),
+        Similarity.litVec(p.v :+ p.vb))))
   }
 
   /** Parameters of the attention GNN layer: message weights `w1`/`b1`,
@@ -1236,7 +1195,7 @@ object Blueprint {
       .withColumn("__in", withOne(in))
       .withColumn("__p", sigmoid(Similarity.dot(col("__in"),
         Similarity.litVec(p.w ++ p.u :+ p.b))))
-      .withColumn("__y", col(yCol).cast("double"))
+      .withColumn("__y", checkedLabel(yCol))
   }
 
   /** Mean logistic loss of [[fitEmbeddingGD]]'s model over its forward —
@@ -1377,7 +1336,7 @@ object Blueprint {
       .withColumn("__a", weightedSum(ks.map(b => col(s"__al$b")), tokenCols.map(col)))
       .withColumn("__p", sigmoid(Similarity.dot(withOne(col("__a")),
         Similarity.litVec(p.w :+ p.b))))
-      .withColumn("__y", col(yCol).cast("double"))
+      .withColumn("__y", checkedLabel(yCol))
   }
 
   /** Mean logistic loss of [[fitCrossAttnGD]]'s model over its forward —
@@ -1668,7 +1627,7 @@ object Blueprint {
       val p = unflat(theta)
       // backward stages continue the forward's projection chain
       val back = mhaBackStages(mhaForwardStaged(rows, tokenCols, p)
-        .withColumn("__dm", mhaReadout(p) - col(yCol).cast("double"))
+        .withColumn("__dm", mhaReadout(p) - checkedLabel(yCol))
         .withColumns((0 until dim).map(i => s"__dout$i" -> dm * lit(p.w(i))).toMap),
         k, p.wo, heads)
       gdStep(back, array(mhaGrads(k, (b, c) => col(s"__x${b}_$c"), heads, dh, dim) ++
@@ -1731,7 +1690,7 @@ object Blueprint {
   def mhaLogLoss(df: DataFrame, tokenCols: Seq[String], yCol: String,
       p: MhaParams): Double =
     mhaForwardStaged(withCheckedTokens(df, tokenCols, p.wo.length), tokenCols, p)
-      .agg(meanLogLoss(col(yCol).cast("double"), mhaReadout(p)))
+      .agg(meanLogLoss(checkedLabel(yCol), mhaReadout(p)))
       .collect()(0).getDouble(0)
 
   /** The reference's FULL stacked DBTransformer forward
@@ -1977,7 +1936,7 @@ object Blueprint {
     * the head input's gradient `__dout{i} = Σ_k du_k·wOut(k)(i)`. */
   private def classBack(fwd: DataFrame, yCol: String,
       wOut: Array[Array[Double]]): DataFrame = {
-    val y = col(yCol).cast("int")
+    val y = checkedLabel(yCol, wOut.length)
     fwd.withColumns(wOut.indices.map(kk => s"__du$kk" ->
         (col(s"__pr$kk") - when(y === kk, 1.0).otherwise(0.0))).toMap)
       .withColumns(wOut.head.indices.map(i => s"__dout$i" ->
@@ -2002,7 +1961,7 @@ object Blueprint {
   /** Mean softmax cross-entropy of a class head's `__pr{k}` against the
     * integer labels in `yCol`. */
   private def classLogLoss(fwd: DataFrame, yCol: String, nClass: Int): Double = {
-    val y = col(yCol).cast("int")
+    val y = checkedLabel(yCol, nClass)
     val py = (0 until nClass).map(kk =>
       when(y === kk, col(s"__pr$kk")).otherwise(lit(0.0))).reduce(_ + _)
     fwd.agg(avg(-log(py))).collect()(0).getDouble(0)

@@ -832,7 +832,7 @@ class BlueprintSpec extends SparkSpec {
     assert(left.isEmpty, s"steps left persisted RDDs $left")
   }
 
-  test("a feature array that is not dim long, or NULL, or a NULL numeric column fails every trainer and loss that reads it") {
+  test("a feature array that is not dim long, or NULL, or a NULL numeric column, or a NULL or out-of-range label, or a parameter of the wrong shape fails every trainer and loss that reads it") {
     val flat = (bad: Array[Double]) =>
       Seq((Array(1.0, 2.0), 1.0), (bad, 0.0)).toDF("feat", "y")
     val mlp = Blueprint.MlpParams(Array.fill(2, 2)(0.1), Array(0.0, 0.0), Array(0.1, 0.2), 0.0)
@@ -858,8 +858,15 @@ class BlueprintSpec extends SparkSpec {
     val mha = Blueprint.mhaInit(dim = 2, heads = 2)
     // a NULL numeric value (a Double column read through Option)
     val numeric = Seq((0, Some(0.5), 1), (1, None, 0)).toDF("code", "x1", "y")
+    // a NULL label (a Double column read through Option), and class labels
+    val nullY = Seq((Array(1.0, 2.0), Some(1.0)), (Array(0.5, 0.5), None)).toDF("feat", "y")
+    val nullYTokens = Seq((Array(1.0, 0.0), Array(0.5, 0.5), Some(1.0)),
+      (Array(0.2, 0.8), Array(0.5, 0.5), None)).toDF("t0", "t1", "y")
+    val classes = (y: Option[Int]) => Seq((0, 0.5, Some(1)), (1, 0.2, y)).toDF("code", "x1", "y")
     val holds = (dim: Int) => s"must hold $dim non-NULL values"
     val number = "numeric column 'x1' must hold a non-NULL number"
+    val label = "label column 'y' must hold a non-NULL number"
+    val inClass = "label column 'y' must hold a class in [0, 2)"
     // (entry point, the guard's error, a run on a malformed row)
     val cases: Seq[(String, String, () => Any)] = Seq(
       ("fitMlpGD short", holds(2), () => Blueprint.fitMlpGD(flat(Array(1.0)), "feat", "y",
@@ -899,7 +906,43 @@ class BlueprintSpec extends SparkSpec {
         steps = 1, lr = 0.1)),
       ("transformerMhaLogLoss NULL number", number, () => Blueprint.transformerMhaLogLoss(
         numeric, "code", Seq("x1"), "y", Blueprint.transformerMhaInit(card = 2, dim = 2,
-          nNum = 1, nClass = 2, heads = 2))))
+          nNum = 1, nClass = 2, heads = 2))),
+      ("fitLogisticGD NULL label", label, () => Blueprint.fitLogisticGD(nullY, "feat", "y",
+        dim = 2, steps = 1, lr = 0.1)),
+      ("fitMlpGD NULL label", label, () => Blueprint.fitMlpGD(nullY, "feat", "y",
+        dim = 2, hidden = 2, steps = 1, lr = 0.1)),
+      ("mlpLogLoss NULL label", label, () => Blueprint.mlpLogLoss(nullY, "feat", "y", mlp)),
+      ("fitEmbeddingGD NULL label", label, () => Blueprint.fitEmbeddingGD(
+        Seq((0, Array(1.0), Some(1.0)), (1, Array(0.5), None)).toDF("code", "feat", "y"),
+        "code", "feat", "y", card = 2, dim = 2, nFeat = 1, steps = 1, lr = 0.1)),
+      ("crossAttnLogLoss NULL label", label, () => Blueprint.crossAttnLogLoss(nullYTokens,
+        Seq("t0", "t1"), "y", Blueprint.crossAttnInit(2))),
+      ("fitMhaGD NULL label", label, () => Blueprint.fitMhaGD(nullYTokens, Seq("t0", "t1"),
+        "y", dim = 2, heads = 2, steps = 1, lr = 0.1)),
+      ("mhaLogLoss NULL label", label, () => Blueprint.mhaLogLoss(nullYTokens,
+        Seq("t0", "t1"), "y", mha)),
+      ("heteroGnnLogLoss NULL label", label, () => Blueprint.heteroGnnLogLoss(
+        heteroGroups(heteroRows), Seq((1L, Some(1.0)), (2L, None)).toDF("pid", "y"),
+        Seq("pid"), "y", heteroInit(Seq(2, 1), hidden = 2, seed = 3))),
+      ("fitGnn2GD NULL label", label, () => Blueprint.fitGnn2GD(leaves(okLeaf), Seq("mfk"),
+        "feat", mids(okMid), Seq("mid"), Seq("rfk"), "feat", midDim = 1,
+        Seq((1L, Some(1.0)), (2L, None)).toDF("rid", "y"), Seq("rid"), "y",
+        leafDim = 2, h1 = 2, h2 = 2, steps = 1, lr = 0.1)),
+      ("gnn2LogLoss w2 not h1 + midDim rows", "init shape mismatch", () => Blueprint.gnn2LogLoss(
+        leaves(okLeaf), Seq("mfk"), "feat", mids(okMid), Seq("mid"), Seq("rfk"), "feat",
+        midDim = 1, roots, Seq("rid"), "y", gnn2.copy(w2 = Array.fill(4, 2)(0.1)))),
+      ("fitTransformerGD class 2 of 2", inClass, () => Blueprint.fitTransformerGD(
+        classes(Some(2)), "code", Seq("x1"), "y", card = 2, dim = 2, nClass = 2, steps = 1,
+        lr = 0.1)),
+      ("transformerLogLoss NULL class", inClass, () => Blueprint.transformerLogLoss(
+        classes(None), "code", Seq("x1"), "y", Blueprint.transformerInit(card = 2, dim = 2,
+          nNum = 1, nClass = 2))),
+      ("fitTransformerMhaGD class -1", inClass, () => Blueprint.fitTransformerMhaGD(
+        classes(Some(-1)), "code", Seq("x1"), "y", card = 2, dim = 2, nClass = 2, heads = 2,
+        steps = 1, lr = 0.1)),
+      ("transformerMhaLogLoss class 2 of 2", inClass, () => Blueprint.transformerMhaLogLoss(
+        classes(Some(2)), "code", Seq("x1"), "y", Blueprint.transformerMhaInit(card = 2,
+          dim = 2, nNum = 1, nClass = 2, heads = 2))))
     cases.foreach { case (name, error, run) =>
       withClue(s"$name: ")(failsWith(error)(run()))
     }
@@ -968,6 +1011,16 @@ class BlueprintSpec extends SparkSpec {
         val df = ys.indices.map(i => (i % 3, 0.1 * i, i % 2)).toDF("code", "x1", "y")
         Blueprint.fitTransformerMhaGD(rows(df, none), "code", Seq("x1"), "y", card = 3,
           dim = 2, nClass = 2, heads = 2, steps = steps, lr = 0.1)
+      }),
+      KernelTrainer("fitGnn2GD", vectorForm = true, empty, { (w, seed, steps, none) =>
+        val (g, h1) = (gauss(seed), math.max(1, w / 2))
+        val leaves = vecs(3, 8, w).zipWithIndex.map { case (x, i) => (10L + i % 4, x) }
+        Blueprint.fitGnn2GD(rows(leaves.toDF("mfk", "feat"), none = false), Seq("mfk"), "feat",
+          rows(gnn2Mids.toDF("mid", "rfk", "feat"), none = false), Seq("mid"), Seq("rfk"),
+          "feat", midDim = 1, rows(gnn2Roots.toDF("rid", "y"), none), Seq("rid"), "y",
+          leafDim = w, h1 = h1, h2 = 2, steps = steps, lr = 0.1, init = Blueprint.Gnn2Params(
+            Array.fill(w, h1)(0.3 * g()), Array.fill(h1)(g()), Array.fill(h1 + 1, 2)(g()),
+            Array.fill(2)(g()), Array.fill(2)(g()), g()))
       }))
   }
 
@@ -995,24 +1048,94 @@ class BlueprintSpec extends SparkSpec {
     }
   }
 
+  // the depth-2 fixture: roots 1-3 (root 3 midless); mid 20 leafless;
+  // dangling leaf fk=99
+  private val gnn2Leaves = Seq(
+    (10L, Array(1.0, 0.0)), (10L, Array(0.0, 1.0)), (10L, Array(2.0, 1.0)),
+    (11L, Array(1.0, 1.0)),
+    (21L, Array(0.5, 2.0)),
+    (99L, Array(9.0, 9.0)))
+  private val gnn2Mids = Seq(
+    (10L, 1L, Array(0.3)), (11L, 1L, Array(-0.2)),
+    (20L, 2L, Array(0.8)), (21L, 2L, Array(0.1)))
+  private val gnn2Roots = Seq((1L, 1.0), (2L, 0.0), (3L, 1.0))
+  private def gnn2Init = Blueprint.Gnn2Params(
+    Array(Array(0.3, -0.2), Array(-0.1, 0.4)), Array(0.05, -0.05),
+    Array(Array(0.2, -0.3), Array(-0.25, 0.15), Array(0.1, 0.35)), // d2 = h1+midDim = 3
+    Array(0.02, -0.02),
+    Array(0.25, -0.35), 0.1)
+
+  private def flatGnn2(p: Blueprint.Gnn2Params): Seq[Double] =
+    (p.w1.flatten ++ p.b1 ++ p.w2.flatten ++ p.b2 ++ p.v :+ p.vb).toSeq
+
+  /** One fitGnn2GD step restated on the driver in its two-JOIN-BACK form:
+    * the forward per level, the residual per root, then join-back 1
+    * (roots → mid rows: the level-2 gradients, and per mid row
+    * `γ_j = Σ_k dm·v_k·σ'_k·w2(j)(k)`) and join-back 2 (mid rows →
+    * leaves: the level-1 gradients), each gradient a flat sum over the
+    * joined rows of its own level. */
+  private def gnn2JoinBackStep(leaves: Seq[(Long, Array[Double])],
+      mids: Seq[(Long, Long, Array[Double])], roots: Seq[(Long, Double)],
+      p: Blueprint.Gnn2Params, lr: Double): Blueprint.Gnn2Params = {
+    def sig(z: Double) = 1.0 / (1.0 + math.exp(-z))
+    val (leafDim, h1, h2, d2) = (p.w1.length, p.b1.length, p.b2.length, p.w2.length)
+    val m1 = leaves.map { case (_, x) =>
+      Array.tabulate(h1)(j => sig((0 until leafDim).map(i => x(i) * p.w1(i)(j)).sum + p.b1(j)))
+    }
+    // per mid row: (key, root fk, [A ; z], m2)
+    val midRows = mids.map { case (k, r, z) =>
+      val in2 = Array.tabulate(h1)(j =>
+        leaves.indices.filter(leaves(_)._1 == k).map(m1(_)(j)).sum) ++ z
+      (k, r, in2, Array.tabulate(h2)(kk =>
+        sig((0 until d2).map(i => in2(i) * p.w2(i)(kk)).sum + p.b2(kk))))
+    }
+    // per root: (B, dm)
+    val rootRows = roots.map { case (rk, y) =>
+      val b = Array.tabulate(h2)(kk => midRows.filter(_._2 == rk).map(_._4(kk)).sum)
+      rk -> (b, sig((0 until h2).map(kk => b(kk) * p.v(kk)).sum + p.vb) - y)
+    }.toMap
+    val n = roots.length.toDouble
+    val back2 = midRows.flatMap(m => rootRows.get(m._2).map(r => (m, r._2)))
+    val d2k = (m: (Long, Long, Array[Double], Array[Double]), dm: Double, kk: Int) =>
+      dm * p.v(kk) * m._4(kk) * (1 - m._4(kk))
+    val gamma = back2.map { case (m, dm) =>
+      (m._1, Array.tabulate(h1)(j => (0 until h2).map(kk => d2k(m, dm, kk) * p.w2(j)(kk)).sum))
+    }
+    val back1 = leaves.indices.flatMap(q => gamma.filter(_._1 == leaves(q)._1).map(g => (q, g._2)))
+    val sp1 = (q: Int, j: Int) => m1(q)(j) * (1 - m1(q)(j))
+    Blueprint.Gnn2Params(
+      Array.tabulate(leafDim, h1)((i, j) => p.w1(i)(j) - lr * back1.map { case (q, g) =>
+        g(j) * sp1(q, j) * leaves(q)._2(i) }.sum / n),
+      Array.tabulate(h1)(j => p.b1(j) - lr * back1.map { case (q, g) => g(j) * sp1(q, j) }.sum / n),
+      Array.tabulate(d2, h2)((i, kk) => p.w2(i)(kk) - lr * back2.map { case (m, dm) =>
+        d2k(m, dm, kk) * m._3(i) }.sum / n),
+      Array.tabulate(h2)(kk => p.b2(kk) - lr * back2.map { case (m, dm) =>
+        d2k(m, dm, kk) }.sum / n),
+      Array.tabulate(h2)(kk => p.v(kk) - lr * rootRows.values.map(r => r._2 * r._1(kk)).sum / n),
+      p.vb - lr * rootRows.values.map(_._2).sum / n)
+  }
+
+  test("fitGnn2GD: a 2-step fit equals the two-join-back definition") {
+    val stepped = Blueprint.fitGnn2GD(gnn2Leaves.toDF("mfk", "feat").repartition(2),
+      Seq("mfk"), "feat", gnn2Mids.toDF("mid", "rfk", "feat").repartition(2), Seq("mid"),
+      Seq("rfk"), "feat", midDim = 1, gnn2Roots.toDF("rid", "y"), Seq("rid"), "y",
+      leafDim = 2, h1 = 2, h2 = 2, steps = 2, lr = 0.5, init = gnn2Init)
+    val want = (1 to 2).foldLeft(gnn2Init)((p, _) =>
+      gnn2JoinBackStep(gnn2Leaves, gnn2Mids, gnn2Roots, p, lr = 0.5))
+    val moved = flatGnn2(want).zip(flatGnn2(gnn2Init)).count { case (a, b) => a != b }
+    assert(moved == flatGnn2(want).length, s"the steps must move every parameter ($moved moved)")
+    assert(flatGnn2(stepped).length == flatGnn2(want).length)
+    flatGnn2(stepped).zip(flatGnn2(want)).zipWithIndex.foreach { case ((a, b), k) =>
+      assert(a == b || math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b)),
+        s"parameter $k: $a vs join-back $b")
+    }
+  }
+
   test("fitGnn2GD: gradient flows through TWO nested scatter-sums; loss falls") {
-    // roots 1-3 (root 3 midless); mid 20 leafless; dangling leaf fk=99
-    val leaves = Seq(
-      (10L, Array(1.0, 0.0)), (10L, Array(0.0, 1.0)), (10L, Array(2.0, 1.0)),
-      (11L, Array(1.0, 1.0)),
-      (21L, Array(0.5, 2.0)),
-      (99L, Array(9.0, 9.0))
-    ).toDF("mfk", "feat")
-    val mids = Seq(
-      (10L, 1L, Array(0.3)), (11L, 1L, Array(-0.2)),
-      (20L, 2L, Array(0.8)), (21L, 2L, Array(0.1))
-    ).toDF("mid", "rfk", "feat")
-    val roots = Seq((1L, 1.0), (2L, 0.0), (3L, 1.0)).toDF("rid", "y")
-    val init = Blueprint.Gnn2Params(
-      Array(Array(0.3, -0.2), Array(-0.1, 0.4)), Array(0.05, -0.05),
-      Array(Array(0.2, -0.3), Array(-0.25, 0.15), Array(0.1, 0.35)), // d2 = h1+midDim = 3
-      Array(0.02, -0.02),
-      Array(0.25, -0.35), 0.1)
+    val leaves = gnn2Leaves.toDF("mfk", "feat")
+    val mids = gnn2Mids.toDF("mid", "rfk", "feat")
+    val roots = gnn2Roots.toDF("rid", "y")
+    val init = gnn2Init
     def deepCopy(p: Blueprint.Gnn2Params) = Blueprint.Gnn2Params(
       p.w1.map(_.clone()), p.b1.clone(), p.w2.map(_.clone()), p.b2.clone(),
       p.v.clone(), p.vb)

@@ -9,15 +9,22 @@
 # the query is too slow there.
 # A named query that throws or is not registered leaves no output; it is
 # reported BAD (with Verify's "[verify] <name> failed:" line), and the
-# script exits non-zero when anything is BAD.
+# script exits non-zero when anything is BAD. A build that does not compile
+# prints sbt's output and exits 1.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 QUERIES="${1:-}"
 SF_DIR="${2:-/root/testdata/sf0.01}"
 OUT="/tmp/precheck_$$"
 LOG="$OUT.verify.err"
-trap 'rm -rf "$OUT" "$LOG"' EXIT
-sbt -batch compile >/dev/null
+BUILD_LOG="$OUT.compile.log"
+trap 'rm -rf "$OUT" "$LOG" "$BUILD_LOG"' EXIT
+# sbt logs compile errors to stdout: keep it, and show it when the build fails
+if ! sbt -batch compile >"$BUILD_LOG" 2>&1; then
+  cat "$BUILD_LOG" >&2
+  echo "precheck: sbt compile failed" >&2
+  exit 1
+fi
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 if [ -n "$QUERIES" ]; then
   java -cp "$CP" graft.Verify "$SF_DIR" "$OUT" "$QUERIES" 2>"$LOG"
