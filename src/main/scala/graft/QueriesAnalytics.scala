@@ -1461,19 +1461,19 @@ private[graft] object QueriesAnalytics {
       GROUP BY 1 ORDER BY pseudonym"""))
 
   /** kc1's oracle: the peel unrolled to `rounds` single-pass rounds
-    * (exactly [[graft.graph.KCore.vertices]] with innerPeels=1 — drop
-    * vertices of degree < k, repeat). Rounds past the fixpoint are
+    * (exactly [[graft.graph.KCore.vertices]]' round — drop vertices of
+    * degree < k, repeat). Rounds past the fixpoint are
     * no-ops (the weak set is empty), so any `rounds` ≥ the actual peel
     * depth restates the fixpoint exactly; sf0.01 converges in 3 rounds
     * (sf0.001 empties in 2), 10 leaves headroom. Pure integer degree
     * counts — no rounding device needed.
     *
     * TRIAGE NOTE (ADVICE r13): the unroll depth is calibrated to the
-    * gate SFs above. If the driver ever runs the oracle at a larger SF
-    * and kc1 alone goes red, check the Spark log line
-    * `KCore(k=70): converged after N peel rounds` FIRST — N+1 > rounds
-    * means the oracle restated a pre-fixpoint state (an oracle-depth
-    * shortfall, not a Spark bug); bump `rounds` and re-run. */
+    * gate SFs above. If the oracle ever runs at a larger SF and kc1
+    * alone goes red, check the last Spark job description
+    * `KCore.vertices round R` FIRST — round R only confirms the fixpoint,
+    * so R − 1 > rounds means the oracle restated a pre-fixpoint state (an
+    * oracle-depth shortfall, not a Spark bug); bump `rounds` and re-run. */
   private[graft] def kCoreOracle(k: Int, rounds: Int): String = {
     // AS MATERIALIZED: without it DuckDB inlines each CTE at every use
     // site — e_{i-1} appears 3× per round, so the plan blows up 3^rounds

@@ -659,24 +659,20 @@ object Dedup {
 
   /** Connected components by iterative min-label propagation: every vertex
     * converges to the MINIMUM id reachable from it (the canonical cluster
-    * representative). The classic Spark shape for an iterative graph
-    * algorithm: per round one join + one groupBy-min (both
-    * partial-aggregating, shuffling only (id, label)), with an eager
-    * `localCheckpoint` per round so lineage stays flat across iterations
-    * instead of compounding into an unexecutable plan. Rounds needed =
+    * representative). Per round one join + one groupBy-min (both
+    * partial-aggregating, shuffling only (id, label)), run under the
+    * [[graft.util.Checkpoints.fixpoint]] loop contract. Rounds needed =
     * graph diameter; near-dup clusters are shallow (dup cliques), so the
-    * default bound is generous. Stops early once no label changes; a
-    * graph still changing after `maxIter` rounds fails rather than return
-    * truncated labels.
+    * default bound is generous. Stops once no label changes; a graph still
+    * changing after `maxIter` rounds fails rather than return truncated
+    * labels.
     *
     * ONE distributed shuffle per round: the previous label rides through
     * the union as a null-padded `__old` column (each vertex contributes
     * exactly one non-null `__old`, from its own labels row, so
     * `max(__old)` recovers it in the same aggregate that takes
-    * `min(comp)`). Convergence is then a `comp =!= __old` scan over the
-    * just-checkpointed partitions — no separate convergence join, the
-    * same one-action device that halved k-core
-    * ([[graft.graph.KCore.vertices]]).
+    * `min(comp)`). The stop test's count of changed labels,
+    * `comp =!= __old`, is observed on the round's checkpoint job.
     *
     * Adaptive pointer jumping: from the third round on, each round also
     * rewrites `comp ← comp(comp)` (one extra self-join on the fresh label
@@ -700,16 +696,11 @@ object Dedup {
     val sym = edges.select(col("src").as("a"), col("dst").as("b"))
       .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
       .distinct().localCheckpoint(true)
-    var labels = vertices.select(col(idCol).as("a"), col(idCol).as("comp"))
-      .localCheckpoint(true)
-    // the checkpointed frame of the CURRENT round — held separately from
-    // `labels` (which below becomes a lazy projection of it) so the
-    // superseded generation can be released as soon as the next one
-    // materializes (graft.util.Checkpoints contract)
-    var ck = labels
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    graft.util.Checkpoints.fixpoint("Dedup.connectedComponents",
+        vertices.select(col(idCol).as("a"), col(idCol).as("comp")), maxIter, Seq(sym),
+        metric = Some(_ => count_if(col("comp") =!= col("__old"))), done = _ == 0L,
+        mustConverge = true) { (prev, round) =>
+      val labels = prev.select(col("a"), col("comp"))
       // candidate label for each vertex: min of its own and neighbors'.
       // Neighbor rows carry a null __old; the vertex's own row carries its
       // current label, so one groupBy yields both the new and old label.
@@ -721,32 +712,14 @@ object Dedup {
         .unionAll(fromNbr)
         .groupBy(col("a")).agg(min(col("comp")).as("comp"),
           max(col("__old")).as("__old"))
-      // pointer jump (rounds ≥ 2 only): comp ← comp(comp). Every comp
-      // value is itself a vertex id present in `hooked`, so the self-join
-      // is total; __old rides through untouched for the convergence scan.
-      val jumped =
-        if (iter < 2) hooked
-        else hooked.join(
-            hooked.select(col("a").as("comp"), col("comp").as("__cc")), "comp")
-          .select(col("a"), col("__cc").as("comp"), col("__old"))
-      val next = jumped.localCheckpoint(true)
-      // cached-partition scan of the checkpoint — cheap, no shuffle
-      converged = next.filter(col("comp") =!= col("__old")).isEmpty
-      graft.util.Checkpoints.release(ck)
-      ck = next
-      labels = next.select(col("a"), col("comp"))
-      iter += 1
-    }
-    // the returned plan reads only the LAST checkpoint; the symmetrized
-    // edge frame is dead weight the moment the loop exits. Labels cut off
-    // at the round cap are wrong (a chain longer than the cap reaches would
-    // keep split clusters), so that fails instead — after releasing both.
-    graft.util.Checkpoints.release(sym)
-    if (!converged) graft.util.Checkpoints.release(ck)
-    require(converged, s"connected components did not converge within $maxIter rounds")
-    Console.err.println(
-      s"[graft] connectedComponents: converged=$converged rounds=$iter")
-    labels.select(col("a").as(idCol), col("comp").as("component"))
+      // pointer jump (round 3 on): comp ← comp(comp). Every comp value is
+      // itself a vertex id present in `hooked`, so the self-join is total;
+      // __old rides through untouched for the stop test.
+      if (round <= 2) hooked
+      else hooked.join(
+          hooked.select(col("a").as("comp"), col("comp").as("__cc")), "comp")
+        .select(col("a"), col("__cc").as("comp"), col("__old"))
+    }.select(col("a").as(idCol), col("comp").as("component"))
   }
 
   /** Near-dup CLUSTERS: collapse pairwise near-dup matches into

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * work proportional to edges incident to the frontier, never to the
   * whole graph re-walked. Distances are final the round a vertex is first
   * reached (BFS invariant), so `visited` only grows and duplicate arrivals
-  * are dropped by the anti-join. The loop carries flat lineage via
-  * localCheckpoint and releases superseded generations eagerly
-  * ([[graft.util.Checkpoints]] — the KCore/CC discipline).
+  * are dropped by the anti-join. The loop runs under the
+  * [[graft.util.Checkpoints.fixpoint]] contract; its stop test is the size
+  * of the round's new frontier, observed on the round's checkpoint job.
   */
 object Bfs {
 
@@ -38,28 +38,19 @@ object Bfs {
       .unionAll(edges.select(col(dstCol).cast("long").as("a"),
         col(srcCol).cast("long").as("b")))
       .localCheckpoint(true)
-    var visited = Seq((source, 0)).toDF("id", "dist").localCheckpoint(true)
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      // broadcast the frontier (the BfsSampler device): the adjacency —
-      // the big side — is probed in place instead of re-shuffled every
-      // round; a frontier too large to broadcast means the walk has
-      // reached graph scale and hop-bounded BFS is the wrong tool anyway
-      val next = adj.join(broadcast(frontier.select(col("id").as("a"))),
-          Seq("a"))
+    // broadcast the frontier (the BfsSampler device): the adjacency —
+    // the big side — is probed in place instead of re-shuffled every
+    // round; a frontier too large to broadcast means the walk has
+    // reached graph scale and hop-bounded BFS is the wrong tool anyway
+    graft.util.Checkpoints.fixpoint("Bfs.levels", Seq((source, 0)).toDF("id", "dist"),
+        maxDepth, Seq(adj), metric = Some(depth => count_if(col("dist") === depth)),
+        done = _ == 0L) { (visited, depth) =>
+      val frontier = visited.filter(col("dist") === depth - 1).select(col("id").as("a"))
+      val next = adj.join(broadcast(frontier), Seq("a"))
         .select(col("b").as("id")).distinct()
         .join(visited, Seq("id"), "left_anti")
         .withColumn("dist", lit(depth))
-      val visited2 = visited.unionAll(next).localCheckpoint(true)
-      // visited2 is materialized (eager checkpoint); the previous
-      // generation's blocks are dead weight from here
-      graft.util.Checkpoints.release(visited)
-      frontier = visited2.filter(col("dist") === depth)
-      visited = visited2
+      visited.unionAll(next)
     }
-    graft.util.Checkpoints.release(adj)
-    visited
   }
 }

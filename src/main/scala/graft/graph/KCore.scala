@@ -5,88 +5,39 @@ import org.apache.spark.sql.functions._
 
 /** k-core decomposition — the standard graph-pruning pass (drop everything
   * that cannot sit in a subgraph of minimum degree k) run before
-  * community/cohesion analysis. Same iterative Spark shape as
-  * [[graft.dedup.Dedup.connectedComponents]]: each peel round is one
-  * degree aggregate + two anti-joins, eagerly localCheckpointed so
-  * lineage stays flat; rounds are bounded by the peel depth (≤ vertex
-  * count, in practice a handful). ONE distributed action per round: the
-  * checkpoint materialization; convergence is read off the checkpointed
-  * edge count (a cheap cached-partition scan), which equals the previous
-  * round's count iff no weak vertex existed — every weak vertex removes
-  * at least one of its incident edges (degrees come from the edge list,
-  * so every counted vertex has degree ≥ 1). The first-cut shape ran a
-  * separate `weak.isEmpty` action per round — a full extra degree pass,
-  * measured 2× the wall-clock of this loop at sf0.1. The fixpoint is
-  * unique, so the output is deterministic under any partitioning.
+  * community/cohesion analysis. Each peel round is one degree aggregate +
+  * two anti-joins under the [[graft.util.Checkpoints.fixpoint]] loop
+  * contract; rounds are bounded by the peel depth (≤ vertex count, in
+  * practice a handful). The stop test reads the round's edge count,
+  * observed on its checkpoint job: it equals the previous round's count
+  * iff no weak vertex existed — every weak vertex removes at least one of
+  * its incident edges (degrees come from the edge list, so every counted
+  * vertex has degree ≥ 1). The edge count before round 1 is not known, so
+  * a graph that is already its own k-core takes two rounds. The first-cut
+  * shape ran a separate `weak.isEmpty` action per round — a full extra
+  * degree pass, measured 2× the wall-clock of this loop at sf0.1. The
+  * fixpoint is unique, so the output is deterministic under any
+  * partitioning.
+  *
+  * Measured and rejected: chaining two degree-filter passes lazily inside
+  * each checkpointed round converged in 2 rounds instead of 3 on the sf0.1
+  * co-purchase graph (1.2M edges, k=70) but ran 1.6-2.5× slower, because
+  * the stacked aggregate+anti-join blocks re-execute the previous pass's
+  * subtree. `repartition(col("a"))` before each checkpoint (round 10) rose
+  * shuffle write 118.0 → 128.3 MB at identical reads (graft.tools.ShufProbe,
+  * same graph): the explicit exchange costs more than the aggregate
+  * exchange it was meant to elide.
   */
 object KCore {
 
   /** Vertices of the k-core of the undirected simple graph `edges` (each
     * edge once, either orientation, no self-loops). Output: (id, degree)
     * — the surviving vertices with their degree INSIDE the core. Empty
-    * when no k-core exists.
-    *
-    * `innerPeels` chains that many degree-filter passes LAZILY inside each
-    * checkpointed round (peeling transitively: vertices weakened by the
-    * first peel's removals are caught by the second pass in the same
-    * round), trading distributed actions for plan depth. Measured on the
-    * sf0.1 co-purchase graph (1.2M edges, k=70, back-to-back same-JVM
-    * A/B): innerPeels=2 converges in 2 checkpoint rounds vs 3 but runs
-    * 1.6-2.5× SLOWER (5.5-10.6 s vs 3.5-4.3 s) — the stacked
-    * aggregate+anti-join blocks re-execute the previous pass's subtree
-    * from three plan positions and exchange reuse does not deduplicate
-    * across the anti-join boundary, so per-round shuffle volume, not
-    * action latency, dominates at this scale. The default therefore stays
-    * 1; raise it only in action-latency-bound regimes (tiny cores, very
-    * high peel depth, remote cluster with slow job scheduling).
-    *
-    * Also measured and rejected (round 10): `repartition(col("a"))`
-    * before each checkpoint, on the theory that LogicalRDD's preserved
-    * partitioning would let the degree groupBy and the `a`-side anti-join
-    * plan without an exchange. The byte counter says otherwise: shuffle
-    * WRITE rose 118.0 → 128.3 MB at identical reads (graft.tools.ShufProbe,
-    * sf0.1 co-purchase graph) — the explicit round-trip exchange costs
-    * more than the aggregate exchange it was meant to elide. Wall-clock
-    * A/Bs were ±50% window noise; the byte delta is the decisive
-    * instrument. */
+    * when no k-core exists. Fails when the peel has not reached its
+    * fixpoint within `maxIter` rounds. */
   def vertices(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, maxIter: Int = 50, innerPeels: Int = 1): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(innerPeels >= 1, s"innerPeels must be >= 1, got $innerPeels")
-    // symmetrize once: per-vertex degree = outdegree in the doubled list
-    var e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .unionAll(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .localCheckpoint(true)
-    var prev = e.count() // cached-partition scan of the checkpoint
-    var iter = 0
-    var stable = false
-    while (iter < maxIter && !stable) {
-      var cur = e
-      for (_ <- 0 until innerPeels) {
-        val deg = cur.groupBy(col("a")).agg(count(lit(1)).as("__d"))
-        val weak = deg.filter(col("__d") < k).select(col("a"))
-        cur = cur
-          .join(weak, Seq("a"), "left_anti")
-          .join(weak.withColumnRenamed("a", "b"), Seq("b"), "left_anti")
-      }
-      val e2 = cur.localCheckpoint(true)
-      val cnt = e2.count()
-      // e2 is materialized, so the previous round's checkpoint blocks are
-      // dead weight from here — release them NOW rather than waiting on
-      // driver GC + the async ContextCleaner (r10: 5.1 s GC on kc1's
-      // official pass and a 24 GB heap floor at 30×, both attributed to
-      // exactly these superseded blocks)
-      graft.util.Checkpoints.release(e)
-      // equal count ⇒ no weak vertex existed; zero ⇒ the core is empty —
-      // either way the fixpoint is reached and e2 IS it
-      if (cnt == prev || cnt == 0L) { stable = true; e = e2 }
-      else { e = e2; prev = cnt; iter += 1 }
-    }
-    require(stable, s"k-core peel did not converge within $maxIter rounds")
-    Console.err.println(s"[graft] KCore(k=$k): converged after $iter peel rounds" +
-      s" ($innerPeels transitive passes per round)")
-    e.groupBy(col("a").as("id")).agg(count(lit(1)).as("degree"))
-  }
+      k: Int, maxIter: Int = 50): DataFrame =
+    peel("KCore.vertices", edges, srcCol, dstCol, k, maxIter, mustConverge = true)
 
   /** The peel TRUNCATED at exactly `rounds` passes — the bounded variant
     * for graphs where the exact fixpoint depth is unaffordable: each
@@ -109,30 +60,31 @@ object KCore {
     * required. */
   def truncatedPeel(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    peel("KCore.truncatedPeel", edges, srcCol, dstCol, k, rounds, mustConverge = false)
+  }
+
+  /** At most `rounds` peel rounds, stopping at the fixpoint: (id, degree)
+    * of the surviving vertices. */
+  private def peel(op: String, edges: DataFrame, srcCol: String, dstCol: String,
+      k: Int, rounds: Int, mustConverge: Boolean): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    // symmetrize: per-vertex degree = outdegree in the doubled list
+    val sym = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .unionAll(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .localCheckpoint(true)
-    var prev = e.count()
-    var done = false
-    (1 to rounds).foreach { _ =>
-      if (!done) {
-        val deg = e.groupBy(col("a")).agg(count(lit(1)).as("__d"))
-        val weak = deg.filter(col("__d") < k).select(col("a"))
-        val e2 = e
-          .join(weak, Seq("a"), "left_anti")
-          .join(weak.withColumnRenamed("a", "b"), Seq("b"), "left_anti")
-          .localCheckpoint(true)
-        val cnt = e2.count()
-        graft.util.Checkpoints.release(e)
-        e = e2
-        // a no-op round means the fixpoint is reached — every remaining
-        // round would also be a no-op, so the truncated state IS final
-        if (cnt == prev || cnt == 0L) done = true
-        prev = cnt
-      }
-    }
-    e.groupBy(col("a").as("id")).agg(count(lit(1)).as("degree"))
+    var prev = -1L // the edge count before round 1 is unknown
+    graft.util.Checkpoints.fixpoint(op, sym, rounds,
+        metric = Some(_ => count(lit(1))), mustConverge = mustConverge,
+        done = { n =>
+          // equal count ⇒ no weak vertex existed; zero ⇒ the core is empty
+          val stable = n == prev || n == 0L
+          prev = n
+          stable
+        }) { (e, _) =>
+      val weak = e.groupBy(col("a")).agg(count(lit(1)).as("__d"))
+        .filter(col("__d") < k).select(col("a"))
+      e.join(weak, Seq("a"), "left_anti")
+        .join(weak.withColumnRenamed("a", "b"), Seq("b"), "left_anti")
+    }.groupBy(col("a").as("id")).agg(count(lit(1)).as("degree"))
   }
 }

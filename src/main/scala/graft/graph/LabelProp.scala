@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * any partitioning, unlike classic asynchronous LPA). A round is one
   * edge join + one partial-aggregating (dst, label) count + one
   * per-dst WindowGroupLimit top-1 — shuffles keyed by vertex id
-  * throughout, eager localCheckpoint keeps lineage flat. Fixed `iters`
+  * throughout, under the [[graft.util.Checkpoints.fixpoint]] loop
+  * contract. Fixed `iters`
   * rather than convergence: synchronous LPA can 2-cycle on bipartite
   * regions, and a fixed round count is what the cross-engine restatement
   * pins anyway.
@@ -32,27 +33,19 @@ object LabelProp {
     require(iters >= 1, "need at least one round")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint(true)
-    var labels = vertices.select(col(idCol).as("id"), col(idCol).as("label"))
-      .localCheckpoint(true)
-    (1 to iters).foreach { _ =>
-      val nbr = e
-        .join(labels.select(col("id").as("src"), col("label").as("__l")), "src")
-        .groupBy(col("dst"), col("__l")).agg(count(lit(1)).as("__c"))
-      val w = Window.partitionBy(col("dst"))
-        .orderBy(col("__c").desc, col("__l"))
-      val mode = nbr.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("dst").as("id"), col("__l").as("__new"))
-      val next = labels.join(mode, Seq("id"), "left")
-        .select(col("id"), coalesce(col("__new"), col("label")).as("label"))
-        .localCheckpoint(true)
-      // next is materialized — release the superseded round's blocks now
-      // instead of leaving them to driver GC (graft.util.Checkpoints)
-      graft.util.Checkpoints.release(labels)
-      labels = next
+    graft.util.Checkpoints.fixpoint("LabelProp.run",
+        vertices.select(col(idCol).as("id"), col(idCol).as("label")), iters, Seq(e)) {
+      (labels, _) =>
+        val nbr = e
+          .join(labels.select(col("id").as("src"), col("label").as("__l")), "src")
+          .groupBy(col("dst"), col("__l")).agg(count(lit(1)).as("__c"))
+        val w = Window.partitionBy(col("dst"))
+          .orderBy(col("__c").desc, col("__l"))
+        val mode = nbr.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1)
+          .select(col("dst").as("id"), col("__l").as("__new"))
+        labels.join(mode, Seq("id"), "left")
+          .select(col("id"), coalesce(col("__new"), col("label")).as("label"))
     }
-    // returned labels are their own checkpoint; the edge frame is done
-    graft.util.Checkpoints.release(e)
-    labels
   }
 }

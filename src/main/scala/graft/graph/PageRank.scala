@@ -1,20 +1,19 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank over a directed edge list — the second classic iterative graph
-  * algorithm beside [[graft.dedup.Dedup.connectedComponents]], in the same
-  * Spark shape: per iteration one join + one partial-aggregating groupBy
-  * (shuffling only (id, contribution)), eager localCheckpoint per round to
-  * keep lineage flat. Dangling-node mass (vertices with no out-edges) is
+  * algorithm beside [[graft.dedup.Dedup.connectedComponents]]: per
+  * iteration one join + one partial-aggregating groupBy (shuffling only
+  * (id, contribution)), run under the [[graft.util.Checkpoints.fixpoint]]
+  * loop contract. Dangling-node mass (vertices with no out-edges) is
   * redistributed uniformly each round, so total rank stays 1 and the
   * result is a proper distribution.
   *
   * The out-degree table is computed once and checkpointed; the per-round
-  * dangling-mass term is a scalar aggregate collected to the driver (one
-  * tiny job per iteration — the same bounded-driver-state class as Lloyd
-  * centroids, not a data-sized collect).
+  * dangling mass is a one-row aggregate joined into the round's own plan,
+  * so a round is one action.
   */
 object PageRank {
 
@@ -33,44 +32,12 @@ object PageRank {
   def run(vertices: DataFrame, idCol: String, edges: DataFrame,
       iters: Int = 10, damping: Double = 0.85,
       validate: Boolean = false): DataFrame = {
-    require(iters >= 1, "need at least one iteration")
-    require(damping > 0 && damping < 1, s"damping $damping must be in (0,1)")
-    if (validate) {
-      val vs = vertices.select(col(idCol).as("id"))
-      val orphans = edges.select(col("src").as("id"))
-        .unionAll(edges.select(col("dst").as("id")))
-        .join(vs, Seq("id"), "left_anti").limit(1).count()
-      require(orphans == 0,
-        "edges reference ids absent from vertices — rank mass would leak")
-    }
+    checkArgs(vertices, idCol, edges, iters, damping, validate)
     val n = vertices.count().toDouble
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val e = edges.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("__deg")).localCheckpoint(true)
-    val ids = vertices.select(col(idCol).as("id")).localCheckpoint(true)
-    val hasOut = outDeg.select(col("src").as("id")).localCheckpoint(true)
-    var ranks = ids.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint(true)
-    (1 to iters).foreach { _ =>
-      val dangling = ranks.join(hasOut, Seq("id"), "left_anti")
-        .agg(coalesce(sum(col("rank")), lit(0.0))).collect()(0).getDouble(0)
-      val contrib = e.join(ranks.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), (col("rank") / col("__deg")).as("__c"))
-        .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
-      val next = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit((1 - damping) / n) +
-            lit(damping) * (coalesce(col("__s"), lit(0.0)) + lit(dangling / n)))
-            .as("rank"))
-        .localCheckpoint(true)
-      // next is materialized — the superseded generation's blocks go now,
-      // not at the ContextCleaner's leisure (see graft.util.Checkpoints)
-      graft.util.Checkpoints.release(ranks)
-      ranks = next
-    }
-    // the returned frame is its own checkpoint; the loop-static inputs are
-    // dead weight once the last iteration has run
-    Seq(e, ids, hasOut).foreach(graft.util.Checkpoints.release)
-    ranks
+    iterate("PageRank.run", vertices, idCol, n, iters, damping,
+      edges.join(outDeg, "src").select(col("src"), col("dst"), col("__deg")), outDeg,
+      col("rank") / col("__deg"))
   }
 
   /** Weighted PageRank: each edge carries a weight and a vertex's rank
@@ -95,6 +62,20 @@ object PageRank {
   def runWeighted(vertices: DataFrame, idCol: String, edges: DataFrame,
       weightCol: String, iters: Int = 10, damping: Double = 0.85,
       validate: Boolean = false): DataFrame = {
+    checkArgs(vertices, idCol, edges, iters, damping, validate)
+    val n = vertices.count().toDouble
+    val w = col(weightCol).cast("double")
+    val badW = edges.filter(w.isNull || w <= 0).limit(1).count()
+    require(badW == 0, "edge weights must be positive and non-NULL")
+    val outW = edges.groupBy(col("src")).agg(sum(w).as("__wsum"))
+    iterate("PageRank.runWeighted", vertices, idCol, n, iters, damping,
+      edges.join(outW, "src")
+        .select(col("src"), col("dst"), (w / col("__wsum")).as("__frac")), outW,
+      col("rank") * col("__frac"))
+  }
+
+  private def checkArgs(vertices: DataFrame, idCol: String, edges: DataFrame,
+      iters: Int, damping: Double, validate: Boolean): Unit = {
     require(iters >= 1, "need at least one iteration")
     require(damping > 0 && damping < 1, s"damping $damping must be in (0,1)")
     if (validate) {
@@ -105,33 +86,29 @@ object PageRank {
       require(orphans == 0,
         "edges reference ids absent from vertices — rank mass would leak")
     }
-    val n = vertices.count().toDouble
-    val w = col(weightCol).cast("double")
-    val badW = edges.filter(w.isNull || w <= 0).limit(1).count()
-    require(badW == 0, "edge weights must be positive and non-NULL")
-    val outW = edges.groupBy(col("src")).agg(sum(w).as("__wsum"))
-    val e = edges.join(outW, "src")
-      .select(col("src"), col("dst"), (w / col("__wsum")).as("__frac"))
-      .localCheckpoint(true)
+  }
+
+  /** `iters` power-iteration rounds over the edge list `e` (src, dst and a
+    * per-edge column), where `share` is the rank one edge carries and
+    * `outSums` (src, …) lists the vertices with out-edges. */
+  private def iterate(op: String, vertices: DataFrame, idCol: String, n: Double,
+      iters: Int, damping: Double, e: DataFrame, outSums: DataFrame,
+      share: Column): DataFrame = {
+    val edgeShares = e.localCheckpoint(true)
     val ids = vertices.select(col(idCol).as("id")).localCheckpoint(true)
-    val hasOut = outW.select(col("src").as("id")).localCheckpoint(true)
-    var ranks = ids.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint(true)
-    (1 to iters).foreach { _ =>
+    val hasOut = outSums.select(col("src").as("id")).localCheckpoint(true)
+    graft.util.Checkpoints.fixpoint(op, ids.select(col("id"), lit(1.0 / n).as("rank")),
+        iters, Seq(edgeShares, ids, hasOut)) { (ranks, _) =>
       val dangling = ranks.join(hasOut, Seq("id"), "left_anti")
-        .agg(coalesce(sum(col("rank")), lit(0.0))).collect()(0).getDouble(0)
-      val contrib = e.join(ranks.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), (col("rank") * col("__frac")).as("__c"))
+        .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm"))
+      val contrib = edgeShares.join(ranks.withColumnRenamed("id", "src"), "src")
+        .select(col("dst").as("id"), share.as("__c"))
         .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
-      val next = ids.join(contrib, Seq("id"), "left")
+      ids.join(contrib, Seq("id"), "left").crossJoin(dangling)
         .select(col("id"),
           (lit((1 - damping) / n) +
-            lit(damping) * (coalesce(col("__s"), lit(0.0)) + lit(dangling / n)))
+            lit(damping) * (coalesce(col("__s"), lit(0.0)) + col("__dm") / lit(n)))
             .as("rank"))
-        .localCheckpoint(true)
-      graft.util.Checkpoints.release(ranks)
-      ranks = next
     }
-    Seq(e, ids, hasOut).foreach(graft.util.Checkpoints.release)
-    ranks
   }
 }

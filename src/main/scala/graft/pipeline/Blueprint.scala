@@ -137,27 +137,35 @@ object Blueprint {
     */
   def fitLinearDecoder(df: DataFrame, featCol: String, yCol: String, dim: Int,
       lambda: Double = 0.0): (Array[Double], Double) =
-    fitLinearDecoders(df, featCol, Seq(col(yCol).cast("double")), dim, lambda).head
+    fitLinearDecoders(df, featCol, Seq(checkedLabel(yCol)), dim, lambda).head
 
   /** Multi-target form of [[fitLinearDecoder]]: the Gram matrix X'X is
     * target-independent, so T targets share ONE distributed pass (X'X once
     * + X'y per target) and T tiny driver solves — fitting a T-class
-    * readout costs the same scan as fitting one. */
+    * readout costs the same scan as fitting one. The fit reads the first
+    * `dim` values of `featCol`; a row where one of them is missing or
+    * NULL, or whose target is NULL, fails that pass: the sums would skip
+    * it while `n` still counts the row. */
   def fitLinearDecoders(df: DataFrame, featCol: String, targets: Seq[Column],
       dim: Int, lambda: Double = 0.0): Seq[(Array[Double], Double)] = {
     require(dim >= 1, "need at least one feature")
     require(targets.nonEmpty, "need at least one target")
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
+    val x = (i: Int) => element_at(col("__x"), i + 1)
     val sums: Seq[Column] =
       (for { i <- 0 until dim; j <- i until dim }
         yield sum(x(i) * x(j)).as(s"s_${i}_$j")) ++
       (0 until dim).map(i => sum(x(i)).as(s"s1_$i")) ++
-      targets.zipWithIndex.flatMap { case (y, t) =>
+      targets.indices.flatMap { t =>
+        val y = col(s"__y$t")
         (0 until dim).map(i => sum(x(i) * y).as(s"sy_${t}_$i")) :+
           sum(y).as(s"sy_$t")
       } ++
       Seq(count(lit(1)).cast("double").as("n"))
-    val row = df.agg(sums.head, sums.tail: _*).collect()(0)
+    val rows = df.select(firstFeatures(featCol, dim).as("__x") +: targets.zipWithIndex.map { case (y, t) =>
+        when(y.isNotNull, y).otherwise(raise_error(lit(s"target $y must hold a non-NULL number")))
+          .as(s"__y$t")
+      }: _*)
+    val row = rows.agg(sums.head, sums.tail: _*).collect()(0)
     def g(name: String): Double = row.getDouble(row.fieldIndex(name))
     val k = dim + 1
     targets.indices.map { t =>
@@ -187,21 +195,25 @@ object Blueprint {
     *
     * Returns one row per fold: (fold, n_test, w_0..w_{dim-1}, bias,
     * mse). Assign folds by a GROUPING key (e.g. [[graft.sample.Sampling
-    * .kFold]] on the order key) to keep the split leakage-free.
+    * .kFold]] on the order key) to keep the split leakage-free. A row
+    * missing one of its first `dim` features, or with a NULL label, fails
+    * pass 1, as in [[fitLinearDecoders]].
     */
   def kFoldRidge(df: DataFrame, featCol: String, yCol: String, dim: Int,
       foldCol: String, lambda: Double = 0.0): DataFrame = {
     require(dim >= 1, "need at least one feature")
     val spark = df.sparkSession
-    val x = (i: Int) => element_at(col(featCol), i + 1).cast("double")
-    val y = col(yCol).cast("double")
+    val rows = df.select(col(foldCol).cast("int").as("fold"),
+      firstFeatures(featCol, dim).as("__x"), checkedLabel(yCol).as("__y"))
+    val x = (i: Int) => element_at(col("__x"), i + 1)
+    val y = col("__y")
     val sums: Seq[Column] =
       (for { i <- 0 until dim; j <- i until dim }
         yield sum(x(i) * x(j)).as(s"s_${i}_$j")) ++
       (0 until dim).map(i => sum(x(i)).as(s"s1_$i")) ++
       (0 until dim).map(i => sum(x(i) * y).as(s"sy_$i")) ++
       Seq(sum(y).as("sy"), count(lit(1)).cast("double").as("n"))
-    val perFold = df.groupBy(col(foldCol).cast("int").as("fold"))
+    val perFold = rows.groupBy(col("fold"))
       .agg(sums.head, sums.tail: _*)
       .collect().sortBy(_.getInt(0))
     require(perFold.length >= 2, "need at least 2 non-empty folds")
@@ -242,8 +254,7 @@ object Blueprint {
       spark.sparkContext.parallelize(models.toSeq, 1), schema)
     val pred = (0 until dim).map(i => x(i) * col(s"__w$i")).reduce(_ + _) +
       col("__b")
-    df.select(col(foldCol).cast("int").as("fold"), col(featCol), y.as("__y"))
-      .join(broadcast(mdf), "fold")
+    rows.join(broadcast(mdf), "fold")
       .groupBy(col("fold"))
       .agg(count(lit(1)).cast("bigint").as("n_test"),
         ((0 until dim).map(i => first(col(s"__w$i")).as(s"w_$i")) :+
@@ -736,6 +747,13 @@ object Blueprint {
       what: String): DataFrame =
     if (dim == 0) df
     else df.withColumn(featCol, checkedFeatures(col(featCol), dim, s"$what column '$featCol'"))
+
+  /** The first `dim` values of `featCol`, checked by [[checkedFeatures]]:
+    * the closed-form decoder fits read only those, and a wider array (the
+    * forward's output under its NULL-padding default `combine`) keeps
+    * fitting on them. */
+  private def firstFeatures(featCol: String, dim: Int): Column =
+    checkedFeatures(slice(col(featCol), 1, dim), dim, s"feature column '$featCol'")
 
   /** `df` with each token column checked by [[checkedFeatures]] for
     * `dim` values. */
@@ -1970,11 +1988,15 @@ object Blueprint {
   /** One-vs-rest ridge-classifier fit of the [[decodeClasses]] weights:
     * one ridge regression per class against its 0/1 indicator (a standard
     * ridge classifier — argmax of the per-class scores predicts). All
-    * classes share the single X'X pass of [[fitLinearDecoders]]. */
+    * classes share the single X'X pass of [[fitLinearDecoders]]. A NULL
+    * label fails that pass: it would count as 0 for every class. */
   def fitClassDecoders(df: DataFrame, featCol: String, yCol: String, dim: Int,
-      classes: Seq[Any], lambda: Double = 0.0): Seq[(Array[Double], Double)] =
+      classes: Seq[Any], lambda: Double = 0.0): Seq[(Array[Double], Double)] = {
+    val y = when(col(yCol).isNotNull, col(yCol))
+      .otherwise(raise_error(lit(s"label column '$yCol' must hold a non-NULL class")))
     fitLinearDecoders(df, featCol,
-      classes.map(c => when(col(yCol) === lit(c), 1.0).otherwise(0.0)), dim, lambda)
+      classes.map(c => when(y === lit(c), 1.0).otherwise(0.0)), dim, lambda)
+  }
 
   /** Gaussian elimination with partial pivoting on the tiny (k+1)×(k+1)
     * normal matrix — driver-side scalar math, like the reference's other

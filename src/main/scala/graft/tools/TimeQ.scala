@@ -1,7 +1,10 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 /** Fresh-JVM per-query timer: `runMain graft.tools.TimeQ <query>...` —
-  * isolates a query's cost from the 55-query sweep's heap/GC pressure. */
+  * isolates a query's cost from the 55-query sweep's heap/GC pressure.
+  * Each query's line also gives the number of Spark jobs it started
+  * (counted by a listener on job start, so it includes AQE's stage jobs
+  * and broadcasts). */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -24,10 +27,19 @@ object TimeQ {
     spark.range(1 << 20).selectExpr("sum(id)").collect()
     val cal = graft.Bench.calibrate(spark)
     println(f"[cal] probe=$cal%.2f s load=${graft.Bench.loadAvg()}%.2f cpus=$cpus")
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(job: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
     for (n <- args) {
+      org.apache.spark.sql.GraftListenerProbe.drain(spark)
+      jobs.set(0)
       val t0 = System.nanoTime()
       val c = graft.SparkEntry.queries(n)(spark, sfDir).count()
-      println(f"[time] $n rows=$c ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      val s = (System.nanoTime() - t0) / 1e9
+      org.apache.spark.sql.GraftListenerProbe.drain(spark)
+      println(f"[time] $n rows=$c $s%.1f s jobs=${jobs.get}")
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

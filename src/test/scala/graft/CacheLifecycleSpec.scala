@@ -114,6 +114,62 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(n <= 1, s"LabelProp left $n persisted frames (want ≤1: the final labels)")
   }
 
+  test("a loop that fails at its round cap releases every checkpoint it made") {
+    // triangle + tail needs 2 peels; the 5-vertex chain 3 label rounds
+    val tail = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
+    val chain = (1L until 5L).map(i => (i, i + 1)).toDF("src", "dst")
+    val rows: Seq[(String, () => Any)] = Seq(
+      ("KCore.vertices", () => graft.graph.KCore.vertices(tail, "u", "v", k = 2, maxIter = 1)),
+      ("connectedComponents", () =>
+        Dedup.connectedComponents((1L to 5L).toDF("id"), "id", chain, maxIter = 2)))
+    rows.foreach { case (name, run) =>
+      val n = newlyPersisted {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("did not converge within"), s"$name: ${e.getMessage}")
+      }
+      assert(n == 0, s"$name left $n persisted frames after failing")
+    }
+  }
+
+  test("every fixpoint loop runs one localCheckpoint per round, names its rounds in job descriptions, and leaves at most one frame") {
+    val tail = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L)).toDF("src", "dst")
+    val vs = (1L to 8L).toDF("id")
+    val weighted = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (3L, 1L, 1.0), (1L, 4L, 3.0))
+      .toDF("src", "dst", "w")
+    val ck = "localCheckpoint"
+    // (the loop's name in its job descriptions, the actions it runs
+    // before round 1, a run on a tiny fixture)
+    val rows: Seq[(String, Seq[String], () => Any)] = Seq(
+      ("Dedup.connectedComponents", Seq(ck),
+        () => Dedup.connectedComponents(vs, "id", path)),
+      ("KCore.vertices", Nil, () => graft.graph.KCore.vertices(tail, "u", "v", k = 2)),
+      ("KCore.truncatedPeel", Nil,
+        () => graft.graph.KCore.truncatedPeel(tail, "u", "v", k = 2, rounds = 2)),
+      ("Bfs.levels", Seq(ck), () => graft.graph.Bfs.levels(path, "src", "dst", 1L, 3)),
+      ("PageRank.run", Seq("count", ck, ck, ck),
+        () => graft.graph.PageRank.run(vs, "id", path, iters = 3)),
+      ("PageRank.runWeighted", Seq("count", "count", ck, ck, ck),
+        () => graft.graph.PageRank.runWeighted(vs, "id", weighted, "w", iters = 3)),
+      ("LabelProp.run", Seq(ck), () => graft.graph.LabelProp.run(vs, "id", path, iters = 2)))
+    rows.foreach { case (op, setup, run) =>
+      withClue(s"$op: ") {
+        val (actions, jobs, left) = traceOf(run())
+        val names = actions.map(_._1)
+        val rounds = names.diff(setup)
+        assert(names.length - rounds.length == setup.length,
+          s"ran $names, missing set-up actions $setup")
+        assert(rounds.nonEmpty && rounds.forall(_ == ck),
+          s"round actions $rounds must all be $ck")
+        val Round = s"${java.util.regex.Pattern.quote(op)} round (\\d+)".r
+        val described = jobs.collect { case Round(r) => r.toInt }.toSet
+        assert(described == (1 to rounds.length).toSet,
+          s"${rounds.length} round checkpoints, job descriptions ${jobs.distinct}")
+        assert(left.size <= 1, s"left ${left.size} persisted frames")
+      }
+    }
+  }
+
   test("Checkpoints.release refuses derived frames and restores the logger") {
     val name = "org.apache.spark.rdd.MapPartitionsRDD"
     val before = org.apache.logging.log4j.LogManager.getLogger(name).getLevel

@@ -650,29 +650,6 @@ class BlueprintSpec extends SparkSpec {
     p.w1.flatMap(_.flatMap(_.toSeq)) ++ p.b1.flatMap(_.toSeq) ++ p.w2.toSeq ++ Seq(p.b2) ++
       Option(p.u).toSeq.flatMap(_.flatMap(_.toSeq))
 
-  /** The query executions (actions) `body` runs, and the RDDs it leaves
-    * persisted. */
-  private def actionsOf(body: => Unit)
-      : (Seq[org.apache.spark.sql.execution.QueryExecution], Set[Int]) = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val l = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        seen.add(qe)
-    }
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    org.apache.spark.sql.GraftListenerProbe.drain(spark)
-    spark.listenerManager.register(l)
-    try {
-      body
-      org.apache.spark.sql.GraftListenerProbe.drain(spark)
-    } finally spark.listenerManager.unregister(l)
-    import scala.jdk.CollectionConverters._
-    (seen.asScala.toSeq, (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
-  }
-
   private def expressionCount(qe: org.apache.spark.sql.execution.QueryExecution): Int =
     qe.optimizedPlan.collectWithSubqueries { case n =>
       n.expressions.map(_.collect { case e => e }.size).sum
@@ -863,6 +840,12 @@ class BlueprintSpec extends SparkSpec {
     val nullYTokens = Seq((Array(1.0, 0.0), Array(0.5, 0.5), Some(1.0)),
       (Array(0.2, 0.8), Array(0.5, 0.5), None)).toDF("t0", "t1", "y")
     val classes = (y: Option[Int]) => Seq((0, 0.5, Some(1)), (1, 0.2, y)).toDF("code", "x1", "y")
+    // two folds of well-posed rows, the last one as given: without a guard
+    // every decoder fit below returns a silently wrong answer
+    val fits = (last: Array[Double], y: Option[Double]) => Seq(
+      (0, Array(0.0, 0.0), Some(0.0)), (1, Array(1.0, 0.0), Some(1.0)),
+      (0, Array(0.0, 1.0), Some(0.0)), (1, Array(2.0, 3.0), Some(1.0)),
+      (0, Array(4.0, 1.0), Some(1.0)), (1, last, y)).toDF("fold", "feat", "y")
     val holds = (dim: Int) => s"must hold $dim non-NULL values"
     val number = "numeric column 'x1' must hold a non-NULL number"
     val label = "label column 'y' must hold a non-NULL number"
@@ -942,7 +925,23 @@ class BlueprintSpec extends SparkSpec {
         steps = 1, lr = 0.1)),
       ("transformerMhaLogLoss class 2 of 2", inClass, () => Blueprint.transformerMhaLogLoss(
         classes(Some(2)), "code", Seq("x1"), "y", Blueprint.transformerMhaInit(card = 2,
-          dim = 2, nNum = 1, nClass = 2, heads = 2))))
+          dim = 2, nNum = 1, nClass = 2, heads = 2))),
+      ("fitLinearDecoder short", holds(2), () => Blueprint.fitLinearDecoder(
+        fits(Array(1.0), Some(1.0)), "feat", "y", dim = 2, lambda = 0.5)),
+      ("fitLinearDecoder NULL label", label, () => Blueprint.fitLinearDecoder(
+        fits(Array(1.0, 1.0), None), "feat", "y", dim = 2, lambda = 0.5)),
+      ("fitLinearDecoders NULL target", "target y must hold a non-NULL number", () =>
+        Blueprint.fitLinearDecoders(fits(Array(1.0, 1.0), None), "feat", Seq(col("y")),
+          dim = 2, lambda = 0.5)),
+      ("kFoldRidge short", holds(2), () => Blueprint.kFoldRidge(fits(Array(1.0), Some(1.0)),
+        "feat", "y", dim = 2, "fold", lambda = 0.5).collect()),
+      ("kFoldRidge NULL label", label, () => Blueprint.kFoldRidge(
+        fits(Array(1.0, 1.0), None), "feat", "y", dim = 2, "fold", lambda = 0.5).collect()),
+      ("fitClassDecoders NULL", holds(2), () => Blueprint.fitClassDecoders(
+        fits(null, Some(1.0)), "feat", "y", dim = 2, Seq(0.0, 1.0), lambda = 0.5)),
+      ("fitClassDecoders NULL label", "label column 'y' must hold a non-NULL class", () =>
+        Blueprint.fitClassDecoders(fits(Array(1.0, 1.0), None), "feat", "y", dim = 2,
+          Seq(0.0, 1.0), lambda = 0.5)))
     cases.foreach { case (name, error, run) =>
       withClue(s"$name: ")(failsWith(error)(run()))
     }
