@@ -115,7 +115,7 @@ class CacheLifecycleSpec extends SparkSpec {
   }
 
   test("a loop that fails at its round cap releases every checkpoint it made") {
-    // triangle + tail needs 2 peels; the 5-vertex chain 3 label rounds
+    // triangle + tail needs 2 peels; the 5-vertex chain more than 2 label rounds
     val tail = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
     val chain = (1L until 5L).map(i => (i, i + 1)).toDF("src", "dst")
     val rows: Seq[(String, () => Any)] = Seq(
