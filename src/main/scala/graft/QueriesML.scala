@@ -1779,7 +1779,7 @@ private[graft] object QueriesML {
     * heads through the out-projection; the reference's tuned model space
     * searches `num_heads ∈ {2,4,8}`, blueprint_mlflow.py:256,271,296).
     * Two heads over two 2-dim lineitem tokens, per-row out vector
-    * emitted. Pure staged codegen — ONE projection at scan speed, the
+    * emitted from the staged `__out` vector. Row-local projections; the
     * only exchange is the house output-order sort. */
   private[graft] val qMhaForward = Q("mha1_mha_forward",
     (s, d) => {
@@ -1791,7 +1791,7 @@ private[graft] object QueriesML {
         array(col("l_discount"), col("l_tax")).as("t1"))
       Blueprint.mhaForwardStaged(li, Seq("t0", "t1"), Blueprint.mhaInit(2, 2))
         .select(col("l_orderkey"), col("l_linenumber"),
-          round(col("__out0"), 6).as("out0"), round(col("__out1"), 6).as("out1"))
+          round(col("__out")(0), 6).as("out0"), round(col("__out")(1), 6).as("out1"))
         .orderBy("l_orderkey", "l_linenumber")
     },
     Some(s"""WITH d AS (SELECT l_orderkey, l_linenumber,

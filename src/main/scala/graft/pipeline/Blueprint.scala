@@ -52,13 +52,23 @@ object Blueprint {
     * @param edges (src_id, dst_id) per edge type (include reverse edge
     *              types for undirected flow, RelGraph.withReverseEdges)
     * @return per-table node features after K rounds
+    *
+    * A node whose `feat` (after `pre`) is NULL, empty or holds a NULL
+    * fails the query, naming its table: the vector aggregates read an
+    * empty array as "no message" and skip a NULL one, so such a child
+    * would drop out of its parent's aggregate without a sign.
     */
   def forward(
       nodes: Map[String, DataFrame],
       edges: Map[EdgeType, DataFrame],
       cfg: Config = Config()): Map[String, DataFrame] = {
 
-    var state = nodes.map { case (t, df) => t -> cfg.pre(df) }
+    var state = nodes.map { case (t, df) =>
+      val f = col("feat")
+      t -> cfg.pre(df).withColumn("feat", when(size(f) > 0 && forall(f, _.isNotNull), f)
+        .otherwise(raise_error(concat(lit(s"table '$t': feature column 'feat' must hold a " +
+          "non-empty array of non-NULL values, got "), coalesce(f.cast("string"), lit("NULL"))))))
+    }
     (1 to cfg.layers).foreach { _ =>
       // per edge type: reduce messages per destination (A7; attn = A9
       // cross-attention with the destination features as queries)
@@ -701,11 +711,25 @@ object Blueprint {
   private def outer(a: Column, b: Column): Column =
     flatten(transform(a, ai => transform(b, bj => ai * bj)))
 
-  /** `Σ_b ws(b)·xs(b)` over equal-width vector columns, elementwise and
-    * left to right. */
-  private def weightedSum(ws: Seq[Column], xs: Seq[Column]): Column =
-    ws.zip(xs).map { case (w, x) => transform(x, v => w * v) }
-      .reduce((a, b) => zip_with(a, b, (s, t) => s + t))
+  /** `m·v`: each row of the matrix `m` dotted with the vector `v`. */
+  private def matVec(m: Column, v: Column): Column =
+    transform(m, row => Similarity.dot(row, v))
+
+  /** `vᵀ·m` = `Σ_r v_r·m_r` over the rows of the matrix `m`, elementwise;
+    * each sum folds left to right from 0.0 ([[Similarity.dot]]). */
+  private def vecMat(v: Column, m: Column): Column =
+    transform(m(0), (_, j) => Similarity.dot(v, transform(m, row => row(j))))
+
+  /** The sum `Σ_b v_b` of a vector column, left to right from 0.0. */
+  private def total(v: Column): Column = aggregate(v, lit(0.0), _ + _)
+
+  /** The backward of a softmax `al` from its adjoint `dal`:
+    * `ds_b = α_b·(dα_b − Σ_c α_c·dα_c)`. The Σ is re-evaluated per
+    * element, k² multiply-adds for k scores. */
+  private def softmaxBack(al: Column, dal: Column): Column = {
+    val s = Similarity.dot(al, dal)
+    zip_with(al, dal, (a, d) => a * (d - s))
+  }
 
   /** The logistic function, op order `1/(1+exp(−z))` (what the SQL
     * restatements spell out). */
@@ -1321,37 +1345,35 @@ object Blueprint {
       val u = new Unflat(theta)
       CrossAttnParams(u.vec(dim), u.vec(dim), u.scalar)
     }
-    val ks = tokenCols.indices
-    val (x, al, dm) = (tokenCols.map(col), ks.map(b => col(s"__al$b")), col("__dm"))
+    val (x, dm) = (col("__T"), col("__dm"))
     val scale = 1.0 / math.sqrt(dim.toDouble)
     val theta = (1 to steps).foldLeft(p0.q ++ p0.w :+ p0.b) { (theta, _) =>
       val p = unflat(theta)
       val back = crossAttnForward(df, tokenCols, yCol, p)
         .withColumn("__dm", col("__p") - col("__y"))
-        .withColumns(ks.map(b => s"__g$b" -> dm * Similarity.dot(x(b),
-          Similarity.litVec(p.w))).toMap)
-        .withColumn("__sg", ks.map(b => al(b) * col(s"__g$b")).reduce(_ + _))
-        .withColumns(ks.map(b => s"__ds$b" ->
-          al(b) * (col(s"__g$b") - col("__sg"))).toMap)
-      val gq = transform(weightedSum(ks.map(b => col(s"__ds$b")), x), v => v * lit(scale))
+        .withColumn("__g", transform(x, xb => dm * Similarity.dot(xb, Similarity.litVec(p.w))))
+        .withColumn("__ds", softmaxBack(col("__al"), col("__g")))
+      val gq = transform(vecMat(col("__ds"), x), v => v * lit(scale))
       gdStep(back, concat(gq, transform(col("__a"), ai => dm * ai), array(dm)), theta, lr)
     }
     unflat(theta)
   }
 
-  /** [[fitCrossAttnGD]]'s forward over the checked token rows: the score
-    * exponentials `__e{b}`, their sum `__z`, the softmax `__al{b}`, the
-    * attended vector `__a`, the prediction `__p` and the label `__y`. */
+  /** [[fitCrossAttnGD]]'s forward over the checked token rows: the tokens
+    * `__T` (k × dim), the score exponentials `__e`, their sum `__z`, the
+    * softmax `__al`, the attended vector `__a`, the prediction `__p` and
+    * the label `__y`. */
   private def crossAttnForward(df: DataFrame, tokenCols: Seq[String], yCol: String,
       p: CrossAttnParams): DataFrame = {
-    val dim = p.q.length; val ks = tokenCols.indices
+    val dim = p.q.length
     val scale = 1.0 / math.sqrt(dim.toDouble)
     withCheckedTokens(df, tokenCols, dim)
-      .withColumns(ks.map(b => s"__e$b" ->
-        exp(Similarity.dot(col(tokenCols(b)), Similarity.litVec(p.q)) * lit(scale))).toMap)
-      .withColumn("__z", ks.map(b => col(s"__e$b")).reduce(_ + _))
-      .withColumns(ks.map(b => s"__al$b" -> col(s"__e$b") / col("__z")).toMap)
-      .withColumn("__a", weightedSum(ks.map(b => col(s"__al$b")), tokenCols.map(col)))
+      .withColumn("__T", array(tokenCols.map(col): _*))
+      .withColumn("__e", transform(col("__T"), x =>
+        exp(Similarity.dot(x, Similarity.litVec(p.q)) * lit(scale))))
+      .withColumn("__z", total(col("__e")))
+      .withColumn("__al", transform(col("__e"), e => e / col("__z")))
+      .withColumn("__a", vecMat(col("__al"), col("__T")))
       .withColumn("__p", sigmoid(Similarity.dot(withOne(col("__a")),
         Similarity.litVec(p.w :+ p.b))))
       .withColumn("__y", checkedLabel(yCol))
@@ -1389,7 +1411,7 @@ object Blueprint {
 
   /** The row-local forward of [[fitTransformerGD]]'s model as a STAGED
     * projection chain over [[embedTokens]]' tokens: each intermediate
-    * (token components, score exponentials, softmax weights, attended
+    * (tokens, score exponentials, softmax weights, attended
     * vector, class probabilities) lands as a NAMED column computed once
     * per row, the dataflow form of the oracle's CTE chain. Inlining the
     * same arithmetic as raw expressions duplicates each shared subtree
@@ -1401,24 +1423,19 @@ object Blueprint {
     * tree. Shared by the fit loop and [[transformerLogLoss]] so forward
     * and backward can never drift apart.
     *
-    * Emits: `__t{b}_{j}` (token b component j; b=0 the embedding),
-    * `__ex{b}`, `__z`, `__al{b}` (softmax), `__o{i}` (attended),
-    * `__u{k}`, `__eu{k}`, `__zc`, `__pr{k}` (class softmax). */
+    * Each stage is one array column: [[embedTokens]]' columns, then the
+    * score exponentials `__ex` (k), their sum `__z`, the softmax `__al`
+    * (k), the attended vector `__o` (dim) and [[classHead]]'s columns. */
   private def transformerForwardStaged(df: DataFrame, codeCol: String,
       numCols: Seq[String], p: TransformerParams): DataFrame = {
-    val dim = p.e.head.length; val k = 1 + p.a.length
-    val scale = 1.0 / math.sqrt(dim.toDouble)
+    val scale = 1.0 / math.sqrt(p.e.head.length.toDouble)
+    val t = col("__T")
     val attended = embedTokens(df, codeCol, numCols, p.e, p.a, p.c)
-      .withColumns((0 until k).map(b => s"__ex$b" ->
-        exp((0 until dim).map(j => col(s"__t0_$j") * col(s"__t${b}_$j"))
-          .reduce(_ + _) * lit(scale))).toMap)
-      .withColumn("__z", (0 until k).map(b => col(s"__ex$b")).reduce(_ + _))
-      .withColumns((0 until k).map(b =>
-        s"__al$b" -> col(s"__ex$b") / col("__z")).toMap)
-      .withColumns((0 until dim).map(i => s"__o$i" ->
-        (0 until k).map(b => col(s"__al$b") * col(s"__t${b}_$i"))
-          .reduce(_ + _)).toMap)
-    classHead(attended, i => col(s"__o$i"), p.wOut, p.bOut)
+      .withColumn("__ex", transform(t, tb => exp(Similarity.dot(t(0), tb) * lit(scale))))
+      .withColumn("__z", total(col("__ex")))
+      .withColumn("__al", transform(col("__ex"), e => e / col("__z")))
+      .withColumn("__o", vecMat(col("__al"), t))
+    classHead(attended, col("__o"), p.wOut, p.bOut)
   }
 
   /** The reference's DBTransformer trained END-TO-END
@@ -1443,6 +1460,9 @@ object Blueprint {
     * the GD kernel's grouped form ([[gdStep]]): ONE groupBy(code)
     * aggregate of the per-row gradient, the bp12 economy for the full
     * model. At 100 TB a training step shuffles card rows, nothing else.
+    * The embedders and the head enter the plan as one array literal per
+    * block and the table as a broadcast frame, so the plan has the same
+    * size at any dim and its generated code is the same from step to step.
     *
     * Plain softmaxes (no max-subtraction) for term-for-term SQL
     * restatement; callers keep features normalized. Codes outside
@@ -1463,34 +1483,25 @@ object Blueprint {
       TransformerParams(u.mat(card, dim), u.mat(nNum, dim), u.mat(nNum, dim),
         u.mat(nClass, dim), u.vec(nClass))
     }
-    val scale = 1.0 / math.sqrt(dim.toDouble)
-    val k = 1 + nNum
+    val scale = lit(1.0 / math.sqrt(dim.toDouble))
+    val (t, al, dS, dout) = (col("__T"), col("__al"), col("__dS"), col("__dout"))
     val theta0 = Array(p0.e, p0.a, p0.c, p0.wOut).flatten.flatten ++ p0.bOut
     val theta = (1 to steps).foldLeft(theta0) { (theta, _) =>
       val p = unflat(theta)
       // backward stages continue the forward's projection chain — every
       // adjoint lands as a named column computed once per row
       val back = classBack(transformerForwardStaged(df, codeCol, numCols, p), yCol, p.wOut)
-        .withColumns((0 until k).map(b => s"__dAl$b" ->
-          (0 until dim).map(i => col(s"__dout$i") * col(s"__t${b}_$i"))
-            .reduce(_ + _)).toMap)
-        .withColumn("__sad",
-          (0 until k).map(b => col(s"__al$b") * col(s"__dAl$b")).reduce(_ + _))
-        .withColumns((0 until k).map(b => s"__dS$b" ->
-          col(s"__al$b") * (col(s"__dAl$b") - col("__sad"))).toMap)
+        .withColumn("__dAl", transform(t, tb => Similarity.dot(dout, tb)))
+        .withColumn("__dS", softmaxBack(al, col("__dAl")))
         // token gradients: value path + score paths (token 0 is the query
         // of every score and its own key; token b>=1 keys only s_b)
-        .withColumns((
-          (0 until dim).map(j => s"__dT0_$j" ->
-            (col("__al0") * col(s"__dout$j") +
-              (col("__dS0") * lit(2.0) * col(s"__t0_$j") +
-                (1 until k).map(b => col(s"__dS$b") * col(s"__t${b}_$j"))
-                  .reduce(_ + _)) * lit(scale))) ++
-          (for (m <- 0 until nNum; j <- 0 until dim) yield s"__dT${m + 1}_$j" ->
-            (col(s"__al${m + 1}") * col(s"__dout$j") +
-              col(s"__dS${m + 1}") * col(s"__t0_$j") * lit(scale)))).toMap)
-      gdStep(back, transformerGrad(numCols, dim, Nil, i => col(s"__o$i"), nClass),
-        theta, lr, table = dim)
+        .withColumn("__dT", concat(
+          array(transform(t(0), (t0j, j) => al(0) * dout(j) + (dS(0) * lit(2.0) * t0j +
+            Similarity.dot(slice(dS, 2, nNum), transform(slice(t, 2, nNum), tb => tb(j)))) *
+            scale)),
+          zip_with(slice(al, 2, nNum), slice(dS, 2, nNum), (ab, dsb) =>
+            zip_with(dout, t(0), (dj, t0j) => ab * dj + dsb * t0j * scale))))
+      gdStep(back, transformerGrad(nNum, Nil, col("__o")), theta, lr, table = dim)
     }
     unflat(theta)
   }
@@ -1545,58 +1556,40 @@ object Blueprint {
     *   ho_r = Σ_b α_b·v_br                o = concat_g(ho)
     *   out_i = Σ_j wo(i)(j)·o_j
     *
-    * Emits `__x{b}_{c}` (token components), then [[mhaStages]]'
-    * columns. Pure codegen, NO shuffle — at 100 TB the forward runs
-    * inside whole-stage codegen at scan speed. Shared by [[fitMhaGD]],
-    * [[mhaLogLoss]] and the mha1 registry query so forward and backward
-    * can never drift apart. */
+    * Adds the tokens `__T` (k × dim), then [[mhaStages]]' columns.
+    * Row-local, NO shuffle.
+    * Shared by [[fitMhaGD]], [[mhaLogLoss]] and the mha1 registry query
+    * so forward and backward can never drift apart. */
   private[graft] def mhaForwardStaged(df: DataFrame, tokenCols: Seq[String],
-      p: MhaParams): DataFrame = {
-    val dim = p.wq.head.head.length; val k = tokenCols.length
-    mhaStages(df.withColumns((for (b <- 0 until k; c <- 0 until dim)
-        yield s"__x${b}_$c" ->
-          element_at(col(tokenCols(b)), c + 1).cast("double")).toMap),
-      k, (b, c) => col(s"__x${b}_$c"), p.wq, p.wk, p.wv, p.wo)
-  }
+      p: MhaParams): DataFrame =
+    mhaStages(df.withColumn("__T", array(tokenCols.map(t => col(t).cast("array<double>")): _*)),
+      p.wq, p.wk, p.wv, p.wo)
 
   /** The attention stages of [[mhaForwardStaged]] and
-    * [[transformerMhaForwardStaged]] over the k tokens' components
-    * `x(b, c)`: `__q{g}_{r}`, `__k{g}_{b}_{r}`, `__v{g}_{b}_{r}`,
-    * `__s{g}_{b}`, `__mx{g}`, `__e{g}_{b}`, `__z{g}`, `__al{g}_{b}`
-    * (softmax), `__o{j}` (concatenated heads), `__out{i}`. */
-  private def mhaStages(df: DataFrame, k: Int, x: (Int, Int) => Column,
-      wq: Array[Array[Array[Double]]], wk: Array[Array[Array[Double]]],
-      wv: Array[Array[Array[Double]]], wo: Array[Array[Double]]): DataFrame = {
-    val heads = wq.length; val dh = wq.head.length; val dim = wq.head.head.length
-    val scaleH = 1.0 / math.sqrt(dh.toDouble)
-    df.withColumns((
-        (for (g <- 0 until heads; r <- 0 until dh) yield s"__q${g}_$r" ->
-          (0 until dim).map(c => x(0, c) * lit(wq(g)(r)(c))).reduce(_ + _)) ++
-        (for (g <- 0 until heads; b <- 0 until k; r <- 0 until dh)
-          yield s"__k${g}_${b}_$r" ->
-            (0 until dim).map(c => x(b, c) * lit(wk(g)(r)(c))).reduce(_ + _)) ++
-        (for (g <- 0 until heads; b <- 0 until k; r <- 0 until dh)
-          yield s"__v${g}_${b}_$r" ->
-            (0 until dim).map(c => x(b, c) * lit(wv(g)(r)(c))).reduce(_ + _))).toMap)
-      .withColumns((for (g <- 0 until heads; b <- 0 until k)
-        yield s"__s${g}_$b" ->
-          (0 until dh).map(r => col(s"__q${g}_$r") * col(s"__k${g}_${b}_$r"))
-            .reduce(_ + _) * lit(scaleH)).toMap)
-      .withColumns((0 until heads).map(g => s"__mx$g" -> (
-        if (k == 1) col(s"__s${g}_0")
-        else greatest((0 until k).map(b => col(s"__s${g}_$b")): _*))).toMap)
-      .withColumns((for (g <- 0 until heads; b <- 0 until k)
-        yield s"__e${g}_$b" -> exp(col(s"__s${g}_$b") - col(s"__mx$g"))).toMap)
-      .withColumns((0 until heads).map(g => s"__z$g" ->
-        (0 until k).map(b => col(s"__e${g}_$b")).reduce(_ + _)).toMap)
-      .withColumns((for (g <- 0 until heads; b <- 0 until k)
-        yield s"__al${g}_$b" -> col(s"__e${g}_$b") / col(s"__z$g")).toMap)
-      .withColumns((for (g <- 0 until heads; r <- 0 until dh)
-        yield s"__o${g * dh + r}" ->
-          (0 until k).map(b => col(s"__al${g}_$b") * col(s"__v${g}_${b}_$r"))
-            .reduce(_ + _)).toMap)
-      .withColumns((0 until dim).map(i => s"__out$i" ->
-        (0 until dim).map(j => col(s"__o$j") * lit(wo(i)(j))).reduce(_ + _)).toMap)
+    * [[transformerMhaForwardStaged]] over the k × dim tokens `__T`, each
+    * one array column: `__q` (heads × dh), `__k` and `__v` (heads × k ×
+    * dh), `__s`, `__e`, `__al` (softmax; heads × k), `__mx`, `__z`
+    * (heads), `__o` (the concatenated heads, dim) and `__out` (dim). Each
+    * projection enters as one literal. */
+  private def mhaStages(df: DataFrame, wq: Array[Array[Array[Double]]],
+      wk: Array[Array[Array[Double]]], wv: Array[Array[Array[Double]]],
+      wo: Array[Array[Double]]): DataFrame = {
+    val scaleH = lit(1.0 / math.sqrt(wq.head.length.toDouble))
+    val x = col("__T")
+    val perToken = (w: Array[Array[Array[Double]]]) =>
+      transform(typedLit(w), wg => transform(x, xb => matVec(wg, xb)))
+    df.withColumn("__q", transform(typedLit(wq), wg => matVec(wg, x(0))))
+      .withColumn("__k", perToken(wk))
+      .withColumn("__v", perToken(wv))
+      .withColumn("__s", zip_with(col("__q"), col("__k"), (qg, kg) =>
+        transform(kg, kb => Similarity.dot(qg, kb) * scaleH)))
+      .withColumn("__mx", transform(col("__s"), array_max(_)))
+      .withColumn("__e", zip_with(col("__s"), col("__mx"), (sg, m) =>
+        transform(sg, s => exp(s - m))))
+      .withColumn("__z", transform(col("__e"), total(_)))
+      .withColumn("__al", zip_with(col("__e"), col("__z"), (eg, z) => transform(eg, e => e / z)))
+      .withColumn("__o", flatten(zip_with(col("__al"), col("__v"), vecMat)))
+      .withColumn("__out", matVec(typedLit(wo), col("__o")))
   }
 
   /** Multi-head attention with learned Q/K/V/output projections, trained
@@ -1612,9 +1605,11 @@ object Blueprint {
     * the projection gradients fold as flat sums — `∂wq(g)(r)(c) =
     * (Σ_b ds_b·k_br)·√dh⁻¹·x₀[c]`, `∂wk(g)(r)(c) = q_r·√dh⁻¹·Σ_b ds_b·
     * x_b[c]`, `∂wv(g)(r)(c) = Σ_b α_b·da_r·x_b[c]`. EVERY gradient is a
-    * per-row codegen expression, so each step runs on the GD kernel
+    * per-row array expression, so each step runs on the GD kernel
     * ([[gdStep]]): one aggregate, no join, no scatter, map-side partial
-    * agg. The stable softmax (max-subtract, free in codegen) keeps large
+    * agg; every parameter block enters the plan as one array literal, so
+    * the plan has the same size at any dim and its generated code is the
+    * same from step to step. The stable softmax (max-subtract) keeps large
     * learned projections from overflowing `exp`; the softmax-normalized
     * backward formulas read α directly, so stabilization costs the
     * gradient nothing. A token array that is not `dim` long, is NULL or
@@ -1627,7 +1622,7 @@ object Blueprint {
     require(tokenCols.nonEmpty && dim >= 1, "need tokens and a dimension")
     require(heads >= 1 && dim % heads == 0, s"dim $dim must split into $heads heads")
     require(steps >= 1 && lr > 0, "need steps >= 1 and lr > 0")
-    val dh = dim / heads; val k = tokenCols.length
+    val dh = dim / heads
     val p0 = if (init != null) init else mhaInit(dim, heads)
     require(shapedHeads(p0.wq, heads, dh, dim) && shapedHeads(p0.wk, heads, dh, dim) &&
       shapedHeads(p0.wv, heads, dh, dim) && shaped(p0.wo, dim, dim) &&
@@ -1646,60 +1641,47 @@ object Blueprint {
       // backward stages continue the forward's projection chain
       val back = mhaBackStages(mhaForwardStaged(rows, tokenCols, p)
         .withColumn("__dm", mhaReadout(p) - checkedLabel(yCol))
-        .withColumns((0 until dim).map(i => s"__dout$i" -> dm * lit(p.w(i))).toMap),
-        k, p.wo, heads)
-      gdStep(back, array(mhaGrads(k, (b, c) => col(s"__x${b}_$c"), heads, dh, dim) ++
-        (0 until dim).map(i => dm * col(s"__out$i")) :+ dm: _*), theta, lr)
+        .withColumn("__dout", transform(Similarity.litVec(p.w), wi => dm * wi)), p.wo, heads)
+      gdStep(back, concat(mhaGrads(dh), transform(col("__out"), o => dm * o), array(dm)),
+        theta, lr)
     }
     unflat(theta)
   }
 
   /** The backward of [[mhaStages]] from the out-projection's input
-    * gradient `__dout{i}`: `__do{j}`, and per head `__dal{g}_{b}`,
-    * `__sad{g}`, `__ds{g}_{b}` (the softmax Jacobian) and `__dq{g}_{r}`. */
-  private def mhaBackStages(df: DataFrame, k: Int, wo: Array[Array[Double]],
-      heads: Int): DataFrame = {
-    val dim = wo.length; val dh = dim / heads
-    val scaleH = 1.0 / math.sqrt(dh.toDouble)
-    df.withColumns((0 until dim).map(j => s"__do$j" ->
-        (0 until dim).map(i => col(s"__dout$i") * lit(wo(i)(j))).reduce(_ + _)).toMap)
-      .withColumns((for (g <- 0 until heads; b <- 0 until k)
-        yield s"__dal${g}_$b" ->
-          (0 until dh).map(r => col(s"__do${g * dh + r}") *
-            col(s"__v${g}_${b}_$r")).reduce(_ + _)).toMap)
-      .withColumns((0 until heads).map(g => s"__sad$g" ->
-        (0 until k).map(b => col(s"__al${g}_$b") * col(s"__dal${g}_$b"))
-          .reduce(_ + _)).toMap)
-      .withColumns((for (g <- 0 until heads; b <- 0 until k)
-        yield s"__ds${g}_$b" ->
-          col(s"__al${g}_$b") * (col(s"__dal${g}_$b") - col(s"__sad$g"))).toMap)
-      .withColumns((for (g <- 0 until heads; r <- 0 until dh)
-        yield s"__dq${g}_$r" ->
-          (0 until k).map(b => col(s"__ds${g}_$b") * col(s"__k${g}_${b}_$r"))
-            .reduce(_ + _) * lit(scaleH)).toMap)
+    * gradient `__dout` (dim): `__do` (heads × dh), and per head `__dal`
+    * (k), the softmax Jacobian `__ds` (k) and `__dq` (dh). */
+  private def mhaBackStages(df: DataFrame, wo: Array[Array[Double]], heads: Int): DataFrame = {
+    val dh = wo.length / heads
+    val scaleH = lit(1.0 / math.sqrt(dh.toDouble))
+    // wo's columns, head by head: row r of head g is column g·dh + r
+    val woT = Array.tabulate(heads, dh)((g, r) => wo.map(_(g * dh + r)))
+    df.withColumn("__do", transform(typedLit(woT), wg => matVec(wg, col("__dout"))))
+      .withColumn("__dal", zip_with(col("__do"), col("__v"), (dog, vg) =>
+        transform(vg, vb => Similarity.dot(dog, vb))))
+      .withColumn("__ds", zip_with(col("__al"), col("__dal"), softmaxBack))
+      .withColumn("__dq", zip_with(col("__ds"), col("__k"), (dsg, kg) =>
+        transform(vecMat(dsg, kg), v => v * scaleH)))
   }
 
-  /** The per-row gradients of [[mhaStages]]' projections over the tokens'
-    * components `x(b, c)`, in parameter order: wq, wk, wv (head-, row-,
-    * column-major), then wo (row-major). */
-  private def mhaGrads(k: Int, x: (Int, Int) => Column, heads: Int, dh: Int,
-      dim: Int): Seq[Column] = {
-    val scaleH = 1.0 / math.sqrt(dh.toDouble)
-    (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
-      yield col(s"__dq${g}_$r") * x(0, c)) ++
-    (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
-      yield (0 until k).map(b => col(s"__ds${g}_$b") * x(b, c))
-        .reduce(_ + _) * col(s"__q${g}_$r") * lit(scaleH)) ++
-    (for (g <- 0 until heads; r <- 0 until dh; c <- 0 until dim)
-      yield (0 until k).map(b => col(s"__al${g}_$b") * x(b, c))
-        .reduce(_ + _) * col(s"__do${g * dh + r}")) ++
-    (for (i <- 0 until dim; j <- 0 until dim) yield col(s"__dout$i") * col(s"__o$j"))
+  /** The per-row gradients of [[mhaStages]]' projections over the tokens
+    * `__T`, in parameter order: wq, wk, wv (head-, row-, column-major),
+    * then wo (row-major). */
+  private def mhaGrads(dh: Int): Column = {
+    val scaleH = lit(1.0 / math.sqrt(dh.toDouble))
+    val x = col("__T")
+    concat(
+      flatten(transform(col("__dq"), dqg => outer(dqg, x(0)))),
+      flatten(zip_with(col("__q"), col("__ds"), (qg, dsg) =>
+        transform(outer(qg, vecMat(dsg, x)), v => v * scaleH))),
+      flatten(zip_with(col("__do"), col("__al"), (dog, alg) => outer(dog, vecMat(alg, x)))),
+      outer(col("__dout"), col("__o")))
   }
 
   /** [[fitMhaGD]]'s prediction over [[mhaForwardStaged]]:
     * `σ(Σ_i out_i·w_i + b)`. */
   private def mhaReadout(p: MhaParams): Column =
-    sigmoid(p.w.indices.map(i => col(s"__out$i") * lit(p.w(i))).reduce(_ + _) + lit(p.b))
+    sigmoid(Similarity.dot(withOne(col("__out")), Similarity.litVec(p.w :+ p.b)))
 
   /** Mean logistic loss of [[fitMhaGD]]'s model — one aggregate over the
     * shared staged forward; the finite-difference anchor proving the
@@ -1836,14 +1818,11 @@ object Blueprint {
     * [[transformerForwardStaged]]), then MULTI-HEAD attention with
     * learned projections queried by token 0 ([[mhaStages]] over
     * parameter-dependent tokens), the out-projection, and the class
-    * head ([[classHead]]). Emits `__t{b}_{j}`,
-    * `__q/__k/__v`, `__s/__e/__al` (stable softmax), `__o{j}`,
-    * `__out{i}`, `__u/__eu/__zc/__pr{k}`. */
+    * head ([[classHead]]), each stage one array column. */
   private def transformerMhaForwardStaged(df: DataFrame, codeCol: String,
       numCols: Seq[String], p: TransformerMhaParams): DataFrame =
-    classHead(mhaStages(embedTokens(df, codeCol, numCols, p.e, p.a, p.c), 1 + p.a.length,
-      (b, j) => col(s"__t${b}_$j"), p.wq, p.wk, p.wv, p.wo), i => col(s"__out$i"),
-      p.wOut, p.bOut)
+    classHead(mhaStages(embedTokens(df, codeCol, numCols, p.e, p.a, p.c),
+      p.wq, p.wk, p.wv, p.wo), col("__out"), p.wOut, p.bOut)
 
   /** The reference's DBTransformer at `num_heads > 1`, trained
     * END-TO-END — the exact tuned model family
@@ -1863,7 +1842,9 @@ object Blueprint {
     * only. Token gradients fold into the table (scatter-add per code) and
     * the embedders (flat sums), so each step is still ONE groupBy(code)
     * aggregate on the GD kernel ([[gdStep]]) — at 100 TB a training step
-    * shuffles card rows, nothing else. Op order pinned; codes outside
+    * shuffles card rows, nothing else. The embedders, the Q/K/V cubes,
+    * wo and the head enter the plan as one array literal per block and
+    * the table as a broadcast frame. Op order pinned; codes outside
     * [0, card) drop out of the lookup join; a NULL numeric value fails
     * the step. */
   def fitTransformerMhaGD(df: DataFrame, codeCol: String, numCols: Seq[String],
@@ -1873,7 +1854,7 @@ object Blueprint {
     require(card >= 1 && dim >= 1 && nClass >= 2, "need codes, dims, 2+ classes")
     require(heads >= 1 && dim % heads == 0, s"dim $dim must split into $heads heads")
     require(steps >= 1 && lr > 0, "need steps >= 1 and lr > 0")
-    val nNum = numCols.length; val dh = dim / heads; val k = 1 + nNum
+    val nNum = numCols.length; val dh = dim / heads
     val p0 = if (init != null) init
       else transformerMhaInit(card, dim, nNum, nClass, heads)
     require(shaped(p0.e, card, dim) && shaped(p0.a, nNum, dim) && shaped(p0.c, nNum, dim) &&
@@ -1886,31 +1867,30 @@ object Blueprint {
         u.cube(heads, dh, dim), u.cube(heads, dh, dim), u.cube(heads, dh, dim),
         u.mat(dim, dim), u.mat(nClass, dim), u.vec(nClass))
     }
-    val scaleH = 1.0 / math.sqrt(dh.toDouble)
+    val scaleH = lit(1.0 / math.sqrt(dh.toDouble))
     val theta0 = Array(p0.e, p0.a, p0.c).flatten.flatten ++
       Array(p0.wq, p0.wk, p0.wv).flatten.flatten.flatten ++
       Array(p0.wo, p0.wOut).flatten.flatten ++ p0.bOut
+    val (q, ds, al) = (col("__q"), col("__ds"), col("__al"))
     val theta = (1 to steps).foldLeft(theta0) { (theta, _) =>
       val p = unflat(theta)
-      // token b's gradient through the learned projections: its key path
-      // (ds_b·q) and its value path (α_b·do), plus, for token 0 only, the
-      // query path
-      val dT = (b: Int, j: Int) => (0 until heads).map { g =>
-        val query = (0 until dh).map(r => lit(p.wq(g)(r)(j)) * col(s"__dq${g}_$r"))
-          .reduce(_ + _)
-        val key = (0 until dh).map(r => lit(p.wk(g)(r)(j)) *
-          (col(s"__ds${g}_$b") * col(s"__q${g}_$r"))).reduce(_ + _) * lit(scaleH)
-        val value = (0 until dh).map(r => lit(p.wv(g)(r)(j)) *
-          (col(s"__al${g}_$b") * col(s"__do${g * dh + r}"))).reduce(_ + _)
-        (if (b == 0) query + key else key) + value
-      }.reduce(_ + _)
+      val (wq, wk, wv) = (typedLit(p.wq), typedLit(p.wk), typedLit(p.wv))
+      // token b's gradient through the learned projections, summed over
+      // the heads: its key path (ds_b·q) and its value path (α_b·do),
+      // plus, for token 0 only, the query path
+      val dT = (b: Column) => aggregate(transform(wq, (wqg, g) => {
+          val key = transform(vecMat(transform(q(g), qr => ds(g)(b) * qr), wk(g)),
+            v => v * scaleH)
+          val value = vecMat(transform(col("__do")(g), d => al(g)(b) * d), wv(g))
+          val qk = when(b === 0, zip_with(vecMat(col("__dq")(g), wqg), key, _ + _))
+            .otherwise(key)
+          zip_with(qk, value, _ + _)
+        }), zeros(dim), (acc, h) => zip_with(acc, h, _ + _))
       val back = mhaBackStages(classBack(transformerMhaForwardStaged(df, codeCol, numCols, p),
-          yCol, p.wOut), k, p.wo, heads)
-        .withColumns((for (b <- 0 until k; j <- 0 until dim)
-          yield s"__dT${b}_$j" -> dT(b, j)).toMap)
-      gdStep(back, transformerGrad(numCols, dim,
-        mhaGrads(k, (b, j) => col(s"__t${b}_$j"), heads, dh, dim), i => col(s"__out$i"),
-        nClass), theta, lr, table = dim)
+          yCol, p.wOut), p.wo, heads)
+        .withColumn("__dT", transform(col("__T"), (_, b) => dT(b)))
+      gdStep(back, transformerGrad(nNum, Seq(mhaGrads(dh)), col("__out")), theta, lr,
+        table = dim)
     }
     unflat(theta)
   }
@@ -1925,65 +1905,54 @@ object Blueprint {
 
   /** The DBTransformers' token stage: the [[lookup]] of each row's code
     * in the table `e`, after a NULL numeric value is made to fail the
-    * query, then `__t0_{j}` = the code's table row and `__t{m+1}_{j}` =
-    * numeric column m through its Linear(1, dim) embedder,
-    * `a(m)(j)·x_m + c(m)(j)`. */
+    * query, then the numeric values `__xn` (nNum) and the tokens `__T`
+    * (k × dim): token 0 the code's table row, token m+1 numeric column m
+    * through its Linear(1, dim) embedder, `x_m·a(m)(j) + c(m)(j)`. */
   private def embedTokens(df: DataFrame, codeCol: String, numCols: Seq[String],
       e: Array[Array[Double]], a: Array[Array[Double]], c: Array[Array[Double]]): DataFrame = {
-    val dim = e.head.length
-    lookup(withCheckedNumbers(df, numCols), codeCol, e).withColumns((
-      (0 until dim).map(j => s"__t0_$j" -> element_at(col("__emb"), j + 1)) ++
-      (for (m <- numCols.indices; j <- 0 until dim) yield s"__t${m + 1}_$j" ->
-        (col(numCols(m)).cast("double") * lit(a(m)(j)) + lit(c(m)(j))))).toMap)
+    val xn = col("__xn")
+    lookup(withCheckedNumbers(df, numCols), codeCol, e)
+      .withColumn("__xn", array(numCols.map(col): _*).cast("array<double>"))
+      .withColumn("__T", concat(array(col("__emb")), transform(typedLit(a), (am, m) =>
+        zip_with(am, typedLit(c).getItem(m), (aj, cj) => xn(m) * aj + cj))))
   }
 
-  /** The DBTransformers' class head over its input `in(i)`: logits
-    * `__u{k}`, `__eu{k}`, `__zc` and the class softmax `__pr{k}`. */
-  private def classHead(df: DataFrame, in: Int => Column, wOut: Array[Array[Double]],
-      bOut: Array[Double]): DataFrame = {
-    val classes = wOut.indices
-    df.withColumns(classes.map(kk => s"__u$kk" ->
-        (wOut(kk).indices.map(i => in(i) * lit(wOut(kk)(i))).reduce(_ + _) +
-          lit(bOut(kk)))).toMap)
-      .withColumns(classes.map(kk => s"__eu$kk" -> exp(col(s"__u$kk"))).toMap)
-      .withColumn("__zc", classes.map(kk => col(s"__eu$kk")).reduce(_ + _))
-      .withColumns(classes.map(kk => s"__pr$kk" -> col(s"__eu$kk") / col("__zc")).toMap)
-  }
+  /** The DBTransformers' class head over its input vector `in`: logits
+    * `__u`, `__eu`, `__zc` and the class softmax `__pr` (nClass each). */
+  private def classHead(df: DataFrame, in: Column, wOut: Array[Array[Double]],
+      bOut: Array[Double]): DataFrame =
+    df.withColumn("__u", transform(typedLit(wOut), (wk, kk) =>
+        Similarity.dot(in, wk) + typedLit(bOut).getItem(kk)))
+      .withColumn("__eu", transform(col("__u"), exp(_)))
+      .withColumn("__zc", total(col("__eu")))
+      .withColumn("__pr", transform(col("__eu"), e => e / col("__zc")))
 
-  /** The class head's backward: residuals `__du{k} = p_k − 1[y=k]` and
-    * the head input's gradient `__dout{i} = Σ_k du_k·wOut(k)(i)`. */
+  /** The class head's backward: residuals `__du` = `p_k − 1[y=k]` and
+    * the head input's gradient `__dout` = `Σ_k du_k·wOut(k)`. */
   private def classBack(fwd: DataFrame, yCol: String,
       wOut: Array[Array[Double]]): DataFrame = {
     val y = checkedLabel(yCol, wOut.length)
-    fwd.withColumns(wOut.indices.map(kk => s"__du$kk" ->
-        (col(s"__pr$kk") - when(y === kk, 1.0).otherwise(0.0))).toMap)
-      .withColumns(wOut.head.indices.map(i => s"__dout$i" ->
-        wOut.indices.map(kk => col(s"__du$kk") * lit(wOut(kk)(i))).reduce(_ + _)).toMap)
+    fwd.withColumn("__du", transform(col("__pr"), (p, kk) =>
+        p - when(y === kk, 1.0).otherwise(0.0)))
+      .withColumn("__dout", vecMat(col("__du"), typedLit(wOut)))
   }
 
   /** A DBTransformer's packed per-row gradient in parameter order: the
-    * code's table block (token 0's gradient `__dT0_{j}`), the numeric
-    * embedders' `a` then `c`, the attention's `attn`, then the class
-    * head's over its input `in(i)`. */
-  private def transformerGrad(numCols: Seq[String], dim: Int, attn: Seq[Column],
-      in: Int => Column, nClass: Int): Column = {
-    val dT = (b: Int, j: Int) => col(s"__dT${b}_$j")
-    array(((0 until dim).map(dT(0, _)) ++
-      (for (m <- numCols.indices; j <- 0 until dim)
-        yield dT(m + 1, j) * col(numCols(m)).cast("double")) ++
-      (for (m <- numCols.indices; j <- 0 until dim) yield dT(m + 1, j)) ++ attn ++
-      (for (kk <- 0 until nClass; i <- 0 until dim) yield col(s"__du$kk") * in(i)) ++
-      (0 until nClass).map(kk => col(s"__du$kk"))): _*)
+    * code's table block (token 0's gradient, row 0 of `__dT`), the
+    * numeric embedders' `a` then `c`, the attention's `attn`, then the
+    * class head's over its input `in`. */
+  private def transformerGrad(nNum: Int, attn: Seq[Column], in: Column): Column = {
+    val (dT, du) = (col("__dT"), col("__du"))
+    val dTn = slice(dT, 2, nNum)
+    concat(Seq(dT(0), flatten(zip_with(dTn, col("__xn"), (d, x) => transform(d, v => v * x))),
+      flatten(dTn)) ++ attn ++ Seq(outer(du, in), du): _*)
   }
 
-  /** Mean softmax cross-entropy of a class head's `__pr{k}` against the
+  /** Mean softmax cross-entropy of a class head's `__pr` against the
     * integer labels in `yCol`. */
-  private def classLogLoss(fwd: DataFrame, yCol: String, nClass: Int): Double = {
-    val y = checkedLabel(yCol, nClass)
-    val py = (0 until nClass).map(kk =>
-      when(y === kk, col(s"__pr$kk")).otherwise(lit(0.0))).reduce(_ + _)
-    fwd.agg(avg(-log(py))).collect()(0).getDouble(0)
-  }
+  private def classLogLoss(fwd: DataFrame, yCol: String, nClass: Int): Double =
+    fwd.agg(avg(-log(col("__pr")(checkedLabel(yCol, nClass)))))
+      .collect()(0).getDouble(0)
 
   /** One-vs-rest ridge-classifier fit of the [[decodeClasses]] weights:
     * one ridge regression per class against its 0/1 indicator (a standard

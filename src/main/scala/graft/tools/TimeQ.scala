@@ -1,10 +1,13 @@
 package graft.tools
+import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 import org.apache.spark.sql.SparkSession
 /** Fresh-JVM per-query timer: `runMain graft.tools.TimeQ <query>...` —
   * isolates a query's cost from the 55-query sweep's heap/GC pressure.
   * Each query's line also gives the number of Spark jobs it started
   * (counted by a listener on job start, so it includes AQE's stage jobs
-  * and broadcasts). */
+  * and broadcasts) and the number of classes codegen compiled for it
+  * (the growth of the compilation-time histogram's count; a class found
+  * in Spark's codegen cache is not compiled again). */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,11 +38,13 @@ object TimeQ {
     for (n <- args) {
       org.apache.spark.sql.GraftListenerProbe.drain(spark)
       jobs.set(0)
+      val compiled = METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val c = graft.SparkEntry.queries(n)(spark, sfDir).count()
       val s = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftListenerProbe.drain(spark)
-      println(f"[time] $n rows=$c $s%.1f s jobs=${jobs.get}")
+      println(f"[time] $n rows=$c $s%.1f s jobs=${jobs.get} " +
+        s"compiles=${METRIC_COMPILATION_TIME.getCount - compiled}")
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

@@ -186,6 +186,34 @@ class BlueprintSpec extends SparkSpec {
     assert(p(0) == ((0L, Seq(4.0, 6.0))))
   }
 
+  private type Feat = Option[Seq[Option[Double]]]
+
+  test("forward: a NULL, empty or NULL-holding feature array fails the query, naming its table") {
+    def ok(xs: Double*): Feat = Some(xs.map(Some(_)))
+    val parents = Seq(0L -> ok(0.0, 0.0), 1L -> ok(10.0, 10.0))
+    val children = Seq(0L -> ok(2.0, 4.0), 1L -> ok(6.0, 8.0), 2L -> ok(1.0, 1.0))
+    // (case, table, the id whose features break, its features)
+    val cases: Seq[(String, String, Long, Feat)] = Seq(
+      ("empty child array", "child", 1L, Some(Nil)),
+      ("NULL child array", "child", 1L, None),
+      ("child array holding a NULL", "child", 1L, Some(Seq(Some(6.0), None))),
+      ("empty parent array", "parent", 0L, Some(Nil)),
+      ("NULL parent array", "parent", 0L, None),
+      ("parent array holding a NULL", "parent", 0L, Some(Seq(None, Some(0.0)))))
+    // under sum an empty child array would read as "no message"
+    for ((name, table, id, feat) <- cases; aggr <- Seq("sum", "mean")) {
+      withClue(s"$name, aggr=$aggr: ") {
+        def frame(t: String, rows: Seq[(Long, Feat)]) =
+          rows.map { case (i, f) => (i, if (t == table && i == id) feat else f) }.toDF("id", "feat")
+        failsWith(s"table '$table': feature column 'feat' must hold a non-empty array") {
+          Blueprint.forward(Map("parent" -> frame("parent", parents),
+              "child" -> frame("child", children)), edges,
+            Blueprint.Config(layers = 1, aggr = aggr)).values.foreach(_.collect())
+        }
+      }
+    }
+  }
+
   test("batch-size heuristic matches the reference formula") {
     assert(Blueprint.batchSizeHeuristic(500) == 16)    // 2^0 < 16 floor
     assert(Blueprint.batchSizeHeuristic(64000) == 128) // 2^round(log2(128))
@@ -962,6 +990,8 @@ class BlueprintSpec extends SparkSpec {
     val noCode = "no row carries a code inside [0, card)"
     def gauss(seed: Int) = { val rnd = new scala.util.Random(seed); () => rnd.nextGaussian() }
     def vecs(seed: Int, n: Int, w: Int) = { val g = gauss(seed); Seq.fill(n)(Array.fill(w)(g())) }
+    // two heads of width w / 2
+    def cube(g: () => Double, w: Int) = Array.fill(2, w / 2, w)(0.3 * g())
     // repartitioned, so the optimizer cannot pre-compute the per-row
     // projection over a local relation: the plan under test is the real one
     def rows(df: org.apache.spark.sql.DataFrame, none: Boolean) =
@@ -994,22 +1024,32 @@ class BlueprintSpec extends SparkSpec {
           steps = steps, lr = 0.1, init = Blueprint.CrossAttnParams(
             Array.fill(w)(0.3 * g()), Array.fill(w)(g()), g()))
       }),
-      KernelTrainer("fitTransformerGD", vectorForm = false, noCode, { (_, _, steps, none) =>
+      KernelTrainer("fitTransformerGD", vectorForm = true, noCode, { (w, seed, steps, none) =>
+        val g = gauss(seed)
         val df = ys.indices.map(i => (i % 3, 0.1 * i, 1.0 - 0.2 * i, i % 2))
           .toDF("code", "x1", "x2", "y")
         Blueprint.fitTransformerGD(rows(df, none), "code", Seq("x1", "x2"), "y", card = 3,
-          dim = 2, nClass = 2, steps = steps, lr = 0.1)
+          dim = w, nClass = 2, steps = steps, lr = 0.1, init = Blueprint.TransformerParams(
+            Array.fill(3, w)(0.3 * g()), Array.fill(2, w)(0.3 * g()), Array.fill(2, w)(0.3 * g()),
+            Array.fill(2, w)(0.3 * g()), Array.fill(2)(0.3 * g())))
       }),
-      KernelTrainer("fitMhaGD", vectorForm = false, empty, { (_, _, steps, none) =>
-        val df = vecs(1, 6, 2).zip(vecs(2, 6, 2)).zip(ys)
+      KernelTrainer("fitMhaGD", vectorForm = true, empty, { (w, seed, steps, none) =>
+        val g = gauss(seed)
+        val df = vecs(1, 6, w).zip(vecs(2, 6, w)).zip(ys)
           .map { case ((a, b), y) => (a, b, y) }.toDF("t0", "t1", "y")
-        Blueprint.fitMhaGD(rows(df, none), Seq("t0", "t1"), "y", dim = 2, heads = 2,
-          steps = steps, lr = 0.1)
+        Blueprint.fitMhaGD(rows(df, none), Seq("t0", "t1"), "y", dim = w, heads = 2,
+          steps = steps, lr = 0.1, init = Blueprint.MhaParams(cube(g, w), cube(g, w),
+            cube(g, w), Array.fill(w, w)(0.3 * g()), Array.fill(w)(0.3 * g()), 0.3 * g()))
       }),
-      KernelTrainer("fitTransformerMhaGD", vectorForm = false, noCode, { (_, _, steps, none) =>
+      KernelTrainer("fitTransformerMhaGD", vectorForm = true, noCode, { (w, seed, steps, none) =>
+        val g = gauss(seed)
         val df = ys.indices.map(i => (i % 3, 0.1 * i, i % 2)).toDF("code", "x1", "y")
         Blueprint.fitTransformerMhaGD(rows(df, none), "code", Seq("x1"), "y", card = 3,
-          dim = 2, nClass = 2, heads = 2, steps = steps, lr = 0.1)
+          dim = w, nClass = 2, heads = 2, steps = steps, lr = 0.1,
+          init = Blueprint.TransformerMhaParams(Array.fill(3, w)(0.3 * g()),
+            Array.fill(1, w)(0.3 * g()), Array.fill(1, w)(0.3 * g()), cube(g, w),
+            cube(g, w), cube(g, w), Array.fill(w, w)(0.3 * g()),
+            Array.fill(2, w)(0.3 * g()), Array.fill(2)(0.3 * g())))
       }),
       KernelTrainer("fitGnn2GD", vectorForm = true, empty, { (w, seed, steps, none) =>
         val (g, h1) = (gauss(seed), math.max(1, w / 2))
@@ -1042,6 +1082,94 @@ class BlueprintSpec extends SparkSpec {
           val (big, _) = actionsOf(t.run(64, 5, 1, false))
           assert(big.length == 1 && expressionCount(big.head) == expressionCount(small.head),
             "plan size must not grow with the shape")
+        }
+      }
+    }
+  }
+
+  private def flatParams(p: Any): Seq[Double] = p match {
+    case p: Blueprint.CrossAttnParams => p.q.toSeq ++ p.w :+ p.b
+    case p: Blueprint.TransformerParams =>
+      (Array(p.e, p.a, p.c, p.wOut).flatten.flatten ++ p.bOut).toSeq
+    case p: Blueprint.MhaParams =>
+      (Array(p.wq, p.wk, p.wv).flatten.flatten.flatten ++ p.wo.flatten ++ p.w :+ p.b).toSeq
+    case p: Blueprint.TransformerMhaParams =>
+      (Array(p.e, p.a, p.c).flatten.flatten ++ Array(p.wq, p.wk, p.wv).flatten.flatten.flatten ++
+        Array(p.wo, p.wOut).flatten.flatten ++ p.bOut).toSeq
+  }
+
+  test("the attention trainers' 2-step fits keep the per-scalar form's numbers") {
+    // recorded from the form that wrote every weight as its own literal
+    // into per-scalar columns (width 4, seed 5, 2 steps); the vector form
+    // keeps each operation's order, so only the gradient sum's merge
+    // order across partitions may move a last bit
+    val want = Map(
+      "fitCrossAttnGD" -> Seq(
+        0.06892555624325325, -0.15500294717806573, -0.29132625666195405, -0.9042586240743176,
+        -0.48109369138638086, 1.748095679995885, -0.8150227919693706, 0.9522686153560217,
+        0.3623679272181731),
+      "fitTransformerGD" -> Seq(
+        0.07046594520262374, -0.1258792190927364, -0.2664464417700073, -0.9166711810263698,
+        -0.1429155228998268, 0.5493011390325259, -0.24026299680599295, 0.28117481279818757,
+        0.10874231553330982, -0.07784188996997962, 0.29727722345784063, -0.046993282040326906,
+        0.18914969235175286, -0.1061213469967999, -0.4437300568208397, 0.16444719131846833,
+        0.0057990596434606715, -0.2464355384515487, -0.05525281419132545, 0.022665645851380374,
+        -0.20904369797851446, -0.6173672893229739, -0.11421756511898261, -0.21580939248947378,
+        -0.31280725966160294, 0.4003721433691519, -0.20496202820912454, -0.1789560404998696,
+        -0.04436724833102637, 0.017447668259322143, 0.0894201894040225, 0.3564335073117816,
+        0.362513481582743, 0.46406441256663894, -0.3158536485983902, 0.28281233971588754,
+        0.011102009953735371, -2.4020882546572746E-5),
+      "fitMhaGD" -> Seq(
+        0.07031090153265811, -0.12605145401998955, -0.26661344295589784, -0.9167985088479689,
+        -0.14320092607001558, 0.5492174404434532, -0.24044305204415398, 0.2812190445138799,
+        0.10844415739575919, -0.07830818330451839, 0.29728876793964526, -0.04693012068372503,
+        0.18847506999555308, -0.10707569210345283, -0.4428162645160918, 0.1643093203881148,
+        0.006570206847968127, -0.2451241646490291, -0.05708193069726633, 0.022994515222838813,
+        -0.20894168854384806, -0.6175169255165733, -0.11382378276034176, -0.21607375123182648,
+        -0.3128395278730089, 0.4003820495804335, -0.2046788900691304, -0.1788595141917596,
+        -0.04400284546347904, 0.01745960448430277, 0.0884504456690878, 0.3564273791998147,
+        0.36086770458849127, 0.46178534059718795, -0.3154619685793281, 0.28304075266787665,
+        0.013644231310102641, 0.002936453451545266, 0.8654075158680395, -0.09749919724460726,
+        0.12426702012681266, -0.11107151764457827, 0.19000999213589975, 0.033951030334934997,
+        -0.041371266160560985, 0.004028127529548779, -0.4096449174001945, 0.28719000928644256,
+        0.291423187767668, 0.07306527385051456, -0.21242368471520717, 0.3444916942175575,
+        0.12131087378621509, -0.13368152232694777, 0.21041535014500937, 0.18009196649951315,
+        0.317611415429852, -0.13321273823749186, -0.17621991817259874, -0.10663618241244395,
+        0.34210099114658754, -0.7317442666788071, -0.8740769943340202, 0.1506029951959792,
+        0.018227511506989813, 0.12416745869203819, 0.009893797960379022, 0.13400972382408483,
+        -0.2725641939109187),
+      "fitTransformerMhaGD" -> Seq(
+        0.07053795749485463, -0.12600518008448336, -0.2665556082405803, -0.9168110699544662,
+        -0.14281377490962593, 0.5493194845043323, -0.24026763917276736, 0.28104344951769045,
+        0.1086188763363341, -0.07825027201156606, 0.29751712976406075, -0.046918395431637304,
+        0.18850575399358532, -0.10730862511637503, -0.44292835009648285, 0.16431932337652455,
+        0.006922164849186814, -0.2454765943573891, -0.05622002527150043, 0.022366030895028245,
+        -0.2091404517733687, -0.6174381288338712, -0.11412657596683237, -0.21572259113960934,
+        -0.31283868191480346, 0.4004087581879977, -0.2049810361175208, -0.17889003481954455,
+        -0.04397079690208992, 0.017528773093424294, 0.08892284861794603, 0.35646621118213573,
+        0.3621204421204805, 0.4639737863904692, -0.3153466361242672, 0.28277999879116333,
+        0.011646898155692417, -5.668176895303492E-4, 0.8652249977038109, -0.09707905711494412,
+        0.12234250554856016, -0.11532393078733162, 0.18971886076671762, 0.03408373536983181,
+        -0.04043972878141975, 0.0060830060880653885, -0.4095062939827394, 0.2871247016937385,
+        0.29182680497987046, 0.07310704658778926, -0.21246090746126983, 0.34444251286650746,
+        0.12367575073999519, -0.13350244947555004, 0.2099606764056769, 0.17984523464079608,
+        0.3178840952097523, -0.13319104297336018, -0.17626844011748088, -0.10666496195157099,
+        0.34465959516686245, -0.7314981513920011, -0.874389266455163, 0.15031668984248903,
+        0.023283375512875234, 0.12549036437466077, 0.016416255421052725, 0.14033830530162966,
+        -0.28768405054529017, -0.3782897735461577, 0.22467468072514077, -0.005451057471690373,
+        0.18091422950307118, -0.25300612410732315, -0.009787267852494327, 0.1871997840602739,
+        0.43684715555319664, 0.09325044767259943, -0.3217721563631564, 0.2253069644622125,
+        0.43699643743285604, -0.4119419955325313, 0.08239620735316405, -0.2223287921702195,
+        0.16074203557498637, 0.4325252759962741, 0.5080980489391459, -0.26459933974820854,
+        -0.015624138270425681, -0.152996180954731, 0.43980624870311735, 0.21228914148774367,
+        -0.3546185413655669, -0.4453628215927481))
+    kernelTrainers.filter(t => want.contains(t.name)).foreach { t =>
+      withClue(s"${t.name}: ") {
+        val got = flatParams(t.run(4, 5, 2, false))
+        assert(got.length == want(t.name).length)
+        got.zip(want(t.name)).zipWithIndex.foreach { case ((a, b), k) =>
+          assert(a == b || math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b)),
+            s"parameter $k: $a vs recorded $b")
         }
       }
     }
@@ -1300,7 +1428,7 @@ class BlueprintSpec extends SparkSpec {
       Array(eye.map(_.clone())), Array(eye.map(_.clone())),
       eye.map(_.clone()), Array(0.0, 0.0), 0.0)
     val staged = Blueprint.mhaForwardStaged(df, Seq("t0", "t1"), p)
-      .select(col("__out0"), col("__out1")).collect()
+      .select(col("__out")(0), col("__out")(1)).collect()
     val csa = Blueprint.columnSelfAttention(Seq(col("t0"), col("t1")), dim = 2)(0)
     val direct = df.select(csa(0).as("a"), csa(1).as("b")).collect()
     staged.zip(direct).foreach { case (s, d) =>
