@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.agg.VectorAgg
+import graft.functions.ArrayKernel.{Tensor, cube, matVec, matrix, minus, plus, scalar, scale,
+  softmax, softmaxBack, stableSoftmax, stack, transpose, vecMat, vector}
 import graft.graph.{EdgeType, RelGraph}
 import graft.similarity.Similarity
 
@@ -64,10 +66,8 @@ object Blueprint {
       cfg: Config = Config()): Map[String, DataFrame] = {
 
     var state = nodes.map { case (t, df) =>
-      val f = col("feat")
-      t -> cfg.pre(df).withColumn("feat", when(size(f) > 0 && forall(f, _.isNotNull), f)
-        .otherwise(raise_error(concat(lit(s"table '$t': feature column 'feat' must hold a " +
-          "non-empty array of non-NULL values, got "), coalesce(f.cast("string"), lit("NULL"))))))
+      t -> cfg.pre(df).withColumn("feat",
+        checkedFeatures(col("feat"), 0, s"table '$t': feature column 'feat'"))
     }
     (1 to cfg.layers).foreach { _ =>
       // per edge type: reduce messages per destination (A7; attn = A9
@@ -711,25 +711,12 @@ object Blueprint {
   private def outer(a: Column, b: Column): Column =
     flatten(transform(a, ai => transform(b, bj => ai * bj)))
 
-  /** `m·v`: each row of the matrix `m` dotted with the vector `v`. */
-  private def matVec(m: Column, v: Column): Column =
-    transform(m, row => Similarity.dot(row, v))
+  /** The outer product `a ⊗ b` of two tensors, `a_i·b_j` with a's axes
+    * first; `b` may carry a leading batch axes of `a` (one `b` per head). */
+  private def outer(a: Tensor, b: Tensor): Tensor = scale(b, a)
 
-  /** `vᵀ·m` = `Σ_r v_r·m_r` over the rows of the matrix `m`, elementwise;
-    * each sum folds left to right from 0.0 ([[Similarity.dot]]). */
-  private def vecMat(v: Column, m: Column): Column =
-    transform(m(0), (_, j) => Similarity.dot(v, transform(m, row => row(j))))
-
-  /** The sum `Σ_b v_b` of a vector column, left to right from 0.0. */
-  private def total(v: Column): Column = aggregate(v, lit(0.0), _ + _)
-
-  /** The backward of a softmax `al` from its adjoint `dal`:
-    * `ds_b = α_b·(dα_b − Σ_c α_c·dα_c)`. The Σ is re-evaluated per
-    * element, k² multiply-adds for k scores. */
-  private def softmaxBack(al: Column, dal: Column): Column = {
-    val s = Similarity.dot(al, dal)
-    zip_with(al, dal, (a, d) => a * (d - s))
-  }
+  /** The tensor of `shape` held by the stage column `name`. */
+  private def stage(name: String, shape: Int*): Tensor = Tensor(col(name), shape)
 
   /** The logistic function, op order `1/(1+exp(−z))` (what the SQL
     * restatements spell out). */
@@ -740,14 +727,17 @@ object Blueprint {
     avg(-(y * log(p) + (lit(1.0) - y) * log(lit(1.0) - p)))
 
   /** `c` as `array<double>`, failing the query on a row whose array is
-    * not `dim` long, is NULL or holds a NULL element: element access past
-    * the end is NULL with ANSI off and sums skip NULLs, so such a row
-    * would otherwise drop out of a gradient sum while a count still
-    * counts it. `what` names the column in the error. */
+    * not `dim` long (with `dim` 0: is empty), is NULL or holds a NULL
+    * element: element access past the end is NULL with ANSI off and sums
+    * skip NULLs, so such a row would otherwise drop out of a gradient sum
+    * while a count still counts it. `what` names the column in the error. */
   private def checkedFeatures(c: Column, dim: Int, what: String): Column = {
     val f = c.cast("array<double>")
-    when(size(f) === dim && forall(f, _.isNotNull), f)
-      .otherwise(raise_error(concat(lit(s"$what must hold $dim non-NULL values, got "),
+    val (fits, want) =
+      if (dim > 0) (size(f) === dim, s"$dim non-NULL values")
+      else (size(f) > 0, "a non-empty array of non-NULL values")
+    when(fits && forall(f, _.isNotNull), f)
+      .otherwise(raise_error(concat(lit(s"$what must hold $want, got "),
         coalesce(f.cast("string"), lit("NULL")))).cast("array<double>"))
   }
 
@@ -1345,35 +1335,32 @@ object Blueprint {
       val u = new Unflat(theta)
       CrossAttnParams(u.vec(dim), u.vec(dim), u.scalar)
     }
-    val (x, dm) = (col("__T"), col("__dm"))
-    val scale = 1.0 / math.sqrt(dim.toDouble)
+    val k = tokenCols.length
+    val (x, dm) = (stage("__T", k, dim), scalar(col("__dm")))
+    val scaleD = scalar(lit(1.0 / math.sqrt(dim.toDouble)))
     val theta = (1 to steps).foldLeft(p0.q ++ p0.w :+ p0.b) { (theta, _) =>
       val p = unflat(theta)
       val back = crossAttnForward(df, tokenCols, yCol, p)
         .withColumn("__dm", col("__p") - col("__y"))
-        .withColumn("__g", transform(x, xb => dm * Similarity.dot(xb, Similarity.litVec(p.w))))
-        .withColumn("__ds", softmaxBack(col("__al"), col("__g")))
-      val gq = transform(vecMat(col("__ds"), x), v => v * lit(scale))
-      gdStep(back, concat(gq, transform(col("__a"), ai => dm * ai), array(dm)), theta, lr)
+        .withColumn("__ds", softmaxBack(stage("__al", k), scale(matVec(x, vector(p.w)), dm)).c)
+      gdStep(back, concat(scale(vecMat(stage("__ds", k), x), scaleD).c,
+        scale(stage("__a", dim), dm).c, array(dm.c)), theta, lr)
     }
     unflat(theta)
   }
 
   /** [[fitCrossAttnGD]]'s forward over the checked token rows: the tokens
-    * `__T` (k × dim), the score exponentials `__e`, their sum `__z`, the
-    * softmax `__al`, the attended vector `__a`, the prediction `__p` and
-    * the label `__y`. */
+    * `__T` (k × dim, flat), the softmax `__al` (k), the attended vector `__a`,
+    * the prediction `__p` and the label `__y`. */
   private def crossAttnForward(df: DataFrame, tokenCols: Seq[String], yCol: String,
       p: CrossAttnParams): DataFrame = {
-    val dim = p.q.length
-    val scale = 1.0 / math.sqrt(dim.toDouble)
+    val (k, dim) = (tokenCols.length, p.q.length)
+    val x = stage("__T", k, dim)
+    val scaleD = scalar(lit(1.0 / math.sqrt(dim.toDouble)))
     withCheckedTokens(df, tokenCols, dim)
-      .withColumn("__T", array(tokenCols.map(col): _*))
-      .withColumn("__e", transform(col("__T"), x =>
-        exp(Similarity.dot(x, Similarity.litVec(p.q)) * lit(scale))))
-      .withColumn("__z", total(col("__e")))
-      .withColumn("__al", transform(col("__e"), e => e / col("__z")))
-      .withColumn("__a", vecMat(col("__al"), col("__T")))
+      .withColumn("__T", concat(tokenCols.map(col): _*))
+      .withColumn("__al", softmax(scale(matVec(x, vector(p.q)), scaleD)).c)
+      .withColumn("__a", vecMat(stage("__al", k), x).c)
       .withColumn("__p", sigmoid(Similarity.dot(withOne(col("__a")),
         Similarity.litVec(p.w :+ p.b))))
       .withColumn("__y", checkedLabel(yCol))
@@ -1411,8 +1398,8 @@ object Blueprint {
 
   /** The row-local forward of [[fitTransformerGD]]'s model as a STAGED
     * projection chain over [[embedTokens]]' tokens: each intermediate
-    * (tokens, score exponentials, softmax weights, attended
-    * vector, class probabilities) lands as a NAMED column computed once
+    * (tokens, softmax weights, attended vector, class probabilities)
+    * lands as a NAMED column computed once
     * per row, the dataflow form of the oracle's CTE chain. Inlining the
     * same arithmetic as raw expressions duplicates each shared subtree
     * at every use site — the gradient sums then carry the forward tens
@@ -1423,19 +1410,19 @@ object Blueprint {
     * tree. Shared by the fit loop and [[transformerLogLoss]] so forward
     * and backward can never drift apart.
     *
-    * Each stage is one array column: [[embedTokens]]' columns, then the
-    * score exponentials `__ex` (k), their sum `__z`, the softmax `__al`
-    * (k), the attended vector `__o` (dim) and [[classHead]]'s columns. */
+    * Each stage is one flat array column computed by
+    * [[graft.functions.ArrayKernel]]s, native expressions that stay in
+    * whole-stage codegen: [[embedTokens]]' columns, then the softmax
+    * `__al` (k), the attended vector `__o` (dim) and [[classHead]]'s
+    * columns. */
   private def transformerForwardStaged(df: DataFrame, codeCol: String,
       numCols: Seq[String], p: TransformerParams): DataFrame = {
-    val scale = 1.0 / math.sqrt(p.e.head.length.toDouble)
-    val t = col("__T")
+    val (k, dim) = (numCols.length + 1, p.e.head.length)
+    val t = stage("__T", k, dim)
     val attended = embedTokens(df, codeCol, numCols, p.e, p.a, p.c)
-      .withColumn("__ex", transform(t, tb => exp(Similarity.dot(t(0), tb) * lit(scale))))
-      .withColumn("__z", total(col("__ex")))
-      .withColumn("__al", transform(col("__ex"), e => e / col("__z")))
-      .withColumn("__o", vecMat(col("__al"), t))
-    classHead(attended, col("__o"), p.wOut, p.bOut)
+      .withColumn("__al", softmax(scale(matVec(t, t(0)), scalar(lit(1.0 / math.sqrt(dim))))).c)
+      .withColumn("__o", vecMat(stage("__al", k), t).c)
+    classHead(attended, stage("__o", dim), p.wOut, p.bOut)
   }
 
   /** The reference's DBTransformer trained END-TO-END
@@ -1483,25 +1470,26 @@ object Blueprint {
       TransformerParams(u.mat(card, dim), u.mat(nNum, dim), u.mat(nNum, dim),
         u.mat(nClass, dim), u.vec(nClass))
     }
-    val scale = lit(1.0 / math.sqrt(dim.toDouble))
-    val (t, al, dS, dout) = (col("__T"), col("__al"), col("__dS"), col("__dout"))
+    val k = nNum + 1
+    val scaleD = scalar(lit(1.0 / math.sqrt(dim.toDouble)))
+    val (t, al, dS, dout) = (stage("__T", k, dim), stage("__al", k), stage("__dS", k),
+      stage("__dout", dim))
+    // token 0's score path: the query of every score and its own key
+    // (2·dS_0·t_0), plus the numeric tokens' keys (Σ_b≥1 dS_b·t_b)
+    val query = scale(t(0), scalar(dS(0).c * lit(2.0)))
+    val queryKey = if (nNum == 0) query else plus(query, vecMat(dS.rows(1, nNum), t.rows(1, nNum)))
     val theta0 = Array(p0.e, p0.a, p0.c, p0.wOut).flatten.flatten ++ p0.bOut
     val theta = (1 to steps).foldLeft(theta0) { (theta, _) =>
       val p = unflat(theta)
       // backward stages continue the forward's projection chain — every
       // adjoint lands as a named column computed once per row
       val back = classBack(transformerForwardStaged(df, codeCol, numCols, p), yCol, p.wOut)
-        .withColumn("__dAl", transform(t, tb => Similarity.dot(dout, tb)))
-        .withColumn("__dS", softmaxBack(al, col("__dAl")))
-        // token gradients: value path + score paths (token 0 is the query
-        // of every score and its own key; token b>=1 keys only s_b)
-        .withColumn("__dT", concat(
-          array(transform(t(0), (t0j, j) => al(0) * dout(j) + (dS(0) * lit(2.0) * t0j +
-            Similarity.dot(slice(dS, 2, nNum), transform(slice(t, 2, nNum), tb => tb(j)))) *
-            scale)),
-          zip_with(slice(al, 2, nNum), slice(dS, 2, nNum), (ab, dsb) =>
-            zip_with(dout, t(0), (dj, t0j) => ab * dj + dsb * t0j * scale))))
-      gdStep(back, transformerGrad(nNum, Nil, col("__o")), theta, lr, table = dim)
+        .withColumn("__dS", softmaxBack(al, matVec(t, dout)).c)
+        // token gradients: value path + score paths (token b>=1 keys only s_b)
+        .withColumn("__dT", stack(
+          plus(scale(dout, al(0)), scale(queryKey, scaleD)).as(Seq(1, dim)),
+          plus(scale(dout, al.rows(1, nNum)), scale(scale(t(0), dS.rows(1, nNum)), scaleD))).c)
+      gdStep(back, transformerGrad(nNum, nClass, Nil, stage("__o", dim)), theta, lr, table = dim)
     }
     unflat(theta)
   }
@@ -1556,40 +1544,36 @@ object Blueprint {
     *   ho_r = Σ_b α_b·v_br                o = concat_g(ho)
     *   out_i = Σ_j wo(i)(j)·o_j
     *
-    * Adds the tokens `__T` (k × dim), then [[mhaStages]]' columns.
+    * Adds the tokens `__T` (k × dim, flat), then [[mhaStages]]' columns.
     * Row-local, NO shuffle.
     * Shared by [[fitMhaGD]], [[mhaLogLoss]] and the mha1 registry query
     * so forward and backward can never drift apart. */
   private[graft] def mhaForwardStaged(df: DataFrame, tokenCols: Seq[String],
       p: MhaParams): DataFrame =
-    mhaStages(df.withColumn("__T", array(tokenCols.map(t => col(t).cast("array<double>")): _*)),
-      p.wq, p.wk, p.wv, p.wo)
+    mhaStages(df.withColumn("__T", concat(tokenCols.map(t => col(t).cast("array<double>")): _*)),
+      tokenCols.length, p.wq, p.wk, p.wv, p.wo)
 
   /** The attention stages of [[mhaForwardStaged]] and
     * [[transformerMhaForwardStaged]] over the k × dim tokens `__T`, each
-    * one array column: `__q` (heads × dh), `__k` and `__v` (heads × k ×
-    * dh), `__s`, `__e`, `__al` (softmax; heads × k), `__mx`, `__z`
-    * (heads), `__o` (the concatenated heads, dim) and `__out` (dim). Each
-    * projection enters as one literal. */
-  private def mhaStages(df: DataFrame, wq: Array[Array[Array[Double]]],
+    * one flat array column: `__q` (heads × dh), `__k` and `__v` (heads ×
+    * k × dh), the softmax `__al` (heads × k), `__o` (the concatenated
+    * heads, dim) and `__out` (dim). Each projection enters as one literal,
+    * and every stage is one [[graft.functions.ArrayKernel]] batched over
+    * the heads. */
+  private def mhaStages(df: DataFrame, k: Int, wq: Array[Array[Array[Double]]],
       wk: Array[Array[Array[Double]]], wv: Array[Array[Array[Double]]],
       wo: Array[Array[Double]]): DataFrame = {
-    val scaleH = lit(1.0 / math.sqrt(wq.head.length.toDouble))
-    val x = col("__T")
-    val perToken = (w: Array[Array[Array[Double]]]) =>
-      transform(typedLit(w), wg => transform(x, xb => matVec(wg, xb)))
-    df.withColumn("__q", transform(typedLit(wq), wg => matVec(wg, x(0))))
-      .withColumn("__k", perToken(wk))
-      .withColumn("__v", perToken(wv))
-      .withColumn("__s", zip_with(col("__q"), col("__k"), (qg, kg) =>
-        transform(kg, kb => Similarity.dot(qg, kb) * scaleH)))
-      .withColumn("__mx", transform(col("__s"), array_max(_)))
-      .withColumn("__e", zip_with(col("__s"), col("__mx"), (sg, m) =>
-        transform(sg, s => exp(s - m))))
-      .withColumn("__z", transform(col("__e"), total(_)))
-      .withColumn("__al", zip_with(col("__e"), col("__z"), (eg, z) => transform(eg, e => e / z)))
-      .withColumn("__o", flatten(zip_with(col("__al"), col("__v"), vecMat)))
-      .withColumn("__out", matVec(typedLit(wo), col("__o")))
+    val (heads, dh, dim) = (wq.length, wq.head.length, wo.length)
+    val scaleH = scalar(lit(1.0 / math.sqrt(dh.toDouble)))
+    val x = stage("__T", k, dim)
+    // every head projects every token: the tokens once per head
+    df.withColumn("__q", matVec(cube(wq, dh, dim), x(0)).c)
+      .withColumn("__k", matVec(cube(wk, dh, dim), x.repeat(heads)).c)
+      .withColumn("__v", matVec(cube(wv, dh, dim), x.repeat(heads)).c)
+      .withColumn("__al", stableSoftmax(scale(matVec(stage("__k", heads, k, dh),
+        stage("__q", heads, dh)), scaleH)).c)
+      .withColumn("__o", vecMat(stage("__al", heads, k), stage("__v", heads, k, dh)).c)
+      .withColumn("__out", matVec(matrix(wo, dim), stage("__o", dim)).c)
   }
 
   /** Multi-head attention with learned Q/K/V/output projections, trained
@@ -1633,7 +1617,7 @@ object Blueprint {
         u.mat(dim, dim), u.vec(dim), u.scalar)
     }
     val rows = withCheckedTokens(df, tokenCols, dim)
-    val dm = col("__dm")
+    val (k, dm) = (tokenCols.length, scalar(col("__dm")))
     val theta0 = Array(p0.wq, p0.wk, p0.wv).flatten.flatten.flatten ++
       p0.wo.flatten ++ p0.w :+ p0.b
     val theta = (1 to steps).foldLeft(theta0) { (theta, _) =>
@@ -1641,41 +1625,40 @@ object Blueprint {
       // backward stages continue the forward's projection chain
       val back = mhaBackStages(mhaForwardStaged(rows, tokenCols, p)
         .withColumn("__dm", mhaReadout(p) - checkedLabel(yCol))
-        .withColumn("__dout", transform(Similarity.litVec(p.w), wi => dm * wi)), p.wo, heads)
-      gdStep(back, concat(mhaGrads(dh), transform(col("__out"), o => dm * o), array(dm)),
+        .withColumn("__dout", scale(vector(p.w), dm).c), k, p.wo, heads)
+      gdStep(back, concat(mhaGrads(k, heads, dh), scale(stage("__out", dim), dm).c, array(dm.c)),
         theta, lr)
     }
     unflat(theta)
   }
 
   /** The backward of [[mhaStages]] from the out-projection's input
-    * gradient `__dout` (dim): `__do` (heads × dh), and per head `__dal`
-    * (k), the softmax Jacobian `__ds` (k) and `__dq` (dh). */
-  private def mhaBackStages(df: DataFrame, wo: Array[Array[Double]], heads: Int): DataFrame = {
-    val dh = wo.length / heads
-    val scaleH = lit(1.0 / math.sqrt(dh.toDouble))
+    * gradient `__dout` (dim): `__do` (heads × dh), the softmax Jacobian
+    * `__ds` (heads × k) and `__dq` (heads × dh). */
+  private def mhaBackStages(df: DataFrame, k: Int, wo: Array[Array[Double]],
+      heads: Int): DataFrame = {
+    val (dim, dh) = (wo.length, wo.length / heads)
+    val scaleH = scalar(lit(1.0 / math.sqrt(dh.toDouble)))
     // wo's columns, head by head: row r of head g is column g·dh + r
     val woT = Array.tabulate(heads, dh)((g, r) => wo.map(_(g * dh + r)))
-    df.withColumn("__do", transform(typedLit(woT), wg => matVec(wg, col("__dout"))))
-      .withColumn("__dal", zip_with(col("__do"), col("__v"), (dog, vg) =>
-        transform(vg, vb => Similarity.dot(dog, vb))))
-      .withColumn("__ds", zip_with(col("__al"), col("__dal"), softmaxBack))
-      .withColumn("__dq", zip_with(col("__ds"), col("__k"), (dsg, kg) =>
-        transform(vecMat(dsg, kg), v => v * scaleH)))
+    df.withColumn("__do", matVec(cube(woT, dh, dim), stage("__dout", dim)).c)
+      .withColumn("__ds", softmaxBack(stage("__al", heads, k),
+        matVec(stage("__v", heads, k, dh), stage("__do", heads, dh))).c)
+      .withColumn("__dq", scale(vecMat(stage("__ds", heads, k), stage("__k", heads, k, dh)),
+        scaleH).c)
   }
 
   /** The per-row gradients of [[mhaStages]]' projections over the tokens
     * `__T`, in parameter order: wq, wk, wv (head-, row-, column-major),
     * then wo (row-major). */
-  private def mhaGrads(dh: Int): Column = {
-    val scaleH = lit(1.0 / math.sqrt(dh.toDouble))
-    val x = col("__T")
+  private def mhaGrads(k: Int, heads: Int, dh: Int): Column = {
+    val (dim, scaleH) = (heads * dh, scalar(lit(1.0 / math.sqrt(dh.toDouble))))
+    val x = stage("__T", k, dim)
     concat(
-      flatten(transform(col("__dq"), dqg => outer(dqg, x(0)))),
-      flatten(zip_with(col("__q"), col("__ds"), (qg, dsg) =>
-        transform(outer(qg, vecMat(dsg, x)), v => v * scaleH))),
-      flatten(zip_with(col("__do"), col("__al"), (dog, alg) => outer(dog, vecMat(alg, x)))),
-      outer(col("__dout"), col("__o")))
+      outer(stage("__dq", heads, dh), x(0)).c,
+      scale(outer(stage("__q", heads, dh), vecMat(stage("__ds", heads, k), x)), scaleH).c,
+      outer(stage("__do", heads, dh), vecMat(stage("__al", heads, k), x)).c,
+      outer(stage("__dout", dim), stage("__o", dim)).c)
   }
 
   /** [[fitMhaGD]]'s prediction over [[mhaForwardStaged]]:
@@ -1818,11 +1801,11 @@ object Blueprint {
     * [[transformerForwardStaged]]), then MULTI-HEAD attention with
     * learned projections queried by token 0 ([[mhaStages]] over
     * parameter-dependent tokens), the out-projection, and the class
-    * head ([[classHead]]), each stage one array column. */
+    * head ([[classHead]]), each stage one flat array column. */
   private def transformerMhaForwardStaged(df: DataFrame, codeCol: String,
       numCols: Seq[String], p: TransformerMhaParams): DataFrame =
-    classHead(mhaStages(embedTokens(df, codeCol, numCols, p.e, p.a, p.c),
-      p.wq, p.wk, p.wv, p.wo), col("__out"), p.wOut, p.bOut)
+    classHead(mhaStages(embedTokens(df, codeCol, numCols, p.e, p.a, p.c), numCols.length + 1,
+      p.wq, p.wk, p.wv, p.wo), stage("__out", p.wo.length), p.wOut, p.bOut)
 
   /** The reference's DBTransformer at `num_heads > 1`, trained
     * END-TO-END — the exact tuned model family
@@ -1867,30 +1850,32 @@ object Blueprint {
         u.cube(heads, dh, dim), u.cube(heads, dh, dim), u.cube(heads, dh, dim),
         u.mat(dim, dim), u.mat(nClass, dim), u.vec(nClass))
     }
-    val scaleH = lit(1.0 / math.sqrt(dh.toDouble))
+    val (k, scaleH) = (nNum + 1, scalar(lit(1.0 / math.sqrt(dh.toDouble))))
     val theta0 = Array(p0.e, p0.a, p0.c).flatten.flatten ++
       Array(p0.wq, p0.wk, p0.wv).flatten.flatten.flatten ++
       Array(p0.wo, p0.wOut).flatten.flatten ++ p0.bOut
-    val (q, ds, al) = (col("__q"), col("__ds"), col("__al"))
+    // Σ over the heads of a heads × dim block, folded from 0.0 head by head
+    val overHeads = (h: Tensor) => vecMat(vector(Array.fill(heads)(1.0)), h)
+    val (key, value) = (stage("__dTk", k, heads, dim), stage("__dTv", k, heads, dim))
+    val (q, ds, al) = (stage("__q", heads, dh), stage("__ds", heads, k), stage("__al", heads, k))
     val theta = (1 to steps).foldLeft(theta0) { (theta, _) =>
       val p = unflat(theta)
-      val (wq, wk, wv) = (typedLit(p.wq), typedLit(p.wk), typedLit(p.wv))
       // token b's gradient through the learned projections, summed over
       // the heads: its key path (ds_b·q) and its value path (α_b·do),
-      // plus, for token 0 only, the query path
-      val dT = (b: Column) => aggregate(transform(wq, (wqg, g) => {
-          val key = transform(vecMat(transform(q(g), qr => ds(g)(b) * qr), wk(g)),
-            v => v * scaleH)
-          val value = vecMat(transform(col("__do")(g), d => al(g)(b) * d), wv(g))
-          val qk = when(b === 0, zip_with(vecMat(col("__dq")(g), wqg), key, _ + _))
-            .otherwise(key)
-          zip_with(qk, value, _ + _)
-        }), zeros(dim), (acc, h) => zip_with(acc, h, _ + _))
+      // plus, for token 0 only, the query path; both paths token-major
+      // (k × heads × dim), so each token's heads sum as one block
       val back = mhaBackStages(classBack(transformerMhaForwardStaged(df, codeCol, numCols, p),
-          yCol, p.wOut), p.wo, heads)
-        .withColumn("__dT", transform(col("__T"), (_, b) => dT(b)))
-      gdStep(back, transformerGrad(nNum, Seq(mhaGrads(dh)), col("__out")), theta, lr,
-        table = dim)
+          yCol, p.wOut), k, p.wo, heads)
+        .withColumn("__dTk", transpose(scale(vecMat(scale(q, ds), cube(p.wk, dh, dim)),
+          scaleH)).c)
+        .withColumn("__dTv", transpose(vecMat(scale(stage("__do", heads, dh), al),
+          cube(p.wv, dh, dim))).c)
+        .withColumn("__dT", stack(
+          overHeads(plus(plus(vecMat(stage("__dq", heads, dh), cube(p.wq, dh, dim)), key(0)),
+            value(0))).as(Seq(1, dim)),
+          overHeads(plus(key.rows(1, nNum), value.rows(1, nNum)))).c)
+      gdStep(back, transformerGrad(nNum, nClass, Seq(mhaGrads(k, heads, dh)),
+        stage("__out", dim)), theta, lr, table = dim)
     }
     unflat(theta)
   }
@@ -1910,42 +1895,39 @@ object Blueprint {
     * through its Linear(1, dim) embedder, `x_m·a(m)(j) + c(m)(j)`. */
   private def embedTokens(df: DataFrame, codeCol: String, numCols: Seq[String],
       e: Array[Array[Double]], a: Array[Array[Double]], c: Array[Array[Double]]): DataFrame = {
-    val xn = col("__xn")
+    val dim = e.head.length
     lookup(withCheckedNumbers(df, numCols), codeCol, e)
       .withColumn("__xn", array(numCols.map(col): _*).cast("array<double>"))
-      .withColumn("__T", concat(array(col("__emb")), transform(typedLit(a), (am, m) =>
-        zip_with(am, typedLit(c).getItem(m), (aj, cj) => xn(m) * aj + cj))))
+      .withColumn("__T", stack(stage("__emb", 1, dim),
+        plus(scale(matrix(a, dim), stage("__xn", numCols.length)), matrix(c, dim))).c)
   }
 
-  /** The DBTransformers' class head over its input vector `in`: logits
-    * `__u`, `__eu`, `__zc` and the class softmax `__pr` (nClass each). */
-  private def classHead(df: DataFrame, in: Column, wOut: Array[Array[Double]],
+  /** The DBTransformers' class head over its input vector `in`: the
+    * class softmax `__pr` (nClass) of the logits `wOut·in + bOut`. */
+  private def classHead(df: DataFrame, in: Tensor, wOut: Array[Array[Double]],
       bOut: Array[Double]): DataFrame =
-    df.withColumn("__u", transform(typedLit(wOut), (wk, kk) =>
-        Similarity.dot(in, wk) + typedLit(bOut).getItem(kk)))
-      .withColumn("__eu", transform(col("__u"), exp(_)))
-      .withColumn("__zc", total(col("__eu")))
-      .withColumn("__pr", transform(col("__eu"), e => e / col("__zc")))
+    df.withColumn("__pr", softmax(plus(matVec(matrix(wOut, in.shape.head), in), vector(bOut))).c)
 
   /** The class head's backward: residuals `__du` = `p_k − 1[y=k]` and
     * the head input's gradient `__dout` = `Σ_k du_k·wOut(k)`. */
   private def classBack(fwd: DataFrame, yCol: String,
       wOut: Array[Array[Double]]): DataFrame = {
-    val y = checkedLabel(yCol, wOut.length)
-    fwd.withColumn("__du", transform(col("__pr"), (p, kk) =>
-        p - when(y === kk, 1.0).otherwise(0.0)))
-      .withColumn("__dout", vecMat(col("__du"), typedLit(wOut)))
+    val (nClass, dim) = (wOut.length, wOut.head.length)
+    val oneHot = typedLit(Array.tabulate(nClass, nClass)((i, j) => if (i == j) 1.0 else 0.0))
+    fwd.withColumn("__du", minus(stage("__pr", nClass),
+        Tensor(oneHot(checkedLabel(yCol, nClass)), Seq(nClass))).c)
+      .withColumn("__dout", vecMat(stage("__du", nClass), matrix(wOut, dim)).c)
   }
 
   /** A DBTransformer's packed per-row gradient in parameter order: the
     * code's table block (token 0's gradient, row 0 of `__dT`), the
     * numeric embedders' `a` then `c`, the attention's `attn`, then the
     * class head's over its input `in`. */
-  private def transformerGrad(nNum: Int, attn: Seq[Column], in: Column): Column = {
-    val (dT, du) = (col("__dT"), col("__du"))
-    val dTn = slice(dT, 2, nNum)
-    concat(Seq(dT(0), flatten(zip_with(dTn, col("__xn"), (d, x) => transform(d, v => v * x))),
-      flatten(dTn)) ++ attn ++ Seq(outer(du, in), du): _*)
+  private def transformerGrad(nNum: Int, nClass: Int, attn: Seq[Column], in: Tensor): Column = {
+    val (dT, du) = (stage("__dT", nNum + 1, in.shape.head), stage("__du", nClass))
+    val dTn = dT.rows(1, nNum)
+    concat(Seq(dT(0).c, scale(dTn, stage("__xn", nNum)).c, dTn.c) ++ attn ++
+      Seq(outer(du, in).c, du.c): _*)
   }
 
   /** Mean softmax cross-entropy of a class head's `__pr` against the

@@ -1,8 +1,12 @@
 package graft.tools
 import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, count, hash, lit, sum}
 /** Fresh-JVM per-query timer: `runMain graft.tools.TimeQ <query>...` —
   * isolates a query's cost from the 55-query sweep's heap/GC pressure.
+  * The timed action sums a hash of every output column next to the row
+  * count, so no output column is pruned away (a bare `count()` would
+  * drop a projection-only query's projection and time its scan).
   * Each query's line also gives the number of Spark jobs it started
   * (counted by a listener on job start, so it includes AQE's stage jobs
   * and broadcasts) and the number of classes codegen compiled for it
@@ -40,7 +44,9 @@ object TimeQ {
       jobs.set(0)
       val compiled = METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
-      val c = graft.SparkEntry.queries(n)(spark, sfDir).count()
+      val q = graft.SparkEntry.queries(n)(spark, sfDir)
+      val out = q.toDF(q.columns.indices.map(i => s"c$i"): _*)
+      val c = out.agg(count(lit(1)), sum(hash(out.columns.map(col): _*))).head().getLong(0)
       val s = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftListenerProbe.drain(spark)
       println(f"[time] $n rows=$c $s%.1f s jobs=${jobs.get} " +
