@@ -706,13 +706,9 @@ object Blueprint {
   /** `c ++ [1]`: a vector with the bias's input appended. */
   private def withOne(c: Column): Column = concat(c, array(lit(1.0)))
 
-  /** The outer product `a ⊗ b` of two vector columns, flat and i-major:
-    * `a_i·b_j` at `i·|b| + j`. */
-  private def outer(a: Column, b: Column): Column =
-    flatten(transform(a, ai => transform(b, bj => ai * bj)))
-
   /** The outer product `a ⊗ b` of two tensors, `a_i·b_j` with a's axes
-    * first; `b` may carry a leading batch axes of `a` (one `b` per head). */
+    * first (flat, i-major for two vectors); `b` may carry leading batch
+    * axes of `a` (one `b` per head). */
   private def outer(a: Tensor, b: Tensor): Tensor = scale(b, a)
 
   /** The tensor of `shape` held by the stage column `name`. */
@@ -998,8 +994,8 @@ object Blueprint {
       .select(leafFkCols.map(col) :+ withOne(col(leafFeatCol)).as("__xh"): _*)
       .withColumn("__m1", sigmoidLayer(col("__xh"), p.w1, p.b1))
       .groupBy(leafFkCols.map(col): _*)
-      .agg(VectorAgg.vecSum(concat(col("__m1"), outer(col("__xh"),
-        transform(col("__m1"), m => m * (lit(1.0) - m))))).as("__s"))
+      .agg(VectorAgg.vecSum(concat(col("__m1"), outer(stage("__xh", leafDim + 1),
+        Tensor(transform(col("__m1"), m => m * (lit(1.0) - m)), Seq(h1))).c)).as("__s"))
       .withColumnsRenamed(leafFkCols.zip(midKeyCols).toMap)
     val midDim = p.w2.length - h1
     val z = if (midDim == 0) Nil else Seq(col(midFeatCol))
@@ -1017,7 +1013,7 @@ object Blueprint {
       .groupBy(midFkCols.map(col): _*)
       .agg(VectorAgg.vecSum(concat(zip_with(slice(col("__s"), h1 + 1, s1),
         flatten(array_repeat(col("__beta"), leafDim + 1)), (s, b) => b * s),
-        outer(col("__in2"), col("__d2")), col("__m2"))).as("__s"))
+        outer(stage("__in2", p.w2.length + 1), stage("__d2", h2)).c, col("__m2"))).as("__s"))
       .withColumnsRenamed(midFkCols.zip(rootKeyCols).toMap)
     roots.select(rootKeyCols.map(col) :+ checkedLabel(yCol).as("__y"): _*)
       .join(midSums, rootKeyCols, "left")
